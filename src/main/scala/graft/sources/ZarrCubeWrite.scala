@@ -31,7 +31,9 @@ import org.apache.spark.sql.types._
   * Scale design — why this is NOT the 1-D staged-commit path: a cube
   * row's target chunk ordinal is a PURE FUNCTION of its coordinates, so
   * every task knows the final key of every chunk it assembles and writes
-  * it directly — no staging, no manifest, no commit-time renames. The
+  * it directly — no manifest, and staging only for chunks that replace
+  * committed objects. Fresh write, append and region overwrite all run
+  * ONE routine, [[commitSlab]], over a window of dim-0 chunk rows. The
   * pipeline is: (a) axis-sized jobs (per-dim distinct — map-side combined
   * — and one groupBy-count density proof whose shuffle is bounded by the
   * cell count, not the row count); (b) per-dim BROADCAST joins attach
@@ -43,9 +45,10 @@ import org.apache.spark.sql.types._
   * (d) tasks write chunks at final keys plus grid-signed `_stats`
   * segments (the same sidecar `analyze` builds, so chunk-skip,
   * metadata-only aggregates, hybrid pushdown and CBO stats work
-  * immediately); (e) the driver writes the axis arrays (axis-sized) and
-  * commits by writing per-array metadata then the consolidated root
-  * LAST — the single-PUT commit point the read path expects.
+  * immediately); (e) the driver writes the coordinate chunks
+  * (axis-sized) and commits by writing per-array metadata then the
+  * consolidated root LAST — the single-PUT commit point the read path
+  * expects.
   */
 object ZarrCubeWrite {
 
@@ -92,15 +95,7 @@ object ZarrCubeWrite {
       maxAxisLen: Int = 1 << 22,
       rowsPerTask: Long = 1L << 22,
       shardShapeOpt: Option[Seq[Int]] = None): Unit = {
-    val spark = df.sparkSession
-    if (maxAxisLen > (1 << 30))
-      throw new ZarrException(
-        s"max_axis_len $maxAxisLen exceeds 2^30 (grid-index arithmetic bound)")
-    import scala.jdk.CollectionConverters._
-    val hadoopPairs = spark.sparkContext.hadoopConfiguration
-      .iterator().asScala.map(e => e.getKey -> e.getValue)
-      .filter(_._1.startsWith("fs.")).toSeq
-    val store = ZarrStore(path, hadoopPairs)
+    val (store, hadoopPairs) = openStore(df, path, maxAxisLen)
 
     // ---- schema validation, all driver-side and before any IO ----
     if (dims.length > 8)
@@ -135,12 +130,11 @@ object ZarrCubeWrite {
     validateLayoutOptions(dims, chunkShapeOpt, shardShapeOpt)
 
     // fresh-store-only: a cube's shape is a global property of one
-    // dataset; "appending" would need coordinate re-alignment — refuse
-    // rather than guess (the 1-D tabular path owns append). The gate
-    // also decides the FAILURE-CLEANUP scope: we may only delete the
-    // root wholesale if this write created it (or the caller asked for
-    // overwrite) — a mistyped path pointing at a user's existing
-    // directory must never be wiped by a validation refusal.
+    // dataset; growing or replacing part of it goes through
+    // append_dim / region_dim. The gate also decides the FAILURE-CLEANUP
+    // scope: we may only delete the root wholesale if this write created
+    // it (or the caller asked for overwrite) — a mistyped path pointing
+    // at a user's existing directory must never be wiped by a refusal.
     val inventory = store.rootInventory()
     if (truncate) store.delete()
     else inventory.foreach { entries =>
@@ -164,136 +158,75 @@ object ZarrCubeWrite {
             "into — and potentially clean up over — unrelated files; point at " +
             "a fresh path or use mode('overwrite') on a zarr store")
     }
-    // cleanup scope decided ABOVE any store IO: wholesale root delete only
-    // when we created or (on explicit overwrite) truncated it; a
-    // pre-existing empty dir / bare store root keeps its directory entry —
-    // only the contents (this write's partial output) are removed
-    val ownRoot = truncate || inventory.isEmpty
 
-    try {
-      // ---- coordinate axes: global sorted distincts (axis-sized) ----
-      val axes: Seq[Array[Any]] = dims.map(d => collectAxis(df, d, maxAxisLen))
-      val shape: Seq[Long] = axes.map(_.length.toLong)
-      val totalCells: Long = shape.foldLeft(1L)((a, b) =>
-        try Math.multiplyExact(a, b)
-        catch { case _: ArithmeticException =>
-          throw new ZarrException(s"cube volume overflows Long: axes ${shape.mkString("x")}")
-        })
-      if (totalCells == 0L)
-        throw new ZarrException("cube write: input DataFrame is empty")
+    // ---- coordinate axes: global sorted distincts (axis-sized) ----
+    val axes: Seq[Array[Any]] = dims.map(d => collectAxis(df, d, maxAxisLen))
+    val shape: Seq[Long] = axes.map(_.length.toLong)
+    val totalCells: Long = shape.foldLeft(1L)((a, b) =>
+      try Math.multiplyExact(a, b)
+      catch { case _: ArithmeticException =>
+        throw new ZarrException(s"cube volume overflows Long: axes ${shape.mkString("x")}")
+      })
+    if (totalCells == 0L)
+      throw new ZarrException("cube write: input DataFrame is empty")
 
-      // ---- density proof: every cell exactly once ----
-      // one aggregate job; the shuffle after map-side partial aggregation
-      // is bounded by the CELL count, and the final reduction is 3 numbers
-      val proof = df.groupBy(dims.map(col): _*).agg(count(lit(1)).as("__zarr_c"))
-        .agg(sum(col("__zarr_c")), max(col("__zarr_c"))).collect()(0)
-      val nRows = proof.getLong(0)
-      val maxMult = proof.getLong(1)
-      if (maxMult > 1L)
-        throw new ZarrException(
-          s"cube write: duplicate coordinate tuples (a (${dims.mkString(",")}) " +
-            s"combination appears $maxMult times); deduplicate or aggregate first")
-      if (nRows != totalCells)
-        throw new ZarrException(
-          s"cube write: grid is not dense — ${shape.mkString("x")} = $totalCells " +
-            s"cells but $nRows rows (${totalCells - nRows} missing); densify " +
-            "(cross join the axes and fill) before writing")
+    // arity/value/divisibility of the explicit options were validated
+    // pre-job by validateLayoutOptions
+    val chunkShape: Seq[Int] = chunkShapeOpt.getOrElse(defaultChunkShape(shape))
+    // sharding (ZEP 2): `shard_shape` makes the STORED object a shard
+    // of inner `chunk_shape` chunks — at 100 TB the object-count lever
+    // (a million-chunk cube becomes thousands of shards; listing and
+    // request costs follow the shard count while logical chunks stay
+    // small). Engine geometry — grid, ordinals, the clustered shuffle,
+    // chunk-skip stats — all key on the OUTER (stored) shape; only the
+    // per-object encode branches (Sharding.encode packs the inner
+    // chunks + index into one object).
+    val outerShape: Seq[Int] = shardShapeOpt.getOrElse(chunkShape)
+    // the entries are user-given: a wrapped product would pass this
+    // bound and crash executors on Int-truncated allocations
+    val chunkElems: Long =
+      try outerShape.foldLeft(1L)((a, c) => Math.multiplyExact(a, c.toLong))
+      catch { case _: ArithmeticException => Long.MaxValue }
+    if (chunkElems > Int.MaxValue / 2)
+      throw new ZarrException(
+        s"${shardShapeOpt.map(_ => "shard_shape").getOrElse("chunk_shape")} " +
+          s"too large: $chunkElems elements")
 
-      // arity/value/divisibility of the explicit options were validated
-      // pre-job by validateLayoutOptions
-      val chunkShape: Seq[Int] = chunkShapeOpt.getOrElse(defaultChunkShape(shape))
-      // sharding (ZEP 2): `shard_shape` makes the STORED object a shard
-      // of inner `chunk_shape` chunks — at 100 TB the object-count lever
-      // (a million-chunk cube becomes thousands of shards; listing and
-      // request costs follow the shard count while logical chunks stay
-      // small). Engine geometry — grid, ordinals, the clustered shuffle,
-      // chunk-skip stats — all key on the OUTER (stored) shape; only the
-      // per-object encode branches (Sharding.encode packs the inner
-      // chunks + index into one object).
-      val outerShape: Seq[Int] = shardShapeOpt.getOrElse(chunkShape)
-      val grid: Seq[Int] = shape.zip(outerShape)
-        .map { case (s, c) => ((s + c - 1) / c).toInt }
-      // numChunks cannot overflow (grid_i <= shape_i and the cell product
-      // was multiplyExact-checked above); chunkElems CAN — the entries
-      // are user-given, and a wrapped product would pass this bound and
-      // crash executors on Int-truncated allocations deep in the job
-      val numChunks: Long = grid.foldLeft(1L)(_ * _.toLong)
-      val chunkElems: Long =
-        try outerShape.foldLeft(1L)((a, c) => Math.multiplyExact(a, c.toLong))
-        catch { case _: ArithmeticException => Long.MaxValue }
-      if (chunkElems > Int.MaxValue / 2)
-        throw new ZarrException(
-          s"${shardShapeOpt.map(_ => "shard_shape").getOrElse("chunk_shape")} " +
-            s"too large: $chunkElems elements")
-
-      // ---- per-array metadata documents (the writers derive codec
-      //      chain / separator / element type from these; the commit
-      //      persists these exact documents) ----
-      // a column scanned from a v2 datetime64/timedelta64 array carries
-      // zarr_time_kind/zarr_time_unit Spark field metadata — thread it
-      // into the destination's v3 attributes so a migrated time axis
-      // stays an ANNOTATED int64, not an anonymous one
-      def timeMetaOf(name: String): Option[(String, String)] = {
-        val md = fieldByName(name).metadata
-        if (md.contains("zarr_time_kind") && md.contains("zarr_time_unit"))
-          Some((md.getString("zarr_time_kind"), md.getString("zarr_time_unit")))
-        else None
-      }
-      // data arrays: sharded when shard_shape was given (the stored
-      // chunk_grid is the OUTER shape; the inner chunk_shape nests in
-      // sharding_indexed). Coordinate arrays stay plain — they are
-      // axis-sized, and their chunk extent mirrors the data arrays'
-      // outer extent so every cube-target invariant (coord chunk ==
-      // data chunk per dim) holds on read-back and append/region.
-      val dataChain = shardShapeOpt.map(_ => chain.sharded(chunkShape)).getOrElse(chain)
-      val dataMetaJsons: Seq[(String, String)] = dataCols.zip(dataZts).map { case (f, zt) =>
-        f.name -> ZarrWriter.metaJson(zt, shape, outerShape,
-          ZarrBatchWrite.defaultFillJson(zt), Some(dims), dataChain,
-          timeMeta = timeMetaOf(f.name))
-      }
-      val coordMetaJsons: Seq[(String, String)] = dims.zip(dimZts).zipWithIndex.map {
-        case ((d, zt), i) =>
-          d -> ZarrWriter.metaJson(zt, Seq(shape(i)), Seq(outerShape(i)),
-            ZarrBatchWrite.defaultFillJson(zt), Some(Seq(d)), chain,
-            timeMeta = timeMetaOf(d))
-      }
-
-      writeSlab(df, store, hadoopPairs, dims, fieldByName,
-        joinAxes = axes.map(a => (a, 0L)),
-        fullAxes = axes.map(_.toIndexedSeq),
-        shape = shape, chunkShape = outerShape, grid = grid,
-        dimZts = dimZts, dataCols = dataCols,
-        dataMetaJsons = dataMetaJsons.map(_._2),
-        stats = stats, rowsPerTask = rowsPerTask,
-        expectRows = totalCells, expectChunks = numChunks)
-
-      // ---- driver commit: axis arrays (axis-sized), per-array metadata,
-      //      consolidated root LAST (the atomic commit point) ----
-      dims.zipWithIndex.foreach { case (d, i) =>
-        ZarrWriter.writeArray(store, d, dimZts(i), Seq(shape(i)), Seq(outerShape(i)),
-          axes(i).toIndexedSeq, Some(Seq(d)), chain,
-          ZarrBatchWrite.defaultFillJson(dimZts(i)),
-          timeMeta = timeMetaOf(d))
-      }
-      dataMetaJsons.foreach { case (n, j) => store.writeMeta(n, j) }
-      val allJsons = coordMetaJsons ++ dataMetaJsons
-      store.writeStoreRootMeta(allJsons, ChunkManifest.empty)
-    } catch {
-      case e: Throwable =>
-        // cube writes are fresh-only, so everything under the root is
-        // this write's partial output — but the DELETION scope follows
-        // ownership: wholesale root delete only if we created/truncated
-        // the root; for a pre-existing (verified-empty) directory remove
-        // the contents and keep the user's directory entry
-        try {
-          if (ownRoot) store.delete() else store.deleteRootContents()
-        } catch { case _: Throwable => () }
-        throw e
+    // ---- per-array metadata documents (the writers derive codec
+    //      chain / separator / element type from these; the commit
+    //      persists these exact documents) ----
+    // a column scanned from a v2 datetime64/timedelta64 array carries
+    // zarr_time_kind/zarr_time_unit Spark field metadata — thread it
+    // into the destination's v3 attributes so a migrated time axis
+    // stays an ANNOTATED int64, not an anonymous one
+    def timeMetaOf(name: String): Option[(String, String)] = {
+      val md = fieldByName(name).metadata
+      if (md.contains("zarr_time_kind") && md.contains("zarr_time_unit"))
+        Some((md.getString("zarr_time_kind"), md.getString("zarr_time_unit")))
+      else None
     }
+    // data arrays: sharded when shard_shape was given (the stored
+    // chunk_grid is the OUTER shape; the inner chunk_shape nests in
+    // sharding_indexed). Coordinate arrays stay plain — they are
+    // axis-sized, and their chunk extent mirrors the data arrays'
+    // outer extent so every cube-target invariant (coord chunk ==
+    // data chunk per dim) holds on read-back and append/region.
+    val dataChain = shardShapeOpt.map(_ => chain.sharded(chunkShape)).getOrElse(chain)
+    val coordMetas = dims.zip(dimZts).zipWithIndex.map { case ((d, zt), i) =>
+      ZarrMeta.parse(d, ZarrWriter.metaJson(zt, Seq(shape(i)), Seq(outerShape(i)),
+        ZarrBatchWrite.defaultFillJson(zt), Some(Seq(d)), chain, timeMeta = timeMetaOf(d)))
+    }
+    val dataMetas = dataCols.zip(dataZts).map { case (f, zt) =>
+      ZarrMeta.parse(f.name, ZarrWriter.metaJson(zt, shape, outerShape,
+        ZarrBatchWrite.defaultFillJson(zt), Some(dims), dataChain,
+        timeMeta = timeMetaOf(f.name)))
+    }
+    commitSlab(df, store, hadoopPairs, "cube write", dims, axes.map(_.toIndexedSeq),
+      coordMetas ++ dataMetas, slabLo0 = 0L, slabHi0 = shape.head, committed0 = 0L,
+      stats, maxAxisLen, rowsPerTask, ownRoot = truncate || inventory.isEmpty)
   }
   // scalastyle:on method.length
 
-  // scalastyle:off method.length
   /** Append a slab along the FIRST dimension of an existing cube store —
     * the daily-ingest shape of real zarr pipelines (xarray's
     * `append_dim`): a climate store grows along `time`, everything else
@@ -324,37 +257,14 @@ object ZarrCubeWrite {
     *  - the new slab must be dense: one row per (new dim-0 value ×
     *    existing trailing cross-section) cell.
     *
-    * Scale: the slab goes through the same pipeline as a fresh cube
-    * write (ONE clustered shuffle of the slab's rows, executor-direct
-    * final-key chunk writes, write-time stats segments); the commit is
-    * O(slab metadata) — axis extension is axis-sized and EXISTING stats
-    * segments are never touched: row-major ordinals are functions of
+    * Scale: O(slab). Existing chunks below the edge and existing stats
+    * segments are never touched — row-major ordinals are functions of
     * the trailing grid extents only, so dim-0 growth leaves every old
     * segment's ordinals and bounds exact, and the reader accepts their
     * smaller leading extent ([[graft.zarr.ChunkStats.gridCompatible]]).
-    * A daily ingest costs ∝ each day's data, not the store — no
-    * per-append rewrite of O(numChunks/4096) historical documents.
-    *
-    * Crash safety mirrors the 1-D aligned append: new chunks land at
-    * final keys BEYOND the committed shape (invisible until the root
-    * document advances; a retry overwrites the same keys). An unaligned
-    * base's edge chunk-row is never truncated in place: the rewritten
-    * edge objects (data AND the partial coordinate chunk) are staged
-    * under a write-scoped `c.part*` dir and swapped over the committed
-    * keys with single-object replaces only after the whole slab is
-    * durable — a crash before the swap leaves the committed store
-    * byte-identical, a crash mid-swap leaves each edge object either
-    * old or new (both read identically over the committed extent, whose
-    * positions the rewrite preserves), and staging leftovers are
-    * removed by abort or reclaimed by ZarrMaintenance.vacuum. Stats
-    * segments over (re)written
-    * ordinals are retired up front (straddlers trimmed to keep their
-    * pre-edge coverage) and purged again on failure; segments below
-    * the edge are never modified, so no crash window can misdescribe
-    * data. A crash between the per-array metadata writes and the root
-    * document leaves the slab invisible to consolidated readers; the
-    * next cube modification heals it (coordinate meta is authoritative,
-    * [[resolveCubeTarget]]) and any root rewrite re-consolidates. */
+    * Crash safety is [[commitSlab]]'s: new chunks land beyond the
+    * committed shape (invisible until the root advances), the edge
+    * chunk-row is staged and swapped, the root is the commit point. */
   def append(
       df: DataFrame,
       path: String,
@@ -363,50 +273,18 @@ object ZarrCubeWrite {
       stats: Boolean,
       maxAxisLen: Int = 1 << 22,
       rowsPerTask: Long = 1L << 22): Unit = {
-    val spark = df.sparkSession
-    if (maxAxisLen > (1 << 30))
-      throw new ZarrException(
-        s"max_axis_len $maxAxisLen exceeds 2^30 (grid-index arithmetic bound)")
-    import scala.jdk.CollectionConverters._
-    val hadoopPairs = spark.sparkContext.hadoopConfiguration
-      .iterator().asScala.map(e => e.getKey -> e.getValue)
-      .filter(_._1.startsWith("fs.")).toSeq
-    val store = ZarrStore(path, hadoopPairs)
-
+    val (store, hadoopPairs) = openStore(df, path, maxAxisLen)
     val t = resolveCubeTarget(store, path, dimsOpt, "append_dim")
-    val metas = t.metas
     val dims = t.dims
-    val coordMetas = t.coordMetas
-    val dataMetas = t.dataMetas
-    val targetShape = t.targetShape
-    val targetChunk = t.targetChunk
+    requireFirstDim(dims, appendDim, "append_dim",
+      s"only the FIRST (slowest-varying) dim '${dims.head}' can grow in place — " +
+        "row-major chunk keys and stats ordinals of existing chunks are " +
+        "functions of the trailing dims, so any other axis would re-key the " +
+        "whole store")
+    validateSlabSchema(df, t, "append_dim")
 
-    val k = dims.indexOf(appendDim)
-    if (k < 0)
-      throw new ZarrException(
-        s"append_dim '$appendDim' is not a dim of the store (${dims.mkString(",")})")
-    if (k != 0)
-      throw new ZarrException(
-        s"append_dim '$appendDim' is dim $k; only the FIRST (slowest-varying) " +
-          s"dim '${dims.head}' can grow in place — row-major chunk keys and " +
-          "stats ordinals of existing chunks are functions of the trailing " +
-          "dims, so any other axis would re-key the whole store. Rewrite " +
-          "through a fresh cube write instead")
-
-    val fieldByName = validateSlabSchema(df, t, "append_dim")
-
-    // ---- alignment: an unaligned dim-0 extent is handled by rewriting
-    //      the partial EDGE chunk-row (read its committed rows back
-    //      through the scan, fold them into the slab) — cost ∝ one
-    //      chunk-row + slab, never the store ----
-    val l0 = targetShape.head
-    val c0 = targetChunk.head
-    val l0f = (l0 / c0) * c0 // aligned floor; tail rows live in [l0f, l0)
-
-    // ---- axes: existing from the store, new slab from the DataFrame ----
-    val existingAxes: Seq[Array[Any]] = coordMetas.map(m =>
-      readAscendingAxis(store, m, path,
-        "cube layouts require an ascending axis — rewrite the store instead"))
+    val existingAxes = readAxes(store, t, path)
+    val l0 = t.dataMetas.head.shape(0)
     val newAxis0 = collectAxis(df, dims.head, maxAxisLen)
     if (newAxis0.isEmpty)
       throw new ZarrException("cube append: input DataFrame is empty")
@@ -420,248 +298,344 @@ object ZarrCubeWrite {
         s"append_dim: new ${dims.head} values must sort strictly after the " +
           s"existing axis (existing max $lastExisting, new min ${newAxis0.head}); " +
           "interleaving would re-rank existing positions — rewrite the store instead")
-    dims.zipWithIndex.drop(1).foreach { case (d, i) =>
+    val newL0 = l0 + newAxis0.length
+    // every dim-0 array grows; the trailing coordinates stay as they are
+    val grown = t.metas.map(m =>
+      if (dims.tail.contains(m.name)) m
+      else ZarrMeta.parse(m.name, ZarrMeta.withShape0(m.sourceJson, newL0)))
+    commitSlab(df, store, hadoopPairs, "append_dim",
+      dims, (existingAxes.head ++ newAxis0) +: existingAxes.tail, grown,
+      slabLo0 = l0, slabHi0 = newL0, committed0 = l0, stats, maxAxisLen, rowsPerTask)
+  }
+
+  /** Overwrite a REGION of an existing cube along its first dimension —
+    * xarray's `region=` write, the reprocessing shape: one day of a
+    * climate store (or one ingest batch of a feature cube) is recomputed
+    * and swapped without touching the rest of the store or its
+    * geometry. Surfaced as
+    * `df.write.format("zarr").mode("overwrite").option("region_dim", "time").save(path)`.
+    *
+    * Contract (loud, never guess) — [[append]]'s target rules plus:
+    *  - the slab's `region_dim` coordinates must EXACTLY equal a
+    *    contiguous run of the existing axis (same values, same order);
+    *    coordinates are identity here, so a value not already on the
+    *    axis is a refusal, not an insert;
+    *  - the run must be chunk-aligned on BOTH ends (a partial boundary
+    *    chunk would need read-modify-write of rows outside the region);
+    *  - trailing-dim coordinates must match the stored axes exactly
+    *    (the region spans the full cross-section);
+    *  - the slab must be dense over region × cross-section.
+    *
+    * No metadata or root document changes. Every region chunk is
+    * STAGED and swapped over its committed key only once the whole
+    * region is durable ([[commitSlab]]): a crash before the swap leaves
+    * the region as it was, a crash mid-swap is chunk-granular — like
+    * every zarr region write, xarray's included — with each chunk
+    * wholly old or wholly new; re-running the same overwrite completes
+    * it. A stats segment straddling the region boundary keeps its
+    * out-of-region ordinals (trimmed), so zero-GET aggregates survive. */
+  def overwriteRegion(
+      df: DataFrame,
+      path: String,
+      dimsOpt: Option[Seq[String]],
+      regionDim: String,
+      stats: Boolean,
+      maxAxisLen: Int = 1 << 22,
+      rowsPerTask: Long = 1L << 22): Unit = {
+    val (store, hadoopPairs) = openStore(df, path, maxAxisLen)
+    val t = resolveCubeTarget(store, path, dimsOpt, "region_dim")
+    val dims = t.dims
+    requireFirstDim(dims, regionDim, "region_dim",
+      "only FIRST-dim regions can be swapped in place — a trailing-dim " +
+        "region intersects every chunk-row of the store")
+    validateSlabSchema(df, t, "region_dim")
+
+    // ---- locate the region on the existing axis ----
+    val existingAxes = readAxes(store, t, path)
+    val regionAxis = collectAxis(df, dims.head, maxAxisLen)
+    if (regionAxis.isEmpty)
+      throw new ZarrException("region overwrite: input DataFrame is empty")
+    val axis0 = existingAxes.head
+    val start = axis0.indices.find(i => ChunkFilter.cmp(axis0(i), regionAxis(0)) == 0)
+      .getOrElse(throw new ZarrException(
+        s"region_dim: first ${dims.head} value ${regionAxis(0)} is not on the " +
+          "store's axis; region coordinates must already exist (regions " +
+          "replace values, never positions — use append_dim to grow)"))
+    if (start + regionAxis.length > axis0.length ||
+      regionAxis.indices.exists(j => ChunkFilter.cmp(regionAxis(j), axis0(start + j)) != 0))
+      throw new ZarrException(
+        s"region_dim: the slab's ${regionAxis.length} ${dims.head} values do not " +
+          s"form a contiguous run of the store's axis at position $start; " +
+          "region coordinates must match the axis exactly")
+    val end = start + regionAxis.length
+    val c0 = t.dataMetas.head.chunkShape(0)
+    if (start % c0 != 0 || (end % c0 != 0 && end != axis0.length))
+      throw new ZarrException(
+        s"region_dim: region [$start,$end) of ${dims.head} is not chunk-aligned " +
+          s"(chunk extent $c0); a partial boundary chunk would need " +
+          "read-modify-write of rows outside the region — align the region " +
+          "or rewrite the store")
+    commitSlab(df, store, hadoopPairs, "region_dim", dims, existingAxes, t.metas,
+      slabLo0 = start, slabHi0 = end, committed0 = axis0.length,
+      stats, maxAxisLen, rowsPerTask)
+  }
+
+  // scalastyle:off method.length parameter.number
+  /** The one commit protocol behind [[write]], [[append]] and
+    * [[overwriteRegion]] — xarray's `to_zarr` with `mode`, `append_dim`
+    * or `region`, as one routine over a first-dim window.
+    *
+    * `metas` are every array's documents at the FINAL shape, in root
+    * order; `axes` the final coordinate axes. The slab supplies dim-0
+    * positions [slabLo0, slabHi0) of a store whose committed dim-0
+    * extent is `committed0` (0 = fresh). In chunk ordinals that is the
+    * window [ordLo, ordHi) over a committed grid of `committedHi`
+    * chunks: a fresh write is [0, numChunks) over 0, an append
+    * [edgeStart, newNumChunks) over the old grid, a region a window
+    * inside the committed grid.
+    *
+    * Steps, in order:
+    *  1. the slab's trailing axes must equal the target's, and the slab
+    *     must be dense (every cell exactly once);
+    *  2. window rows the slab does not supply — the committed part of a
+    *     ragged edge chunk-row — are read back and folded in;
+    *  3. every sidecar doc over the window retires ([[retireStats]]);
+    *  4. [[writeSlab]] writes each window chunk; the STAGING RULE: a
+    *     chunk is staged under a write-scoped `c.part*` dir iff its
+    *     ordinal is below `committedHi` (it replaces a committed
+    *     object), and the slab's stats are staged iff the window
+    *     overlaps committed ordinals (a final-key doc must never
+    *     describe staged bytes);
+    *  5. staged chunks swap over their committed keys, one
+    *     single-object replace each, only once the whole slab is
+    *     durable; changed coordinate chunks follow the same rule;
+    *  6. commit: a growing write writes every changed array meta, the
+    *     dim-0 coordinate LAST (the streaming sink's commit signal),
+    *     then the consolidated root — the single commit point readers
+    *     see; a region writes nothing;
+    *  7. staged stats promote to final keys;
+    *  8. on failure, one abort path: a fresh store's partial output is
+    *     removed (the root itself only if `ownRoot`); otherwise the
+    *     window's sidecar docs retire again and the write's staging
+    *     goes. What a hard crash leaves is invisible to readers and
+    *     reclaimed by a re-run or ZarrMaintenance.vacuum. */
+  private def commitSlab(
+      df: DataFrame,
+      store: ZarrStore,
+      hadoopPairs: Seq[(String, String)],
+      opName: String,
+      dims: Seq[String],
+      axes: Seq[IndexedSeq[Any]],
+      metas: Seq[ZarrArrayMeta],
+      slabLo0: Long,
+      slabHi0: Long,
+      committed0: Long,
+      stats: Boolean,
+      maxAxisLen: Int,
+      rowsPerTask: Long,
+      ownRoot: Boolean = false): Unit = {
+    // scalastyle:on parameter.number
+    val coordMetas = dims.map(d => metas.find(_.name == d).get)
+    val dataMetas = metas.filterNot(m => dims.contains(m.name))
+    val grid: Seq[Int] = dataMetas.head.gridShape.toSeq
+    val c0 = dataMetas.head.chunkShape(0)
+    val trailingGrid = grid.tail.foldLeft(1L)(_ * _.toLong)
+    val winLo0 = slabLo0 / c0 * c0
+    val ordLo = winLo0 / c0 * trailingGrid
+    val ordHi = (slabHi0 + c0 - 1) / c0 * trailingGrid
+    val committedHi = (committed0 + c0 - 1) / c0 * trailingGrid
+    // a window reaching the committed end also owns every ordinal past
+    // it: those docs can only be a failed earlier write's leftovers
+    val retireHi = if (ordHi >= committedHi) Long.MaxValue else ordHi
+    val fresh = committed0 == 0L
+    val grows = slabHi0 > committed0
+
+    // ---- 1. trailing axes, then density (a fresh write's axes ARE the slab's) ----
+    if (!fresh) dims.zipWithIndex.tail.foreach { case (d, i) =>
       val got = collectAxis(df, d, maxAxisLen)
-      val want = existingAxes(i)
+      val want = axes(i)
       if (got.length != want.length ||
         got.indices.exists(j => ChunkFilter.cmp(got(j), want(j)) != 0))
         throw new ZarrException(
-          s"append_dim: the slab's '$d' axis (${got.length} values) does not " +
+          s"$opName: the slab's '$d' axis (${got.length} values) does not " +
             s"match the store's (${want.length}); trailing dims must align " +
-            "exactly — the slab covers the same cross-section the store does")
+            "exactly — a slab spans the full trailing cross-section")
     }
-
-    // ---- density proof over the slab: every cell exactly once ----
-    val trailingCells = existingAxes.tail.foldLeft(1L)((a, ax) =>
-      Math.multiplyExact(a, ax.length.toLong))
-    val slabCells = Math.multiplyExact(newAxis0.length.toLong, trailingCells)
+    // one aggregate job; the shuffle after map-side partial aggregation
+    // is bounded by the CELL count, and the final reduction is 3 numbers
+    val trailingCells = axes.tail.foldLeft(1L)((a, ax) => Math.multiplyExact(a, ax.length.toLong))
+    val slabCells = Math.multiplyExact(slabHi0 - slabLo0, trailingCells)
     val proof = df.groupBy(dims.map(col): _*).agg(count(lit(1)).as("__zarr_c"))
       .agg(sum(col("__zarr_c")), max(col("__zarr_c"))).collect()(0)
-    val nRows = proof.getLong(0)
-    val maxMult = proof.getLong(1)
-    if (maxMult > 1L)
+    if (proof.getLong(1) > 1L)
       throw new ZarrException(
-        s"cube append: duplicate coordinate tuples (a (${dims.mkString(",")}) " +
-          s"combination appears $maxMult times); deduplicate or aggregate first")
-    if (nRows != slabCells)
+        s"$opName: duplicate coordinate tuples (a (${dims.mkString(",")}) " +
+          s"combination appears ${proof.getLong(1)} times); deduplicate or aggregate first")
+    if (proof.getLong(0) != slabCells)
       throw new ZarrException(
-        s"cube append: slab is not dense — ${newAxis0.length}x$trailingCells = " +
-          s"$slabCells cells but $nRows rows (${slabCells - nRows} missing); " +
-          "densify (cross join the axes and fill) before appending")
+        s"$opName: the slab is not dense — ${slabHi0 - slabLo0}x$trailingCells = " +
+          s"$slabCells cells but ${proof.getLong(0)} rows " +
+          s"(${slabCells - proof.getLong(0)} missing); densify (cross join the " +
+          "axes and fill) before writing")
 
-    // ---- unaligned base: fold the committed EDGE rows into the slab ----
-    // The partial chunk-row [l0f, l0) is read back through the scan
-    // (coordinate filter pushdown prunes to exactly that chunk-row) and
-    // MATERIALIZED before any chunk write: the rewrite targets the very
-    // objects the read would fetch, so the union must never lazily
-    // re-scan them mid-write. A lost-block recompute stays consistent —
-    // the plan's metas pin shape[0]=l0 and the rewrite preserves every
-    // committed position's value — but eager persistence keeps the
-    // normal path single-read.
-    val tailCoords: Array[Any] = existingAxes.head.slice(l0f.toInt, l0.toInt)
-    val tailDf: Option[DataFrame] =
-      if (tailCoords.isEmpty) None
+    // ---- 2. committed window rows the slab does not supply ----
+    // read back through the scan (coordinate pushdown prunes to exactly
+    // that chunk-row) and MATERIALIZED before any chunk write: the
+    // rewrite targets the very objects the read fetches, so the union
+    // must never lazily re-scan them mid-write
+    val keep = axes.head.slice(winLo0.toInt, slabLo0.toInt)
+    val kept: Option[DataFrame] =
+      if (keep.isEmpty) None
       else {
-        val cols = df.columns.toSeq
-        val td = spark.read.format("zarr").load(path)
-          .filter(col(dims.head).isin(tailCoords.toSeq: _*))
-          .select(cols.map(col): _*)
+        val td = df.sparkSession.read.format("zarr").load(store.root)
+          .filter(col(dims.head).isin(keep: _*))
+          .select(df.columns.toSeq.map(col): _*)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val got = td.count()
-        val want = Math.multiplyExact(tailCoords.length.toLong, trailingCells)
+        val want = Math.multiplyExact(keep.length.toLong, trailingCells)
         if (got != want) {
           td.unpersist()
           throw new ZarrException(
-            s"cube append: edge chunk-row read returned $got rows, expected " +
+            s"$opName: edge chunk-row read returned $got rows, expected " +
               s"$want — store and metadata disagree; run ZarrMaintenance.compact")
         }
         Some(td)
       }
-    val slabWithTail = tailDf.map(td => td.unionByName(
-      df.select(df.columns.toSeq.map(col): _*))).getOrElse(df)
-    val writeAxis0: Array[Any] = tailCoords ++ newAxis0
 
-    // ---- final geometry ----
-    val newL0 = l0 + newAxis0.length
-    val newShape: Seq[Long] = newL0 +: targetShape.tail
-    val newGrid: Seq[Int] = newShape.zip(targetChunk)
-      .map { case (s, c) => ((s + c - 1) / c).toInt }
-    val edgeGrid0 = (l0f / c0).toInt // first chunk-row this append (re)writes
-    val oldGrid0 = ((l0 + c0 - 1) / c0).toInt
-    val trailingGrid = newGrid.tail.foldLeft(1L)(_ * _.toLong)
-    val edgeStart = edgeGrid0.toLong * trailingGrid
-    val oldNumChunks = oldGrid0.toLong * trailingGrid
-    val newNumChunks = newGrid.head.toLong * trailingGrid
-    val dimZts = coordMetas.map(_.dataType)
-    val dataCols = dataMetas.map(m => fieldByName(m.name))
-    val newDataJsons = dataMetas.map(m => ZarrMeta.withShape0(m.sourceJson, newL0))
-
-    // stats segments describing ordinals this append (re)writes must be
-    // retired BEFORE any chunk write: a previously-failed append's
-    // leftovers (>= oldNumChunks) and — on an unaligned base — committed
-    // segments over the edge chunk-row, whose bounds/sums stop matching
-    // once the row gains rows. A straddling segment keeps its pre-edge
-    // prefix (trimmed), so whole-store coverage below the edge survives.
-    // The walk is over the RAW file listing: overlap-SUPPRESSED segment
-    // files (exactly the leftovers of a failed write whose ordinals are
-    // being reused) must be deleted too, or they survive to overlap the
-    // fresh slab segments and suppress both — committed pushdown
-    // coverage would silently degrade. Only an UNSUPPRESSED straddler
-    // earns the trimmed prefix: a suppressed one is ambiguous below the
-    // edge as well, so its prefix must not be re-legitimized.
-    if (edgeStart < oldNumChunks) {
-      val unsuppressed = store.listStatsSegments().toSet
-      store.listStatsSegmentsRaw().foreach { case (first, n) =>
-        if (first + n > edgeStart) {
-          val doc = store.readText(ChunkStats.segmentKey(first, n))
-          store.deleteKey(ChunkStats.segmentKey(first, n))
-          if (first < edgeStart && unsuppressed((first, n)))
-            doc.flatMap(parseSegment).foreach { parsed =>
-              trimSegment(parsed, (edgeStart - first).toInt, 0)
-                .foreach(store.writeText(
-                  ChunkStats.segmentKey(first, (edgeStart - first).toInt), _))
-            }
-        }
-      }
-    } else store.cleanStatsSegmentsFrom(oldNumChunks)
-    // per-INNER-chunk docs: the ragged-edge rewrite RETIRES its window's
-    // docs up front (the smaller-leading-extent acceptance keeps docs of
-    // untouched ordinals live across the append, so a rewritten chunk's
-    // doc must not survive by signature) and a failed earlier append's
-    // leftovers past the committed grid go with them; docs BELOW the
-    // edge are never touched — their shards are never rewritten, which
-    // is exactly what keeps data-predicate masking live on the
-    // daily-append ingest cube. Fresh edge docs re-emit via c.part
-    // staging, promoted only after the chunk swap and metadata commit.
-    store.cleanInnerDocsFrom(edgeStart)
-    // edge chunk-row rewrites are staged under this write-scoped c.part
-    // dir and swapped in only after the whole slab is durable (a c.part*
-    // dir is invisible to readers, removed by abort, and reclaimed by
-    // ZarrMaintenance.vacuum if both are missed)
     val writeId = java.util.UUID.randomUUID().toString.take(8)
-    val stageDir = s"c.part$writeId-edge"
+    val stageDir = s"c.part$writeId-slab"
+    val stageStats = ordLo < committedHi
+    val swapHi = math.min(ordHi, committedHi)
     try {
-      writeSlab(slabWithTail, store, hadoopPairs, dims, fieldByName,
-        joinAxes = (writeAxis0, l0f) +: existingAxes.tail.map(a => (a, 0L)),
-        fullAxes = (existingAxes.head.toIndexedSeq ++ newAxis0) +:
-          existingAxes.tail.map(_.toIndexedSeq),
-        shape = newShape, chunkShape = targetChunk, grid = newGrid,
-        dimZts = dimZts, dataCols = dataCols, dataMetaJsons = newDataJsons,
-        stats = stats, rowsPerTask = rowsPerTask,
-        expectRows = Math.addExact(slabCells,
-          Math.multiplyExact(tailCoords.length.toLong, trailingCells)),
-        expectChunks = newNumChunks - edgeStart,
-        stageBelowOrd = oldNumChunks, stageDir = stageDir,
-        // ragged: the slab's stats segments stage with the chunks — a
-        // final-key segment must never describe staged bytes (when the
-        // growth stays inside the committed edge chunk the grid does
-        // not change, so the reader's grid-signature check would NOT
-        // reject such a segment pre-commit)
-        stageStatsWriteId = if (edgeStart < oldNumChunks) writeId else "")
+      // ---- 3. retire the window's sidecar docs ----
+      retireStats(store, ordLo, retireHi)
 
-      // swap the staged edge chunk-row over the committed objects, one
-      // single-object replace each, only now that EVERY slab chunk is
-      // durable: a crash before this loop leaves the committed store
-      // byte-identical (staging keys are invisible); a crash inside it
-      // leaves each edge object either old or new — both read identically
-      // over the committed extent, whose positions the rewrite preserves
-      if (edgeStart < oldNumChunks) {
-        val newGridArr = newGrid.toArray
-        var ord = edgeStart
-        while (ord < oldNumChunks) {
-          val idx = ScanGeometry.indexOf(ord, newGridArr)
-          dataMetas.foreach { m =>
-            val key = m.chunkKey(idx)
-            store.replaceKey(s"${m.name}/$stageDir/$key", s"${m.name}/$key")
-          }
-          ord += 1
-        }
-        dataMetas.foreach(m => store.cleanStaging(m.name, stageDir))
+      // ---- 4. write every window chunk, and the changed coordinate chunks ----
+      writeSlab(kept.map(_.unionByName(df)).getOrElse(df),
+        store, hadoopPairs, dims, axes, coordMetas.map(_.dataType), dataMetas,
+        joinLo0 = winLo0, joinHi0 = slabHi0, stats = stats, rowsPerTask = rowsPerTask,
+        expectRows = Math.multiplyExact(slabHi0 - winLo0, trailingCells),
+        expectChunks = ordHi - ordLo, stageBelowOrd = committedHi, stageDir = stageDir,
+        stageStatsWriteId = if (stageStats) writeId else "")
+
+      val coordsToWrite = if (fresh) dims.indices else if (grows) Seq(0) else Nil
+      val stagedCoords = coordsToWrite.flatMap { i =>
+        writeCoordChunks(store, coordMetas(i), axes(i),
+          fromChunk = if (i == 0) (winLo0 / c0).toInt else 0,
+          stageBelow = if (i == 0) ((committed0 + c0 - 1) / c0).toInt else 0,
+          stageDir = stageDir)
       }
 
-      // extend the dim-0 coordinate array from the edge chunk on (an
-      // aligned base touches new chunks only; an unaligned one replaces
-      // the partial coordinate chunk — identical committed values — via
-      // the same staged single-object swap)
-      writeCoordChunks(store, coordMetas.head, writeAxis0, edgeGrid0, newL0,
-        replaceBelow = ((l0 + c0 - 1) / c0).toInt, stageDir = stageDir)
+      // ---- 5. swap the staged chunks over their committed keys ----
+      // a crash before this loop leaves the committed store as it was; a
+      // crash inside it leaves each object wholly old or wholly new (an
+      // edge chunk-row reads identically either way over the committed
+      // extent, whose positions the rewrite preserves)
+      val staged = (ordLo until swapHi).flatMap { ord =>
+        val idx = ScanGeometry.indexOf(ord, grid.toArray)
+        dataMetas.map(m => m.name -> m.chunkKey(idx))
+      } ++ stagedCoords
+      staged.foreach { case (a, key) => store.replaceKey(s"$a/$stageDir/$key", s"$a/$key") }
+      staged.map(_._1).distinct.foreach(store.cleanStaging(_, stageDir))
 
-      // ---- per-array metadata with the grown shape ----
-      // DATA arrays first in deterministic (store) order, the append-dim
-      // COORDINATE last, root document after all of them: the grown
-      // coordinate axis is the streaming sink's commit signal
-      // ([[graft.streaming.ZarrCubeSink]] classifies a batch as committed
-      // when its coordinates are on the axis), so the axis meta must only
-      // advance once every data meta already carries the grown shape — a
-      // crash anywhere inside this loop leaves the signal un-raised and a
-      // replay re-runs the append over the same final keys.
-      val coordJson = ZarrMeta.withShape0(coordMetas.head.sourceJson, newL0)
-      dataMetas.map(_.name).zip(newDataJsons).foreach { case (n, j) =>
-        store.writeMeta(n, j)
+      // ---- 6. commit: changed metas, dim-0 coordinate last, root ----
+      if (grows) {
+        ((if (fresh) metas.filterNot(_.name == dims.head) else dataMetas) :+ coordMetas.head)
+          .foreach(m => store.writeMeta(m.name, m.sourceJson))
+        store.writeStoreRootMeta(metas.map(m => m.name -> m.sourceJson), ChunkManifest.empty)
       }
-      store.writeMeta(dims.head, coordJson)
-      val newJsonByName: Map[String, String] =
-        (dataMetas.map(_.name) zip newDataJsons).toMap + (dims.head -> coordJson)
-      val allJsons = metas.map(m =>
-        m.name -> newJsonByName.getOrElse(m.name, m.sourceJson))
-      store.writeStoreRootMeta(allJsons, ChunkManifest.empty)
-      // promote the ragged slab's staged segments to final keys only
-      // now: they describe the GROWN extent (on a same-grid growth a
-      // pre-commit reader would otherwise accept them while still
-      // reading the committed shape — edge-chunk bounds would include
-      // rows the reader cannot see). A crash before this point only
-      // declines coverage; vacuum reclaims the staged docs.
-      if (edgeStart < oldNumChunks)
-        promoteStagedSegments(store, writeId, dataMetas, newGrid)
+
+      // ---- 7. promote the staged stats: their chunks are final and visible ----
+      if (stageStats) promoteStagedSegments(store, writeId, dataMetas, grid)
     } catch {
       case e: Throwable =>
-        // mirror the 1-D aligned-append abort: phantom chunks beyond the
-        // committed shape are invisible (and a retry overwrites the same
-        // final keys); a partially-rewritten edge chunk-row keeps every
-        // committed position's value, so the committed store still reads
-        // exactly as before. Stats must never describe chunks the store
-        // does not own — the interrupted write's fresh segments start at
-        // the edge and summarize content beyond the committed extent, so
-        // they are purged from the edge on; segments below it were never
-        // touched (or already trimmed to end there). Staged edge objects
-        // not yet swapped in are write-private — remove their c.part dir.
-        try store.cleanStatsSegmentsFrom(edgeStart)
-        catch { case _: Throwable => () }
-        // aligned appends write final-keyed INNER docs from the tasks
-        // (ordinals past the committed grid) — purge them like segments,
-        // or a later append reusing the ordinals inherits stale bounds
-        try store.cleanInnerDocsFrom(edgeStart)
-        catch { case _: Throwable => () }
-        try store.cleanStatsStaging(writeId) catch { case _: Throwable => () }
-        try {
-          (dataMetas :+ coordMetas.head).foreach(m =>
-            store.cleanStaging(m.name, stageDir))
-        } catch { case _: Throwable => () }
+        // ---- 8. abort ----
+        def quietly(f: => Unit): Unit = try f catch { case _: Throwable => () }
+        if (fresh) quietly(if (ownRoot) store.delete() else store.deleteRootContents())
+        else {
+          quietly(retireStats(store, ordLo, retireHi))
+          quietly(store.cleanStatsStaging(writeId))
+          quietly((dataMetas :+ coordMetas.head).foreach(m => store.cleanStaging(m.name, stageDir)))
+        }
         throw e
-    } finally tailDf.foreach(_.unpersist())
+    } finally kept.foreach(_.unpersist())
   }
   // scalastyle:on method.length
+
+  /** Retire every sidecar doc describing chunk ordinals in [lo, hi):
+    * per-inner-chunk docs are deleted, and so is every stats segment
+    * intersecting the window. The walk is over the RAW listing:
+    * overlap-suppressed files are exactly a crashed attempt's leftovers
+    * whose ordinals are being reused, and skipping them would let them
+    * suppress the fresh segments. An UNSUPPRESSED straddler keeps its
+    * out-of-window pieces as narrower segments, so coverage outside the
+    * window (zero-GET aggregates) survives; a suppressed one is
+    * ambiguous everywhere and goes whole, as does an untrimmable doc —
+    * which only declines coverage. */
+  private def retireStats(store: ZarrStore, lo: Long, hi: Long): Unit = {
+    store.listInnerStatsDocOrds().foreach { o =>
+      if (o >= lo && o < hi) store.deleteKey(ChunkStats.innerKey(o))
+    }
+    val raw = store.listStatsSegmentsRaw()
+    val unsuppressed = ZarrStore.unsuppressedSegments(raw).toSet
+    raw.foreach { case (first, n) =>
+      if (first < hi && first + n > lo) {
+        val key = ChunkStats.segmentKey(first, n)
+        val straddles = unsuppressed((first, n)) && (first < lo || first + n > hi)
+        val doc = if (straddles) store.readText(key) else None
+        store.deleteKey(key)
+        doc.flatMap(parseSegment).foreach { parsed =>
+          if (first < lo)
+            trimSegment(parsed.deepCopy(), (lo - first).toInt, 0)
+              .foreach(store.writeText(ChunkStats.segmentKey(first, (lo - first).toInt), _))
+          if (first + n > hi)
+            trimSegment(parsed, (first + n - hi).toInt, (hi - first).toInt)
+              .foreach(store.writeText(ChunkStats.segmentKey(hi, (first + n - hi).toInt), _))
+        }
+      }
+    }
+  }
+
+  /** The store a cube write targets, with the session's `fs.*` conf. */
+  private def openStore(
+      df: DataFrame, path: String, maxAxisLen: Int): (ZarrStore, Seq[(String, String)]) = {
+    if (maxAxisLen > (1 << 30))
+      throw new ZarrException(
+        s"max_axis_len $maxAxisLen exceeds 2^30 (grid-index arithmetic bound)")
+    val pairs = ZarrStore.fsPairs(df.sparkSession.sparkContext.hadoopConfiguration)
+    (ZarrStore(path, pairs), pairs)
+  }
+
+  /** append_dim / region_dim must name the store's first dim. */
+  private def requireFirstDim(
+      dims: Seq[String], dim: String, opName: String, why: String): Unit = {
+    val k = dims.indexOf(dim)
+    if (k < 0)
+      throw new ZarrException(
+        s"$opName '$dim' is not a dim of the store (${dims.mkString(",")})")
+    if (k != 0)
+      throw new ZarrException(
+        s"$opName '$dim' is dim $k; $why. Rewrite through a fresh cube write instead")
+  }
+
+  /** Every committed coordinate axis of a cube target, decoded. */
+  private def readAxes(store: ZarrStore, t: CubeTarget, path: String): Seq[IndexedSeq[Any]] =
+    t.coordMetas.map(m => readAscendingAxis(store, m, path,
+      "cube layouts require an ascending axis — rewrite the store instead").toIndexedSeq)
 
   /** A resolved, validated cube-store modification target. */
   private final case class CubeTarget(
       metas: Seq[ZarrArrayMeta],
       dims: Seq[String],
       coordMetas: Seq[ZarrArrayMeta],
-      dataMetas: Seq[ZarrArrayMeta],
-      targetShape: IndexedSeq[Long],
-      targetChunk: IndexedSeq[Int])
+      dataMetas: Seq[ZarrArrayMeta])
 
-  /** Resolve an existing store as a coherent, modifiable cube: v3,
-    * canonical-keyed, one coordinate array per dim, congruent data
-    * arrays this writer can encode. Shared by [[append]] and
-    * [[overwriteRegion]]; every refusal is prefixed with the option
-    * name (`opName`) the caller surfaced. */
   /** Layout-option validation that needs NOTHING from the data — the
     * contract every entry point (DSv2 options, ZarrCubeSink,
     * ZarrMaintenance.compact) shares, enforced before any Spark job:
     * sharding without an explicit chunk_shape would silently pin the
     * derived default as the store's permanent inner layout. */
-  private def validateLayoutOptions(
+  private[graft] def validateLayoutOptions(
       dims: Seq[String], chunkShapeOpt: Option[Seq[Int]],
       shardShapeOpt: Option[Seq[Int]]): Unit = {
     chunkShapeOpt.foreach { cs =>
@@ -674,9 +648,9 @@ object ZarrCubeWrite {
     shardShapeOpt.foreach { ss =>
       if (chunkShapeOpt.isEmpty)
         throw new ZarrException(
-          "shard_shape requires an explicit chunk_shape (the inner chunk " +
-            "layout is a permanent property of the store — it must not be " +
-            "derived implicitly)")
+          "shard_shape requires an explicit chunk_shape: the inner chunk " +
+            "layout readers address is a permanent property of the store and " +
+            "is never derived, so sharding requires chunk_shape, inner dividing outer")
       if (ss.length != dims.length)
         throw new ZarrException(
           s"shard_shape has ${ss.length} entries for ${dims.length} dims")
@@ -689,6 +663,11 @@ object ZarrCubeWrite {
     }
   }
 
+  /** Resolve an existing store as a coherent, modifiable cube: v3,
+    * canonical-keyed, one coordinate array per dim, congruent data
+    * arrays this writer can encode. Shared by [[append]] and
+    * [[overwriteRegion]]; every refusal is prefixed with the option
+    * name (`opName`) the caller surfaced. */
   private def resolveCubeTarget(
       store: ZarrStore, path: String, dimsOpt: Option[Seq[String]],
       opName: String): CubeTarget = {
@@ -708,7 +687,10 @@ object ZarrCubeWrite {
         s"$opName: $path is a Zarr v2 store (array ${m.name}); the writer " +
           "is v3-only — compact it to a v3 store first")
     }
-    if (store.readChunkManifest().parts.nonEmpty)
+    // ONE root read: the manifest gate and the committed (consolidated)
+    // extents the torn-commit heal compares against
+    val rootDoc = store.readText("zarr.json")
+    if (rootDoc.exists(d => ChunkManifest.parse(d).parts.nonEmpty))
       throw new ZarrException(
         s"$opName: $path carries a chunk manifest (staged tabular " +
           "commits); cube modification targets canonical-keyed cube stores — compact first")
@@ -728,7 +710,9 @@ object ZarrCubeWrite {
           s"dims option (${ds.mkString(",")}) does not match the store's " +
             s"dims (${dims.mkString(",")}); omit dims — the store defines them")
     }
-    val metasH = healTornShape0(store, metas, dims)
+    val rootS0 = rootDoc.flatMap(d =>
+      ZarrMeta.parseConsolidated(d).find(_.name == dims.head)).map(_.shape(0))
+    val metasH = healTornShape0(store, metas, dims, rootS0)
     val (coordMetasAll, dataMetas) = metasH.partition(_.isCoordinate)
     // shape/chunkShape are Arrays on the meta — compare by VALUE
     val targetShape: IndexedSeq[Long] = dataMetas.head.shape.toIndexedSeq
@@ -776,19 +760,19 @@ object ZarrCubeWrite {
       throw new ZarrException(
         s"$opName: stored chunk_shape ${targetChunk.mkString("x")} of $path " +
           s"is too large to assemble ($storedElems elements per chunk)")
-    CubeTarget(metasH, dims, coordMetas, dataMetas, targetShape, targetChunk)
+    CubeTarget(metasH, dims, coordMetas, dataMetas)
   }
 
   /** Repair the torn-metadata window of an interrupted append commit.
     *
     * The append protocol writes every chunk object (slab data AND the
     * coordinate-axis extension) strictly BEFORE any metadata, then the
-    * data-array metas in store order, the dim-0 coordinate meta LAST
-    * (it is the commit signal — see [[graft.streaming.ZarrCubeSink]]),
-    * root after. `shape[0]` is the only field that commit changes, so a
-    * store whose arrays are congruent EXCEPT for `shape[0]` is the
-    * unique signature of a crash inside that loop — any other
-    * incongruence keeps the caller's loud refusal.
+    * data-array metas, the dim-0 coordinate meta LAST (it is the commit
+    * signal — see [[graft.streaming.ZarrCubeSink]]), the root after.
+    * `shape[0]` is the only field that commit changes, so a store whose
+    * arrays are congruent EXCEPT for `shape[0]` is the unique signature
+    * of a crash inside it — any other incongruence keeps the caller's
+    * loud refusal.
     *
     * The repair makes the coordinate meta's extent authoritative and
     * sets every data array's `shape[0]` to it:
@@ -800,17 +784,22 @@ object ZarrCubeWrite {
     *  - coordinate AHEAD of a data array (a store torn by the pre-r14
     *    unordered commit loop): the signal already raised, so this
     *    COMPLETES the commit. Sound because chunks precede all meta
-    *    writes — the grown extent's data chunks are durably present the
-    *    moment any meta carries it. Because the same signature can be
-    *    produced by hand-editing a foreign store, the forward direction
-    *    first PROBES that the grown region's expected chunk objects
-    *    exist and refuses loudly if not (fill values must never
-    *    silently replace a congruence refusal).
+    *    writes. Because the same signature can be produced by
+    *    hand-editing a foreign store, the forward direction first
+    *    PROBES that the grown region's expected chunk objects exist and
+    *    refuses loudly if not (fill values must never silently replace
+    *    a congruence refusal).
+    *  - every per-array meta AHEAD of the consolidated root (`rootS0`;
+    *    a crash after the signal, before the root): the signal raised
+    *    and every chunk is durable, so the root is re-consolidated —
+    *    the commit completes, and a replay of the same append is then
+    *    refused as a duplicate (its coordinates are on the axis).
     * Either way the root is re-consolidated from the healed metas and
     * stats segments beyond the healed grid are purged (a rolled-back
     * slab's segments must not describe phantom ordinals). */
   private def healTornShape0(
-      store: ZarrStore, metas: Seq[ZarrArrayMeta], dims: Seq[String]): Seq[ZarrArrayMeta] = {
+      store: ZarrStore, metas: Seq[ZarrArrayMeta], dims: Seq[String],
+      rootS0: Option[Long]): Seq[ZarrArrayMeta] = {
     val (coordsAll, datas) = metas.partition(_.isCoordinate)
     val coord0 = coordsAll.find(_.name == dims.head).getOrElse(return metas)
     val head = datas.head
@@ -824,7 +813,8 @@ object ZarrCubeWrite {
     }
     if (!congruentButShape0) return metas
     val committedS0 = coord0.shape(0)
-    if (datas.forall(_.shape(0) == committedS0)) return metas
+    if (datas.forall(_.shape(0) == committedS0) && !rootS0.exists(_ < committedS0))
+      return metas
     // forward-heal probe (arrays whose extent would GROW): advancing
     // shape[0] makes the grown region readable, and if its chunks were
     // never written the store would silently serve fill values where
@@ -876,11 +866,8 @@ object ZarrCubeWrite {
   }
 
   /** The slab DataFrame must carry exactly dims + data arrays with the
-    * stored types. Returns the field-by-name map the join/stat plumbing
-    * uses. */
-  private def validateSlabSchema(
-      df: DataFrame, t: CubeTarget, opName: String): Map[String, StructField] = {
-    val fieldByName = df.schema.fields.map(f => f.name -> f).toMap
+    * stored types. */
+  private def validateSlabSchema(df: DataFrame, t: CubeTarget, opName: String): Unit = {
     if (df.columns.exists(_.startsWith("__zarr_")))
       throw new ZarrException(
         "column names starting with __zarr_ collide with cube-write internals")
@@ -889,6 +876,7 @@ object ZarrCubeWrite {
       throw new ZarrException(
         s"$opName: DataFrame columns (${df.columns.sorted.mkString(",")}) != " +
           s"store arrays (${wantCols.toSeq.sorted.mkString(",")})")
+    val fieldByName = df.schema.fields.map(f => f.name -> f).toMap
     (t.coordMetas ++ t.dataMetas).foreach { m =>
       val f = fieldByName(m.name)
       if (f.dataType != m.dataType.sparkType)
@@ -896,241 +884,7 @@ object ZarrCubeWrite {
           s"$opName: column ${m.name} type ${f.dataType.sql} != stored " +
             s"${m.dataType.sparkType.sql}")
     }
-    fieldByName
   }
-
-  // scalastyle:off method.length
-  /** Overwrite a REGION of an existing cube in place along its first
-    * dimension — xarray's `region=` write, the reprocessing shape: one
-    * day of a climate store (or one ingest batch of a feature cube) is
-    * recomputed and swapped without touching the rest of the store or
-    * its geometry. Surfaced as
-    * `df.write.format("zarr").mode("overwrite").option("region_dim", "time").save(path)`.
-    *
-    * Contract (loud, never guess) — [[append]]'s target rules plus:
-    *  - the slab's `region_dim` coordinates must EXACTLY equal a
-    *    contiguous run of the existing axis (same values, same order);
-    *    coordinates are identity here, so a value not already on the
-    *    axis is a refusal, not an insert;
-    *  - the run must be chunk-aligned on BOTH ends (a partial boundary
-    *    chunk would need read-modify-write of rows outside the region);
-    *  - trailing-dim coordinates must match the stored axes exactly
-    *    (the region spans the full cross-section);
-    *  - the slab must be dense over region × cross-section.
-    *
-    * The store's geometry is untouched: no metadata or root rewrite at
-    * all — the region's chunks are STAGED under a write-scoped
-    * `c.part*` dir and swapped over the committed keys with
-    * single-object replaces only after the whole region is durable,
-    * and the affected ordinals' stats segments are replaced. A crash
-    * before the swap leaves the committed region byte-identical; a
-    * crash mid-swap is chunk-granularity — like every zarr region
-    * write (xarray's included) — but with no torn objects (each chunk
-    * is wholly old or wholly new), with the affected stats purged
-    * first so nothing misdescribes; re-running the same overwrite
-    * completes it (idempotent final keys).
-    *
-    * Sidecar note: a pre-existing segment that STRADDLES the region
-    * boundary is deleted whole — its out-of-region chunks fall back to
-    * decode-and-test and full-coverage metadata aggregates decline
-    * until the sidecar is whole again. The region's own ordinals get
-    * fresh segments at write time; after heavy region churn run
-    * `ZarrMaintenance.analyze` to restore full coverage. */
-  def overwriteRegion(
-      df: DataFrame,
-      path: String,
-      dimsOpt: Option[Seq[String]],
-      regionDim: String,
-      stats: Boolean,
-      maxAxisLen: Int = 1 << 22,
-      rowsPerTask: Long = 1L << 22): Unit = {
-    val spark = df.sparkSession
-    if (maxAxisLen > (1 << 30))
-      throw new ZarrException(
-        s"max_axis_len $maxAxisLen exceeds 2^30 (grid-index arithmetic bound)")
-    import scala.jdk.CollectionConverters._
-    val hadoopPairs = spark.sparkContext.hadoopConfiguration
-      .iterator().asScala.map(e => e.getKey -> e.getValue)
-      .filter(_._1.startsWith("fs.")).toSeq
-    val store = ZarrStore(path, hadoopPairs)
-
-    val t = resolveCubeTarget(store, path, dimsOpt, "region_dim")
-    val dims = t.dims
-    val k = dims.indexOf(regionDim)
-    if (k < 0)
-      throw new ZarrException(
-        s"region_dim '$regionDim' is not a dim of the store (${dims.mkString(",")})")
-    if (k != 0)
-      throw new ZarrException(
-        s"region_dim '$regionDim' is dim $k; only FIRST-dim regions can be " +
-          "swapped in place — a trailing-dim region intersects every " +
-          "chunk-row of the store. Rewrite through a fresh cube write instead")
-    val fieldByName = validateSlabSchema(df, t, "region_dim")
-
-    // ---- locate the region on the existing axis ----
-    val existingAxes: Seq[Array[Any]] = t.coordMetas.map(m =>
-      readAscendingAxis(store, m, path,
-        "cube layouts require an ascending axis — rewrite the store instead"))
-    val regionAxis = collectAxis(df, dims.head, maxAxisLen)
-    if (regionAxis.isEmpty)
-      throw new ZarrException("region overwrite: input DataFrame is empty")
-    val axis0 = existingAxes.head
-    val start = axis0.indices.find(i => ChunkFilter.cmp(axis0(i), regionAxis(0)) == 0)
-      .getOrElse(throw new ZarrException(
-        s"region_dim: first ${dims.head} value ${regionAxis(0)} is not on the " +
-          "store's axis; region coordinates must already exist (regions " +
-          "replace values, never positions — use append_dim to grow)"))
-    if (start + regionAxis.length > axis0.length ||
-      regionAxis.indices.exists(j => ChunkFilter.cmp(regionAxis(j), axis0(start + j)) != 0))
-      throw new ZarrException(
-        s"region_dim: the slab's ${regionAxis.length} ${dims.head} values do not " +
-          s"form a contiguous run of the store's axis at position $start; " +
-          "region coordinates must match the axis exactly")
-    val end = start + regionAxis.length
-    val c0 = t.targetChunk.head
-    if (start % c0 != 0 || (end % c0 != 0 && end != axis0.length))
-      throw new ZarrException(
-        s"region_dim: region [$start,$end) of ${dims.head} is not chunk-aligned " +
-          s"(chunk extent $c0); a partial boundary chunk would need " +
-          "read-modify-write of rows outside the region — align the region " +
-          "or rewrite the store")
-    dims.zipWithIndex.drop(1).foreach { case (d, i) =>
-      val got = collectAxis(df, d, maxAxisLen)
-      val want = existingAxes(i)
-      if (got.length != want.length ||
-        got.indices.exists(j => ChunkFilter.cmp(got(j), want(j)) != 0))
-        throw new ZarrException(
-          s"region_dim: the slab's '$d' axis (${got.length} values) does not " +
-            s"match the store's (${want.length}); a region spans the full " +
-            "trailing cross-section")
-    }
-
-    // ---- density proof over the region ----
-    val trailingCells = existingAxes.tail.foldLeft(1L)((a, ax) =>
-      Math.multiplyExact(a, ax.length.toLong))
-    val regionCells = Math.multiplyExact(regionAxis.length.toLong, trailingCells)
-    val proof = df.groupBy(dims.map(col): _*).agg(count(lit(1)).as("__zarr_c"))
-      .agg(sum(col("__zarr_c")), max(col("__zarr_c"))).collect()(0)
-    if (proof.getLong(1) > 1L)
-      throw new ZarrException(
-        s"region overwrite: duplicate coordinate tuples (a (${dims.mkString(",")}) " +
-          s"combination appears ${proof.getLong(1)} times); deduplicate or aggregate first")
-    if (proof.getLong(0) != regionCells)
-      throw new ZarrException(
-        s"region overwrite: region is not dense — ${regionAxis.length}x$trailingCells = " +
-          s"$regionCells cells but ${proof.getLong(0)} rows " +
-          s"(${regionCells - proof.getLong(0)} missing); densify before overwriting")
-
-    // ---- geometry is the store's own; only the ordinal window moves ----
-    val grid: Seq[Int] = t.targetShape.zip(t.targetChunk)
-      .map { case (s, c) => ((s + c - 1) / c).toInt }
-    val trailingGrid = grid.tail.foldLeft(1L)(_ * _.toLong)
-    val ordLo = (start / c0).toLong * trailingGrid
-    val ordHi = ((end + c0 - 1) / c0).toLong * trailingGrid
-    val dataCols = t.dataMetas.map(m => fieldByName(m.name))
-
-    // per-INNER-chunk stats docs of every ordinal in the window retire
-    // the same way (a region overwrite keeps the SHAPE, so the docs'
-    // shape signature would NOT invalidate them — a stale doc would let
-    // a data-predicate mask silently drop rows that now match)
-    var iOrd = ordLo
-    while (iOrd < ordHi) {
-      store.deleteKey(ChunkStats.innerKey(iOrd))
-      iOrd += 1
-    }
-
-    // every stats segment whose range INTERSECTS the region's ordinals
-    // must stop describing them — after the overwrite it would describe
-    // replaced bytes. Unconditional (even with stats=false on THIS
-    // write): a stale segment over rewritten chunks would misdescribe
-    // data. A straddling segment is TRIMMED — its kept ranges are
-    // rewritten as narrower segments so whole-store coverage (zero-GET
-    // aggregates) survives the region swap; an untrimmable doc (foreign
-    // signature) is dropped whole, which only declines. The walk is
-    // over the RAW file listing (a crashed earlier attempt's leftover
-    // segments overlap committed ones, so both read as suppressed —
-    // skipping them would let them survive and suppress THIS write's
-    // fresh segments); only an UNSUPPRESSED straddler earns trimmed
-    // prefixes — a suppressed one is ambiguous outside the region too.
-    val unsuppressed = store.listStatsSegments().toSet
-    store.listStatsSegmentsRaw().foreach { case (first, n) =>
-      if (first < ordHi && first + n > ordLo) {
-        val doc = store.readText(ChunkStats.segmentKey(first, n))
-        store.deleteKey(ChunkStats.segmentKey(first, n))
-        if (unsuppressed((first, n)))
-          doc.flatMap(parseSegment).foreach { parsed =>
-            if (first < ordLo)
-              trimSegment(parsed.deepCopy(), (ordLo - first).toInt, 0)
-                .foreach(store.writeText(ChunkStats.segmentKey(first, (ordLo - first).toInt), _))
-            if (first + n > ordHi)
-              trimSegment(parsed, (first + n - ordHi).toInt, (ordHi - first).toInt)
-                .foreach(store.writeText(
-                  ChunkStats.segmentKey(ordHi, (first + n - ordHi).toInt), _))
-          }
-      }
-    }
-
-    // the region replaces COMMITTED objects: every chunk is staged under
-    // a write-scoped c.part dir and swapped in with single-object
-    // replaces only after the whole region is durable — a crash before
-    // the swap leaves the committed region byte-identical; a crash
-    // mid-swap is the documented chunk-granularity posture but with no
-    // torn objects (each chunk is wholly old or wholly new); a retry
-    // re-runs over the same final keys. Staging leftovers are removed
-    // on failure below and reclaimed by ZarrMaintenance.vacuum after a
-    // hard crash.
-    val writeId = java.util.UUID.randomUUID().toString.take(8)
-    val stageDir = s"c.part$writeId-region"
-    try {
-      writeSlab(df, store, hadoopPairs, dims, fieldByName,
-        joinAxes = (regionAxis, start.toLong) +: existingAxes.tail.map(a => (a, 0L)),
-        fullAxes = existingAxes.map(_.toIndexedSeq),
-        shape = t.targetShape, chunkShape = t.targetChunk, grid = grid,
-        dimZts = t.coordMetas.map(_.dataType), dataCols = dataCols,
-        dataMetaJsons = t.dataMetas.map(_.sourceJson),
-        stats = stats, rowsPerTask = rowsPerTask,
-        expectRows = regionCells, expectChunks = ordHi - ordLo,
-        stageBelowOrd = ordHi, stageDir = stageDir,
-        // the region's segments stage with its chunks: they carry the
-        // store's UNCHANGED grid signature, so readers would accept a
-        // final-key segment immediately — before the swap it would
-        // describe staged bytes (metadata aggregates answering with the
-        // new values while rows still read the old)
-        stageStatsWriteId = writeId)
-      val gridA = grid.toArray
-      var ord = ordLo
-      while (ord < ordHi) {
-        val idx = ScanGeometry.indexOf(ord, gridA)
-        t.dataMetas.foreach { m =>
-          val key = m.chunkKey(idx)
-          store.replaceKey(s"${m.name}/$stageDir/$key", s"${m.name}/$key")
-        }
-        ord += 1
-      }
-      t.dataMetas.foreach(m => store.cleanStaging(m.name, stageDir))
-      // chunks are all final now; promote the staged segments
-      promoteStagedSegments(store, writeId, t.dataMetas, grid)
-    } catch {
-      case e: Throwable =>
-        // stats over the region were already retired up front; fresh
-        // segments of the failed attempt lie within the region window
-        // and describe staged (never-swapped) bytes — purge exactly
-        // that window (committed segments beyond ordHi, including the
-        // trimmed tail, describe untouched chunks and stay), then drop
-        // the staging
-        try store.listStatsSegmentsRaw().foreach { case (first, n) =>
-          if (first < ordHi && first + n > ordLo)
-            store.deleteKey(ChunkStats.segmentKey(first, n))
-        } catch { case _: Throwable => () }
-        try store.cleanStatsStaging(writeId) catch { case _: Throwable => () }
-        try t.dataMetas.foreach(m => store.cleanStaging(m.name, stageDir))
-        catch { case _: Throwable => () }
-        throw e
-    }
-    // no commit: shapes, axes, metadata and root are all unchanged —
-    // the overwritten chunks and their fresh segments ARE the result
-  }
-  // scalastyle:on method.length
 
   /** Decode a 1-D coordinate axis driver-side, enforcing the strictly
     * ascending order every cube-layout invariant rests on. Axis-sized
@@ -1163,52 +917,41 @@ object ZarrCubeWrite {
     out
   }
 
-  /** Extend a 1-D coordinate array in place: write the NEW chunks
-    * (`fromChunk` onward — the old extent is chunk-aligned, so no
-    * existing object is touched) with the array's own codec chain,
-    * padding the final edge chunk with the declared fill value. */
+  /** Write a 1-D coordinate array's chunks from `fromChunk` on, with
+    * the array's own codec chain, padding the final edge chunk with the
+    * declared fill value. Chunks below `stageBelow` replace COMMITTED
+    * objects: they land under `stageDir` for the caller's swap, and are
+    * returned as (array, key). */
   private def writeCoordChunks(
-      store: ZarrStore, m: ZarrArrayMeta, newVals: Array[Any],
-      fromChunk: Int, newLen: Long,
-      // chunks below `replaceBelow` are COMMITTED objects: their rewrite
-      // is staged under `stageDir` and swapped in with a single-object
-      // replace, never truncated in place
-      replaceBelow: Int = 0, stageDir: String = ""): Unit = {
+      store: ZarrStore, m: ZarrArrayMeta, axis: IndexedSeq[Any],
+      fromChunk: Int, stageBelow: Int, stageDir: String): Seq[(String, String)] = {
     val cs = m.chunkShape(0)
     val chain = Codecs.bytesCodecs(m.codecs,
       if (m.dataType.byteWidth > 0) m.dataType.byteWidth else 1)
     val order = Codecs.endianness(m.codecs)
-    val base = fromChunk.toLong * cs
-    val nChunks = ((newLen + cs - 1) / cs).toInt
-    (fromChunk until nChunks).foreach { ci =>
-      val lo = (ci.toLong * cs - base).toInt
-      val hi = math.min(newVals.length.toLong, lo.toLong + cs).toInt
-      val vals = new scala.collection.mutable.ArrayBuffer[Any](cs)
-      (lo until hi).foreach(j => vals += newVals(j))
-      while (vals.length < cs) vals += m.fillValue
+    val nChunks = ((axis.length.toLong + cs - 1) / cs).toInt
+    (fromChunk until nChunks).flatMap { ci =>
+      val real = axis.slice(ci * cs, ci * cs + cs)
+      val vals = real ++ Seq.fill(cs - real.length)(m.fillValue)
       val packed = m.shardingSpec match {
         // a foreign store may shard even its coordinate axes; pack the
         // padded chunk exactly like the data-array kernel does — incl.
         // omitting all-padding inner chunks of the final edge shard
         case Some(sp) =>
-          val real = hi - lo
-          val inner = sp.innerShape.head
-          val skip = (0 until cs / inner)
-            .filter(gi => gi.toLong * inner >= real).toSet
-          Sharding.encode(m.dataType, Seq(cs), sp, vals.toIndexedSeq, skipInner = skip)
+          Sharding.encode(m.dataType, Seq(cs), sp, vals,
+            skipInner = skipInnerOf(sp, Array(cs), Array(real.length)))
         case None =>
-          val enc = ZarrDataWriter.encode(m.dataType, vals.toSeq, order)
-          chain.foldLeft(enc)((b, cc) => cc.encode(b))
+          chain.foldLeft(ZarrDataWriter.encode(m.dataType, vals, order))((b, cc) => cc.encode(b))
       }
       val key = m.chunkKey(Array(ci))
-      if (ci < replaceBelow) {
+      if (ci < stageBelow) {
         store.writeChunk(m.name, s"$stageDir/$key", packed)
-        store.replaceKey(s"${m.name}/$stageDir/$key", s"${m.name}/$key")
-      } else store.writeChunk(m.name, key, packed)
+        Some(m.name -> key)
+      } else {
+        store.writeChunk(m.name, key, packed)
+        None
+      }
     }
-    // the swap MOVES staged objects out; drop the emptied staging dir
-    if (stageDir.nonEmpty && fromChunk < replaceBelow)
-      store.cleanStaging(m.name, stageDir)
   }
 
   /** Promote one write's staged cube segments to final keys —
@@ -1327,31 +1070,26 @@ object ZarrCubeWrite {
     vals
   }
 
-  /** The distributed middle of both cube write and cube append: attach
-    * grid indices via per-dim broadcast joins, shuffle ONCE into
-    * contiguous chunk-ordinal blocks, assemble and write chunks at their
-    * final keys, and verify the expected (rows, chunks) all landed.
+  /** The distributed middle of [[commitSlab]]: attach grid indices
+    * via per-dim broadcast joins, shuffle ONCE into contiguous
+    * chunk-ordinal blocks, assemble and write chunks, and verify the
+    * expected (rows, chunks) all landed.
     *
-    * `joinAxes(i)` is (values to index, base grid offset) — the fresh
-    * write indexes every axis from 0; an append indexes the append dim's
-    * NEW values from the existing axis length. `fullAxes` is the complete
-    * final axis per dim (what stats coordinate views read). `shape`/
-    * `grid` describe the FINAL store. */
+    * `axes` are the final coordinate axes; the slab's dim-0 values are
+    * indexed against positions [joinLo0, joinHi0) of the first (a row
+    * outside them joins nothing and fails the row count). `dataMetas`
+    * describe the FINAL store. */
   // scalastyle:off parameter.number
   private def writeSlab(
       df: DataFrame,
       store: ZarrStore,
       hadoopPairs: Seq[(String, String)],
       dims: Seq[String],
-      fieldByName: Map[String, StructField],
-      joinAxes: Seq[(Array[Any], Long)],
-      fullAxes: Seq[IndexedSeq[Any]],
-      shape: Seq[Long],
-      chunkShape: Seq[Int],
-      grid: Seq[Int],
+      axes: Seq[IndexedSeq[Any]],
       dimZts: Seq[ZarrType],
-      dataCols: Seq[StructField],
-      dataMetaJsons: Seq[String],
+      dataMetas: Seq[ZarrArrayMeta],
+      joinLo0: Long,
+      joinHi0: Long,
       stats: Boolean,
       rowsPerTask: Long,
       expectRows: Long,
@@ -1360,16 +1098,19 @@ object ZarrCubeWrite {
       // they land under `<array>/<stageDir>/` (invisible to readers,
       // vacuum-reclaimable) and the caller swaps them into place only
       // after the whole slab is durable
-      stageBelowOrd: Long = 0L,
-      stageDir: String = "",
+      stageBelowOrd: Long,
+      stageDir: String,
       // when nonEmpty, this slab's stats segments are staged too
       // (ChunkStats.cubeStagingKey) — a durable FINAL-key segment must
       // never describe chunk bytes that are still at staging keys; the
       // caller promotes them after the chunk swap
-      stageStatsWriteId: String = ""): Unit = {
+      stageStatsWriteId: String): Unit = {
     // scalastyle:on parameter.number
     import scala.jdk.CollectionConverters._
     val spark = df.sparkSession
+    val shape = dataMetas.head.shape.toSeq
+    val chunkShape = dataMetas.head.chunkShape.toSeq
+    val grid = dataMetas.head.gridShape.toSeq
     val chunkElems: Long = chunkShape.foldLeft(1L)(_ * _.toLong)
 
     // ---- attach grid indices via per-dim BROADCAST joins ----
@@ -1378,13 +1119,14 @@ object ZarrCubeWrite {
     // the semantics of the distinct() that produced the axis
     var indexed = df
     dims.zipWithIndex.foreach { case (d, i) =>
-      val (vals, base) = joinAxes(i)
+      val base = if (i == 0) joinLo0 else 0L
+      val vals = if (i == 0) axes(0).slice(joinLo0.toInt, joinHi0.toInt) else axes(i)
       val axisDf = spark.createDataFrame(
         new java.util.ArrayList[Row](vals.zipWithIndex.map { case (v, g) =>
           Row(v, base + g.toLong)
-        }.toSeq.asJava),
+        }.asJava),
         StructType(Seq(
-          StructField(s"__zarr_v$i", fieldByName(d).dataType, nullable = false),
+          StructField(s"__zarr_v$i", df.schema(d).dataType, nullable = false),
           StructField(s"__zarr_g$i", LongType, nullable = false))))
       indexed = indexed.join(broadcast(axisDf), col(d) === col(s"__zarr_v$i"))
     }
@@ -1407,7 +1149,7 @@ object ZarrCubeWrite {
     val nBlocks: Int = math.min(1 << 16,
       ((expectChunks + chunksPerBlock - 1) / chunksPerBlock)).toInt
     val shuffled = indexed
-      .select((dataCols.map(f => col(f.name)) :+
+      .select((dataMetas.map(m => col(m.name)) :+
         ordCol.as("__zarr_ord") :+ offCol.as("__zarr_off")): _*)
       .repartition(math.max(1, nBlocks), (col("__zarr_ord") / chunksPerBlock).cast(LongType))
       .sortWithinPartitions(col("__zarr_ord"), col("__zarr_off"))
@@ -1417,23 +1159,18 @@ object ZarrCubeWrite {
     val shapeArr = shape.toArray
     val dimsArr = dims.toArray
     val dimZtArr = dimZts.toArray
-    val dataNames = dataCols.map(_.name).toArray
-    val dataJsonArr = dataMetaJsons.toArray
-    val axesB = spark.sparkContext.broadcast(fullAxes)
-    val statsOn = stats
+    val dataNames = dataMetas.map(_.name).toArray
+    val dataJsonArr = dataMetas.map(_.sourceJson).toArray
+    val axesB = spark.sparkContext.broadcast(axes)
     val root = store.root
-    val pairs = hadoopPairs
 
     import spark.implicits._
-    val stageBelow = stageBelowOrd
-    val stageDirName = stageDir
-    val stageStatsId = stageStatsWriteId
     val written = shuffled.mapPartitions { it =>
       if (!it.hasNext) Iterator.empty
       else Iterator.single(ZarrCubeWrite.assemblePartition(
-        it, root, pairs, dataNames, dataJsonArr, dimsArr, dimZtArr,
-        axesB.value, shapeArr, chunkArr, gridArr, statsOn,
-        stageBelow, stageDirName, stageStatsId))
+        it, root, hadoopPairs, dataNames, dataJsonArr, dimsArr, dimZtArr,
+        axesB.value, shapeArr, chunkArr, gridArr, stats,
+        stageBelowOrd, stageDir, stageStatsWriteId))
     }.collect()
 
     val rowsWritten = written.map(_._1).sum
@@ -1460,9 +1197,9 @@ object ZarrCubeWrite {
       chunkShape: Array[Int],
       grid: Array[Int],
       stats: Boolean,
-      stageBelowOrd: Long = 0L,
-      stageDir: String = "",
-      stageStatsWriteId: String = ""): (Long, Long) = {
+      stageBelowOrd: Long,
+      stageDir: String,
+      stageStatsWriteId: String): (Long, Long) = {
     val store = ZarrStore(root, hadoopPairs)
     val ndim = grid.length
     val ncols = dataNames.length
@@ -1475,46 +1212,20 @@ object ZarrCubeWrite {
     val chunkElems = chunkShape.map(_.toLong).product.toInt
     // sharded arrays: the assembled outer chunk is packed into one shard
     // object; plain arrays with a top-level transpose codec store each
-    // chunk dimension-permuted (same gather as ZarrWriter.writeArray)
+    // chunk dimension-permuted (Codecs.transposeValues)
     val shardSpecs = metas.map(_.shardingSpec)
     val topPerms: Array[Array[Int]] =
       metas.map(m => if (m.shardingSpec.isDefined) null else m.transposePerm.orNull)
-
-    /** Inner chunks of an edge shard that lie ENTIRELY beyond the array
-      * extent (pure fill padding): omitted from the shard and indexed
-      * absent — no reader ever requests them, and the object shrinks. */
-    def skipInnerOf(sp: Sharding.Spec, extent: Array[Int]): Set[Int] = {
-      var full = true
-      var d0 = 0
-      while (d0 < ndim) { if (extent(d0) != chunkShape(d0)) full = false; d0 += 1 }
-      if (full) Set.empty
-      else {
-        val inner = sp.innerShape
-        val ig = Array.tabulate(ndim)(d => chunkShape(d) / inner(d))
-        val nInner = ig.product
-        val b = Set.newBuilder[Int]
-        var gi = 0
-        while (gi < nInner) {
-          var rem = gi
-          var skip = false
-          var d = ndim - 1
-          while (d >= 0) {
-            val id = (rem % ig(d)).toInt
-            rem /= ig(d)
-            if (id.toLong * inner(d) >= extent(d)) skip = true
-            d -= 1
-          }
-          if (skip) b += gi
-          gi += 1
-        }
-        b.result()
-      }
-    }
 
     val buf: Array[Array[Any]] = Array.tabulate(ncols)(_ => new Array[Any](chunkElems))
     // real (in-extent) values per data column, for stats over output rows
     val realVals: Array[scala.collection.mutable.ArrayBuffer[Any]] =
       Array.fill(ncols)(scala.collection.mutable.ArrayBuffer.empty)
+    // positions outside an edge chunk's extent stay fill
+    def resetBuffers(): Unit = (0 until ncols).foreach { c =>
+      java.util.Arrays.fill(buf(c).asInstanceOf[Array[AnyRef]], fills(c).asInstanceOf[AnyRef])
+      realVals(c).clear()
+    }
 
     // stats segment accumulators: ALL columns (coords first, then data),
     // matching what `analyze` records for this grid
@@ -1547,8 +1258,6 @@ object ZarrCubeWrite {
       segLen = 0
     }
 
-    def chunkIndex(ord: Long): Array[Int] = ScanGeometry.indexOf(ord, grid)
-
     var rows = 0L
     var chunks = 0L
     var curOrd = -1L
@@ -1556,7 +1265,7 @@ object ZarrCubeWrite {
 
     def flushChunk(): Unit = {
       if (curOrd < 0) return
-      val idx = chunkIndex(curOrd)
+      val idx = ScanGeometry.indexOf(curOrd, grid)
       val extent = new Array[Int](ndim)
       var d = 0
       while (d < ndim) {
@@ -1581,7 +1290,7 @@ object ZarrCubeWrite {
           case Some(sp) =>
             Sharding.encode(zts(c), chunkShape.toSeq, sp,
               scala.collection.immutable.ArraySeq.unsafeWrapArray(buf(c)),
-              skipInner = skipInnerOf(sp, extent))
+              skipInner = skipInnerOf(sp, chunkShape, extent))
           case None =>
             val stored =
               if (topPerms(c) == null) buf(c)
@@ -1647,23 +1356,12 @@ object ZarrCubeWrite {
         if (segLen == maxSegChunks) flushSegment()
       }
       chunks += 1
-      var c3 = 0
-      while (c3 < ncols) {
-        java.util.Arrays.fill(buf(c3).asInstanceOf[Array[AnyRef]], fills(c3).asInstanceOf[AnyRef])
-        realVals(c3).clear()
-        c3 += 1
-      }
+      resetBuffers()
       rowsInChunk = 0
       curOrd = -1L
     }
 
-    // pre-fill buffers (positions outside the edge extent stay fill)
-    var c0 = 0
-    while (c0 < ncols) {
-      java.util.Arrays.fill(buf(c0).asInstanceOf[Array[AnyRef]], fills(c0).asInstanceOf[AnyRef])
-      c0 += 1
-    }
-
+    resetBuffers()
     it.foreach { row =>
       val ord = row.getLong(ncols)
       val off = row.getLong(ncols + 1).toInt
@@ -1693,6 +1391,20 @@ object ZarrCubeWrite {
     flushSegment()
     (rows, chunks)
   }
+
+  /** Inner chunks of an edge shard that lie ENTIRELY beyond the array
+    * extent (pure fill padding): omitted from the shard and indexed
+    * absent — no reader ever requests them, and the object shrinks. */
+  private def skipInnerOf(
+      sp: Sharding.Spec, chunkShape: Array[Int], extent: Array[Int]): Set[Int] =
+    if (extent.sameElements(chunkShape)) Set.empty
+    else {
+      val ig = Array.tabulate(chunkShape.length)(d => chunkShape(d) / sp.innerShape(d))
+      (0 until ig.product).filter { gi =>
+        ScanGeometry.indexOf(gi, ig).zipWithIndex
+          .exists { case (id, d) => id.toLong * sp.innerShape(d) >= extent(d) }
+      }.toSet
+    }
 
   /** Output rows of one chunk for coordinate `d`: the axis slice repeated
     * with the broadcast multiplicity, as a strided O(1)-memory view. */

@@ -28,8 +28,9 @@ object ZarrWriteSupport {
     * was a bare System.err.println bypassing the logging config).
     * Overridable because log4j2's console appender pins the original
     * System.err at init, so a setErr-capturing spec cannot observe
-    * logger output. */
-  private[graft] var warnSink: String => Unit =
+    * logger output. Volatile: a spec swaps it on its own thread while a
+    * commit may read it on another. */
+  @volatile private[graft] var warnSink: String => Unit =
     msg => org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
 
   def zarrTypeFor(dt: DataType): ZarrType = dt match {
@@ -110,6 +111,19 @@ class ZarrWriteBuilder(store: ZarrStore, info: LogicalWriteInfo)
     truncate()
   }
 
+  /** An option's value, parsed once; a malformed value is refused with
+    * the option's name instead of escaping as a bare JVM parse error. */
+  private def opt[T](key: String)(parse: String => T): Option[T] =
+    Option(info.options.get(key)).map { v =>
+      try parse(v)
+      catch { case _: IllegalArgumentException =>
+        throw new ZarrException(s"option $key: cannot parse '$v'")
+      }
+    }
+
+  private def shapeOpt(key: String): Option[Seq[Int]] =
+    opt(key)(_.split(",").map(_.trim.toInt).toSeq)
+
   override def build(): Write = {
     // `dims` selects the N-D CUBE write path. The cube layout is a
     // global property of the whole input (coordinate axes = global
@@ -133,9 +147,8 @@ class ZarrWriteBuilder(store: ZarrStore, info: LogicalWriteInfo)
           "cube writes (dims/append_dim/region_dim options) do not take " +
             "rows_per_partition/inner_chunk_size/chunk_size; chunking is " +
             "set via chunk_shape")
-      val stats = Option(info.options.get("stats")).forall(_.toBoolean)
-      val maxAxis = Option(info.options.get("max_axis_len")).map(_.toInt)
-        .getOrElse(1 << 22)
+      val stats = opt("stats")(_.toBoolean).getOrElse(true)
+      val maxAxis = opt("max_axis_len")(_.toInt).getOrElse(1 << 22)
       val wasTruncate = doTruncate
       // cube APPEND / REGION overwrite: the existing store's layout wins
       // wholesale — a chunk_shape or codec option could only be ignored
@@ -165,7 +178,7 @@ class ZarrWriteBuilder(store: ZarrStore, info: LogicalWriteInfo)
             override def toInsertableRelation: org.apache.spark.sql.sources.InsertableRelation =
               (data: org.apache.spark.sql.DataFrame, overwrite: Boolean) => {
                 // region REPLACES committed data — require the overwrite
-                // verb, and never truncate (the region write is in-place)
+                // verb, and never truncate (the region swaps its own chunks)
                 if (!(wasTruncate || overwrite))
                   throw new ZarrException(
                     "region_dim replaces a slab of an existing store; use " +
@@ -176,32 +189,13 @@ class ZarrWriteBuilder(store: ZarrStore, info: LogicalWriteInfo)
           }
         case (None, None) =>
           val dims = dimsOpt.get
-          val chunkShape = Option(info.options.get("chunk_shape"))
-            .map(_.split(",").map(_.trim.toInt).toSeq)
+          val chunkShape = shapeOpt("chunk_shape")
           // shard_shape (ZEP 2 sharding, zarr-python's `shards=`): the
-          // stored object packs whole inner chunks; requires an explicit
-          // chunk_shape — sharding with a DEFAULTED inner chunking would
-          // pin an arbitrary layout into the store's metadata
-          val shardShape = Option(info.options.get("shard_shape"))
-            .map(_.split(",").map(_.trim.toInt).toSeq)
-          if (shardShape.isDefined && chunkShape.isEmpty)
-            throw new ZarrException(
-              "shard_shape requires chunk_shape (the inner chunk layout " +
-                "readers address); give both, inner dividing outer")
-          // arity/divisibility are checkable from the two option strings
-          // alone — refuse HERE, before the axis-collection and
-          // density-proof jobs run over the (possibly TB-scale) input
-          for (ss <- shardShape; cs <- chunkShape) {
-            if (ss.length != dims.length)
-              throw new ZarrException(
-                s"shard_shape has ${ss.length} entries for ${dims.length} dims")
-            ss.zip(cs).zipWithIndex.foreach { case ((sh, c), i) =>
-              if (sh < c || c < 1 || sh % c != 0)
-                throw new ZarrException(
-                  s"shard_shape entry $sh (dim $i) must be a positive multiple " +
-                    s"of chunk_shape $c — a shard holds whole inner chunks")
-            }
-          }
+          // stored object packs whole inner chunks. Checkable from the
+          // option strings alone — refuse HERE, before the axis-collection
+          // and density-proof jobs run over the (possibly TB-scale) input
+          val shardShape = shapeOpt("shard_shape")
+          ZarrCubeWrite.validateLayoutOptions(dims, chunkShape, shardShape)
           val codec = Option(info.options.get("codec")).getOrElse("blosc")
           new V1Write {
             override def toInsertableRelation: org.apache.spark.sql.sources.InsertableRelation =
@@ -225,14 +219,13 @@ class ZarrWriteBuilder(store: ZarrStore, info: LogicalWriteInfo)
   private def buildTabular(): Write = new Write {
     override def toBatch: BatchWrite = new ZarrBatchWrite(
       store, info.schema(),
-      Option(info.options.get("chunk_size")).map(_.toInt).getOrElse(65536),
+      opt("chunk_size")(_.toInt).getOrElse(65536),
       Option(info.options.get("codec")).getOrElse("blosc"),
-      Option(info.options.get("rows_per_partition")).map(_.toLong).getOrElse(0L),
+      opt("rows_per_partition")(_.toLong).getOrElse(0L),
       doTruncate,
-      Option(info.options.get("inner_chunk_size")).map(_.toInt).getOrElse(0),
-      Option(info.options.get("stats")).forall(_.toBoolean),
-      Option(info.options.get("manifest_warn_parts")).map(_.toInt)
-        .getOrElse(ChunkManifest.defaultWarnParts))
+      opt("inner_chunk_size")(_.toInt).getOrElse(0),
+      opt("stats")(_.toBoolean).getOrElse(true),
+      opt("manifest_warn_parts")(_.toInt).getOrElse(ChunkManifest.defaultWarnParts))
   }
 }
 

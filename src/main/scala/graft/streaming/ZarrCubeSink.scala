@@ -99,10 +99,7 @@ object ZarrCubeSink {
           "is nothing to compact, and a silent no-op cadence would read as " +
           "bounded fragmentation that never happens")
     val spark = batch.sparkSession
-    import scala.jdk.CollectionConverters._
-    val pairs = spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).filter(_._1.startsWith("fs.")).toSeq
-    val store = ZarrStore(path, pairs)
+    val store = ZarrStore(path, ZarrStore.fsPairs(spark.sparkContext.hadoopConfiguration))
 
     // post-commit cadence body, shared by the normal exit and the
     // empty-trigger early return below: keyed on batch id alone so the

@@ -52,12 +52,9 @@ object ZarrSink {
 
   /** ZarrStore with the session's fs.* conf (credentials, custom
     * schemes) — same propagation as ZarrDataSource.storeFor. */
-  private def store(spark: SparkSession, path: String): graft.zarr.ZarrStore = {
-    import scala.jdk.CollectionConverters._
-    val pairs = spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).filter(_._1.startsWith("fs.")).toSeq
-    graft.zarr.ZarrStore(path, pairs)
-  }
+  private def store(spark: SparkSession, path: String): graft.zarr.ZarrStore =
+    graft.zarr.ZarrStore(path,
+      graft.zarr.ZarrStore.fsPairs(spark.sparkContext.hadoopConfiguration))
 
   /** Adopt an orphaned tail tmp dir only when its parquet job COMPLETED
     * (_SUCCESS present): a crash mid-job leaves a tmp with only

@@ -49,12 +49,8 @@ object ZarrInfo {
   // (e.g. credentials) that sparkContext.hadoopConfiguration lacks —
   // deriving them separately could make the plan and the per-unit
   // walks see different stores
-  private def fsPairs(spark: SparkSession): Seq[(String, String)] = {
-    import scala.jdk.CollectionConverters._
-    spark.sessionState.newHadoopConf().iterator().asScala
-      .map(e => e.getKey -> e.getValue)
-      .filter(_._1.startsWith("fs.")).toSeq
-  }
+  private def fsPairs(spark: SparkSession): Seq[(String, String)] =
+    ZarrStore.fsPairs(spark.sessionState.newHadoopConf())
 
   def describe(
       spark: SparkSession, path: String, countStored: Boolean = false,

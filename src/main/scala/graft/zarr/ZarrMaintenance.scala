@@ -165,11 +165,8 @@ object ZarrMaintenance {
   private def sourceGeometry(
       spark: SparkSession,
       srcPath: String): (ScanGeometry, ZarrStore, Seq[ZarrArrayMeta]) = {
-    import scala.jdk.CollectionConverters._
-    val pairs = spark.sparkContext.hadoopConfiguration
-      .iterator().asScala.map(e => e.getKey -> e.getValue)
-      .filter(_._1.startsWith("fs.")).toSeq
-    val srcStore = ZarrStore(srcPath, pairs)
+    val srcStore = ZarrStore(srcPath,
+      ZarrStore.fsPairs(spark.sparkContext.hadoopConfiguration))
     val metas = srcStore.listArrays().map(srcStore.readMeta)
     (ScanGeometry.resolve(metas), srcStore, metas)
   }
@@ -317,10 +314,7 @@ object ZarrMaintenance {
     if (refresh.nonEmpty && !incremental)
       throw new ZarrException(
         "analyze: refresh ranges require incremental mode (a full analyze already refreshes everything)")
-    import scala.jdk.CollectionConverters._
-    val hadoopPairs = spark.sparkContext.hadoopConfiguration
-      .iterator().asScala.map(e => e.getKey -> e.getValue)
-      .filter(_._1.startsWith("fs.")).toSeq
+    val hadoopPairs = ZarrStore.fsPairs(spark.sparkContext.hadoopConfiguration)
     val store = ZarrStore(path, hadoopPairs)
     val metas = store.listArrays().map(store.readMeta).sortBy(_.name)
     // sharded arrays analyze fine: a stored object is one outer chunk
@@ -663,10 +657,7 @@ object ZarrMaintenance {
   def compactStats(
       spark: SparkSession, path: String,
       distributed: Boolean = false): (Long, Long) = {
-    import scala.jdk.CollectionConverters._
-    val hadoopPairs = spark.sessionState.newHadoopConf()
-      .iterator().asScala.map(e => e.getKey -> e.getValue)
-      .filter(_._1.startsWith("fs.")).toSeq
+    val hadoopPairs = ZarrStore.fsPairs(spark.sessionState.newHadoopConf())
     val store = ZarrStore(path, hadoopPairs)
     val metas = store.listArrays().map(store.readMeta).sortBy(_.name)
     val geom =
@@ -778,9 +769,7 @@ object ZarrMaintenance {
     // the pairs shipped to unit tasks derive from ONE configuration
     // (sessionState.newHadoopConf carries per-session overrides)
     val conf = spark.sessionState.newHadoopConf()
-    val hadoopPairs = conf.iterator().asScala
-      .map(e => e.getKey -> e.getValue)
-      .filter(_._1.startsWith("fs.")).toSeq
+    val hadoopPairs = ZarrStore.fsPairs(conf)
     val store = ZarrStore(path, hadoopPairs)
     val metas = store.listArrays().map(store.readMeta)
     val partDirs: Set[String] = store.readChunkManifest().parts.map(_._2).toSet

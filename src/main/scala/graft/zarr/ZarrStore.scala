@@ -527,6 +527,15 @@ final case class ZarrStore(root: String, hadoopConfPairs: Seq[(String, String)] 
 
 object ZarrStore {
 
+  /** The `fs.*` settings of a Hadoop configuration — the credentials,
+    * endpoints and scheme bindings a store needs wherever it is opened
+    * (executors rebuild their FileSystem from these pairs). */
+  def fsPairs(conf: Configuration): Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    conf.iterator().asScala.map(e => e.getKey -> e.getValue)
+      .filter(_._1.startsWith("fs.")).toSeq
+  }
+
   /** Overlap suppression over a raw (first-sorted) segment listing —
     * the rule [[ZarrStore.listStatsSegments]] applies; exposed so a
     * caller already holding the raw listing (sidecar compaction, which

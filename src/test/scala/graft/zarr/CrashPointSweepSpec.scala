@@ -1,0 +1,235 @@
+package graft.zarr
+
+import java.io.IOException
+import java.net.URI
+import java.nio.file.{Files, Path => JPath, Paths}
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.util.Progressable
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+/** A local FileSystem (scheme `graftcrash`) that models process death.
+  * Every create, rename and delete is counted; once armed at N, the N-th
+  * such call and EVERY later one fails — so an interrupted write cannot
+  * clean up after itself either, exactly as when its JVM dies. Reads,
+  * listings and existence probes keep working, so the state a crash
+  * left can be inspected. Counters are JVM-wide (executor tasks of a
+  * local session resolve the same cached instance). */
+class CrashFileSystem extends RawLocalFileSystem {
+  override def getScheme: String = "graftcrash"
+  override def getUri: URI = URI.create("graftcrash:///")
+
+  override def create(
+      f: Path,
+      overwrite: Boolean,
+      bufferSize: Int,
+      replication: Short,
+      blockSize: Long,
+      progress: Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    CrashFileSystem.mutate(s"create $f")
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    CrashFileSystem.mutate(s"rename $src")
+    super.rename(src, dst)
+  }
+
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    CrashFileSystem.mutate(s"delete $f")
+    super.delete(f, recursive)
+  }
+}
+
+object CrashFileSystem {
+  private val calls = new AtomicLong(0)
+  @volatile private var crashAt = Long.MaxValue
+
+  /** Count from zero; fail the `n`-th mutation and every later one. */
+  def arm(n: Long): Unit = { calls.set(0); crashAt = n }
+  def disarm(): Unit = crashAt = Long.MaxValue
+  def count: Long = calls.get()
+
+  private def mutate(what: String): Unit =
+    if (calls.incrementAndGet() >= crashAt)
+      throw new IOException(s"injected crash at mutation #$crashAt ($what)")
+}
+
+/** Crash-point sweep of the cube commit routine: for every N from 1 to
+  * the number of create/rename/delete calls an uninterrupted write
+  * makes, crash the write at call N and check the store. Three cases on
+  * a tiny sharded cube (2-D, inner chunks 1x2 packed in 2x2 shards,
+  * write-time stats): an aligned append, a ragged append (the edge
+  * chunk-row is rewritten) and a region overwrite.
+  *
+  * After each crash:
+  *  - a scan reads the OLD state or the NEW state — for a region
+  *    overwrite per shard, which is its documented granularity;
+  *  - metadata-only aggregates (count/min/max/sum, answered from the
+  *    stats sidecar where it covers) agree with the scanned rows;
+  *  - re-running the same write, then vacuum, leaves the NEW state and
+  *    no `c.part*` staging. An append the crash left committed is a
+  *    duplicate: its re-run is refused (its coordinates are on the
+  *    axis), and the store must hold the new state all the same. That
+  *    includes a crash after the dim-0 coordinate meta but before the
+  *    root: readers still see the old root, and the re-run's torn-commit
+  *    heal re-consolidates it before refusing.
+  *
+  * The method follows Pillai et al., "All File Systems Are Not Created
+  * Equal" (OSDI 2014): enumerate the crash points, don't hand-build them. */
+class CrashPointSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private var spark: SparkSession = _
+  private var base: String = _
+
+  override def beforeAll(): Unit = {
+    spark = SparkSession.builder()
+      .master("local[2]")
+      .appName("crash-point-sweep-spec")
+      // a few hundred tiny writes: one shuffle partition and no adaptive
+      // re-planning keep each Spark job short
+      .config("spark.sql.shuffle.partitions", "1")
+      .config("spark.sql.adaptive.enabled", "false")
+      .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.graftcrash.impl", classOf[CrashFileSystem].getName)
+      .getOrCreate()
+    // also on a session some earlier suite left running
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftcrash.impl", classOf[CrashFileSystem].getName)
+    spark.sparkContext.setLogLevel("ERROR")
+    base = Files.createTempDirectory("zarr-crash-sweep").toString
+  }
+
+  override def afterAll(): Unit = {
+    CrashFileSystem.disarm()
+    if (spark != null) spark.stop()
+  }
+
+  /** Dense rows for time steps [t0, t1) x 2 sensors; value = vBase + 10t + x. */
+  private def slab(t0: Int, t1: Int, vBase: Double = 0.0): DataFrame = {
+    val sp = spark; import sp.implicits._
+    (for (t <- t0 until t1; x <- 0 until 2) yield (t.toLong, x.toLong, vBase + 10.0 * t + x))
+      .toDF("t", "x", "v")
+  }
+
+  private def rowsOf(df: DataFrame): Seq[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+
+  private def scan(url: String): Seq[(Long, Long, Double)] =
+    rowsOf(spark.read.format("zarr").load(url).select("t", "x", "v"))
+
+  private def copyTree(from: JPath, to: JPath): Unit =
+    Files.walk(from).iterator().asScala.foreach { p =>
+      val q = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
+    }
+
+  private def stagingLeftovers(dir: JPath): Seq[String] =
+    Files.walk(dir).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("c.part"))
+      .map(p => dir.relativize(p).toString).toSeq
+
+  /** Metadata-answerable aggregates must equal the same figures computed
+    * from the scanned rows. */
+  private def assertAggsAgree(url: String, rows: Seq[(Long, Long, Double)], at: String): Unit = {
+    val r = spark.read.format("zarr").load(url)
+      .agg(count(lit(1)), min("v"), max("v"), sum("t")).collect()(0)
+    val vs = rows.map(_._3)
+    assert(r.getLong(0) == rows.length &&
+      r.getDouble(1) == vs.min && r.getDouble(2) == vs.max &&
+      r.getLong(3) == rows.map(_._1).sum,
+      s"$at: aggregates $r disagree with the scan")
+  }
+
+  /** One case: `baseRows` committed by a fresh write, then `run`; the
+    * sweep crashes `run` at every mutation it makes. `checkState` judges
+    * the scanned rows after a crash. */
+  private def sweep(
+      name: String, baseRows: DataFrame, expectNew: Seq[(Long, Long, Double)],
+      run: String => Unit, duplicateOk: Boolean,
+      checkState: (Seq[(Long, Long, Double)], String) => Unit): Unit = {
+    val template = Paths.get(base, s"$name-template")
+    baseRows.write.format("zarr").mode("overwrite")
+      .option("dims", "t,x").option("chunk_shape", "1,2").option("shard_shape", "2,2")
+      .save(template.toString)
+
+    // the uninterrupted write: how many mutations it makes
+    val probe = Paths.get(base, s"$name-probe")
+    copyTree(template, probe)
+    CrashFileSystem.arm(Long.MaxValue)
+    run(s"graftcrash://$probe")
+    val calls = CrashFileSystem.count
+    CrashFileSystem.disarm()
+    assert(scan(probe.toString) == expectNew, s"$name: uninterrupted write")
+    assert(calls >= 5, s"$name: only $calls mutations — the sweep would prove little")
+
+    (1L to calls).foreach { n =>
+      val dir = Paths.get(base, s"$name-crash$n")
+      copyTree(template, dir)
+      val url = s"graftcrash://$dir"
+      val at = s"$name, crash at mutation $n of $calls"
+      CrashFileSystem.arm(n)
+      val crashed = try { run(url); false } catch { case _: Exception => true }
+      CrashFileSystem.disarm()
+      assert(crashed, s"$at: the write survived its injected crash")
+
+      val after = scan(url)
+      checkState(after, at)
+      assertAggsAgree(url, after, at)
+
+      val rerun = try { run(url); None } catch { case e: Exception => Some(e) }
+      rerun.foreach { e =>
+        assert(duplicateOk && e.getMessage.contains("strictly after"),
+          s"$at: re-running the write failed: $e")
+      }
+      ZarrMaintenance.vacuum(spark, url).collect()
+      assert(scan(url) == expectNew, s"$at: re-run + vacuum did not reach the new state")
+      assertAggsAgree(url, expectNew, s"$at, after re-run")
+      assert(stagingLeftovers(dir).isEmpty,
+        s"$at: staging left after re-run + vacuum: ${stagingLeftovers(dir)}")
+    }
+  }
+
+  private def appendCase(name: String, baseSteps: Int, newSteps: Int): Unit = {
+    val oldRows = rowsOf(slab(0, baseSteps))
+    val newRows = rowsOf(slab(0, baseSteps + newSteps))
+    sweep(name, slab(0, baseSteps), newRows,
+      url => slab(baseSteps, baseSteps + newSteps).write.format("zarr")
+        .mode("append").option("append_dim", "t").save(url),
+      duplicateOk = true,
+      (rows, at) => assert(rows == oldRows || rows == newRows,
+        s"$at: store reads neither the old nor the new state: $rows"))
+  }
+
+  test("aligned append: every crash point leaves the old or the new state") {
+    appendCase("aligned", baseSteps = 4, newSteps = 2)
+  }
+
+  test("ragged append: every crash point leaves the old or the new state") {
+    appendCase("ragged", baseSteps = 3, newSteps = 2)
+  }
+
+  test("region overwrite: every crash point leaves each shard old or new") {
+    val oldRows = rowsOf(slab(0, 6))
+    val newRows = rowsOf(slab(0, 2).union(slab(2, 4, vBase = 1000.0)).union(slab(4, 6)))
+    sweep("region", slab(0, 6), newRows,
+      url => slab(2, 4, vBase = 1000.0).write.format("zarr")
+        .mode("overwrite").option("region_dim", "t").save(url),
+      duplicateOk = false,
+      (rows, at) => {
+        // a shard holds 2 time steps: each must read wholly old or wholly new
+        def shard(rs: Seq[(Long, Long, Double)], s: Long) = rs.filter(_._1 / 2 == s)
+        (0L until 3L).foreach { s =>
+          val got = shard(rows, s)
+          assert(got == shard(oldRows, s) || got == shard(newRows, s),
+            s"$at: shard $s reads neither old nor new: $got")
+        }
+      })
+  }
+}

@@ -246,5 +246,14 @@ class ZarrCubeShardSpec extends AnyFunSuite with BeforeAndAfterAll {
         shardShapeNd = Seq(4, 4, 4))
     }
     assert(e6.getMessage.contains("requires chunkShapeNd"), e6.getMessage)
+    // a value that does not parse is refused naming its option and value
+    Seq("chunk_shape" -> "1,x,4", "max_axis_len" -> "lots", "stats" -> "yes").foreach {
+      case (k, v) =>
+        val e = intercept[Exception] {
+          climate(4).write.format("zarr").mode("overwrite")
+            .option("dims", "time,lat,lon").option(k, v).save(s"$base/refuse_parse")
+        }
+        assert(e.getMessage.contains(k) && e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
   }
 }
