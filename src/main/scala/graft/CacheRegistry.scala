@@ -8,7 +8,7 @@ import scala.collection.mutable.ArrayBuffer
   * plan-node reuse WITHIN one execution (q35/q36's shingle tables feed
   * self-joins, q62's test grams feed the bloom build and the verify
   * join); across executions they would only accumulate — one cached RDD
-  * per (query, sf dir) — so every driver loop (Verify, Bench, QBench)
+  * per (query, sf dir) — so every driver loop (Verify, Bench)
   * calls [[releaseAll]] after each query's terminal action, and library
   * users get the same hook. */
 object CacheRegistry {

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.zarr._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -153,6 +154,16 @@ object ZarrDataSource {
   def metasOf(store: ZarrStore): Seq[ZarrArrayMeta] =
     store.readConsolidatedMetas()
       .getOrElse(store.listArrays().map(store.readMeta))
+
+  /** An option's value, parsed once; a malformed value is refused with
+    * the option's name instead of escaping as a bare JVM parse error. */
+  def opt[T](options: CaseInsensitiveStringMap, key: String)(parse: String => T): Option[T] =
+    Option(options.get(key)).map { v =>
+      try parse(v)
+      catch { case _: IllegalArgumentException =>
+        throw new ZarrException(s"option $key: cannot parse '$v'")
+      }
+    }
 }
 
 class ZarrTable(
@@ -210,307 +221,174 @@ class ZarrScanBuilder(
   private var required: StructType = tableSchema
   private var pushed: Array[Filter] = Array.empty
   private var limit: Int = -1
-  private var aggResult: Option[(StructType, Seq[Any])] = None
+  private var aggScan: Option[ZarrAggScan] = None
 
   import org.apache.spark.sql.connector.expressions.aggregate._
-  import org.apache.spark.sql.connector.expressions.NamedReference
+  import org.apache.spark.sql.connector.expressions.{Expression, NamedReference}
 
-  /** Metadata-only aggregates — a capability the reference cannot have
-    * (its statistics are empty, `opener.rs:171-173`): ungrouped
+  /** Aggregate pushdown from metadata — a capability the reference cannot
+    * have (its statistics are empty, `opener.rs:171-173`), after the
+    * small-materialized-aggregates idea (Moerkotte, VLDB 1998). Ungrouped
     * COUNT(*)/COUNT(col) answer from array shapes alone (zarr reads never
-    * produce nulls, SURVEY §1.3), and MIN/MAX(col) answer from the
-    * `_stats` sidecar when its segments cover every chunk of the scan
-    * grid (1-D tabular or N-D via `analyze`'s grid-signed segments) with
-    * a recorded range. On a 100 TB store that turns a full scan into a
-    * handful of driver-side metadata reads. Anything not provably
-    * answerable (filters, grouping, partial stats coverage, a selection
-    * resolving to a grid the segments don't describe) declines the
-    * pushdown and scans. */
-  private def answerAggregation(agg: Aggregation): Option[(StructType, Seq[Any])] = {
-    if (pushed.nonEmpty || limit >= 0 || agg.groupByExpressions.nonEmpty) return None
-    if (metas.isEmpty) return None
+    * produce nulls, SURVEY §1.3); MIN/MAX/SUM/AVG(col) answer from the
+    * `_stats` sidecar (1-D tabular or N-D via `analyze`'s grid-signed
+    * segments). One walk over the segments serves each chunk whose
+    * segment records every needed statistic exactly, and collects the
+    * other chunks as uncovered runs. The answer is
+    *  - COMPLETE when the segments tile the grid exactly and nothing is
+    *    uncovered: on a 100 TB store a full scan becomes a handful of
+    *    driver-side metadata reads;
+    *  - HYBRID when at least one chunk was served (a half-analyzed
+    *    foreign store, a growing store whose tail appends postdate the
+    *    last `analyze`): `supportCompletePushDown` = false, so Spark
+    *    plans its own final aggregation over one pre-merged row for the
+    *    served chunks plus one partial row per partition of uncovered
+    *    chunks — after `analyze` backfills 90% of a store, MIN/MAX/SUM
+    *    pay 10% of the scan;
+    *  - declined (the plain scan) otherwise, and on filters, limits,
+    *    grouping, functions beyond COUNT/MIN/MAX/SUM/AVG, a served-sum
+    *    overflow (the answer must be the mathematical sum) or a selection
+    *    resolving to a grid the segments don't describe. Unsupported
+    *    functions decline before any storage call. */
+  private def planAggregation(agg: Aggregation): Option[ZarrAggScan] = {
+    if (pushed.nonEmpty || limit >= 0 || agg.groupByExpressions.nonEmpty || metas.isEmpty)
+      return None
     val byName = metas.map(m => m.name -> m).toMap
-    def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-      e match {
-        case f: NamedReference if f.fieldNames.length == 1 &&
-          byName.contains(f.fieldNames.head) => Some(f.fieldNames.head)
-        case _ => None
-      }
-    val funcs = agg.aggregateExpressions.toSeq
-    val refCols: Set[String] = funcs.flatMap {
-      case m: Min => colOf(m.column)
-      case m: Max => colOf(m.column)
-      case c: Count => colOf(c.column)
-      case s: Sum => colOf(s.column)
-      case a: Avg => colOf(a.column)
+    def colOf(e: Expression): Option[String] = e match {
+      case f: NamedReference if f.fieldNames.length == 1 &&
+        byName.contains(f.fieldNames.head) => Some(f.fieldNames.head)
       case _ => None
-    }.toSet
+    }
+    // SUM/AVG over integer columns only: the sidecar's per-chunk sums are
+    // exact and merge exactly (floats decline — summation order would
+    // make the stored sum unreproducible against any engine's scan)
+    def intOf(e: Expression): Option[String] =
+      colOf(e).filter(n => ZarrAggScan.integerTyped(byName(n).dataType))
+    val parsed = agg.aggregateExpressions.toSeq.map {
+      case _: CountStar => Some(("count_star", ""))
+      case c: Count if !c.isDistinct => colOf(c.column).map(("count", _))
+      case m: Min => colOf(m.column).map(("min", _))
+      case m: Max => colOf(m.column).map(("max", _))
+      case s: Sum if !s.isDistinct => intOf(s.column).map(("sum", _))
+      case a: Avg if !a.isDistinct => intOf(a.column).map(("avg", _))
+      case _ => None
+    }
+    if (parsed.exists(_.isEmpty)) return None
+    val fns = parsed.flatten
+    val refCols = fns.map(_._2).toSet - ""
     // same cardinality semantics as the pruned scan would have: the grid
     // of the referenced columns (full table for pure COUNT(*))
     val aggMetas = if (refCols.nonEmpty) metas.filter(m => refCols(m.name)) else metas
     val geom =
       try ScanGeometry.resolve(aggMetas)
       catch { case _: ZarrException => return None }
-    lazy val covSegs: Option[Seq[ChunkStats.Segment]] = fullCoverageSegments(geom)
+    val schema = StructType(fns.map {
+      case ("count_star", _) => StructField("count_star", LongType)
+      case (fn @ ("count" | "sum"), c) => StructField(s"${fn}_$c", LongType)
+      case ("avg", c) => StructField(s"avg_$c", DoubleType)
+      case (fn, c) => StructField(s"${fn}_$c", byName(c).dataType.sparkType)
+    })
+    val stats = fns.filterNot(f => f._1 == "count" || f._1 == "count_star")
+    if (stats.isEmpty)
+      return Some(new ZarrAggScan(store, aggMetas, schema, fns,
+        fns.map(_ => geom.numRows), complete = true, 0L, Nil, options))
+    // SUM/AVG over zero rows is NULL, which this path does not model —
+    // and a 0-chunk grid trivially "covers fully"; decline instead
+    if (geom.numRows == 0) return None
+
+    // the one ordinal walk over grid `g`: (complete, per-function merged
+    // values, served chunks, served rows, uncovered runs)
+    def walk(g: ScanGeometry, ms: Seq[ZarrArrayMeta]) = {
+      val (segs, exact) = ChunkStats.usableSegments(store, ms, g)
+      val acc = new Array[Any](fns.length)
+      var served, servedRows = 0L
+      val uncovered = Seq.newBuilder[(Long, Long)]
+      var runStart = -1L
+      var si = 0
+      var ord = 0L
+      while (ord < g.numChunks) {
+        while (si < segs.length && segs(si).first + segs(si).chunks <= ord) si += 1
+        val vals = segs.lift(si).filter(_.contains(ord)).map(s => fns.map {
+          case ("min", c) => s.exactRange(c, ord).map(_._1)
+          case ("max", c) => s.exactRange(c, ord).map(_._2)
+          case ("sum" | "avg", c) => s.sum(c, ord)
+          case _ => Some(null) // counts come from the served rows
+        }).filter(_.forall(_.isDefined))
+        vals match {
+          case Some(vs) =>
+            vs.indices.foreach { i =>
+              acc(i) = ZarrAggScan.merge(fns(i)._1, acc(i), vs(i).get, checked = true)
+            }
+            served += 1
+            servedRows += g.chunkExtent(g.chunkIndex(ord)).map(_.toLong).product
+            if (runStart >= 0) { uncovered += ((runStart, ord)); runStart = -1L }
+          case None => if (runStart < 0) runStart = ord
+        }
+        ord += 1
+      }
+      if (runStart >= 0) uncovered += ((runStart, g.numChunks))
+      val runs = uncovered.result()
+      (exact && runs.isEmpty, acc, served, servedRows, runs)
+    }
+
     // Lone-coordinate MIN/MAX on an N-D analyzed store (SURVEY §7.11
     // lever 2): a coordinate-only selection resolves to its own 1-D (or
     // cross-product) grid, which the sidecar's grid-signed segments do
     // not describe — but MIN/MAX are ORDER statistics, invariant under
-    // broadcast multiplicity, so a full-coverage segment set over the
-    // STORE grid bounds every axis value exactly. Served only when every
-    // min/max column is a coordinate axis of the store geometry and the
-    // store-grid coverage proof holds. COUNT still answers from shapes
-    // (pruned-grid semantics); SUM/AVG stay declined — their values DO
-    // depend on broadcast multiplicity, which differs between the pruned
-    // grid and the store grid.
-    lazy val coordAxisRanges: Option[Map[String, (Any, Any)]] = {
-      val minMaxCols = funcs.flatMap {
-        case m: Min => colOf(m.column)
-        case m: Max => colOf(m.column)
-        case _ => None
-      }.toSet
-      if (minMaxCols.isEmpty) None
-      else try {
-        val fullGeom = ScanGeometry.resolve(metas)
-        val dimNames = fullGeom.dimIdentity.toSet
-        if (fullGeom.ndim <= geom.ndim || !minMaxCols.forall(dimNames.contains)) None
-        else ChunkStats.coverageSegments(store, metas, fullGeom)
-          .map(segs => ChunkStats.exactRanges(minMaxCols.toSeq, segs))
-      } catch { case _: ZarrException => None }
-    }
-    lazy val ranges: Option[Map[String, (Any, Any)]] =
-      covSegs.map(rangesFrom).orElse(coordAxisRanges)
-    lazy val sums: Option[Map[String, Long]] = covSegs.map(sumsFrom)
-    val integerTyped: Set[ZarrType] = Set(ZarrType.Int8, ZarrType.Int16,
-      ZarrType.Int32, ZarrType.Int64, ZarrType.UInt8, ZarrType.UInt16,
-      ZarrType.UInt32)
-    // SUM/AVG over zero rows is NULL, which this path does not model —
-    // and a 0-chunk grid trivially "covers fully"; decline instead
-    def exactSum(col: String): Option[Long] =
-      if (geom.numRows == 0 || !integerTyped(byName(col).dataType)) None
-      else sums.flatMap(_.get(col))
-    val out = funcs.map {
-      case _: CountStar =>
-        Some((StructField("count_star", org.apache.spark.sql.types.LongType),
-          geom.numRows: Any))
-      case c: Count if !c.isDistinct =>
-        colOf(c.column).map(n =>
-          (StructField(s"count_$n", org.apache.spark.sql.types.LongType),
-            geom.numRows: Any))
-      case m: Min =>
-        colOf(m.column).flatMap(n => ranges.flatMap(_.get(n)).map(r =>
-          (StructField(s"min_$n", byName(n).dataType.sparkType), r._1)))
-      case m: Max =>
-        colOf(m.column).flatMap(n => ranges.flatMap(_.get(n)).map(r =>
-          (StructField(s"max_$n", byName(n).dataType.sparkType), r._2)))
-      case s: Sum if !s.isDistinct =>
-        // integer columns only: the sidecar's per-chunk sums are exact
-        // and merge exactly (floats decline — summation order would make
-        // the stored sum unreproducible against any engine's scan)
-        colOf(s.column).flatMap(n => exactSum(n).map(v =>
-          (StructField(s"sum_$n", org.apache.spark.sql.types.LongType), v: Any)))
-      case a: Avg if !a.isDistinct =>
-        // exact long sum / exact count, guarded so toDouble is lossless:
-        // the pushed AVG is the exactly-rounded true mean. INTENTIONAL
-        // semantics note: Spark's fallback Average over integer columns
-        // accumulates partials in DOUBLE, so on data whose RUNNING sums
-        // transiently exceed 2^53 the scanned result depends on row
-        // order/partitioning (plan-dependent rounding); the pushed
-        // result is the one exactly-rounded answer every such ordering
-        // approximates. We deliberately return the exact mean rather
-        // than emulate an unspecifiable accumulation order.
-        colOf(a.column).flatMap(n => exactSum(n)
-          .filter(v => math.abs(v) <= (1L << 53))
-          .map(v =>
-            (StructField(s"avg_$n", org.apache.spark.sql.types.DoubleType),
-              v.toDouble / geom.numRows: Any)))
-      case _ => None
-    }
-    if (out.exists(_.isEmpty)) None
-    else Some((StructType(out.flatten.map(_._1)), out.flatten.map(_._2)))
-  }
-
-  /** Shared with the Scan's CBO column statistics — see
-    * [[ChunkStats.coverageSegments]] / [[ChunkStats.exactRanges]]. */
-  private def fullCoverageSegments(
-      geom: ScanGeometry): Option[Seq[ChunkStats.Segment]] =
-    ChunkStats.coverageSegments(store, metas, geom)
-
-  private def rangesFrom(
-      parsed: Seq[ChunkStats.Segment]): Map[String, (Any, Any)] =
-    ChunkStats.exactRanges(metas.map(_.name), parsed)
-
-  /** Exact global sum per integer column — only columns with a recorded
-    * chunk sum in EVERY chunk; the merge uses addExact and drops the
-    * column on overflow (the pushed value must be the mathematical sum,
-    * never a wrapped one). */
-  private def sumsFrom(parsed: Seq[ChunkStats.Segment]): Map[String, Long] = {
-    val b = Map.newBuilder[String, Long]
-    metas.map(_.name).foreach { c =>
-      var acc = 0L
-      var ok = true
-      parsed.foreach { seg =>
-        var ord = seg.first
-        while (ok && ord < seg.first + seg.chunks) {
-          seg.sum(c, ord) match {
-            case Some(s) =>
-              try acc = Math.addExact(acc, s)
-              catch { case _: ArithmeticException => ok = false }
-            case None => ok = false
-          }
-          ord += 1
-        }
+    // broadcast multiplicity, so a complete walk over the STORE grid
+    // bounds every axis value exactly. Served only when every min/max
+    // column is a coordinate axis of the store geometry and that walk is
+    // complete. COUNT still answers from shapes (pruned-grid semantics);
+    // SUM/AVG stay on the pruned grid — their values DO depend on
+    // broadcast multiplicity.
+    val storeGrid =
+      if (stats.exists(f => f._1 == "sum" || f._1 == "avg")) None
+      else try Some(ScanGeometry.resolve(metas)).filter(full =>
+        full.ndim > geom.ndim && stats.forall(f => full.dimIdentity.contains(f._2)))
+      catch { case _: ZarrException => None }
+    val (complete, acc, served, servedRows, uncovered) =
+      try storeGrid.map(walk(_, metas)).filter(_._1).getOrElse(walk(geom, aggMetas))
+      catch { case _: ArithmeticException => return None }
+    if (!complete && (served == 0 || fns.exists(_._1 == "avg"))) return None
+    // AVG = exact long sum / exact count, guarded so toDouble is
+    // lossless: the pushed AVG is the exactly-rounded true mean.
+    // INTENTIONAL semantics note: Spark's fallback Average over integer
+    // columns accumulates partials in DOUBLE, so on data whose RUNNING
+    // sums transiently exceed 2^53 the scanned result depends on row
+    // order/partitioning (plan-dependent rounding); the pushed result is
+    // the one exactly-rounded answer every such ordering approximates. We
+    // deliberately return the exact mean rather than emulate an
+    // unspecifiable accumulation order.
+    if (fns.indices.exists(i => fns(i)._1 == "avg" &&
+      math.abs(acc(i).asInstanceOf[Long]) > (1L << 53))) return None
+    val row = fns.indices.map { i =>
+      fns(i)._1 match {
+        case "count" | "count_star" => if (complete) geom.numRows else servedRows
+        case "avg" => acc(i).asInstanceOf[Long].toDouble / geom.numRows
+        case _ => acc(i)
       }
-      if (ok) b += c -> acc
     }
-    b.result()
+    Some(new ZarrAggScan(store, aggMetas, schema, fns, row, complete, served, uncovered, options))
   }
 
   // Spark probes supportCompletePushDown then pushAggregation with the
   // same Aggregation; memoize so the sidecar IO (LIST + segment GETs)
   // runs once per builder, not per probe
-  private var aggMemo: Option[(String, Option[(StructType, Seq[Any])])] = None
-  private def answerMemo(agg: Aggregation): Option[(StructType, Seq[Any])] = {
-    val key = agg.toString
-    aggMemo match {
-      case Some((k, r)) if k == key => r
-      case _ =>
-        val r = answerAggregation(agg)
-        aggMemo = Some((key, r))
-        r
-    }
+  private var aggMemo: Option[(String, Option[ZarrAggScan])] = None
+  private def aggPlan(agg: Aggregation): Option[ZarrAggScan] = aggMemo match {
+    case Some((k, plan)) if k == agg.toString => plan
+    case _ =>
+      val plan = planAggregation(agg)
+      aggMemo = Some((agg.toString, plan))
+      plan
   }
 
   override def supportCompletePushDown(agg: Aggregation): Boolean =
-    answerMemo(agg).isDefined
+    aggPlan(agg).exists(_.complete)
 
   override def pushAggregation(agg: Aggregation): Boolean = {
-    aggResult = answerMemo(agg)
-    if (aggResult.isDefined) return true
-    partialAggScan = answerPartialAggregation(agg)
-    partialAggScan.isDefined
-  }
-
-  private var partialAggScan: Option[ZarrPartialAggScan] = None
-
-  /** HYBRID aggregate pushdown for PARTIALLY stats-covered stores (a
-    * half-analyzed foreign store, a growing store whose tail appends
-    * postdate the last `analyze`): chunks whose segment records every
-    * needed statistic are served from metadata with zero chunk IO; only
-    * the uncovered chunks are read — so after `analyze` backfills 90%
-    * of a 100 TB store, MIN/MAX/SUM pay 10% of the scan instead of
-    * declining to a full one. Spark contract: `supportCompletePushDown`
-    * = false, so Spark plans its own FINAL aggregation over the rows
-    * this scan emits — one pre-merged row for all stats-served chunks
-    * plus one partial row per scanned-ordinal partition. Works on 1-D
-    * AND N-D grids (segments carry a grid signature; `analyze` records
-    * N-D bounds per row-major target-chunk ordinal). Declines (falling
-    * back to the normal scan) on filters/limits/grouping, functions
-    * beyond MIN/MAX/SUM/COUNT, stores with no usable segment, or a
-    * served-sum overflow (the partial must be the mathematical sum). */
-  private def answerPartialAggregation(
-      agg: Aggregation): Option[ZarrPartialAggScan] = {
-    if (pushed.nonEmpty || limit >= 0 || agg.groupByExpressions.nonEmpty) return None
-    if (metas.isEmpty) return None
-    val byName = metas.map(m => m.name -> m).toMap
-    def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-      e match {
-        case f: NamedReference if f.fieldNames.length == 1 &&
-          byName.contains(f.fieldNames.head) => Some(f.fieldNames.head)
-        case _ => None
-      }
-    val integerTyped: Set[ZarrType] = Set(ZarrType.Int8, ZarrType.Int16,
-      ZarrType.Int32, ZarrType.Int64, ZarrType.UInt8, ZarrType.UInt16,
-      ZarrType.UInt32)
-    val parsed: Seq[Option[(String, String)]] = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => Some(("count_star", ""))
-      case c: Count if !c.isDistinct => colOf(c.column).map(("count", _))
-      case m: Min => colOf(m.column).map(("min", _))
-      case m: Max => colOf(m.column).map(("max", _))
-      case s: Sum if !s.isDistinct =>
-        // same type discipline as the complete path: only integer
-        // columns have exact, order-independent long sums
-        colOf(s.column).filter(n => integerTyped(byName(n).dataType)).map(("sum", _))
-      case _ => None
-    }
-    if (parsed.exists(_.isEmpty)) return None
-    val fns = parsed.flatten
-    // pure counts answer completely from shapes; partial mode only pays
-    // off when a stats-backed function is present
-    if (!fns.exists(f => f._1 == "min" || f._1 == "max" || f._1 == "sum")) return None
-    val refCols = fns.map(_._2).filter(_.nonEmpty).toSet
-    val aggMetas = if (refCols.nonEmpty) metas.filter(m => refCols(m.name)) else metas
-    val geom =
-      try ScanGeometry.resolve(aggMetas)
-      catch { case _: ZarrException => return None }
-    if (geom.numRows == 0) return None
-    val segs = ChunkStats.partialSegments(store, aggMetas, geom)
-    if (segs.isEmpty) return None
-    val sorted = segs.sortBy(_.first)
-    def extent(ord: Long): Long =
-      geom.chunkExtent(geom.chunkIndex(ord)).map(_.toLong).product
-    // walk the grid once: a chunk is SERVED iff its segment records
-    // every needed statistic exactly; anything else is scanned
-    val mins = scala.collection.mutable.Map.empty[String, Any]
-    val maxs = scala.collection.mutable.Map.empty[String, Any]
-    val sums = scala.collection.mutable.Map.empty[String, Long]
-    val needMin = fns.collect { case ("min", c) => c }.distinct
-    val needMax = fns.collect { case ("max", c) => c }.distinct
-    val needSum = fns.collect { case ("sum", c) => c }.distinct
-    var servedRows = 0L
-    var servedChunks = 0L
-    val uncovered = Seq.newBuilder[(Long, Long)]
-    var runStart = -1L
-    var si = 0
-    var ord = 0L
-    try {
-      while (ord < geom.numChunks) {
-        while (si < sorted.length && sorted(si).first + sorted(si).chunks <= ord) si += 1
-        val seg = if (si < sorted.length && sorted(si).contains(ord)) Some(sorted(si)) else None
-        val answers = seg.exists { s =>
-          needMin.forall(c => s.exactRange(c, ord).isDefined) &&
-            needMax.forall(c => s.exactRange(c, ord).isDefined) &&
-            needSum.forall(c => s.sum(c, ord).isDefined)
-        }
-        if (answers) {
-          val s = seg.get
-          needMin.foreach { c =>
-            val lo = s.exactRange(c, ord).get._1
-            if (!mins.contains(c) || ChunkFilter.cmp(lo, mins(c)) < 0) mins(c) = lo
-          }
-          needMax.foreach { c =>
-            val hi = s.exactRange(c, ord).get._2
-            if (!maxs.contains(c) || ChunkFilter.cmp(hi, maxs(c)) > 0) maxs(c) = hi
-          }
-          needSum.foreach { c =>
-            sums(c) = Math.addExact(sums.getOrElse(c, 0L), s.sum(c, ord).get)
-          }
-          servedRows += extent(ord)
-          servedChunks += 1
-          if (runStart >= 0) { uncovered += ((runStart, ord)); runStart = -1L }
-        } else if (runStart < 0) runStart = ord
-        ord += 1
-      }
-    } catch { case _: ArithmeticException => return None }
-    if (runStart >= 0) uncovered += ((runStart, geom.numChunks))
-    if (servedChunks == 0) return None // nothing served: the plain scan wins
-    val fields = fns.map {
-      case ("count_star", _) => StructField("count_star", org.apache.spark.sql.types.LongType)
-      case ("count", c) => StructField(s"count_$c", org.apache.spark.sql.types.LongType)
-      case ("min", c) => StructField(s"min_$c", byName(c).dataType.sparkType)
-      case ("max", c) => StructField(s"max_$c", byName(c).dataType.sparkType)
-      case ("sum", c) => StructField(s"sum_$c", org.apache.spark.sql.types.LongType)
-      case other => throw new IllegalStateException(other.toString)
-    }
-    val servedRow: Seq[Any] = fns.map {
-      case ("count_star", _) | ("count", _) => servedRows: Any
-      case ("min", c) => mins(c)
-      case ("max", c) => maxs(c)
-      case ("sum", c) => sums(c): Any
-      case other => throw new IllegalStateException(other.toString)
-    }
-    Some(new ZarrPartialAggScan(store, aggMetas, StructType(fields),
-      fns, servedRow, servedChunks, uncovered.result(), options))
+    aggScan = aggPlan(agg)
+    aggScan.isDefined
   }
 
   /** LIMIT pushdown (the reference accepts and ignores limit,
@@ -541,109 +419,60 @@ class ZarrScanBuilder(
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan = aggResult match {
-    case Some((schema, values)) => new ZarrAggScan(store.root, schema, values)
-    case None => partialAggScan.getOrElse(
-      new ZarrScan(store, metas, required, pushed, options, limit))
-  }
+  override def build(): Scan =
+    aggScan.getOrElse(new ZarrScan(store, metas, required, pushed, options, limit))
 }
 
-/** One-row scan carrying a completely-pushed aggregate answered from
-  * metadata (shapes + stats sidecar) — no chunk is ever read. */
-class ZarrAggScan(root: String, schema: StructType, values: Seq[Any])
-    extends Scan with Batch {
-  override def readSchema(): StructType = schema
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"ZarrAggScan $root metadata-only [${schema.fieldNames.mkString(",")}]"
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(ZarrInputPartition(0L, 1L))
-  override def createReaderFactory(): PartitionReaderFactory =
-    ZarrAggReaderFactory(schema.json, values.map {
-      case s: String => s
-      case d: java.math.BigDecimal => d.toPlainString
-      case other => other
-    })
-}
-
-final case class ZarrAggReaderFactory(schemaJson: String, values: Seq[Any])
-    extends PartitionReaderFactory {
-  override def createReader(
-      p: InputPartition): org.apache.spark.sql.connector.read.PartitionReader[
-      org.apache.spark.sql.catalyst.InternalRow] = {
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[StructType]
-    // re-box JVM values as Catalyst internal values for the row
-    val internal = schema.fields.zip(values).map {
-      case (f, v) => f.dataType match {
-        case org.apache.spark.sql.types.StringType =>
-          org.apache.spark.unsafe.types.UTF8String.fromString(v.asInstanceOf[String])
-        case d: org.apache.spark.sql.types.DecimalType =>
-          org.apache.spark.sql.types.Decimal(
-            new java.math.BigDecimal(v.asInstanceOf[String]), d.precision, d.scale)
-        case _ => v
-      }
-    }
-    new org.apache.spark.sql.connector.read.PartitionReader[
-        org.apache.spark.sql.catalyst.InternalRow] {
-      private var emitted = false
-      override def next(): Boolean = { val r = !emitted; emitted = true; r }
-      override def get(): org.apache.spark.sql.catalyst.InternalRow =
-        org.apache.spark.sql.catalyst.InternalRow.fromSeq(internal.toIndexedSeq)
-      override def close(): Unit = ()
-    }
-  }
-}
-
-/** Hybrid partial-aggregate scan (see
-  * [[ZarrScanBuilder.answerPartialAggregation]]): one partition emits
-  * the driver-merged row for every stats-served chunk (zero chunk IO);
-  * the uncovered ordinal ranges are read and reduced executor-side, one
-  * partial row per partition. Spark's FINAL aggregate merges them. */
-class ZarrPartialAggScan(
+/** The aggregate scan (see [[ZarrScanBuilder.planAggregation]]). One
+  * partition emits the driver-merged row of every stats-served chunk,
+  * with no chunk read; a COMPLETE answer is that partition alone. A
+  * HYBRID answer adds partitions over the uncovered ordinal runs, each
+  * read by the ordinary scan reader and folded to one partial row;
+  * Spark's final aggregate merges the rows. */
+class ZarrAggScan(
     store: ZarrStore,
     aggMetas: Seq[ZarrArrayMeta],
     schema: StructType,
     fns: Seq[(String, String)],
     servedRow: Seq[Any],
+    val complete: Boolean,
     servedChunks: Long,
     uncovered: Seq[(Long, Long)],
     options: CaseInsensitiveStringMap)
     extends Scan with Batch {
 
+  private val uncoveredChunks = uncovered.map(r => r._2 - r._1).sum
+
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
   override def description(): String =
-    s"ZarrPartialAggScan ${store.root} served=$servedChunks " +
-      s"uncoveredChunks=${uncovered.map(r => r._2 - r._1).sum} " +
-      s"[${schema.fieldNames.mkString(",")}]"
+    (if (complete) s"ZarrAggScan ${store.root} metadata-only"
+    else s"ZarrPartialAggScan ${store.root} served=$servedChunks " +
+      s"uncoveredChunks=$uncoveredChunks") + s" [${schema.fieldNames.mkString(",")}]"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // partition the uncovered ordinals like the plain scan would; the
-    // served row rides a sentinel partition (lo = -1)
-    val totalUncovered = uncovered.map(r => r._2 - r._1).sum
-    val requested = Option(options.get("partitions")).map(_.toInt)
-    val default =
-      try math.max(2 * SparkSession.active.sparkContext.defaultParallelism, 1)
-      catch { case _: Throwable => 32 }
-    val n = math.max(1L, math.min(totalUncovered, requested.getOrElse(default).toLong))
-    val per = math.max(1L, (totalUncovered + n - 1) / n)
-    val parts = Array.newBuilder[InputPartition]
-    parts += ZarrInputPartition(-1L, -1L)
-    uncovered.foreach { case (lo, hi) =>
-      var s = lo
-      while (s < hi) {
-        val e = math.min(hi, s + per)
-        parts += ZarrInputPartition(s, e)
-        s = e
+    // the served row rides a sentinel partition (lo = -1); the uncovered
+    // ordinals are partitioned like the plain scan would partition them
+    val per =
+      if (uncovered.isEmpty) 1L
+      else {
+        val n = ZarrScan.partitionCount(options, uncoveredChunks)
+        (uncoveredChunks + n - 1) / n
       }
-    }
-    parts.result()
+    (ZarrInputPartition(-1L, -1L) +: uncovered.flatMap { case (lo, hi) =>
+      (lo until hi by per).map(s => ZarrInputPartition(s, math.min(hi, s + per)))
+    }).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val metaJsons = aggMetas.map(m => m.name -> m.sourceJson)
-    val mparts = ChunkManifest.requiredParts(store, metaJsons.map(_._2))
+    // COUNT needs no chunk bytes (rows come from the batches; zarr reads
+    // never produce nulls): the reader emits only the value columns
+    val valueCols = fns.collect { case (fn @ ("min" | "max" | "sum"), c) => c }.distinct
+    val reader =
+      if (uncovered.isEmpty) None
+      else Some(ZarrReaderFactory(store, aggMetas.map(m => m.name -> m.sourceJson),
+        valueCols, Nil,
+        manifestParts = ChunkManifest.requiredParts(store, aggMetas.map(_.sourceJson))))
     // overflow semantics of the executor-side partial SUM must match
     // what Spark's Sum over the same scanned rows would do: throw under
     // ANSI (the 4.x default), wrap otherwise — resolved at plan time
@@ -651,163 +480,101 @@ class ZarrPartialAggScan(
     val ansi =
       try org.apache.spark.sql.internal.SQLConf.get.ansiEnabled
       catch { case _: Throwable => true }
-    ZarrPartialAggReaderFactory(store, metaJsons, schema.json, fns,
-      servedRow.map(ZarrPartialAggScan.box), mparts, ansi)
+    ZarrAggReaderFactory(schema.json, fns, servedRow, reader, ansi)
   }
 }
 
-object ZarrPartialAggScan {
-  /** JVM-serializable boxing for served values (same trick as
-    * [[ZarrAggScan]]: strings/decimals travel as strings). */
-  def box(v: Any): Any = v match {
-    case d: java.math.BigDecimal => d.toPlainString
-    case other => other
+object ZarrAggScan {
+  val integerTyped: Set[ZarrType] = Set(ZarrType.Int8, ZarrType.Int16,
+    ZarrType.Int32, ZarrType.Int64, ZarrType.UInt8, ZarrType.UInt16,
+    ZarrType.UInt32)
+
+  /** Fold value `v` into the running aggregate `acc` (null = nothing yet)
+    * of a MIN/MAX/SUM/AVG; `checked` sums throw on overflow. */
+  def merge(fn: String, acc: Any, v: Any, checked: Boolean): Any = fn match {
+    case "min" => if (acc == null || ChunkFilter.cmp(v, acc) < 0) v else acc
+    case "max" => if (acc == null || ChunkFilter.cmp(v, acc) > 0) v else acc
+    case "sum" | "avg" =>
+      val a = if (acc == null) 0L else acc.asInstanceOf[Long]
+      val x = v.asInstanceOf[Number].longValue
+      if (checked) Math.addExact(a, x) else a + x
+    case _ => acc
   }
 
+  /** Reads row `r` of `vec` as the JVM value the sidecar records for its
+    * type. */
+  def getter(vec: org.apache.spark.sql.vectorized.ColumnVector): Int => Any =
+    vec.dataType match {
+      case BooleanType => vec.getBoolean(_)
+      case ByteType => vec.getByte(_)
+      case ShortType => vec.getShort(_)
+      case IntegerType => vec.getInt(_)
+      case LongType => vec.getLong(_)
+      case FloatType => vec.getFloat(_)
+      case DoubleType => vec.getDouble(_)
+      case d: DecimalType => vec.getDecimal(_, d.precision, d.scale).toJavaBigDecimal
+      case _: StringType => vec.getUTF8String(_).toString
+    }
+
   /** Re-box a JVM value as the Catalyst internal value for `dt`. */
-  def internal(dt: org.apache.spark.sql.types.DataType, v: Any): Any = dt match {
-    case org.apache.spark.sql.types.StringType =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(v.asInstanceOf[String])
-    case d: org.apache.spark.sql.types.DecimalType =>
-      org.apache.spark.sql.types.Decimal(v match {
-        case s: String => new java.math.BigDecimal(s)
-        case b: java.math.BigDecimal => b
-      }, d.precision, d.scale)
+  def internal(dt: DataType, v: Any): Any = (dt, v) match {
+    case (_, null) => null
+    case (_: StringType, s: String) => org.apache.spark.unsafe.types.UTF8String.fromString(s)
+    case (d: DecimalType, b: java.math.BigDecimal) => Decimal(b, d.precision, d.scale)
     case _ => v
   }
 }
 
-final case class ZarrPartialAggReaderFactory(
-    store: ZarrStore,
-    metaJsons: Seq[(String, String)],
+/** Emits one row per partition: the served row, or the fold of the
+  * uncovered ordinals the scan reader `uncovered` emits. */
+final case class ZarrAggReaderFactory(
     schemaJson: String,
     fns: Seq[(String, String)],
     servedRow: Seq[Any],
-    manifestParts: Vector[(Long, String, Int)],
+    uncovered: Option[ZarrReaderFactory],
     ansiSum: Boolean)
     extends PartitionReaderFactory {
 
-  override def createReader(
-      p: InputPartition): org.apache.spark.sql.connector.read.PartitionReader[
-      org.apache.spark.sql.catalyst.InternalRow] = {
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[ZarrInputPartition]
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[StructType]
-    val row: Seq[Any] =
-      if (part.lo < 0) {
-        schema.fields.zip(servedRow).toSeq.map { case (f, v) =>
-          ZarrPartialAggScan.internal(f.dataType, v)
-        }
-      } else {
-        val metas = metaJsons.map { case (n, j) => ZarrMeta.parse(n, j) }
-        val byName = metas.map(m => m.name -> m).toMap
-        val mani = ChunkManifest(manifestParts)
-        // same geometry the planner walked: ordinals are row-major over
-        // this grid, and coordinate columns broadcast via the mapping
-        val geom = ScanGeometry.resolve(metas)
-        val roleOf: Map[String, ColumnRole] =
-          metas.map(_.name).zip(geom.roles).toMap
-        val coordCache = new java.util.HashMap[String, ChunkColumn]()
-        // COUNT needs no chunk bytes (row counts come from the extent;
-        // zarr reads never produce nulls) — fetch/decode only the
-        // columns whose VALUES a function consumes
-        val needCols = fns.collect {
-          case ("min", c) => c
-          case ("max", c) => c
-          case ("sum", c) => c
-        }.distinct
-        val mins = scala.collection.mutable.Map.empty[String, Any]
-        val maxs = scala.collection.mutable.Map.empty[String, Any]
-        val sums = scala.collection.mutable.Map.empty[String, Long]
-        var rows = 0L
-        // data-column bytes ride a depth-bounded prefetch window so
-        // decode overlaps IO across the uncovered range (same
-        // discipline as the scan pipeline and analyze)
-        val pf = new ChunkPrefetcher[Long, Map[String, Option[Array[Byte]]]](
-          (part.lo until part.hi).toIndexedSeq,
-          o => {
-            val idx = geom.chunkIndex(o)
-            needCols.flatMap { c =>
-              roleOf(c) match {
-                case DataCol(_) =>
-                  val m = byName(c)
-                  val key =
-                    if (geom.ndim == 1 && !mani.isEmpty)
-                      mani.keyFor(o).getOrElse(m.chunkKey(idx))
-                    else m.chunkKey(idx)
-                  Some(c -> store.readChunk(c, key))
-                case CoordCol(_, _) => None // tiny + cached below
-              }
-            }.toMap
-          })
-        try {
-        var ord = part.lo
-        while (ord < part.hi) {
-          val idx = geom.chunkIndex(ord)
-          val extent = geom.chunkExtent(idx)
-          val nRows = extent.map(_.toLong).product
-          rows += nRows
-          val raw = pf.next()
-          needCols.foreach { c =>
-            val m = byName(c)
-            val role = roleOf(c)
-            val col = role match {
-              case CoordCol(_, dim) =>
-                val ck = s"$c/${idx(dim)}"
-                val cached = coordCache.get(ck)
-                if (cached != null) cached
-                else {
-                  val cc = ChunkColumn.decode(
-                    m, store.readChunk(c, m.chunkKey(Array(idx(dim)))))
-                  coordCache.put(ck, cc)
-                  cc
-                }
-              case DataCol(_) => ChunkColumn.decode(m, raw(c))
-            }
-            val mapping = ChunkColumn.mapping(role, geom.targetChunk, extent)
-            val wantMin = fns.contains(("min", c))
-            val wantMax = fns.contains(("max", c))
-            val wantSum = fns.contains(("sum", c))
-            var e = 0
-            while (e < nRows) {
-              val v = col.get(if (mapping == null) e.toInt else mapping(e.toInt))
-              if (wantMin && (!mins.contains(c) || ChunkFilter.cmp(v, mins(c)) < 0))
-                mins(c) = v
-              if (wantMax && (!maxs.contains(c) || ChunkFilter.cmp(v, maxs(c)) > 0))
-                maxs(c) = v
-              if (wantSum) {
-                val x = (v: Any) match {
-                  case n: Number => n.longValue()
-                  case other => throw new ZarrException(s"unsummable value $other")
-                }
-                // overflow matches Spark's Sum over the same rows:
-                // throw under ANSI, wrap otherwise
-                sums(c) =
-                  if (ansiSum) Math.addExact(sums.getOrElse(c, 0L), x)
-                  else sums.getOrElse(c, 0L) + x
-              }
-              e += 1
-            }
-          }
-          ord += 1
-        }
-        } finally pf.close()
-        fns.zip(schema.fields).map {
-          case (("count_star", _), _) | (("count", _), _) => rows: Any
-          case (("min", c), f) => ZarrPartialAggScan.internal(f.dataType, mins(c))
-          case (("max", c), f) => ZarrPartialAggScan.internal(f.dataType, maxs(c))
-          case (("sum", c), _) => sums(c): Any
-          case other => throw new IllegalStateException(other.toString)
-        }
-      }
-    new org.apache.spark.sql.connector.read.PartitionReader[
-        org.apache.spark.sql.catalyst.InternalRow] {
+    val fields = DataType.fromJson(schemaJson).asInstanceOf[StructType].fields
+    val values = if (part.lo < 0) servedRow else fold(part)
+    val row = InternalRow.fromSeq(fields.toSeq.zip(values).map { case (f, v) =>
+      ZarrAggScan.internal(f.dataType, v)
+    })
+    new PartitionReader[InternalRow] {
       private var emitted = false
       override def next(): Boolean = { val r = !emitted; emitted = true; r }
-      override def get(): org.apache.spark.sql.catalyst.InternalRow =
-        org.apache.spark.sql.catalyst.InternalRow.fromSeq(row.toIndexedSeq)
+      override def get(): InternalRow = row
       override def close(): Unit = ()
     }
+  }
+
+  /** MIN/MAX/SUM over the value columns of the batches the scan reader
+    * emits for [lo, hi); COUNT is their row count. SUM overflow matches
+    * Spark's Sum over the same rows: throw under ANSI, wrap otherwise. */
+  private def fold(part: ZarrInputPartition): Seq[Any] = {
+    val scan = uncovered.get
+    val acc = new Array[Any](fns.length)
+    var rows = 0L
+    val reader = scan.createColumnarReader(part)
+    try while (reader.next()) {
+      val batch = reader.get()
+      rows += batch.numRows
+      fns.indices.foreach { i =>
+        fns(i) match {
+          case (fn @ ("min" | "max" | "sum"), c) =>
+            val get = ZarrAggScan.getter(batch.column(scan.outputNames.indexOf(c)))
+            var r = 0
+            while (r < batch.numRows) {
+              acc(i) = ZarrAggScan.merge(fn, acc(i), get(r), ansiSum)
+              r += 1
+            }
+          case _ =>
+        }
+      }
+    } finally reader.close()
+    fns.indices.map(i => if (fns(i)._1.startsWith("count")) rows else acc(i))
   }
 }
 
@@ -848,9 +615,9 @@ class ZarrScan(
       store, readNames, required.fields.map(_.name).toSeq, pushed.toSeq,
       checkpointLocation,
       maxChunksPerTrigger =
-        Option(options.get("max_chunks_per_trigger")).map(_.toLong).getOrElse(-1L),
+        ZarrDataSource.opt(options, "max_chunks_per_trigger")(_.toLong).getOrElse(-1L),
       emitPartialTail =
-        Option(options.get("emit_partial_tail")).exists(_.toBoolean))
+        ZarrDataSource.opt(options, "emit_partial_tail")(_.toBoolean).getOrElse(false))
 
   override def description(): String =
     s"ZarrScan ${store.root} cols=[${readNames.mkString(",")}] " +
@@ -865,11 +632,7 @@ class ZarrScan(
         val rowsPerChunk = math.max(1L, geometry.targetChunk.map(_.toLong).product)
         math.min(geometry.numChunks, (limit + rowsPerChunk - 1) / rowsPerChunk)
       }
-    val requested = Option(options.get("partitions")).map(_.toInt)
-    val default =
-      try math.max(2 * SparkSession.active.sparkContext.defaultParallelism, 1)
-      catch { case _: Throwable => 32 }
-    val n = math.max(1, math.min(total, requested.getOrElse(default).toLong).toInt)
+    val n = ZarrScan.partitionCount(options, total).toInt
     // runtime filters (delivered via filter() between the factory-built
     // planning pass and THIS post-filter re-plan) ride on the partitions,
     // with one driver-side stats-sidecar LIST so readers can chunk-skip
@@ -970,8 +733,9 @@ class ZarrScan(
         val cols = required.fields.map(_.name).filter(n =>
           byName.get(n).exists(m => numeric(m.dataType)))
         if (cols.nonEmpty) {
-          ChunkStats.coverageSegments(store, metas, geometry).foreach { parsed =>
-            val ranges = ChunkStats.exactRanges(cols.toSeq, parsed)
+          val (segs, exact) = ChunkStats.usableSegments(store, metas, geometry)
+          if (exact) {
+            val ranges = ChunkStats.exactRanges(cols.toSeq, segs)
             cols.foreach { n =>
               ranges.get(n).foreach { case (lo, hi) =>
                 out.put(Expressions.column(n), new ColumnStatistics {
@@ -988,6 +752,18 @@ class ZarrScan(
       }
     } catch { case _: Throwable => () } // stats are auxiliary: never fail planning
     out
+  }
+}
+
+object ZarrScan {
+  /** Input partitions for `total` chunks: the `partitions` option, else
+    * twice the session's default parallelism, never more than `total`. */
+  def partitionCount(options: CaseInsensitiveStringMap, total: Long): Long = {
+    val default =
+      try math.max(2 * SparkSession.active.sparkContext.defaultParallelism, 1)
+      catch { case _: Throwable => 32 }
+    val requested = ZarrDataSource.opt(options, "partitions")(_.toInt).getOrElse(default)
+    math.max(1L, math.min(total, requested.toLong))
   }
 }
 

@@ -111,15 +111,8 @@ class ZarrWriteBuilder(store: ZarrStore, info: LogicalWriteInfo)
     truncate()
   }
 
-  /** An option's value, parsed once; a malformed value is refused with
-    * the option's name instead of escaping as a bare JVM parse error. */
   private def opt[T](key: String)(parse: String => T): Option[T] =
-    Option(info.options.get(key)).map { v =>
-      try parse(v)
-      catch { case _: IllegalArgumentException =>
-        throw new ZarrException(s"option $key: cannot parse '$v'")
-      }
-    }
+    ZarrDataSource.opt(info.options, key)(parse)
 
   private def shapeOpt(key: String): Option[Seq[Int]] =
     opt(key)(_.split(",").map(_.trim.toInt).toSeq)

@@ -2,9 +2,9 @@ package graft.zarr
 
 import java.util.concurrent.{Executors, Future => JFuture}
 
-/** Sliding-window CONCURRENT chunk prefetch for whole-range readers —
-  * `analyze` and the hybrid partial-aggregate scan, which previously
-  * issued one blocking GET per chunk per column. At object-store
+/** Sliding-window CONCURRENT chunk prefetch for `analyze`'s whole-range
+  * reader, which previously issued one blocking GET per chunk per
+  * column (the scan reader keeps its own window). At object-store
   * latency that serializes the whole range: 64 chunks × 2 columns ×
   * 20 ms = 2.6 s per task of pure waiting, and decode is microseconds,
   * so (unlike the main scan's single-IO-thread pipeline, whose win is

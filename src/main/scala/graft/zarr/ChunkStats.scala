@@ -783,7 +783,7 @@ object ChunkStats {
     *    when the array grows), so requiring an exact chunk-count match
     *    would silently orphan an analyzed store's segments after its
     *    first append. Phantom ordinals past the committed grid are
-    *    rejected by the callers' `first + n <= total` filters, and
+    *    rejected by [[usableSegments]]' in-grid filter, and
     *    every rewrite path purges segments before changing the layout.
     *  - N-D scan: the TRAILING extents and per-dim identity must match
     *    exactly — a same-shape grid in a different dimension order (a
@@ -818,68 +818,39 @@ object ChunkStats {
         ds.toSeq == dims
     }
 
-  // ---- sound interval evaluation -----------------------------------------
-
-  /** Can any row with column values inside `range` satisfy ALL filters?
-    * `range(col)` = None ⇒ that column is unconstrained (conservative). */
-  /** Sidecar segments parsed and proven to cover EXACTLY every chunk of
-    * the scan grid (1-D or, via grid-signed `analyze` segments, N-D) —
-    * the precondition for any metadata-only answer
-    * (aggregate pushdown, CBO column statistics). Over-coverage
-    * (covered > total) means stale segments from a failed append
-    * describe phantom chunk ordinals and must not be trusted; a
-    * corrupt/unreadable segment declines (the sidecar is auxiliary and
-    * must never fail the query). */
-  /** Whatever valid sidecar segments exist — NO full-coverage
-    * requirement — for the hybrid aggregate pushdown: chunks a segment
-    * describes are served from metadata, the rest scan. Soundness
-    * filters match the full-coverage path's discipline: overlapping
-    * segments were already dropped pairwise by `listStatsSegments`
-    * (stale vs live is undecidable), segments describing ordinals past
-    * the committed grid are phantom leftovers of a failed append and
-    * are dropped here, and any unreadable/corrupt segment degrades to
-    * "no segments" (the sidecar is auxiliary and must never fail a
-    * query). */
-  def partialSegments(
+  /** The sidecar segments usable on `geom`'s grid, and whether they tile
+    * `[0, numChunks)` EXACTLY — the precondition for any complete
+    * metadata-only answer (aggregate pushdown, CBO column statistics);
+    * the hybrid aggregate pushdown serves whatever chunks the usable
+    * segments describe. Usable means in-grid (segments describing
+    * ordinals past the committed grid are phantom leftovers of a failed
+    * append) and [[gridCompatible]] (a segment recorded against a
+    * DIFFERENT grid — a 1-D coordinate scan over an N-D-analyzed store, a
+    * reordered cross product — enumerates different chunks under the
+    * same ordinals). Overlapping segments were already dropped pairwise
+    * by `listStatsSegments` (stale vs live is undecidable). Over-coverage,
+    * a grid-incompatible or vanished segment clears the flag; any read or
+    * parse failure degrades to no segments at all (the sidecar is
+    * auxiliary and must never fail a query). */
+  def usableSegments(
       store: ZarrStore,
       metas: Seq[ZarrArrayMeta],
-      geom: ScanGeometry): Seq[Segment] = {
+      geom: ScanGeometry): (Seq[Segment], Boolean) = {
     val total = geom.numChunks
     val ztOf: String => Option[ZarrType] = n => metas.find(_.name == n).map(_.dataType)
     try {
-      store.listStatsSegments()
+      val listed = store.listStatsSegments()
+      val usable = listed
         .filter { case (first, n) => first >= 0 && first + n <= total }
         .flatMap { case (first, n) =>
           store.readText(segmentKey(first, n)).map(json => parse(first, n, json, ztOf))
         }
-        // a segment recorded against a DIFFERENT grid (a 1-D coordinate
-        // scan over an N-D-analyzed store, a reordered cross product)
-        // enumerates different chunks under the same ordinals — unusable
         .filter(gridCompatible(_, geom))
-    } catch { case _: Throwable => Nil }
-  }
-
-  def coverageSegments(
-      store: ZarrStore,
-      metas: Seq[ZarrArrayMeta],
-      geom: ScanGeometry): Option[Seq[Segment]] = {
-    val total = geom.numChunks
-    val segs = store.listStatsSegments()
-    val covered = segs.foldLeft(0L) { case (next, (first, n)) =>
-      if (first == next) next + n else return None
-    }
-    if (covered != total) return None
-    val ztOf: String => Option[ZarrType] = n => metas.find(_.name == n).map(_.dataType)
-    val parsed =
-      try segs.flatMap { case (first, n) =>
-        store.readText(segmentKey(first, n))
-          .map(json => parse(first, n, json, ztOf))
-      } catch { case _: Throwable => return None }
-    if (parsed.map(_.chunks.toLong).sum < total) return None
-    // every segment must describe THIS grid: a full-coverage set recorded
-    // against another enumeration order proves nothing about these chunks
-    if (!parsed.forall(gridCompatible(_, geom))) return None
-    Some(parsed)
+      val tiled = usable.foldLeft(0L) { (next, seg) =>
+        if (seg.first == next) next + seg.chunks else -1L
+      }
+      (usable, usable.length == listed.length && tiled == total)
+    } catch { case _: Throwable => (Nil, false) }
   }
 
   /** Global exact (min, max) per column over fully-covering segments —
@@ -912,6 +883,10 @@ object ChunkStats {
     b.result()
   }
 
+  // ---- sound interval evaluation -----------------------------------------
+
+  /** Can any row with column values inside `range` satisfy ALL filters?
+    * `range(col)` = None ⇒ that column is unconstrained (conservative). */
   def mayMatch(filters: Seq[Filter], range: String => Option[(Any, Any)]): Boolean =
     filters.forall(f => may(f, range))
 

@@ -295,6 +295,62 @@ class AggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(math.abs(rowSum.getDouble(0) - (0 until 8).map(38.0 + _ * 0.1).sum) < 1e-9)
   }
 
+  test("coverage sweep: every deleted-segment count answers like the declined scan") {
+    // 2-D 8x8 store in 3x3 chunks (9 ordinals): integer and string data
+    // columns, plus the broadcast coordinate `row`
+    val url = s"file://$base/sweep"
+    val store = ZarrStore(url)
+    store.writeStoreRootMeta()
+    ZarrWriter.writeArray(store, "row", ZarrType.Float64, Seq(8), Seq(3),
+      (0 until 8).map(i => 10.0 + i), Some(Seq("row")), ZarrWriter.CodecChain.raw)
+    ZarrWriter.writeArray(store, "col", ZarrType.Float64, Seq(8), Seq(3),
+      (0 until 8).map(i => 20.0 + i), Some(Seq("col")), ZarrWriter.CodecChain.raw)
+    ZarrWriter.writeArray(store, "v", ZarrType.Int64, Seq(8, 8), Seq(3, 3),
+      (0 until 64).map(i => (i * 7L % 64) - 20: Any), Some(Seq("row", "col")),
+      ZarrWriter.CodecChain.raw)
+    ZarrWriter.writeArray(store, "s", ZarrType.Str, Seq(8, 8), Seq(3, 3),
+      (0 until 64).map(i => "s%02d".format(i * 13 % 64)), Some(Seq("row", "col")),
+      ZarrWriter.CodecChain.raw, fillJson = "\"\"")
+    assert(ZarrMaintenance.analyze(spark, url) == 9)
+    val segs = store.listStatsSegments()
+    val n = segs.length
+    assert(n >= 3, s"the sweep needs several segments: $segs")
+    def agg(df: org.apache.spark.sql.DataFrame) = df.agg(count(lit(1)), count(col("s")),
+      min("v"), max("v"), sum("v"), min("s"), max("s"), min("row"), max("row"))
+    val load = () => spark.read.format("zarr").load(url)
+    // a filter matching every row declines the pushdown: the scan's answer
+    val declined = agg(load().filter("v >= -20"))
+    assert(!declined.queryExecution.executedPlan.toString.contains("AggScan"))
+    val expected = declined.collect()(0).toSeq
+    assert(expected.take(2) == Seq(64L, 64L))
+    // delete segments in an interleaved order so the uncovered runs split
+    val order = segs.indices.sortBy(i => (i % 2, i)).map(segs)
+    (0 to n).foreach { k =>
+      if (k > 0) store.deleteKey(ChunkStats.segmentKey(order(k - 1)._1, order(k - 1)._2))
+      val q = agg(load())
+      val plan = q.queryExecution.executedPlan.toString
+      val lost = order.take(k).map(_._2).sum
+      if (k == 0) assert(plan.contains("ZarrAggScan") && plan.contains("metadata-only"), plan)
+      else if (k < n) {
+        assert(plan.contains("ZarrPartialAggScan"), s"k=$k\n$plan")
+        assert(plan.contains(s"served=${9 - lost} ") &&
+          plan.contains(s"uncoveredChunks=$lost "), s"k=$k\n$plan")
+      } else assert(!plan.contains("AggScan"), s"k=$k\n$plan")
+      assert(q.collect()(0).toSeq == expected, s"k=$k")
+    }
+    // a phantom segment past the grid: never exact coverage, yet every
+    // in-grid chunk is still served
+    assert(ZarrMaintenance.analyze(spark, url) == 9)
+    store.writeText(ChunkStats.segmentKey(9, 2), ChunkStats.encode(Seq(
+      ("v", ZarrType.Int64, IndexedSeq(Some((999L, 9999L)), Some((999L, 9999L))),
+        IndexedSeq(Some(1L), Some(1L))))))
+    val q = agg(load())
+    val plan = q.queryExecution.executedPlan.toString
+    assert(plan.contains("ZarrPartialAggScan") && plan.contains("served=9 ") &&
+      plan.contains("uncoveredChunks=0 "), plan)
+    assert(q.collect()(0).toSeq == expected)
+  }
+
   test("CBO column statistics reach N-D stores after analyze") {
     val url = s"graftstat://$base/nd" // the (restored) analyzed 2-D store
     ZarrMaintenance.analyze(spark, url) // re-cover after the hybrid test's deletion

@@ -121,6 +121,10 @@ class ZarrConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(df.count() == 64, s"partitions=$n")
       assert(df.rdd.getNumPartitions == math.min(n, 9), s"partitions=$n")
     }
+    // a malformed value is refused by name, not as a bare parse error
+    val e = intercept[ZarrException](spark.read.format("zarr").option("partitions", "x")
+      .load(s"$storeDir/latlon").collect())
+    assert(e.getMessage.contains("partitions") && e.getMessage.contains("'x'"), e.getMessage)
   }
 
   // ---- fill values (zarr_data_stream.rs:1245-1278) ----

@@ -292,6 +292,16 @@ class ZarrStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filterNot(_.startsWith("."))
     assert(offsets.length >= 4,
       s"8-chunk backlog at cap 2 must take >=4 micro-batches, saw ${offsets.length}")
+    // malformed values are refused by name, not as bare parse errors
+    Seq("max_chunks_per_trigger" -> "two", "emit_partial_tail" -> "yes").foreach { case (k, v) =>
+      val bad = spark.readStream.format("zarr").option(k, v).load(dir)
+        .writeStream.format("noop").option("checkpointLocation", s"$base/throttle-bad-$k")
+        .trigger(Trigger.AvailableNow()).start()
+      val e = intercept[Exception] { try bad.processAllAvailable() finally bad.stop() }
+      val zarr = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case z: ZarrException => z }
+      assert(zarr.exists(z => z.getMessage.contains(k) && z.getMessage.contains(s"'$v'")), e)
+    }
   }
 
   test("streaming read over a SHARDED store (append-grown, exactly once)") {
