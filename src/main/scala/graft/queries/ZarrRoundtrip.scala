@@ -1021,9 +1021,10 @@ object ZarrRoundtrip {
       |ORDER BY store, array_name""".stripMargin) { (s, dir) =>
     val store = ensureShardedCubeStore(s, dir)
     val sparse = ensureSparseDescribeStore(s, dir)
-    // one store counted DISTRIBUTED (sharded), one driver-side (sparse):
-    // both counting schedulers stay under the oracle gate
-    graft.zarr.ZarrInfo.describe(s, store, countStored = true, distributed = true)
+    // one store counted by a Spark job (sharded; threshold forced to 0),
+    // one on the driver (sparse): both counting schedulers stay under
+    // the oracle gate
+    graft.zarr.ZarrInfo.describeImpl(s, store, countStored = true, inlineMax = 0L)
       .withColumn("store", lit("sharded"))
       .unionByName(graft.zarr.ZarrInfo.describe(s, sparse, countStored = true)
         .withColumn("store", lit("sparse")))
@@ -1125,9 +1126,9 @@ object ZarrRoundtrip {
       |) t(target, orphan_chunks, staging_dirs, phantom_segments)
       |ORDER BY target""".stripMargin) { (s, dir) =>
     val store = buildPollutedStore(s, dir)
-    // the DISTRIBUTED walk under the oracle gate (the driver-side twin
-    // is literal-pinned equal in ZarrMaintenanceSpec)
-    val out = graft.zarr.ZarrMaintenance.vacuum(s, store, distributed = true)
+    // the Spark-job walk under the oracle gate (threshold forced to 0;
+    // the driver-side twin is pinned equal in ZarrMaintenanceSpec)
+    val out = graft.zarr.ZarrMaintenance.vacuumImpl(s, store, inlineMax = 0L)
       .orderBy("target")
     // force the vacuum before asserting the store is clean and intact
     val rows = out.collect()

@@ -1236,7 +1236,6 @@ object ZarrCubeWrite {
     val segBounds = Array.fill(segColNames.length)(
       Vector.newBuilder[Option[ChunkStats.Bound]])
     val segSums = Array.fill(segColNames.length)(Vector.newBuilder[Option[Long]])
-    val maxSegChunks = 4096
 
     def flushSegment(): Unit = {
       if (stats && segLen > 0) {
@@ -1353,7 +1352,7 @@ object ZarrCubeWrite {
           c2 += 1
         }
         segLen += 1
-        if (segLen == maxSegChunks) flushSegment()
+        if (segLen == ChunkStats.maxSegmentChunks) flushSegment()
       }
       chunks += 1
       resetBuffers()

@@ -110,10 +110,10 @@ object ZarrCubeSink {
     def runCadence(): Unit = compactEvery.foreach { n =>
       if ((batchId + 1) % n == 0) {
         try {
-          // distributed=true self-degrades to inline below compactStats'
-          // group threshold — steady-state cadence hits run on the
-          // driver, a pre-option backlog gets one Spark job
-          ZarrMaintenance.compactStats(spark, path, distributed = true): Unit
+          // scheduled by size: a steady-state cadence hit merges a few
+          // segments on the driver, a backlog of more than 64 source
+          // segments gets one Spark job
+          ZarrMaintenance.compactStats(spark, path): Unit
         } catch {
           // a compaction failure must never fail a batch that already
           // committed (fragmentation is a deferred cost, not an error);

@@ -1,44 +1,104 @@
 package graft.zarr
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import scala.reflect.ClassTag
 
-/** Sharded walks over a store's stored objects — the 100 TB shape of
-  * the maintenance/observability surface. A driver-side recursive LIST
-  * is exact but serial: on an object store holding millions of chunk
-  * objects it becomes the bottleneck of `vacuum` and
-  * `describe(countStored)`. This planner cuts each array's key space
-  * into independently walkable units after only TWO driver LIST levels
-  * (array dir + its child dirs): every grandchild DIRECTORY becomes a
-  * recursive `subtree` unit (for a cube that is one unit per dim-0
-  * chunk row — natural, even parallelism), and each child dir
-  * additionally yields one files-only unit for its direct file
-  * children (1-D layouts: `c/<i>` files). Units are plain strings, so
-  * they ship to executors; each task opens its own FileSystem from the
-  * same `fs.*` conf pairs every executor-side store access uses.
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.SparkSession
+
+/** The one scheduler of the maintenance/observability surface, and the
+  * walks it schedules. Every sweep (analyze's sidecar validation,
+  * compactStats' merges and deletes, vacuum's segment, inner-doc and
+  * chunk walks, `describe(countStored)`) hands its items and ONE visitor
+  * to [[run]], which runs the visitor on the driver for small work and
+  * as one Spark job above [[InlineMax]] — the 100 TB shape, where a
+  * serial driver pass over millions of objects is the bottleneck. One
+  * visitor serves both schedulers, so their results cannot drift.
   *
-  * The SAME planner and per-unit visitors serve the driver-side mode —
-  * one implementation, two schedulers — so distributed and local
-  * results cannot drift. */
+  * Stored-object walks cut each array's key space into independently
+  * walkable units after TWO driver LIST levels (array dir + its child
+  * dirs): the files those listings saw are handled on the driver (1-D
+  * layouts: every `c/<i>` file), and every grandchild DIRECTORY becomes
+  * a recursive unit (for a cube that is one unit per dim-0 chunk row —
+  * natural, even parallelism). Units are plain strings, so they ship to
+  * executors; each unit opens its FileSystem through a [[ZarrStore]]
+  * built from the same `fs.*` conf pairs every executor-side store
+  * access uses. */
 private[zarr] object ZarrDistWalk {
+
+  /** Work size up to which [[run]] stays on the driver: above it one
+    * Spark job's dispatch costs less than a serial driver pass. */
+  final val InlineMax: Long = 64
+
+  /** Run `visit` over `items` on the driver when `size` is at most
+    * `inlineMax`; above, as ONE Spark job over
+    * min(items, defaultParallelism) partitions, each visiting its slice.
+    * `size` is the work the choice is made on — the item count, or a
+    * bigger figure the caller already knows (a walk's grid capacity). */
+  def run[A: ClassTag, B: ClassTag](
+      spark: SparkSession, items: Seq[A], inlineMax: Long, size: Long)(
+      visit: Seq[A] => Seq[B]): Seq[B] =
+    if (items.isEmpty) Seq.empty
+    else if (size <= inlineMax) visit(items)
+    else {
+      val parts = math.min(items.size,
+        math.max(1, spark.sparkContext.defaultParallelism))
+      spark.sparkContext.parallelize(items, parts)
+        .mapPartitions(it => visit(it.toSeq).iterator)
+        .collect().toSeq
+    }
+
+  /** [[run]] deciding on the item count. */
+  def run[A: ClassTag, B: ClassTag](
+      spark: SparkSession, items: Seq[A], inlineMax: Long)(
+      visit: Seq[A] => Seq[B]): Seq[B] =
+    run(spark, items, inlineMax, items.size.toLong)(visit)
+
+  /** Chunk slots the arrays' grids address — the size a stored-object
+    * walk is scheduled on, known from metadata before any LIST. */
+  def gridCapacity(metas: Seq[ZarrArrayMeta]): Long =
+    metas.map(_.gridShape.map(_.toLong).product).sum
 
   val metaDocNames: Set[String] =
     Set("zarr.json", ".zarray", ".zattrs", ".zgroup")
 
   /** One independently walkable slice of an array's key space:
-    * everything under `rel` when `subtree`, else only the direct FILE
-    * children of `rel`. `rel` is relative to the array dir. */
-  final case class WalkUnit(array: String, rel: String, subtree: Boolean)
+    * everything under `rel`, relative to the array dir ("" = the array
+    * dir itself). */
+  final case class WalkUnit(array: String, rel: String)
 
-  private def openFs(root: String, pairs: Seq[(String, String)]): (FileSystem, Path) = {
-    val conf = new Configuration()
-    pairs.foreach { case (k, v) => conf.set(k, v) }
-    val p = new Path(root)
-    val fs = p.getFileSystem(conf)
-    fs.setVerifyChecksum(false)
-    fs.setWriteChecksum(false)
-    (fs, p)
+  private def child(rel: String, name: String): String =
+    if (rel.isEmpty) name else s"$rel/$name"
+
+  private def unitPath(root: Path, u: WalkUnit): Path =
+    new Path(root, child(u.array, u.rel))
+
+  private def listOrEmpty(fs: FileSystem, p: Path): Array[FileStatus] =
+    try fs.listStatus(p)
+    catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+
+  /** One LIST of the unit's dir: its direct files (paths relative to the
+    * array dir, metadata documents excluded) and one unit per child dir
+    * — identical coverage, one level finer. */
+  private def expand(fs: FileSystem, root: Path, u: WalkUnit): (Seq[String], Seq[WalkUnit]) = {
+    val (dirs, files) = listOrEmpty(fs, unitPath(root, u)).toSeq.partition(_.isDirectory)
+    (files.map(_.getPath.getName).filterNot(metaDocNames).map(child(u.rel, _)),
+      dirs.map(d => WalkUnit(u.array, child(u.rel, d.getPath.getName))))
   }
+
+  /** The segment document `doc` of (first, n), parsed, iff it parses and
+    * is grid-compatible under [[ChunkStats.gridCompatibleWith]] — THE
+    * segment-validity rule analyze, vacuum and compactStats apply, each
+    * with its own rule for an absent document and its own keep/delete
+    * decision on top. */
+  def validSegment(
+      first: Long, n: Int, doc: String, ndim: Int, gridShape: Seq[Int],
+      dims: Seq[String], colTypes: Map[String, String]): Option[ChunkStats.Segment] =
+    try Some(ChunkStats.parse(first, n, doc, ztOf(colTypes)))
+      .filter(ChunkStats.gridCompatibleWith(_, ndim, gridShape, dims))
+    catch { case _: Exception => None }
+
+  private def ztOf(colTypes: Map[String, String]): String => Option[ZarrType] =
+    n => colTypes.get(n).map(ZarrType.fromName)
 
   /** Chunk-grid indices a key-shaped relative path addresses, or None
     * for non-key-shaped names. Handles every layout the engine reads:
@@ -59,136 +119,102 @@ private[zarr] object ZarrDistWalk {
       idx.length != grid.length ||
         idx.zip(grid).exists { case (i, g) => i >= g })
 
-  /** Split subtree units one LIST level at a time until at least
-    * `target` units exist (or nothing further splits): a subtree unit
-    * over a dir becomes one files-only unit for its direct files plus
-    * one subtree unit per child dir — IDENTICAL coverage, finer tasks.
-    * This is how a cube with a short dim-0 (2 chunk rows → 2 first-level
-    * units) still fans out across a cluster: the next grid dimension
-    * supplies the parallelism. Cost: one LIST per refined unit per
-    * round, bounded by `maxLevels` rounds (grids are ≤8-D and each round
-    * multiplies units by a grid dimension, so 3 rounds reach target or
-    * the file level for any realistic layout). */
+  /** Expand units one LIST level at a time until at least `target`
+    * units exist (or nothing further splits): each expanded unit's
+    * direct files join the driver's files and its child dirs become
+    * units — IDENTICAL coverage, finer tasks. A unit at the file level
+    * has no child dirs, so its one LIST already saw all of it and it
+    * needs no task. This is how a cube with a short dim-0 (2 chunk rows
+    * → 2 first-level units) still fans out across a cluster: the next
+    * grid dimension supplies the parallelism. Cost: one LIST per
+    * expanded unit per round, bounded by `maxLevels` rounds (grids are
+    * ≤8-D and each round multiplies units by a grid dimension, so 3
+    * rounds reach target or the file level for any realistic layout).
+    * Returns (files, units). */
   private def refine(
-      fs: FileSystem, arrayDir: Path, array: String,
-      units: Seq[WalkUnit], target: Int, maxLevels: Int = 3): Seq[WalkUnit] = {
-    var cur = units
+      fs: FileSystem, root: Path, units: Seq[WalkUnit], target: Int,
+      maxLevels: Int = 3): (Seq[String], Seq[WalkUnit]) = {
+    var (files, cur) = (Seq.empty[String], units)
     var level = 0
-    while (level < maxLevels && cur.size < target && cur.exists(_.subtree)) {
-      val (subs, rest) = cur.partition(_.subtree)
-      val refined = subs.flatMap { u =>
-        val base = new Path(arrayDir, u.rel)
-        val kids =
-          try fs.listStatus(base)
-          catch { case _: java.io.FileNotFoundException =>
-            Array.empty[org.apache.hadoop.fs.FileStatus] }
-        val childDirs = kids.filter(_.isDirectory)
-        if (childDirs.isEmpty) Seq(u) // file level reached: keep as-is
-        else WalkUnit(array, u.rel, subtree = false) +: childDirs.map(d =>
-          WalkUnit(array, s"${u.rel}/${d.getPath.getName}", subtree = true)).toSeq
-      }
-      val progressed = refined.size != subs.size || refined != subs
-      cur = rest ++ refined
-      level = if (progressed) level + 1 else maxLevels // fixpoint: stop
+    while (level < maxLevels && cur.nonEmpty && cur.size < target) {
+      val listed = cur.map(expand(fs, root, _))
+      files ++= listed.flatMap(_._1)
+      cur = listed.flatMap(_._2)
+      level += 1
     }
-    cur
+    (files, cur)
   }
 
+  /** Walk units a Spark job should be cut into: four per core, so
+    * uneven units still balance. */
+  def fanTarget(spark: SparkSession): Int =
+    4 * math.max(1, spark.sparkContext.defaultParallelism)
+
   /** Two driver LISTs deep (more when `targetUnits` asks for finer
-    * fan-out — see [[refine]]): returns (direct non-metadata FILE names
-    * of the array dir, `c.part*` child-dir names, walk units over every
-    * other child dir). Staging dirs are excluded from the units — the
+    * fan-out — see [[refine]]; only the job path asks, a driver walk
+    * keeps the cheapest plan, and unit shape never changes results):
+    * returns (every non-metadata FILE those listings saw, relative to
+    * the array dir; `c.part*` child-dir names; walk units over every
+    * grandchild dir). Staging dirs are neither listed nor units — the
     * caller owns the manifest-aware staging decision (vacuum) or adds
-    * them back as subtree units (stored-object counting, which counts
-    * manifest part files too). */
+    * them back as units (stored-object counting, which counts manifest
+    * part files too). A plan without units is complete — the 1-D layout
+    * (`c/<i>` files), or a short 2-D grid refined to its file level —
+    * and needs no walk past the driver's listings. */
   def planArray(
       fs: FileSystem, root: Path, array: String,
       targetUnits: Int = 0): (Seq[String], Seq[String], Seq[WalkUnit]) = {
-    val dir = new Path(root, array)
-    val children =
-      try fs.listStatus(dir)
-      catch { case _: java.io.FileNotFoundException =>
-        Array.empty[org.apache.hadoop.fs.FileStatus] }
-    val topFiles = children.collect {
-      case st if !st.isDirectory && !metaDocNames.contains(st.getPath.getName) =>
-        st.getPath.getName
-    }.toSeq
-    val staging = children.collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("c.part") =>
-        st.getPath.getName
-    }.toSeq
-    val units = children.toSeq
-      .filter(st => st.isDirectory && !st.getPath.getName.startsWith("c.part"))
-      .flatMap { st =>
-        val c = st.getPath.getName
-        val grandkids =
-          try fs.listStatus(st.getPath)
-          catch { case _: java.io.FileNotFoundException =>
-            Array.empty[org.apache.hadoop.fs.FileStatus] }
-        WalkUnit(array, c, subtree = false) +: grandkids.collect {
-          case g if g.isDirectory =>
-            WalkUnit(array, s"$c/${g.getPath.getName}", subtree = true)
-        }.toSeq
+    val (topFiles, children) = expand(fs, root, WalkUnit(array, ""))
+    val (staging, dirs) = children.partition(_.rel.startsWith("c.part"))
+    val level2 = dirs.map(expand(fs, root, _))
+    val units = level2.flatMap(_._2)
+    val (finerFiles, finer) =
+      if (units.size < targetUnits) refine(fs, root, units, targetUnits) else (Nil, units)
+    (topFiles ++ level2.flatMap(_._1) ++ finerFiles, staging.map(_.rel), finer)
+  }
+
+  /** THE stored-object counter: per array, every file under its dir
+    * except metadata documents — canonical and v2 chunk keys, shard
+    * objects, manifest part files, foreign files — counting what is
+    * physically present, so an absent-chunk (fill-value) store reports
+    * fewer objects than its grid has slots. Scheduled on the arrays'
+    * grid capacity: up to `inlineMax` one recursive listing per array on
+    * the driver; above, the key spaces are planned ([[planArray]]; the
+    * files its listings saw are counted there) and only the planned
+    * units — the dirs below the listed levels, and staging dirs — are
+    * counted in one Spark job. A plan with no units (the 1-D layout)
+    * takes no job. */
+  def countStored(
+      spark: SparkSession, store: ZarrStore, metas: Seq[ZarrArrayMeta],
+      inlineMax: Long): Map[String, Long] = {
+    val (root, pairs) = (store.root, store.hadoopConfPairs)
+    val capacity = gridCapacity(metas)
+    if (capacity <= inlineMax)
+      metas.map(m => m.name -> countUnit(root, pairs, WalkUnit(m.name, ""))).toMap
+    else {
+      val planned = metas.map { m =>
+        val (files, staging, units) =
+          planArray(store.fs, store.rootPath, m.name, fanTarget(spark))
+        (m.name, files.size.toLong, units ++ staging.map(WalkUnit(m.name, _)))
       }
-    val fanned =
-      if (targetUnits > 0 && units.size < targetUnits)
-        refine(fs, dir, array, units, targetUnits)
-      else units
-    (topFiles, staging, fanned)
+      val counts = run(spark, planned.flatMap(_._3), inlineMax, capacity)(
+        _.map(u => u.array -> countUnit(root, pairs, u)))
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      planned.map { case (name, files, _) => name -> (files + counts.getOrElse(name, 0L)) }.toMap
+    }
   }
 
   /** Count the unit's stored files (metadata-document names excluded at
-    * any depth — the [[ZarrStore.countStoredChunkObjects]] contract). */
+    * any depth). */
   def countUnit(root: String, pairs: Seq[(String, String)], u: WalkUnit): Long = {
-    val (fs, rp) = openFs(root, pairs)
-    val base = new Path(new Path(rp, u.array), u.rel)
+    val store = ZarrStore(root, pairs)
     var n = 0L
-    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-      if (st.isDirectory) walk(st.getPath)
-      else if (!metaDocNames.contains(st.getPath.getName)) n += 1
-    }
     try {
-      if (u.subtree) walk(base)
-      else fs.listStatus(base).foreach { st =>
-        if (!st.isDirectory && !metaDocNames.contains(st.getPath.getName)) n += 1
-      }
+      val it = store.fs.listFiles(unitPath(store.rootPath, u), true)
+      while (it.hasNext)
+        if (!metaDocNames.contains(it.next().getPath.getName)) n += 1
     } catch { case _: java.io.FileNotFoundException => () }
     n
-  }
-
-  /** Stream the `_stats/` sidecar listing and reduce it to the
-    * dashboard's counts: (raw segment docs, live segments, inner docs,
-    * covered chunks). One implementation, two schedulers
-    * ([[graft.zarr.ZarrInfo.describeStats]]): inline on the driver for
-    * small stores, or as the single task of a Spark job when the
-    * LISTING itself is the cost (10⁶+ segments pre-compaction) — the
-    * paginated requests and the O(segments) name materialization then
-    * live in an executor, and only four longs return to the driver.
-    * The live rule is [[ZarrStore.liveSegments]] — shared with sidecar
-    * compaction, never a private copy. */
-  def describeStatsUnit(
-      root: String, pairs: Seq[(String, String)],
-      numChunks: Long): (Long, Long, Long, Long) = {
-    val (fs, rp) = openFs(root, pairs)
-    val dir = new Path(rp, ChunkStats.dirName)
-    val segs = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
-    var nInner = 0L
-    try {
-      // RemoteIterator: pages stream through a bounded buffer instead of
-      // materializing every FileStatus up front (S3A lists lazily here)
-      val it = fs.listStatusIterator(dir)
-      while (it.hasNext) {
-        val name = it.next().getPath.getName
-        ChunkStats.parseSegmentName(name) match {
-          case Some(p) => segs += p
-          case None => if (ChunkStats.parseInnerName(name).isDefined) nInner += 1
-        }
-      }
-    } catch { case _: java.io.FileNotFoundException => () }
-    val raw = segs.sortBy(_._1).toSeq
-    val live = ZarrStore.liveSegments(raw, numChunks)
-    val covered = math.min(live.map(_._2.toLong).sum, numChunks)
-    (raw.size.toLong, live.size.toLong, nInner, covered)
   }
 
   /** Validate-and-reclaim a batch of per-inner-chunk stats docs
@@ -202,10 +228,8 @@ private[zarr] object ZarrDistWalk {
     * mtimes only move forward, so an all-stale doc is PERMANENTLY
     * declined by every reader and is dead weight each scan re-HEADs
     * forever. A doc with ANY fresh column stays live (the reader still
-    * uses that column's bounds). One visitor for both schedulers
-    * (driver loop and the distributed vacuum job): names are
-    * driver-LISTed once, but the per-doc GET+parse+HEAD is the
-    * O(shards) cost this shards out. */
+    * uses that column's bounds). Names are driver-LISTed once; the
+    * per-doc GET+parse+HEAD is the O(shards) cost [[run]] shards out. */
   def vacuumInnerDocsUnit(
       root: String, pairs: Seq[(String, String)], ords: Seq[Long],
       metaJsons: Seq[(String, String)],
@@ -245,36 +269,23 @@ private[zarr] object ZarrDistWalk {
 
   /** Validate-and-reclaim a batch of stats SEGMENTS: a segment is a
     * PHANTOM — deleted, counted — when its range reaches past the
-    * committed grid, it is unreadable, or its grid signature is
-    * incompatible under [[ChunkStats.gridCompatibleWith]]. The segment
-    * twin of [[vacuumInnerDocsUnit]]: segment counts scale with WRITE
-    * TASKS (a long-lived micro-batch ingest can hold 10^5), and the
-    * measured driver pass at that count is ~7 s of pure CPU locally —
-    * at object-store latency the per-segment GET serializes into
-    * minutes, so the same one-visitor-both-schedulers shape applies. */
+    * committed grid or it fails [[validSegment]]. The segment twin of
+    * [[vacuumInnerDocsUnit]]: segment counts scale with WRITE TASKS (a
+    * long-lived micro-batch ingest can hold 10^5), where a driver-serial
+    * GET per segment is minutes at object-store latency. */
   def vacuumSegmentsUnit(
       root: String, pairs: Seq[(String, String)], segs: Seq[(Long, Int)],
       numChunks: Long, ndim: Int, gridShape: Seq[Int], dims: Seq[String],
       colTypes: Map[String, String]): Long = {
     val store = ZarrStore(root, pairs)
-    val ztOf: String => Option[ZarrType] =
-      n => colTypes.get(n).map(ZarrType.fromName)
-    var reclaimed = 0L
-    segs.foreach { case (first, n) =>
+    segs.count { case (first, n) =>
       val key = ChunkStats.segmentKey(first, n)
-      val bad =
-        if (first < 0 || first + n > numChunks) true
-        else store.readText(key) match {
-          case Some(doc) =>
-            try !ChunkStats.gridCompatibleWith(
-              ChunkStats.parse(first, n, doc, ztOf), ndim, gridShape, dims)
-            catch { case _: Exception => true } // unreadable: describes nothing
-          case None => false
-        }
-      // count only CONFIRMED deletions (the vacuumUnit discipline)
-      if (bad && store.deleteKey(key)) reclaimed += 1
-    }
-    reclaimed
+      // an absent segment (deleted since the LIST) is left alone
+      (first < 0 || first + n > numChunks || store.readText(key).exists(doc =>
+        validSegment(first, n, doc, ndim, gridShape, dims, colTypes).isEmpty)) &&
+        // count only CONFIRMED deletions (the vacuumUnit discipline)
+        store.deleteKey(key)
+    }.toLong
   }
 
   /** Coverage-validate a batch of per-inner-chunk stats docs for
@@ -296,9 +307,7 @@ private[zarr] object ZarrDistWalk {
     * re-emits them fresh (same retire-then-rewrite discipline as the
     * append's edge window). Returns the covering ordinals. Metas ride
     * as (name, sourceJson) pairs and the 1-D manifest as raw parts so
-    * the unit is a plain-strings task closure, like every walk unit;
-    * one visitor serves both schedulers (driver loop ≤ the inline
-    * threshold, Spark job above), so results cannot drift. */
+    * the unit is a plain-strings task closure, like every walk unit. */
   def analyzeDocsUnit(
       root: String, pairs: Seq[(String, String)], ords: Seq[Long],
       metaJsons: Seq[(String, String)],
@@ -356,95 +365,69 @@ private[zarr] object ZarrDistWalk {
     * analyze: `presumed` carries the driver's LIST-derived verdict
     * (unsuppressed, range inside the grid, every ordinal's inner doc
     * covering — all decidable from listings + the doc sweep, no GET).
-    * A presumed-live segment covers iff its document GETs, parses and
-    * is grid-compatible; everything else is DELETED up front — an
-    * invalid segment proves nothing and, left in place, would
-    * overlap-suppress the fresh segments re-analysis writes over its
-    * range. Returns the covered `[first, end)` ranges. The segment twin
-    * of [[analyzeDocsUnit]] and the analyze-side twin of
-    * [[vacuumSegmentsUnit]]: segment counts scale with WRITE TASKS
-    * (10^5 for a long-lived micro-batch ingest), where a driver-serial
-    * GET-per-segment sweep is minutes at object-store latency. */
+    * A presumed-live segment covers iff it passes [[validSegment]];
+    * everything else is DELETED up front — an invalid segment proves
+    * nothing and, left in place, would overlap-suppress the fresh
+    * segments re-analysis writes over its range. Returns the covered
+    * `[first, end)` ranges. */
   def analyzeSegmentsUnit(
       root: String, pairs: Seq[(String, String)],
       segs: Seq[(Long, Int, Boolean)], ndim: Int, gridShape: Seq[Int],
       dims: Seq[String], colTypes: Map[String, String]): Seq[(Long, Long)] = {
     val store = ZarrStore(root, pairs)
-    val ztOf: String => Option[ZarrType] =
-      n => colTypes.get(n).map(ZarrType.fromName)
-    val covered = Seq.newBuilder[(Long, Long)]
-    segs.foreach { case (first, n, presumed) =>
-      val ok = presumed && (store.readText(ChunkStats.segmentKey(first, n)) match {
-        case Some(doc) =>
-          try ChunkStats.gridCompatibleWith(
-            ChunkStats.parse(first, n, doc, ztOf), ndim, gridShape, dims)
-          catch { case _: Exception => false }
-        case None => false
-      })
-      if (ok) covered += ((first, first + n))
-      else store.deleteKey(ChunkStats.segmentKey(first, n)): Unit
+    segs.flatMap { case (first, n, presumed) =>
+      val key = ChunkStats.segmentKey(first, n)
+      if (presumed && store.readText(key).exists(doc =>
+        validSegment(first, n, doc, ndim, gridShape, dims, colTypes).isDefined))
+        Some((first, first + n))
+      else { store.deleteKey(key); None }
     }
-    covered.result()
   }
 
   /** Merge a batch of segment GROUPS for sidecar compaction: each group
     * is a contiguous run of committed segments to be rewritten as ONE
-    * document. A group is merged only when EVERY source GETs, parses
-    * and is grid-compatible — anything else skips the whole group
-    * untouched (a compaction must never destroy information; junk is
-    * incremental analyze's and vacuum's job). Returns the keys of the
-    * source documents each successful merge superseded — the caller
-    * deletes them only after ALL merged documents are committed, so a
-    * crash mid-compaction leaves overlap-suppressed (degraded, never
-    * wrong) coverage that the next incremental analyze heals. */
+    * document. A group is merged only when EVERY source passes
+    * [[validSegment]] — anything else skips the whole group untouched
+    * (a compaction must never destroy information; junk is incremental
+    * analyze's and vacuum's job). Returns the keys of the source
+    * documents each successful merge superseded — the caller deletes
+    * them only after ALL merged documents are committed, so a crash
+    * mid-compaction leaves overlap-suppressed (degraded, never wrong)
+    * coverage that the next incremental analyze heals. */
   def compactStatsUnit(
       root: String, pairs: Seq[(String, String)],
       groups: Seq[Seq[(Long, Int)]], ndim: Int, gridShape: Seq[Int],
       dims: Seq[String], colTypes: Map[String, String]): Seq[String] = {
     val store = ZarrStore(root, pairs)
-    val ztOf: String => Option[ZarrType] =
-      n => colTypes.get(n).map(ZarrType.fromName)
     val superseded = Seq.newBuilder[String]
     // skipped groups are EXPECTED to be rare and must not be silent: a
     // persistently failing store (permissions, disk-full) would
     // otherwise fragment forever behind a compaction that "succeeds" —
-    // one bounded stderr line per unit keeps the signal without a
+    // one bounded log line per unit keeps the signal without a
     // per-group log flood at the 10^5-segment scale
     var skipped = 0
     var lastSkip: String = ""
     groups.foreach { group =>
       val first = group.head._1
       val total = group.map(_._2).sum
-      val parsed: Option[Seq[ChunkStats.Segment]] =
-        try {
-          val ss = group.map { case (f, n) =>
-            val doc = store.readText(ChunkStats.segmentKey(f, n))
-              .getOrElse(throw new ZarrException(s"segment s${f}_$n vanished"))
-            val s = ChunkStats.parse(f, n, doc, ztOf)
-            if (!ChunkStats.gridCompatibleWith(s, ndim, gridShape, dims))
-              throw new ZarrException(s"segment s${f}_$n grid-incompatible")
-            s
-          }
-          Some(ss)
-        } catch { case e: Exception => // skip group untouched
-          skipped += 1; lastSkip = String.valueOf(e.getMessage); None
+      // one guard over read, merge and commit: any failure skips THIS
+      // group with its sources untouched, rather than abort the whole
+      // compaction with the other groups' merges half-committed
+      try {
+        val ss = group.map { case (f, n) =>
+          store.readText(ChunkStats.segmentKey(f, n))
+            .flatMap(validSegment(f, n, _, ndim, gridShape, dims, colTypes))
+            .getOrElse(throw new ZarrException(
+              s"segment s${f}_$n vanished, unreadable or grid-incompatible"))
         }
-      // the merge+commit sits under its own guard too: an unexpected
-      // encode error or transient write failure must skip THIS group
-      // (leaving its sources untouched — the promise above) rather
-      // than abort the whole compaction job with the other groups'
-      // merges half-committed
-      parsed.foreach { ss =>
-        try {
-          store.writeText(ChunkStats.segmentKey(first, total),
-            ChunkStats.mergeSegments(first, total, ss, ztOf, gridShape, dims))
-          // the merged doc's own key may coincide with the first source's
-          // (same first, same total single-source groups are not planned,
-          // so total always differs) — every SOURCE key is superseded
-          superseded ++= group.map { case (f, n) => ChunkStats.segmentKey(f, n) }
-        } catch { case e: Exception => // skip group untouched
-          skipped += 1; lastSkip = String.valueOf(e.getMessage)
-        }
+        store.writeText(ChunkStats.segmentKey(first, total),
+          ChunkStats.mergeSegments(first, total, ss, ztOf(colTypes), gridShape, dims))
+        // the merged doc's key never equals a source key (single-source
+        // groups are not planned, so total always differs) — every
+        // SOURCE key is superseded
+        superseded ++= group.map { case (f, n) => ChunkStats.segmentKey(f, n) }
+      } catch { case e: Exception =>
+        skipped += 1; lastSkip = String.valueOf(e.getMessage)
       }
     }
     if (skipped > 0)
@@ -460,26 +443,21 @@ private[zarr] object ZarrDistWalk {
   def vacuumUnit(
       root: String, pairs: Seq[(String, String)], u: WalkUnit,
       grid: Seq[Long]): Long = {
-    val (fs, rp) = openFs(root, pairs)
-    val base = new Path(new Path(rp, u.array), u.rel)
+    val store = ZarrStore(root, pairs)
+    val fs = store.fs
     var deleted = 0L
     // count only confirmed deletions: a task retry (or a false return
     // for an already-absent file) must not inflate the reclaim report —
     // deletion itself is idempotent, the COUNT is what a re-run could
     // otherwise distort
-    def visitFile(p: Path, rel: String): Unit =
-      if (orphaned(rel, grid) && fs.delete(p, false)) deleted += 1
-    def walk(p: Path, rel: String): Unit = fs.listStatus(p).foreach { st =>
-      val childRel = s"$rel/${st.getPath.getName}"
-      if (st.isDirectory) walk(st.getPath, childRel)
-      else visitFile(st.getPath, childRel)
-    }
-    try {
-      if (u.subtree) walk(base, u.rel)
-      else fs.listStatus(base).foreach { st =>
-        if (!st.isDirectory) visitFile(st.getPath, s"${u.rel}/${st.getPath.getName}")
+    def walk(p: Path, rel: String): Unit =
+      fs.listStatus(p).foreach { st =>
+        val childRel = child(rel, st.getPath.getName)
+        if (st.isDirectory) walk(st.getPath, childRel)
+        else if (orphaned(childRel, grid) && fs.delete(st.getPath, false)) deleted += 1
       }
-    } catch { case _: java.io.FileNotFoundException => () }
+    try walk(unitPath(store.rootPath, u), u.rel)
+    catch { case _: java.io.FileNotFoundException => () }
     deleted
   }
 }

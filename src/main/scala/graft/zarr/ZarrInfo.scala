@@ -33,32 +33,34 @@ object ZarrInfo {
     * addressable chunk slots — a zarr array may store fewer objects:
     * absent chunks read as fill values, and a sharded array packs many
     * inner chunks per stored shard object). `n_stored_objects` is the
-    * TRUE stored-object count, exact but costing a recursive LIST per
-    * array — opt-in via `countStored` so the default keeps the one-GET
-    * contract (NULL when not counted); with `distributed = true` the
-    * LIST is sharded by [[ZarrDistWalk]] and counted in ONE Spark job —
-    * the 100 TB shape, where a serial driver LIST over millions of
-    * objects is the bottleneck (identical counts by construction; both
-    * modes are spec-pinned equal). An operator sizing a compaction or
-    * migration must use `n_stored_objects`, never the capacity.
-    * `stats_covered_chunks` is the store-level sidecar coverage clamped
-    * to each array's own grid (coverage counts grid ordinals, which can
-    * exceed a 1-D coordinate's chunk count on an N-D store). */
-  // ONE configuration source for the driver plan AND the shipped unit
-  // pairs: sessionState.newHadoopConf() carries per-session overrides
-  // (e.g. credentials) that sparkContext.hadoopConfiguration lacks —
-  // deriving them separately could make the plan and the per-unit
-  // walks see different stores
-  private def fsPairs(spark: SparkSession): Seq[(String, String)] =
-    ZarrStore.fsPairs(spark.sessionState.newHadoopConf())
-
+    * TRUE stored-object count ([[ZarrDistWalk.countStored]]), exact but
+    * costing a LIST walk of every array — opt-in via `countStored` so
+    * the default keeps the one-GET contract (NULL when not counted). The
+    * walk runs on the driver (one recursive listing per array) while the
+    * arrays' total grid capacity is at most 64 chunk slots; above, the
+    * planned [[ZarrDistWalk]] units (the dirs below the listed levels,
+    * and staging dirs) are counted in one Spark job — the 100 TB shape,
+    * where a serial driver LIST over millions of objects is the
+    * bottleneck — and a plan without units (a 1-D store) is counted
+    * from the driver's listings; the counts are identical either way
+    * (spec-pinned). An operator sizing a compaction or migration must
+    * use `n_stored_objects`, never the capacity. `stats_covered_chunks` is
+    * the store-level sidecar coverage clamped to each array's own grid
+    * (coverage counts grid ordinals, which can exceed a 1-D coordinate's
+    * chunk count on an N-D store). */
   def describe(
-      spark: SparkSession, path: String, countStored: Boolean = false,
-      distributed: Boolean = false): DataFrame = {
+      spark: SparkSession, path: String, countStored: Boolean = false): DataFrame =
+    describeImpl(spark, path, countStored, ZarrDistWalk.InlineMax)
+
+  /** [[describe]] with the stored-object walk's driver/job threshold
+    * exposed — the seam that pins both schedulers equal. */
+  private[graft] def describeImpl(
+      spark: SparkSession, path: String, countStored: Boolean,
+      inlineMax: Long): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val sessionConf = spark.sessionState.newHadoopConf()
-    val pairs = fsPairs(spark)
-    val store = ZarrStore(path, pairs)
+    // sessionState.newHadoopConf() carries per-session overrides (e.g.
+    // credentials) that sparkContext.hadoopConfiguration lacks
+    val store = ZarrStore(path, ZarrStore.fsPairs(spark.sessionState.newHadoopConf()))
     val metas = store.readConsolidatedMetas()
       .getOrElse(store.listArrays().map(store.readMeta))
     // sidecar coverage is a STORE-level fact (segments describe grid
@@ -66,40 +68,9 @@ object ZarrInfo {
     // clamped to the row's own grid — so a bare `describe(...).show()`
     // reads complete
     val covered = store.listStatsSegments().map(_._2.toLong).sum
-    val storedCounts: Map[String, Long] =
-      if (!countStored) Map.empty
-      else if (!distributed)
-        metas.map(m => m.name -> store.countStoredChunkObjects(m.name)).toMap
-      else {
-        // shard every array's key space into units (staging dirs count
-        // too — manifest part files are stored objects) and count them
-        // in one job; top-level files were already listed by the plan
-        val root = new org.apache.hadoop.fs.Path(path)
-        val fs = root.getFileSystem(sessionConf)
-        // descend extra LIST levels when first-level units would
-        // under-fill the cluster (short dim-0 grids)
-        val fanTarget = 4 * math.max(1, spark.sparkContext.defaultParallelism)
-        val planned = metas.map { m =>
-          val (topFiles, stagingDirs, units) =
-            ZarrDistWalk.planArray(fs, root, m.name, fanTarget)
-          (m.name, topFiles.size.toLong,
-            units ++ stagingDirs.map(sd =>
-              ZarrDistWalk.WalkUnit(m.name, sd, subtree = true)))
-        }
-        val jobUnits = planned.flatMap(_._3)
-        val unitCounts: Map[String, Long] =
-          if (jobUnits.isEmpty) Map.empty
-          else {
-            val parts = math.min(jobUnits.size,
-              math.max(1, spark.sparkContext.defaultParallelism))
-            spark.sparkContext.parallelize(jobUnits, parts)
-              .map(u => u.array -> ZarrDistWalk.countUnit(path, pairs, u))
-              .reduceByKey(_ + _).collect().toMap
-          }
-        planned.map { case (name, top, _) =>
-          name -> (top + unitCounts.getOrElse(name, 0L))
-        }.toMap
-      }
+    val storedCounts =
+      if (countStored) ZarrDistWalk.countStored(spark, store, metas, inlineMax)
+      else Map.empty[String, Long]
     val rows = metas.sortBy(m => (!m.isCoordinate, m.name)).map { m =>
       val gridChunks = m.gridShape.map(_.toLong).product
       Row(
@@ -145,20 +116,15 @@ object ZarrInfo {
     * `covered_chunks`/`covered_fraction` say how much of the grid the
     * zero-GET aggregate/chunk-skip surface serves, i.e. whether an
     * incremental analyze is due. Cost: ONE metadata GET (consolidated
-    * stores) + the `_stats/` LISTs — never a chunk read, 100 TB costs
-    * the same as 1 GB. `distributed = true` runs the sidecar LIST as
-    * ONE task of a Spark job instead of on the driver — for the store
-    * that never ran the compaction cadence (10⁶+ raw segments), where
-    * the paginated listing and its name materialization ARE the cost;
-    * only four reduced longs return to the driver. Both modes execute
-    * the same [[ZarrDistWalk.describeStatsUnit]] visitor, so their
-    * rows are identical by construction (and spec-pinned). */
-  def describeStats(
-      spark: SparkSession, path: String,
-      distributed: Boolean = false): DataFrame = {
+    * stores) + ONE streamed `_stats/` LIST on the driver — never a chunk
+    * read, 100 TB costs the same as 1 GB. A LIST is sequential wherever
+    * it runs, so there is nothing to schedule: the stores whose listing
+    * is long (10⁶+ raw segments) are the ones `compactStats` is for.
+    * The live rule is [[ZarrStore.liveSegments]] — shared with sidecar
+    * compaction, never a private copy. */
+  def describeStats(spark: SparkSession, path: String): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val pairs = fsPairs(spark)
-    val store = ZarrStore(path, pairs)
+    val store = ZarrStore(path, ZarrStore.fsPairs(spark.sessionState.newHadoopConf()))
     val metas = store.readConsolidatedMetas()
       .getOrElse(store.listArrays().map(store.readMeta))
     // a typo'd path / empty store fails inside geometry resolution with
@@ -168,26 +134,36 @@ object ZarrInfo {
       try ScanGeometry.resolve(metas)
       catch { case e: Exception =>
         throw new ZarrException(s"describeStats($path): ${e.getMessage}") }
-    // ONE `_stats/` LIST serves segments AND inner docs — this poll
-    // exists for the 10^5-segment store, where the LIST is the cost
+    // ONE `_stats/` LIST serves segments AND inner docs; its pages
+    // stream through a bounded buffer (RemoteIterator — S3A lists
+    // lazily) instead of materializing every FileStatus up front
+    val segs = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
+    var nInner = 0L
+    try {
+      val it = store.fs.listStatusIterator(
+        new org.apache.hadoop.fs.Path(store.rootPath, ChunkStats.dirName))
+      while (it.hasNext) {
+        val name = it.next().getPath.getName
+        ChunkStats.parseSegmentName(name) match {
+          case Some(p) => segs += p
+          case None => if (ChunkStats.parseInnerName(name).isDefined) nInner += 1
+        }
+      }
+    } catch { case _: java.io.FileNotFoundException => () }
     val numChunks = geom.numChunks
-    val (nRaw, nLive, nInner, covered) =
-      if (distributed)
-        spark.sparkContext.parallelize(Seq(path), 1)
-          .map(p => ZarrDistWalk.describeStatsUnit(p, pairs, numChunks))
-          .collect().head
-      else ZarrDistWalk.describeStatsUnit(path, pairs, numChunks)
+    val live = ZarrStore.liveSegments(segs.sortBy(_._1).toSeq, numChunks)
+    val covered = math.min(live.map(_._2.toLong).sum, numChunks)
     val minSegs =
       (covered + ChunkStats.maxSegmentChunks - 1) / ChunkStats.maxSegmentChunks
     val row = Row(
       metas.size.toLong,
-      geom.numChunks,
-      nRaw,
-      nLive,
+      numChunks,
+      segs.size.toLong,
+      live.size.toLong,
       minSegs,
       nInner,
       covered,
-      if (geom.numChunks == 0) 0.0 else covered.toDouble / geom.numChunks)
+      if (numChunks == 0) 0.0 else covered.toDouble / numChunks)
     spark.createDataFrame(
       new java.util.ArrayList[Row](Seq(row).asJava), statsSchema)
   }

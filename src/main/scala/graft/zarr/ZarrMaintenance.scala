@@ -1,8 +1,8 @@
 package graft.zarr
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Store maintenance: compaction.
   *
@@ -26,8 +26,10 @@ import org.apache.spark.sql.SparkSession
 object ZarrMaintenance {
 
   /** Rewrite `srcPath` into `dstPath` with the given chunking. Returns
-    * (objects before, objects after) counted across all columns —
-    * the GET/LIST economy the compaction buys.
+    * (objects before, objects after) summed over all arrays by the one
+    * stored-object counter, [[ZarrDistWalk.countStored]] (the figure
+    * `ZarrInfo.describe(countStored = true)` reports per array) — the
+    * GET/LIST economy the compaction buys.
     *
     * 1-D tabular stores take the aligned append path (`chunkSize` rows
     * per chunk packed `innerChunkSize` per inner chunk via
@@ -70,16 +72,22 @@ object ZarrMaintenance {
     // semantics, so a re-run (orchestrator retry, ambiguous failure)
     // against an existing dst would silently append a SECOND full copy
     // of every row — compaction must be write-fresh-then-swap
-    val conf0 = spark.sessionState.newHadoopConf()
-    val dstRoot = new Path(dstPath)
-    val dfs = dstRoot.getFileSystem(conf0)
-    if (dfs.exists(dstRoot) && dfs.listStatus(dstRoot).exists(st =>
-      st.isDirectory && dfs.exists(new Path(st.getPath, "zarr.json"))))
+    val pairs = ZarrStore.fsPairs(spark.sessionState.newHadoopConf())
+    val dstStore = ZarrStore(dstPath, pairs)
+    if (dstStore.rootInventory().exists(_.exists(_._2)))
       throw new ZarrException(
         s"compact destination $dstPath already holds arrays; compaction " +
           "writes a FRESH store — delete the destination (a prior/partial " +
           "run) and re-run")
-    val (geom, srcStore, srcMetas) = sourceGeometry(spark, srcPath)
+    val srcStore = ZarrStore(srcPath, pairs)
+    val srcMetas = srcStore.listArrays().map(srcStore.readMeta)
+    val geom = ScanGeometry.resolve(srcMetas)
+    // one recursive driver listing per array, whatever the size: the
+    // rewrite below is the job, the counts only report its economy
+    def stored(st: ZarrStore, metas: Seq[ZarrArrayMeta]): Long =
+      ZarrDistWalk.countStored(spark, st, metas, Long.MaxValue).values.sum
+    // counted before the write: the destination may lie inside the source
+    val before = stored(srcStore, srcMetas)
     // codec: explicit parameter wins; otherwise mirror the SOURCE store's
     // compression (a gzip or uncompressed source must not silently become
     // blosc — r12 ADVICE). Derivation looks at the bytes→bytes stage of
@@ -152,23 +160,7 @@ object ZarrMaintenance {
         codec = dstCodec, stats = true, truncate = false,
         shardShapeOpt = if (shardShapeNd.nonEmpty) Some(shardShapeNd) else None)
     }
-    val conf = spark.sessionState.newHadoopConf()
-    (countChunkObjects(srcPath, conf), countChunkObjects(dstPath, conf))
-  }
-
-  /** Resolve the source store's scan geometry (the same consistency
-    * rules every scan applies); dispatches [[compact]] between the 1-D
-    * tabular path and the N-D cube path. A named method, deliberately:
-    * as a bare `{ ... }` block after the destination check's
-    * `throw new ZarrException(...)` the parser glues the block on as an
-    * anonymous-subclass BODY and the code never executes. */
-  private def sourceGeometry(
-      spark: SparkSession,
-      srcPath: String): (ScanGeometry, ZarrStore, Seq[ZarrArrayMeta]) = {
-    val srcStore = ZarrStore(srcPath,
-      ZarrStore.fsPairs(spark.sparkContext.hadoopConfiguration))
-    val metas = srcStore.listArrays().map(srcStore.readMeta)
-    (ScanGeometry.resolve(metas), srcStore, metas)
+    (before, stored(dstStore, dstStore.listArrays().map(dstStore.readMeta)))
   }
 
   /** Driver-side check that a 1-D coordinate axis is strictly ascending —
@@ -183,46 +175,6 @@ object ZarrMaintenance {
         "the source (or write the cube directly) instead")
     ()
   }
-
-  /** Stored chunk objects across all columns (files under each array's
-    * `c/` prefix — data only, no metadata documents or stats sidecar).
-    * Takes the session's Hadoop configuration so non-default
-    * filesystems (custom schemes, s3a credentials registered on the
-    * session conf) resolve the same way the read/write path did. */
-  def countChunkObjects(path: String, conf: Configuration): Long = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    def walk(dir: Path): Long =
-      fs.listStatus(dir).map { st =>
-        if (st.isDirectory) walk(st.getPath) else 1L
-      }.sum
-    // list arrays with the SAME FileSystem handle (a dir is an array
-    // iff it carries a zarr.json — mirrors ZarrStore.listArrays); chunk
-    // objects live under `c/` (canonical keys) and `c.part*/` dirs
-    // (manifest-keyed staged commits)
-    fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && fs.exists(new Path(st.getPath, "zarr.json")))
-      .map { st =>
-        val entries = fs.listStatus(st.getPath).toSeq
-        val dirObjects = entries
-          .filter(d => d.isDirectory &&
-            (d.getPath.getName == "c" || d.getPath.getName.startsWith("c.part")))
-          .map(d => walk(d.getPath)).sum
-        // '.'-separated chunk_key_encoding stores chunks as FLAT files in
-        // the array root ("c.0", "c.12.3") — count them too, or such a
-        // store reports zero objects-before and the compaction economy
-        // metric reads as a no-op
-        val flatObjects = entries.count { e =>
-          val nm = e.getPath.getName
-          !e.isDirectory && nm.startsWith("c.") &&
-            nm.drop(2).split('.').forall(s => s.nonEmpty && s.forall(_.isDigit))
-        }
-        dirObjects + flatObjects.toLong
-      }.sum
-  }
-
-  def countChunkObjects(path: String): Long =
-    countChunkObjects(path, new Configuration())
 
   /** Backfill the chunk-stats sidecar for an existing store this engine
     * did NOT write — a Zarr v2 store, a foreign v3 store, or a store
@@ -281,7 +233,7 @@ object ZarrMaintenance {
     * 10^5-segment micro-batch-ingest scale, where a driver-serial
     * sweep is minutes of GETs at object-store latency). */
   def analyze(spark: SparkSession, path: String, incremental: Boolean = false): Long =
-    analyzeImpl(spark, path, incremental, sweepInlineMax = 64)
+    analyzeImpl(spark, path, incremental, ZarrDistWalk.InlineMax)
 
   /** Incremental analyze with FORCED re-analysis of the given ordinal
     * ranges (`[first, until)` pairs) — the bounds-freshness middle
@@ -297,7 +249,7 @@ object ZarrMaintenance {
     * retirement, so coverage stays whole and unsuppressed. */
   def analyzeRefresh(
       spark: SparkSession, path: String, refresh: Seq[(Long, Long)]): Long =
-    analyzeImpl(spark, path, incremental = true, sweepInlineMax = 64, refresh)
+    analyzeImpl(spark, path, incremental = true, ZarrDistWalk.InlineMax, refresh)
 
   /** Single-window [[analyzeRefresh]] — the Java/Python-gateway form
     * (primitive longs; a py4j caller cannot build `Seq[(Long, Long)]`
@@ -306,11 +258,11 @@ object ZarrMaintenance {
       spark: SparkSession, path: String, first: Long, until: Long): Long =
     analyzeRefresh(spark, path, Seq((first, until)))
 
-  /** [[analyze]] with the sweep's inline/distributed threshold exposed —
-    * spec seam only, pinning driver == distributed on one store. */
+  /** [[analyze]] with the sweep's driver/job threshold exposed — the
+    * seam that pins both schedulers equal. */
   private[zarr] def analyzeImpl(
       spark: SparkSession, path: String, incremental: Boolean,
-      sweepInlineMax: Int, refresh: Seq[(Long, Long)] = Nil): Long = {
+      sweepInlineMax: Long, refresh: Seq[(Long, Long)] = Nil): Long = {
     if (refresh.nonEmpty && !incremental)
       throw new ZarrException(
         "analyze: refresh ranges require incremental mode (a full analyze already refreshes everything)")
@@ -361,20 +313,10 @@ object ZarrMaintenance {
         splitRuns(Seq((0L, numChunks)))
       } else {
         // ---- sidecar sweep: docs first, then segments, both through
-        // the ZarrDistWalk visitors (inline ≤ sweepInlineMax objects,
-        // one Spark job above — the vacuum discipline; a driver-serial
-        // GET per segment is minutes at the 10^5-segment ingest scale)
-        def sweep[A: scala.reflect.ClassTag, B: scala.reflect.ClassTag](
-            items: Seq[A])(visit: Seq[A] => Seq[B]): Seq[B] =
-          if (items.isEmpty) Seq.empty
-          else if (items.size <= sweepInlineMax) visit(items)
-          else {
-            val parts = math.min(items.size,
-              math.max(1, spark.sparkContext.defaultParallelism))
-            spark.sparkContext.parallelize(items, parts)
-              .mapPartitions(it => visit(it.toSeq).iterator)
-              .collect().toSeq
-          }
+        // the ZarrDistWalk visitors and scheduler (inline ≤
+        // sweepInlineMax objects, one Spark job above; a driver-serial
+        // GET per segment is minutes at the 10^5-segment ingest scale).
+        //
         // sharded data columns additionally need a COVERING inner doc
         // per ordinal: parseable, signature-compatible AND guard-fresh
         // against the live object (analyzeDocsUnit — name-presence
@@ -404,15 +346,15 @@ object ZarrMaintenance {
         val (windowOrds, sweepOrds) =
           if (!needDocs) (Seq.empty[Long], Seq.empty[Long])
           else store.listInnerStatsDocOrds().partition(o => inRefresh(o, 1L))
-        if (windowOrds.nonEmpty)
-          sweep(windowOrds) { ords =>
-            val st = ZarrStore(path, hadoopPairs)
-            ords.foreach(o => st.deleteKey(ChunkStats.innerKey(o)): Unit)
-            Seq.empty[Long]
-          }: Unit
+        ZarrDistWalk.run(spark, windowOrds, sweepInlineMax) { ords =>
+          val st = ZarrStore(path, hadoopPairs)
+          ords.foreach(o => st.deleteKey(ChunkStats.innerKey(o)): Unit)
+          Seq.empty[Long]
+        }: Unit
         val docOrds: Set[Long] =
-          sweep(sweepOrds)(ords => ZarrDistWalk.analyzeDocsUnit(
-            path, hadoopPairs, ords, metaJsons, manifestParts)).toSet
+          ZarrDistWalk.run(spark, sweepOrds, sweepInlineMax)(ords =>
+            ZarrDistWalk.analyzeDocsUnit(
+              path, hadoopPairs, ords, metaJsons, manifestParts)).toSet
         // a segment counts as covering ONLY when every ordinal it
         // describes also has its COVERING inner doc (when docs are
         // needed): re-analyzing a doc-less ordinal writes a NEW segment
@@ -432,12 +374,10 @@ object ZarrMaintenance {
             (!needDocs || (first until first + n).forall(docOrds.contains)))
         }
         val colTypes = metas.map(m => m.name -> m.dataType.zarrName).toMap
-        val segNdim = geom.ndim
-        val segGrid = geom.gridShape.toSeq
-        val segDims = geom.dimIdentity
-        val covered = sweep(tagged)(segs =>
+        val (ndim, grid, dims) = (geom.ndim, geom.gridShape.toSeq, geom.dimIdentity)
+        val covered = ZarrDistWalk.run(spark, tagged, sweepInlineMax)(segs =>
           ZarrDistWalk.analyzeSegmentsUnit(
-            path, hadoopPairs, segs, segNdim, segGrid, segDims, colTypes))
+            path, hadoopPairs, segs, ndim, grid, dims, colTypes))
         // merge valid coverage into disjoint sorted runs
         val merged = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
         covered.sortBy(_._1).foreach { case (lo, hi) =>
@@ -600,28 +540,6 @@ object ZarrMaintenance {
       }.reduce(_ + _)
   }
 
-  /** SIDECAR compaction: merge contiguous runs of committed stats
-    * segments into documents of up to [[ChunkStats]]' task-doc size
-    * (4096 chunks), preserving every per-ordinal bound, sum and
-    * clamped-bound marker exactly. A long-lived micro-batch ingest
-    * accumulates one segment per WRITE TASK — 10^5 for a year of
-    * 5-minute triggers — and every scan PLAN pays the `_stats/` LIST
-    * (O(segments/1000) paginated requests on object stores) while scan
-    * tasks GET each overlapping document: compaction collapses both to
-    * O(chunks / 4096). Metadata-only — no chunk bytes are read.
-    *
-    * Crash-safe by ORDER, not staging: merged documents are all
-    * committed BEFORE any superseded source is deleted. A crash in the
-    * window leaves the merged document overlapping its sources, which
-    * the reader's overlap suppression DEGRADES (those chunks
-    * decode-and-test; never wrong) and the next incremental analyze
-    * heals (it retires suppressed segments and re-analyzes their
-    * range). Only groups of ≥2 fully-valid segments are touched; junk
-    * and singletons are left for vacuum/analyze. Same scheduling as
-    * vacuum: inline on the driver for small sidecars, one Spark job
-    * under `distributed` (the 10^5-segment shape). Returns
-    * (segments before, segments after). Single-maintainer contract,
-    * like every commit path. */
   /** Compaction PLANNING, pure over a first-sorted live-segment
     * listing ([[ZarrStore.liveSegments]]): greedy packing of
     * CONTIGUOUS ordinal runs into groups of ≤
@@ -654,11 +572,38 @@ object ZarrMaintenance {
     groups.result()
   }
 
-  def compactStats(
-      spark: SparkSession, path: String,
-      distributed: Boolean = false): (Long, Long) = {
-    val hadoopPairs = ZarrStore.fsPairs(spark.sessionState.newHadoopConf())
-    val store = ZarrStore(path, hadoopPairs)
+  /** SIDECAR compaction: merge contiguous runs of committed stats
+    * segments into documents of up to [[ChunkStats]]' task-doc size
+    * (4096 chunks), preserving every per-ordinal bound, sum and
+    * clamped-bound marker exactly. A long-lived micro-batch ingest
+    * accumulates one segment per WRITE TASK — 10^5 for a year of
+    * 5-minute triggers — and every scan PLAN pays the `_stats/` LIST
+    * (O(segments/1000) paginated requests on object stores) while scan
+    * tasks GET each overlapping document: compaction collapses both to
+    * O(chunks / 4096). Metadata-only — no chunk bytes are read.
+    *
+    * Crash-safe by ORDER, not staging: merged documents are all
+    * committed BEFORE any superseded source is deleted. A crash in the
+    * window leaves the merged document overlapping its sources, which
+    * the reader's overlap suppression DEGRADES (those chunks
+    * decode-and-test; never wrong) and the next incremental analyze
+    * heals (it retires suppressed segments and re-analyzes their
+    * range). Only groups of ≥2 fully-valid segments are touched; junk
+    * and singletons are left for vacuum/analyze. Scheduled by size, like
+    * vacuum: the merges run on the driver while the plan's source
+    * segments number at most 64 and as one Spark job above (the
+    * 10^5-segment shape); the deletes decide the same way on their own
+    * count. Returns (segments before, segments after).
+    * Single-maintainer contract, like every commit path. */
+  def compactStats(spark: SparkSession, path: String): (Long, Long) =
+    compactStatsImpl(spark, path, ZarrDistWalk.InlineMax)
+
+  /** [[compactStats]] with the driver/job threshold exposed — the seam
+    * that pins both schedulers equal. */
+  private[graft] def compactStatsImpl(
+      spark: SparkSession, path: String, inlineMax: Long): (Long, Long) = {
+    val pairs = ZarrStore.fsPairs(spark.sessionState.newHadoopConf())
+    val store = ZarrStore(path, pairs)
     val metas = store.listArrays().map(store.readMeta).sortBy(_.name)
     val geom =
       try ScanGeometry.resolve(metas)
@@ -676,51 +621,32 @@ object ZarrMaintenance {
     // parses) in a group would make the merged document's key collide
     // with a SOURCE key (same first, same total), and phase 2 would
     // then delete the merge's own output
-    val live = ZarrStore.liveSegments(raw, geom.numChunks)
-    val plan = planCompaction(live)
+    val plan = planCompaction(ZarrStore.liveSegments(raw, geom.numChunks))
     if (plan.isEmpty) return (before, before)
     val colTypes = metas.map(m => m.name -> m.dataType.zarrName).toMap
-    val ndim = geom.ndim
-    val gridShape = geom.gridShape.toSeq
-    val dims = geom.dimIdentity
-    // phase 1: commit every merged document (inline or one Spark job)
-    val superseded: Seq[String] =
-      if (distributed && plan.size > 8) {
-        val parts = math.min(plan.size,
-          math.max(1, spark.sparkContext.defaultParallelism))
-        spark.sparkContext.parallelize(plan, parts)
-          .mapPartitions(it => ZarrDistWalk.compactStatsUnit(
-            path, hadoopPairs, it.toSeq, ndim, gridShape, dims,
-            colTypes).iterator)
-          .collect().toSeq
-      } else ZarrDistWalk.compactStatsUnit(
-        path, hadoopPairs, plan, ndim, gridShape, dims, colTypes)
+    val (ndim, grid, dims) = (geom.ndim, geom.gridShape.toSeq, geom.dimIdentity)
+    // phase 1: commit every merged document
+    val superseded = ZarrDistWalk.run(spark, plan, inlineMax,
+      plan.map(_.size.toLong).sum)(groups => ZarrDistWalk.compactStatsUnit(
+        path, pairs, groups, ndim, grid, dims, colTypes))
     // phase 2: delete the superseded sources — only now, so the merge
     // is all-or-degrade (see the crash-window note above). Deletions
     // are COUNTED, not assumed: a false-returning deleteKey must not
     // be reported as reclaimed.
-    val deleted: Long =
-      if (distributed && superseded.size > 64) {
-        val parts = math.min(superseded.size,
-          math.max(1, spark.sparkContext.defaultParallelism))
-        spark.sparkContext.parallelize(superseded, parts)
-          .mapPartitions { it =>
-            val st = ZarrStore(path, hadoopPairs)
-            Iterator.single(it.count(k => st.deleteKey(k)).toLong)
-          }.reduce(_ + _)
-      } else superseded.count(k => store.deleteKey(k)).toLong
+    val deleted = ZarrDistWalk.run(spark, superseded, inlineMax) { ks =>
+      val st = ZarrStore(path, pairs)
+      Seq(ks.count(st.deleteKey).toLong)
+    }.sum
     // 'after' is DERIVED, not re-listed: the single raw LIST above must
-    // serve both counts (a second `_stats/` LIST is O(segments/1000)
-    // paginated requests at the scale this op targets). A group either
-    // merged completely (all its source keys superseded, one merged doc
-    // written) or was skipped whole, so the successful-group count is
-    // exact in every committed state. The one divergence is the
-    // documented crash window's sibling: a writeText that dies AFTER
-    // creating the merged doc counts its group as skipped while the doc
-    // exists — that doc overlaps its undeleted sources, reads as
-    // suppressed (degraded, never wrong), and the next incremental
-    // analyze retires it; until then the derived count is low by at
-    // most the failed-group count.
+    // serve both counts. A group either merged completely (all its
+    // source keys superseded, one merged doc written) or was skipped
+    // whole, so the successful-group count is exact in every committed
+    // state. The one divergence is the documented crash window's
+    // sibling: a writeText that dies AFTER creating the merged doc
+    // counts its group as skipped while the doc exists — that doc
+    // overlaps its undeleted sources, reads as suppressed (degraded,
+    // never wrong), and the next incremental analyze retires it; until
+    // then the derived count is low by at most the failed-group count.
     val supSet = superseded.toSet
     val mergedDocs = plan.count(_.forall { case (f, n) =>
       supSet.contains(ChunkStats.segmentKey(f, n)) })
@@ -751,77 +677,62 @@ object ZarrMaintenance {
     * Returns one row per array plus a `_stats` row:
     * `(target, orphan_chunks, staging_dirs, phantom_segments)`.
     * Maintenance cost, like compact/analyze. The walk is planned by
-    * [[ZarrDistWalk]] (two driver LIST levels → independent units);
-    * `distributed = true` runs the units as ONE Spark job — the 100 TB
-    * shape, where a store can hold millions of objects and a serial
-    * driver LIST is the bottleneck — while `false` (default) runs them
-    * inline on the driver, appropriate for small stores where job
-    * dispatch would dominate. Both modes execute the SAME per-unit
-    * visitor, so their results are identical by construction (and
-    * spec-pinned). Contract: one maintainer at a time (the same
-    * single-writer assumption every commit path documents) — a
-    * concurrent writer's in-flight staging would read as garbage. */
-  def vacuum(
-      spark: SparkSession, path: String,
-      distributed: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import scala.jdk.CollectionConverters._
-    // same-source discipline as ZarrInfo.describe: the driver plan FS and
-    // the pairs shipped to unit tasks derive from ONE configuration
-    // (sessionState.newHadoopConf carries per-session overrides)
-    val conf = spark.sessionState.newHadoopConf()
-    val hadoopPairs = ZarrStore.fsPairs(conf)
-    val store = ZarrStore(path, hadoopPairs)
-    val metas = store.listArrays().map(store.readMeta)
-    val partDirs: Set[String] = store.readChunkManifest().parts.map(_._2).toSet
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
+    * [[ZarrDistWalk]] (two driver LIST levels → independent units) and
+    * scheduled by size: on the driver while the arrays' total grid
+    * capacity is at most 64 chunk slots; above, the plan's units (the
+    * dirs below its listed levels) are walked in ONE Spark job — the
+    * 100 TB shape, where a store can hold millions of objects and a
+    * serial driver LIST is the bottleneck. A 1-D store's keys all sit
+    * in the driver's listings, so its plan has no units and takes no
+    * job. Segment and inner-doc validation decide the same way on
+    * their document counts. Both
+    * schedulers execute the SAME per-unit visitor, so their results are
+    * identical by construction (and spec-pinned). Contract: one
+    * maintainer at a time (the same single-writer assumption every
+    * commit path documents) — a concurrent writer's in-flight staging
+    * would read as garbage. */
+  def vacuum(spark: SparkSession, path: String): DataFrame =
+    vacuumImpl(spark, path, ZarrDistWalk.InlineMax)
 
-    // driver pass (two LIST levels per array): direct-file orphans, the
-    // manifest-aware staging decision, and the walk-unit plan. In
-    // distributed mode the plan descends extra LIST levels when the
-    // first-level unit count would under-fill the cluster (short dim-0
-    // grids); driver mode keeps the cheapest plan — unit shape never
-    // changes results, only task granularity.
-    val fanTarget =
-      if (distributed) 4 * math.max(1, spark.sparkContext.defaultParallelism) else 0
-    val planned = metas.sortBy(_.name).map { m =>
-      val grid: Seq[Long] = m.gridShape.map(_.toLong).toSeq
-      val arrayDir = new Path(root, m.name)
-      val (topFiles, stagingDirs, units) =
-        ZarrDistWalk.planArray(fs, root, m.name, fanTarget)
-      var orphans = 0L
-      var staging = 0L
+  /** [[vacuum]] with the driver/job threshold exposed — the seam that
+    * pins both schedulers equal. */
+  private[graft] def vacuumImpl(
+      spark: SparkSession, path: String, inlineMax: Long): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val pairs = ZarrStore.fsPairs(spark.sessionState.newHadoopConf())
+    val store = ZarrStore(path, pairs)
+    val metas = store.listArrays().map(store.readMeta).sortBy(_.name)
+    val maniParts = store.readChunkManifest().parts
+    val partDirs: Set[String] = maniParts.map(_._2).toSet
+    val capacity = ZarrDistWalk.gridCapacity(metas)
+
+    // driver pass (two LIST levels per array): orphans among the files
+    // those listings saw (every key of a 1-D store), the manifest-aware
+    // staging decision, and the walk-unit plan; the job path descends
+    // extra LIST levels when the first-level unit count would under-fill
+    // the cluster (short dim-0 grids), and a plan without units takes no
+    // job
+    val fanTarget = if (capacity > inlineMax) ZarrDistWalk.fanTarget(spark) else 0
+    val fs = store.fs
+    val planned = metas.map { m =>
+      val grid = m.gridShape.map(_.toLong).toSeq
+      val arrayDir = new Path(store.rootPath, m.name)
+      val (files, stagingDirs, units) =
+        ZarrDistWalk.planArray(fs, store.rootPath, m.name, fanTarget)
       // count only CONFIRMED deletions (fs.delete returned true), matching
       // ZarrDistWalk.vacuumUnit — an already-absent file must report the
       // same count from either scheduler
-      topFiles.foreach { nm =>
-        if (ZarrDistWalk.orphaned(nm, grid) &&
-          fs.delete(new Path(arrayDir, nm), false)) orphans += 1
-      }
-      stagingDirs.foreach { nm =>
-        if (!partDirs.contains(nm) &&
-          fs.delete(new Path(arrayDir, nm), true)) staging += 1
-      }
-      (m.name, grid, units, orphans, staging)
+      val orphans = files.count(nm => ZarrDistWalk.orphaned(nm, grid) &&
+        fs.delete(new Path(arrayDir, nm), false))
+      val staging = stagingDirs.count(nm => !partDirs.contains(nm) &&
+        fs.delete(new Path(arrayDir, nm), true))
+      (m.name, grid, units, orphans.toLong, staging.toLong)
     }
-    val jobUnits = planned.flatMap { case (_, grid, units, _, _) =>
-      units.map(u => (u, grid))
-    }
-    val unitOrphans: Map[String, Long] =
-      if (jobUnits.isEmpty) Map.empty
-      else if (distributed) {
-        val parts = math.min(jobUnits.size,
-          math.max(1, spark.sparkContext.defaultParallelism))
-        spark.sparkContext.parallelize(jobUnits, parts)
-          .map { case (u, grid) =>
-            u.array -> ZarrDistWalk.vacuumUnit(path, hadoopPairs, u, grid)
-          }
-          .reduceByKey(_ + _).collect().toMap
-      } else jobUnits
-        .map { case (u, grid) =>
-          u.array -> ZarrDistWalk.vacuumUnit(path, hadoopPairs, u, grid)
-        }
-        .groupMapReduce(_._1)(_._2)(_ + _)
+    val unitOrphans = ZarrDistWalk.run(spark,
+      planned.flatMap { case (_, grid, units, _, _) => units.map((_, grid)) },
+      inlineMax, capacity)(_.map { case (u, grid) =>
+        u.array -> ZarrDistWalk.vacuumUnit(path, pairs, u, grid)
+      }).groupMapReduce(_._1)(_._2)(_ + _)
     val arrayRows = planned.map { case (name, _, _, orphans, staging) =>
       (name, orphans + unitOrphans.getOrElse(name, 0L), staging, 0L)
     }
@@ -835,29 +746,14 @@ object ZarrMaintenance {
       // segment validation: one GET+parse per segment — O(write tasks),
       // which a long-lived micro-batch ingest grows into the 10^5 range
       // (measured driver pass there: ~7 s local CPU; minutes of serial
-      // GETs at object-store latency). Same one-visitor-both-schedulers
-      // shape as the inner-doc loop below.
-      val segsListed = store.listStatsSegments()
-      if (segsListed.nonEmpty) {
-        val colTypes = metas.map(m => m.name -> m.dataType.zarrName).toMap
-        val segNdim = geom.ndim
-        val segGrid = geom.gridShape.toSeq
-        val segDims = geom.dimIdentity
-        val segTotal = geom.numChunks
-        phantoms +=
-          (if (distributed && segsListed.size > 64) {
-            val parts = math.min(segsListed.size,
-              math.max(1, spark.sparkContext.defaultParallelism))
-            spark.sparkContext.parallelize(segsListed, parts)
-              .mapPartitions(it => Iterator.single(ZarrDistWalk.vacuumSegmentsUnit(
-                path, hadoopPairs, it.toSeq, segTotal, segNdim, segGrid,
-                segDims, colTypes)))
-              .reduce(_ + _)
-          } else ZarrDistWalk.vacuumSegmentsUnit(
-            path, hadoopPairs, segsListed, segTotal, segNdim, segGrid,
-            segDims, colTypes))
-      }
-      val statsDir = new Path(root, ChunkStats.dirName)
+      // GETs at object-store latency)
+      val colTypes = metas.map(m => m.name -> m.dataType.zarrName).toMap
+      val (numChunks, ndim, grid, dims) =
+        (geom.numChunks, geom.ndim, geom.gridShape.toSeq, geom.dimIdentity)
+      phantoms += ZarrDistWalk.run(spark, store.listStatsSegments(), inlineMax)(segs =>
+        Seq(ZarrDistWalk.vacuumSegmentsUnit(
+          path, pairs, segs, numChunks, ndim, grid, dims, colTypes))).sum
+      val statsDir = new Path(store.rootPath, ChunkStats.dirName)
       val innerOrds = Seq.newBuilder[Long]
       if (fs.exists(statsDir))
         fs.listStatus(statsDir).foreach { st =>
@@ -872,39 +768,18 @@ object ZarrMaintenance {
       // already rejects all of these — this reclaims the bytes and the
       // per-scan HEAD-and-decline they'd otherwise cost forever). One
       // doc exists per analyzed SHARD, so validation is a per-doc
-      // GET+HEAD the driver must not serialize at scale: the same
-      // visitor runs inline on small listings and as a Spark job under
-      // `distributed`.
-      val ords = innerOrds.result()
-      if (ords.nonEmpty) {
-        val metaJsons = metas.sortBy(_.name).map(m => m.name -> m.sourceJson)
-        val maniParts =
-          if (geom.ndim == 1) store.readChunkManifest().parts else Vector.empty
-        phantoms +=
-          (if (distributed && ords.size > 64) {
-            val parts = math.min(ords.size,
-              math.max(1, spark.sparkContext.defaultParallelism))
-            spark.sparkContext.parallelize(ords, parts)
-              .mapPartitions(it => Iterator.single(ZarrDistWalk.vacuumInnerDocsUnit(
-                path, hadoopPairs, it.toSeq, metaJsons, maniParts)))
-              .sum().toLong
-          } else ZarrDistWalk.vacuumInnerDocsUnit(
-            path, hadoopPairs, ords, metaJsons, maniParts))
-      }
+      // GET+HEAD the driver must not serialize at scale.
+      val metaJsons = metas.map(m => m.name -> m.sourceJson)
+      val docParts = if (geom.ndim == 1) maniParts else Vector.empty
+      phantoms += ZarrDistWalk.run(spark, innerOrds.result(), inlineMax)(ords =>
+        Seq(ZarrDistWalk.vacuumInnerDocsUnit(path, pairs, ords, metaJsons, docParts))).sum
     }
 
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("target",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("orphan_chunks",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("staging_dirs",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("phantom_segments",
-        org.apache.spark.sql.types.LongType, nullable = false)))
+    val schema = StructType(StructField("target", StringType, nullable = false) +:
+      Seq("orphan_chunks", "staging_dirs", "phantom_segments")
+        .map(StructField(_, LongType, nullable = false)))
     val rows = (arrayRows :+ (("_stats", 0L, 0L, phantoms)))
-      .map { case (t, o, s2, p) => org.apache.spark.sql.Row(t, o, s2, p) }
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](rows.asJava), schema)
+      .map { case (t, o, s2, p) => Row(t, o, s2, p) }
+    spark.createDataFrame(new java.util.ArrayList[Row](rows.asJava), schema)
   }
 }

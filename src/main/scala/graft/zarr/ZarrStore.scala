@@ -21,8 +21,8 @@ final case class ZarrStore(root: String, hadoopConfPairs: Seq[(String, String)] 
     hadoopConfPairs.foreach { case (k, v) => c.set(k, v) }
     c
   }
-  @transient private lazy val rootPath = new Path(root)
-  @transient private lazy val fs: FileSystem = {
+  @transient private[zarr] lazy val rootPath = new Path(root)
+  @transient private[zarr] lazy val fs: FileSystem = {
     val f = rootPath.getFileSystem(conf)
     // chunk integrity is covered by the zarr codec chain (crc32c codec);
     // Hadoop's local .crc sidecar files only add IO + rename hazards —
@@ -501,27 +501,6 @@ final case class ZarrStore(root: String, hadoopConfPairs: Seq[(String, String)] 
           if (first >= fromChunk) fs.delete(st.getPath, false)
         }
       }
-  }
-
-  /** Number of stored chunk OBJECTS under `arrayName` — a recursive
-    * LIST excluding metadata documents, counting whatever is physically
-    * present (canonical chunk keys, manifest part files, shard objects
-    * — a sharded array stores ONE object per outer shard). Exact, so an
-    * absent-chunk (fill-value) store reports fewer objects than its
-    * grid has slots. Costs one LIST per call: opt-in observability
-    * ([[ZarrInfo.describe]]), never the read path. */
-  def countStoredChunkObjects(arrayName: String): Long = {
-    val dir = new Path(rootPath, arrayName)
-    val metaNames = Set("zarr.json", ".zarray", ".zattrs", ".zgroup")
-    try {
-      val it = fs.listFiles(dir, true)
-      var n = 0L
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && !metaNames.contains(st.getPath.getName)) n += 1
-      }
-      n
-    } catch { case _: java.io.FileNotFoundException => 0L }
   }
 }
 

@@ -61,12 +61,15 @@ object CrashFileSystem {
       throw new IOException(s"injected crash at mutation #$crashAt ($what)")
 }
 
-/** Crash-point sweep of the cube commit routine: for every N from 1 to
-  * the number of create/rename/delete calls an uninterrupted write
-  * makes, crash the write at call N and check the store. Three cases on
-  * a tiny sharded cube (2-D, inner chunks 1x2 packed in 2x2 shards,
-  * write-time stats): an aligned append, a ragged append (the edge
-  * chunk-row is rewritten) and a region overwrite.
+/** Crash-point sweep of the cube commit routine and of store
+  * maintenance: for every N from 1 to the number of create/rename/delete
+  * calls an uninterrupted run makes, crash the run at call N and check
+  * the store. Three write cases on a tiny sharded cube (2-D, inner
+  * chunks 1x2 packed in 2x2 shards, write-time stats): an aligned
+  * append, a ragged append (the edge chunk-row is rewritten) and a
+  * region overwrite. Two maintenance cases: `compactStats` over a run
+  * of per-append segments, and `vacuum` over a store polluted with
+  * every kind of garbage it reclaims.
   *
   * After each crash:
   *  - a scan reads the OLD state or the NEW state — for a region
@@ -80,6 +83,12 @@ object CrashFileSystem {
   *    includes a crash after the dim-0 coordinate meta but before the
   *    root: readers still see the old root, and the re-run's torn-commit
   *    heal re-consolidates it before refusing.
+  *
+  * After each maintenance crash the store reads exactly as before the
+  * run, scans and metadata-answered aggregates alike. A crashed
+  * `compactStats` is healed by re-running it plus an incremental
+  * `analyze` (sidecar coverage whole again); a crashed `vacuum` by
+  * re-running it (exactly the files an uninterrupted vacuum leaves).
   *
   * The method follows Pillai et al., "All File Systems Are Not Created
   * Equal" (OSDI 2014): enumerate the crash points, don't hand-build them. */
@@ -124,11 +133,19 @@ class CrashPointSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def scan(url: String): Seq[(Long, Long, Double)] =
     rowsOf(spark.read.format("zarr").load(url).select("t", "x", "v"))
 
-  private def copyTree(from: JPath, to: JPath): Unit =
+  /** `keepTimes` copies modification times too, so the copied shards
+    * stay fresh against the inner stats docs that record them. */
+  private def copyTree(from: JPath, to: JPath, keepTimes: Boolean = false): Unit =
     Files.walk(from).iterator().asScala.foreach { p =>
       val q = to.resolve(from.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
+      if (Files.isDirectory(p)) Files.createDirectories(q)
+      else if (keepTimes) Files.copy(p, q, java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
+      else Files.copy(p, q)
     }
+
+  private def filesUnder(dir: JPath): Seq[String] =
+    Files.walk(dir).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => dir.relativize(p).toString).toSeq.sorted
 
   private def stagingLeftovers(dir: JPath): Seq[String] =
     Files.walk(dir).iterator().asScala
@@ -231,5 +248,101 @@ class CrashPointSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
             s"$at: shard $s reads neither old nor new: $got")
         }
       })
+  }
+
+  private def aggs(url: String): org.apache.spark.sql.Row =
+    spark.read.format("zarr").load(url)
+      .agg(count(lit(1)), min("v"), max("v"), sum("t")).collect()(0)
+
+  /** Crash `run` at every mutation it makes on a copy of `template`;
+    * after each crash the copy must scan and aggregate exactly like the
+    * template, then `heal(dir, url, at)` repairs and judges it. Returns
+    * the copy an uninterrupted run left. */
+  private def maintenanceSweep(name: String, template: JPath, run: String => Unit)(
+      heal: (JPath, String, String) => Unit): JPath = {
+    val before = scan(template.toString)
+    val beforeAggs = aggs(template.toString)
+    val probe = Paths.get(base, s"$name-probe")
+    copyTree(template, probe, keepTimes = true)
+    CrashFileSystem.arm(Long.MaxValue)
+    run(s"graftcrash://$probe")
+    val calls = CrashFileSystem.count
+    CrashFileSystem.disarm()
+    assert(calls >= 5, s"$name: only $calls mutations — the sweep would prove little")
+    (1L to calls).foreach { n =>
+      val dir = Paths.get(base, s"$name-crash$n")
+      copyTree(template, dir, keepTimes = true)
+      val url = s"graftcrash://$dir"
+      val at = s"$name, crash at mutation $n of $calls"
+      CrashFileSystem.arm(n)
+      try run(url) catch { case _: Exception => () }
+      val reached = CrashFileSystem.count
+      CrashFileSystem.disarm()
+      // compactStats skips a group whose merge fails rather than throw,
+      // so the proof of the crash is that the n-th mutation was tried
+      assert(reached >= n, s"$at: the run stopped after $reached mutations")
+      assert(scan(url) == before, s"$at: the store reads differently")
+      assert(aggs(url) == beforeAggs, s"$at: aggregates ${aggs(url)} != $beforeAggs")
+      heal(dir, url, at)
+    }
+    probe
+  }
+
+  test("compactStats: every crash point reads as before; re-run + analyze restores coverage") {
+    // one fresh write and four one-step appends: one segment per
+    // committed slab, one contiguous run for compaction to merge
+    val template = Paths.get(base, "compact-template")
+    slab(0, 1).write.format("zarr").mode("overwrite")
+      .option("dims", "t,x").option("chunk_shape", "1,2").save(template.toString)
+    (1 until 5).foreach { t =>
+      slab(t, t + 1).write.format("zarr").mode("append")
+        .option("append_dim", "t").save(template.toString)
+    }
+    val segs = ZarrStore(template.toString).listStatsSegments()
+    assert(segs.size >= 4 && ZarrMaintenance.planCompaction(segs).nonEmpty,
+      s"nothing for compaction to merge: $segs")
+    def coveredFraction(url: String): Double =
+      ZarrInfo.describeStats(spark, url).collect()(0).getDouble(7)
+    assert(coveredFraction(template.toString) == 1.0)
+    val probe = maintenanceSweep("compact", template,
+      url => ZarrMaintenance.compactStats(spark, url): Unit) { (_, url, at) =>
+      ZarrMaintenance.compactStats(spark, url)
+      ZarrMaintenance.analyze(spark, url, incremental = true)
+      assert(coveredFraction(url) == 1.0, s"$at: coverage not restored")
+      assert(scan(url) == rowsOf(slab(0, 5)), s"$at: healed store reads differently")
+    }
+    assert(ZarrStore(probe.toString).listStatsSegments().size == 1,
+      "the uninterrupted compaction merges the run into one document")
+  }
+
+  test("vacuum: every crash point reads as before; a re-run leaves what an uncrashed vacuum leaves") {
+    val template = Paths.get(base, "vacuum-template")
+    slab(0, 4).write.format("zarr").mode("overwrite")
+      .option("dims", "t,x").option("chunk_shape", "1,2").option("shard_shape", "2,2")
+      .save(template.toString)
+    // the garbage of interrupted writes, one of each kind vacuum reclaims
+    def put(rel: String, bytes: Array[Byte]): Unit = {
+      val p = template.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.write(p, bytes): Unit
+    }
+    put("v/c/9/0", Array[Byte](1))                     // orphan shard beyond the grid
+    put("v/c.9.0", Array[Byte](2))                     // orphan flat key beside the array
+    put("v/c.part-dead-7/0", Array[Byte](3))           // unreferenced staging dir
+    put("_stats/s500_4.json", "{}".getBytes)           // phantom segment past the grid
+    put("_stats/c.part-dead-s0_1.json", "{}".getBytes) // stats staging leftover
+    put("_stats/i99.json", "{}".getBytes)              // inner doc past the grid
+    put("v/NOTES.txt", "keep me".getBytes)             // foreign file: never touched
+    val probe = maintenanceSweep("vacuum", template,
+      url => ZarrMaintenance.vacuum(spark, url).collect(): Unit) { (dir, url, at) =>
+      ZarrMaintenance.vacuum(spark, url).collect()
+      assert(filesUnder(dir) == filesUnder(Paths.get(base, "vacuum-probe")),
+        s"$at: re-run left ${filesUnder(dir)}")
+    }
+    val left = filesUnder(probe)
+    assert(left.contains("v/NOTES.txt") && left.exists(_.startsWith("_stats/i")) &&
+      !left.exists(f => f.contains("c.part") || f == "v/c/9/0" || f == "v/c.9.0" ||
+        f == "_stats/s500_4.json" || f == "_stats/i99.json"),
+      s"the uninterrupted vacuum must reclaim exactly the garbage: $left")
   }
 }

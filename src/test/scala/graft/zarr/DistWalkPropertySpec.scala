@@ -103,7 +103,7 @@ class DistWalkPropertySpec extends AnyFunSuite {
 
       // --- count coverage (describe's shape: staging counts too) ---
       val countUnits = units ++ staging.map(sd =>
-        ZarrDistWalk.WalkUnit("v", sd, subtree = true))
+        ZarrDistWalk.WalkUnit("v", sd))
       val counted = topFiles.size +
         countUnits.map(u => ZarrDistWalk.countUnit(base.toString, Nil, u)).sum
       assert(counted == expectedCount,
@@ -139,9 +139,9 @@ class DistWalkPropertySpec extends AnyFunSuite {
     val fs = new Path("/").getFileSystem(conf)
     val root = new Path(base.toString)
     val (_, _, unrefined) = ZarrDistWalk.planArray(fs, root, "v")
-    assert(unrefined.count(_.subtree) == 2)
+    assert(unrefined.size == 2)
     val (_, _, fanned) = ZarrDistWalk.planArray(fs, root, "v", targetUnits = 8)
-    assert(fanned.count(_.subtree) == 8, s"fanned: $fanned") // one per c/<i>/<j>
+    assert(fanned.size == 8, s"fanned: $fanned") // one per c/<i>/<j>
     // identical coverage either way
     def total(us: Seq[ZarrDistWalk.WalkUnit]) =
       us.map(u => ZarrDistWalk.countUnit(base.toString, Nil, u)).sum

@@ -114,8 +114,8 @@ class StatsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val a = s"graftstat://$base/drv"
     val b = s"graftstat://$base/dist"
     build(a); build(b)
-    val ra = ZarrMaintenance.compactStats(spark, a)
-    val rb = ZarrMaintenance.compactStats(spark, b, distributed = true)
+    val ra = ZarrMaintenance.compactStatsImpl(spark, a, inlineMax = Long.MaxValue)
+    val rb = ZarrMaintenance.compactStatsImpl(spark, b, inlineMax = 0L)
     assert(ra == rb, s"$ra vs $rb")
     assert(ra == ((55L, 11L)), s"11 gapped runs of 5 must merge to 11: $ra")
     assert(ZarrStore(a).listStatsSegmentsRaw() == ZarrStore(b).listStatsSegmentsRaw())

@@ -444,8 +444,8 @@ class ZarrMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     build(s"$base/a"); build(s"$base/b")
     def statsRow(df: org.apache.spark.sql.DataFrame): Long =
       df.collect().map(r => r.getString(0) -> r.getLong(3)).toMap.apply("_stats")
-    val driver = statsRow(ZarrMaintenance.vacuum(spark, s"$base/a"))
-    val dist = statsRow(ZarrMaintenance.vacuum(spark, s"$base/b", distributed = true))
+    val driver = statsRow(ZarrMaintenance.vacuumImpl(spark, s"$base/a", inlineMax = Long.MaxValue))
+    val dist = statsRow(ZarrMaintenance.vacuumImpl(spark, s"$base/b", inlineMax = 0L))
     assert(driver == 100L, s"driver reclaimed $driver")
     assert(dist == driver, s"distributed segment vacuum diverged: $dist vs $driver")
     def liveSegs(p: String): Seq[String] =
@@ -481,8 +481,8 @@ class ZarrMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     build(s"$base/a"); build(s"$base/b")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("target").collect().map(_.toString).toSeq
-    val driver = rows(ZarrMaintenance.vacuum(spark, s"$base/a"))
-    val dist = rows(ZarrMaintenance.vacuum(spark, s"$base/b", distributed = true))
+    val driver = rows(ZarrMaintenance.vacuumImpl(spark, s"$base/a", inlineMax = Long.MaxValue))
+    val dist = rows(ZarrMaintenance.vacuumImpl(spark, s"$base/b", inlineMax = 0L))
     assert(dist == driver, s"distributed vacuum diverged:\n$dist\nvs\n$driver")
     def survivors(path: String): Seq[String] = {
       import scala.jdk.CollectionConverters._
@@ -533,7 +533,8 @@ class ZarrMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     } else Seq.empty)
     stores.foreach { path =>
       def counts(distributed: Boolean) =
-        ZarrInfo.describe(spark, path, countStored = true, distributed = distributed)
+        ZarrInfo.describeImpl(spark, path, countStored = true,
+          inlineMax = if (distributed) 0L else Long.MaxValue)
           .select("array", "n_stored_objects").collect()
           .map(r => r.getString(0) -> r.getLong(1)).toMap
       val driver = counts(distributed = false)
@@ -573,12 +574,6 @@ class ZarrMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val junked = statsRow()
     assert(junked.getLong(2) == 7L && junked.getLong(3) == 6L,
       s"phantom must count raw-only: $junked")
-    // distributed LIST mode (r20): the same describeStatsUnit visitor
-    // runs as one Spark task instead of on the driver — rows must be
-    // identical, pinned at the most asymmetric state (raw != live)
-    assert(ZarrInfo.describeStats(spark, path, distributed = true)
-      .collect().toSeq == Seq(junked),
-      "distributed describeStats must equal the driver row")
     // compaction collapses the six live segments to min_segments; the
     // out-of-grid phantom is not compaction's to touch
     ZarrMaintenance.compactStats(spark, path)

@@ -363,7 +363,12 @@ class ZarrV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     // the documented v2 upgrade path: scan the v2 store, write a fresh
     // v3 (sharded, stats-sidecar) store — no in-place mutation
     val dst = java.nio.file.Files.createTempDirectory("v2mig").toString + "/migrated"
-    ZarrMaintenance.compact(spark, store1d, dst, chunkSize = 8, innerChunkSize = 4)
+    val (srcObjs, _) =
+      ZarrMaintenance.compact(spark, store1d, dst, chunkSize = 8, innerChunkSize = 4)
+    // "objects before" is the stored-object count describe reports
+    val described = graft.zarr.ZarrInfo.describe(spark, store1d, countStored = true)
+      .collect().map(_.getLong(10)).sum
+    assert(srcObjs == described && srcObjs > 0, s"srcObjs=$srcObjs describe=$described")
     val src = spark.read.format("zarr").load(store1d)
       .select("flag", "id64", "u8").orderBy("id64").collect()
     val mig = spark.read.format("zarr").load(dst)

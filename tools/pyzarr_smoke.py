@@ -110,24 +110,30 @@ assert sharded.agg(F.sum("v")).collect()[0][0] == \
     sum(r[2] for r in rows) + sum(r[2] for r in slab_rows), "sharded cube values"
 
 # Store observability + maintenance from Python (rounds 14/15): describe
-# with the TRUE stored-object count — driver and DISTRIBUTED counting
-# agree — and the distributed vacuum, all through the JVM gateway the
-# way a PySpark operator would call them
+# with the TRUE stored-object count — driver and Spark-job counting
+# agree — and vacuum, all through the JVM gateway the way a PySpark
+# operator would call them (the store's size picks driver or Spark job;
+# there is no flag to pass)
 from pyspark.sql import DataFrame as _PyDF
 _ZI = spark._jvm.graft.zarr.ZarrInfo
-def _stored_counts(distributed):
-    d = _PyDF(_ZI.describe(spark._jsparkSession, sh_path, True, distributed), spark)
+# the seam `describeImpl` is package-private, so it has no static
+# forwarder: call it on the object's module instance
+_ZI_obj = getattr(getattr(spark._jvm.graft.zarr, "ZarrInfo$"), "MODULE$")
+def _stored_counts(inline_max):
+    # describeImpl's threshold forces one side: everything inline on the
+    # driver, or the Spark-job walk
+    d = _PyDF(_ZI_obj.describeImpl(spark._jsparkSession, sh_path, True, inline_max), spark)
     return {r["array"]: r["n_stored_objects"] for r in d.collect()}
-_drv, _dist = _stored_counts(False), _stored_counts(True)
-assert _drv == _dist and all(v > 0 for v in _drv.values()), \
-    f"describe stored counts from Python: driver={_drv} distributed={_dist}"
+_drv, _job = _stored_counts(2**63 - 1), _stored_counts(0)
+assert _drv == _job and all(v > 0 for v in _drv.values()), \
+    f"describe stored counts from Python: driver={_drv} job={_job}"
 
 import os as _os
 _os.makedirs(f"{sh_path}/v/c/9", exist_ok=True)
 with open(f"{sh_path}/v/c/9/0", "wb") as _f:
     _f.write(b"orphan")
 _ZM = spark._jvm.graft.zarr.ZarrMaintenance
-_vac = _PyDF(_ZM.vacuum(spark._jsparkSession, sh_path, True), spark)
+_vac = _PyDF(_ZM.vacuum(spark._jsparkSession, sh_path), spark)
 _vrows = {r["target"]: r for r in _vac.collect()}
 assert _vrows["v"]["orphan_chunks"] == 1, f"vacuum from Python: {_vrows}"
 assert spark.read.format("zarr").load(sh_path).count() == 36, \
@@ -143,23 +149,18 @@ assert spark.read.format("zarr").load(sh_path).count() == 36, \
 
 # compactStats (round 18): sidecar compaction through the gateway —
 # the maintenance call a long-lived PySpark micro-batch ingest schedules
-_cmp = _ZM.compactStats(spark._jsparkSession, sh_path, False)
+_cmp = _ZM.compactStats(spark._jsparkSession, sh_path)
 assert _cmp._2() <= _cmp._1(), f"compactStats from Python: {_cmp}"
 assert spark.read.format("zarr").load(sh_path).count() == 36, \
     "compactStats must not change readable contents"
 
-# describeStats (round 19; round 20 adds the distributed LIST mode):
-# the store-level sidecar summary a PySpark operator polls to decide
-# WHEN to compact / re-analyze — Py4J passes the `distributed` flag
-# explicitly (Scala default args are invisible through the gateway)
-_dst = _PyDF(_ZI.describeStats(spark._jsparkSession, sh_path, False), spark).collect()
+# describeStats (round 19): the store-level sidecar summary a PySpark
+# operator polls to decide WHEN to compact / re-analyze
+_dst = _PyDF(_ZI.describeStats(spark._jsparkSession, sh_path), spark).collect()
 assert len(_dst) == 1 and _dst[0]["n_stats_segments"] >= \
     _dst[0]["n_live_segments"] >= _dst[0]["min_segments"] >= 1 and \
     0.0 <= _dst[0]["covered_fraction"] <= 1.0, \
     f"describeStats from Python: {_dst}"
-_dsd = _PyDF(_ZI.describeStats(spark._jsparkSession, sh_path, True), spark).collect()
-assert _dsd == _dst, \
-    f"distributed describeStats must match driver: {_dsd} != {_dst}"
 
 # SHARDED BINARY blobs from Python (round 20): BinaryType lands as
 # vlen-bytes inner chunks behind a ZEP 2 shard index, and the per-scan
