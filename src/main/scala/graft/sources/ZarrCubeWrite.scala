@@ -179,7 +179,7 @@ object ZarrCubeWrite {
     // request costs follow the shard count while logical chunks stay
     // small). Engine geometry — grid, ordinals, the clustered shuffle,
     // chunk-skip stats — all key on the OUTER (stored) shape; only the
-    // per-object encode branches (Sharding.encode packs the inner
+    // per-object encode differs (ChunkColumn.encode packs the inner
     // chunks + index into one object).
     val outerShape: Seq[Int] = shardShapeOpt.getOrElse(chunkShape)
     // the entries are user-given: a wrapped product would pass this
@@ -745,7 +745,7 @@ object ZarrCubeWrite {
     }
     (coordMetas ++ dataMetas).foreach { m =>
       // sharded targets are fine: the slab kernel packs each assembled
-      // outer chunk into a shard object (Sharding.encode), and
+      // outer chunk into a shard object (ChunkColumn.encode), and
       // validateEncodable recursed into the inner chain; plain arrays
       // with a top-level transpose store each chunk permuted
       ZarrBatchWrite.validateEncodable(m, store.root)
@@ -926,23 +926,14 @@ object ZarrCubeWrite {
       store: ZarrStore, m: ZarrArrayMeta, axis: IndexedSeq[Any],
       fromChunk: Int, stageBelow: Int, stageDir: String): Seq[(String, String)] = {
     val cs = m.chunkShape(0)
-    val chain = Codecs.bytesCodecs(m.codecs,
-      if (m.dataType.byteWidth > 0) m.dataType.byteWidth else 1)
-    val order = Codecs.endianness(m.codecs)
     val nChunks = ((axis.length.toLong + cs - 1) / cs).toInt
     (fromChunk until nChunks).flatMap { ci =>
       val real = axis.slice(ci * cs, ci * cs + cs)
-      val vals = real ++ Seq.fill(cs - real.length)(m.fillValue)
-      val packed = m.shardingSpec match {
-        // a foreign store may shard even its coordinate axes; pack the
-        // padded chunk exactly like the data-array kernel does — incl.
-        // omitting all-padding inner chunks of the final edge shard
-        case Some(sp) =>
-          Sharding.encode(m.dataType, Seq(cs), sp, vals,
-            skipInner = skipInnerOf(sp, Array(cs), Array(real.length)))
-        case None =>
-          chain.foldLeft(ZarrDataWriter.encode(m.dataType, vals, order))((b, cc) => cc.encode(b))
-      }
+      // a foreign store may shard even its coordinate axes; pack the
+      // padded chunk exactly like the data-array kernel does — incl.
+      // omitting all-padding inner chunks of the final edge shard
+      val packed = ChunkColumn.encode(m, real ++ Seq.fill(cs - real.length)(m.fillValue),
+        skipInnerOf(m, Array(real.length)))
       val key = m.chunkKey(Array(ci))
       if (ci < stageBelow) {
         store.writeChunk(m.name, s"$stageDir/$key", packed)
@@ -1204,18 +1195,8 @@ object ZarrCubeWrite {
     val ndim = grid.length
     val ncols = dataNames.length
     val metas = dataNames.zip(dataMetaJsons).map { case (n, j) => ZarrMeta.parse(n, j) }
-    val zts = metas.map(_.dataType)
-    val chains = metas.map(m => Codecs.bytesCodecs(m.codecs,
-      if (m.dataType.byteWidth > 0) m.dataType.byteWidth else 1))
-    val orders = metas.map(m => Codecs.endianness(m.codecs))
     val fills = metas.map(_.fillValue)
     val chunkElems = chunkShape.map(_.toLong).product.toInt
-    // sharded arrays: the assembled outer chunk is packed into one shard
-    // object; plain arrays with a top-level transpose codec store each
-    // chunk dimension-permuted (Codecs.transposeValues)
-    val shardSpecs = metas.map(_.shardingSpec)
-    val topPerms: Array[Array[Int]] =
-      metas.map(m => if (m.shardingSpec.isDefined) null else m.transposePerm.orNull)
 
     val buf: Array[Array[Any]] = Array.tabulate(ncols)(_ => new Array[Any](chunkElems))
     // real (in-extent) values per data column, for stats over output rows
@@ -1227,34 +1208,25 @@ object ZarrCubeWrite {
       realVals(c).clear()
     }
 
-    // stats segment accumulators: ALL columns (coords first, then data),
-    // matching what `analyze` records for this grid
-    val segColNames = dims ++ dataNames
-    val segZts = dimZts ++ zts
+    // stats segment: ALL columns (coords first, then data), matching
+    // what `analyze` records for this grid
+    val segment = new ChunkStats.SegmentRecorder(
+      dims.zip(dimZts).toSeq ++ metas.map(m => m.name -> m.dataType))
     var segFirst = -1L
-    var segLen = 0
-    val segBounds = Array.fill(segColNames.length)(
-      Vector.newBuilder[Option[ChunkStats.Bound]])
-    val segSums = Array.fill(segColNames.length)(Vector.newBuilder[Option[Long]])
 
     def flushSegment(): Unit = {
-      if (stats && segLen > 0) {
-        val cols = segColNames.indices.map { i =>
-          (segColNames(i), segZts(i), segBounds(i).result(), segSums(i).result())
-        }
+      if (segment.chunks > 0) {
         // when this slab stages chunk rewrites, its segments stage too:
         // a durable final-key segment must never describe bytes readers
         // cannot see yet (the caller promotes after the chunk swap)
         val key =
           if (stageStatsWriteId.nonEmpty)
-            ChunkStats.cubeStagingKey(stageStatsWriteId, segFirst, segLen)
-          else ChunkStats.segmentKey(segFirst, segLen)
-        store.writeText(key,
-          ChunkStats.encodeBounds(cols, grid.toSeq, dims.toSeq))
+            ChunkStats.cubeStagingKey(stageStatsWriteId, segFirst, segment.chunks)
+          else ChunkStats.segmentKey(segFirst, segment.chunks)
+        store.writeText(key, segment.doc(grid.toSeq, dims.toSeq))
       }
-      segColNames.indices.foreach { i => segBounds(i).clear(); segSums(i).clear() }
+      segment.clear()
       segFirst = -1L
-      segLen = 0
     }
 
     var rows = 0L
@@ -1285,42 +1257,22 @@ object ZarrCubeWrite {
       val innerColsB = Seq.newBuilder[ChunkStats.InnerColInput]
       var c = 0
       while (c < ncols) {
-        val packed = shardSpecs(c) match {
-          case Some(sp) =>
-            Sharding.encode(zts(c), chunkShape.toSeq, sp,
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(buf(c)),
-              skipInner = skipInnerOf(sp, chunkShape, extent))
-          case None =>
-            val stored =
-              if (topPerms(c) == null) buf(c)
-              else Codecs.transposeValues(buf(c), topPerms(c))
-            val enc = ZarrDataWriter.encode(zts(c),
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(stored), orders(c))
-            chains(c).foldLeft(enc)((b, cc) => cc.encode(b))
-        }
+        val m = metas(c)
+        val vals = buf(c)
+        val packed = ChunkColumn.encode(m, vals, skipInnerOf(m, extent))
         // a committed object's rewrite is staged, never truncated in
         // place: the caller swaps it in only after the slab is durable
         val key =
-          if (curOrd < stageBelowOrd) s"$stageDir/${metas(c).chunkKey(idx)}"
-          else metas(c).chunkKey(idx)
-        store.writeChunk(dataNames(c), key, packed)
-        if (stats && shardSpecs(c).isDefined && zts(c) != ZarrType.Bytes) {
-          val sp = shardSpecs(c).get
-          val bc = buf(c)
+          if (curOrd < stageBelowOrd) s"$stageDir/${m.chunkKey(idx)}"
+          else m.chunkKey(idx)
+        store.writeChunk(m.name, key, packed)
+        if (stats && ChunkStats.hasInnerStats(m)) {
           // mtime/etag of the FINAL object: direct writes stat it here
           // (one HEAD per shard, next to its PUT); staged chunks are
           // stamped at promotion — the swap's copy fallback creates a
           // new object whose mtime/etag a pre-swap doc cannot know
-          val ost =
-            if (curOrd < stageBelowOrd) None
-            else store.objectStat(dataNames(c), key)
-          innerColsB += ChunkStats.InnerColInput(
-            dataNames(c), zts(c), sp.innerShape, packed.length.toLong,
-            ost.map(_.mtime).getOrElse(-1L),
-            Sharding.encodedIndexSum(sp, packed, chunkShape),
-            ChunkStats.innerBounds(bc(_), zts(c), sp.innerShape.toArray,
-              chunkShape, extent),
-            etag = ost.map(_.etag).getOrElse(""))
+          val ost = if (curOrd < stageBelowOrd) None else store.objectStat(m.name, key)
+          innerColsB += ChunkStats.innerCol(m, Some(packed), ost, vals(_), extent)
         }
         c += 1
       }
@@ -1338,21 +1290,10 @@ object ZarrCubeWrite {
         // coordinate bounds/sums over the chunk's OUTPUT rows, computed
         // from the broadcast axes (broadcast multiplicity realized by a
         // strided view, not materialization)
-        var i = 0
-        while (i < ndim) {
-          val view = new CoordChunkView(axes(i), idx(i).toLong * chunkShape(i), extent, i)
-          segBounds(i) += ChunkStats.minMaxBound(dimZts(i), view)
-          segSums(i) += ChunkStats.chunkSum(dimZts(i), view)
-          i += 1
-        }
-        var c2 = 0
-        while (c2 < ncols) {
-          segBounds(ndim + c2) += ChunkStats.minMaxBound(zts(c2), realVals(c2))
-          segSums(ndim + c2) += ChunkStats.chunkSum(zts(c2), realVals(c2))
-          c2 += 1
-        }
-        segLen += 1
-        if (segLen == ChunkStats.maxSegmentChunks) flushSegment()
+        segment.record(i =>
+          if (i < ndim) new CoordChunkView(axes(i), idx(i).toLong * chunkShape(i), extent, i)
+          else realVals(i - ndim))
+        if (segment.chunks == ChunkStats.maxSegmentChunks) flushSegment()
       }
       chunks += 1
       resetBuffers()
@@ -1369,7 +1310,7 @@ object ZarrCubeWrite {
         // segments must cover CONTIGUOUS ordinal runs (the key encodes
         // [first, first+n)); a block boundary or hash-collided partition
         // starts a new run
-        if (stats && segLen > 0 && ord != segFirst + segLen) flushSegment()
+        if (segment.chunks > 0 && ord != segFirst + segment.chunks) flushSegment()
         curOrd = ord
       }
       var c = 0
@@ -1391,18 +1332,19 @@ object ZarrCubeWrite {
     (rows, chunks)
   }
 
-  /** Inner chunks of an edge shard that lie ENTIRELY beyond the array
-    * extent (pure fill padding): omitted from the shard and indexed
-    * absent — no reader ever requests them, and the object shrinks. */
-  private def skipInnerOf(
-      sp: Sharding.Spec, chunkShape: Array[Int], extent: Array[Int]): Set[Int] =
-    if (extent.sameElements(chunkShape)) Set.empty
-    else {
-      val ig = Array.tabulate(chunkShape.length)(d => chunkShape(d) / sp.innerShape(d))
-      (0 until ig.product).filter { gi =>
-        ScanGeometry.indexOf(gi, ig).zipWithIndex
-          .exists { case (id, d) => id.toLong * sp.innerShape(d) >= extent(d) }
-      }.toSet
+  /** Inner chunks of an edge shard of `m` that lie ENTIRELY beyond the
+    * array extent (pure fill padding): omitted from the shard and
+    * indexed absent — no reader ever requests them, and the object
+    * shrinks. Empty for unsharded arrays and interior chunks. */
+  private def skipInnerOf(m: ZarrArrayMeta, extent: Array[Int]): Set[Int] =
+    m.shardingSpec match {
+      case Some(sp) if !extent.sameElements(m.chunkShape) =>
+        val ig = Array.tabulate(extent.length)(d => m.chunkShape(d) / sp.innerShape(d))
+        (0 until ig.product).filter { gi =>
+          ScanGeometry.indexOf(gi, ig).zipWithIndex
+            .exists { case (id, d) => id.toLong * sp.innerShape(d) >= extent(d) }
+        }.toSet
+      case _ => Set.empty
     }
 
   /** Output rows of one chunk for coordinate `d`: the axis slice repeated

@@ -470,9 +470,8 @@ class ZarrAggScan(
     val valueCols = fns.collect { case (fn @ ("min" | "max" | "sum"), c) => c }.distinct
     val reader =
       if (uncovered.isEmpty) None
-      else Some(ZarrReaderFactory(store, aggMetas.map(m => m.name -> m.sourceJson),
-        valueCols, Nil,
-        manifestParts = ChunkManifest.requiredParts(store, aggMetas.map(_.sourceJson))))
+      else Some(ZarrReaderFactory.planned(store, aggMetas.map(m => m.name -> m.sourceJson),
+        valueCols, Nil, ChunkManifest.requiredParts(store, aggMetas.map(_.sourceJson))))
     // overflow semantics of the executor-side partial SUM must match
     // what Spark's Sum over the same scanned rows would do: throw under
     // ANSI (the 4.x default), wrap otherwise — resolved at plan time
@@ -654,12 +653,6 @@ class ZarrScan(
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val metaJsons = readNames.map(n => n -> byName(n).sourceJson)
-    val effectiveFilters = (pushed ++ runtimeFilters).toSeq
-    // one driver-side LIST of the stats sidecar, shipped to every task —
-    // readers GET only their overlapping segments, never LIST
-    val segIndex =
-      if (effectiveFilters.isEmpty) Nil
-      else try store.listStatsSegments() catch { case _: Throwable => Nil }
     // rename-free staged commits key chunks through the root-doc
     // manifest; ONE driver-side read covers the whole scan. When any
     // read array carries the manifest storage transformer, an
@@ -667,16 +660,9 @@ class ZarrScan(
     // ordinals to canonical keys would silently read fill values — the
     // exact failure the must-understand transformer exists to prevent,
     // and it must protect this reader too, not only generic tools.
-    val mparts = ChunkManifest.requiredParts(
-      store, readNames.map(n => byName(n).sourceJson))
-    // one driver-side LIST telling readers whether per-inner-chunk stats
-    // docs exist at all — a never-analyzed store must not pay a 404 GET
-    // per shard probing for them
-    val innerStats = effectiveFilters.nonEmpty &&
-      readNames.exists(n => byName(n).shardingSpec.isDefined) &&
-      (try store.hasInnerStatsDocs() catch { case _: Throwable => false })
-    ZarrReaderFactory(store, metaJsons, required.fields.map(_.name).toSeq,
-      effectiveFilters, limit, segIndex, mparts, innerStats)
+    ZarrReaderFactory.planned(store, metaJsons, required.fields.map(_.name).toSeq,
+      (pushed ++ runtimeFilters).toSeq,
+      ChunkManifest.requiredParts(store, metaJsons.map(_._2)), limit)
   }
 
   /** Runtime (join-derived) filters — e.g. a broadcast join's IN-set on

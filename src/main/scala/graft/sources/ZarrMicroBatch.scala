@@ -187,18 +187,9 @@ class ZarrMicroBatchStream(
     // snapshot, while a doc from a LATER append (larger leading extent)
     // is rejected, so a racing ingest can only decline masking, never
     // misdescribe. The usual length/mtime/index-checksum guards apply
-    // unchanged executor-side.
-    val innerStats = pushed.nonEmpty &&
-      metaJsons.exists { case (n, j) => ZarrMeta.parse(n, j).shardingSpec.isDefined } &&
-      (try store.hasInnerStatsDocs() catch { case _: Throwable => false })
-    ZarrReaderFactory(store, metaJsons, outputNames, pushed,
-      statsSegmentIndex =
-        if (pushed.isEmpty) Nil
-        else try store.listStatsSegments() catch { case _: Throwable => Nil },
-      // SAME snapshot as the planned metadata — never a second,
-      // possibly-newer root read (shape/manifest pairing must hold)
-      manifestParts = manifestParts,
-      innerStatsPresent = innerStats)
+    // unchanged executor-side. The manifest is the SAME snapshot as the
+    // planned metadata.
+    ZarrReaderFactory.planned(store, metaJsons, outputNames, pushed, manifestParts)
   }
 
   override def commit(end: Offset): Unit = ()

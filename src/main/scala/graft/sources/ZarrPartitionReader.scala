@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.{Executors, Future => JFuture}
-
 import graft.zarr._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
@@ -62,6 +60,34 @@ final case class ZarrReaderFactory(
       override def get(): InternalRow = rows.next()
       override def close(): Unit = col.close()
     }
+  }
+}
+
+object ZarrReaderFactory {
+
+  /** The reader factory of a planned scan. With pushed filters, two
+    * driver-side probes ship to every task: ONE LIST of the stats
+    * sidecar (readers GET only their overlapping segments, never LIST)
+    * and, when a read array is sharded, one LIST telling readers whether
+    * per-inner-chunk stats docs exist at all (a never-analyzed store
+    * must not pay a 404 GET per shard probing for them). Both are
+    * auxiliary: a failing probe plans without it. `manifestParts` come
+    * from the caller — a stream must pair them with the metadata of its
+    * own snapshot, never with a second, possibly newer root read. */
+  def planned(
+      store: ZarrStore,
+      metaJsons: Seq[(String, String)],
+      outputNames: Seq[String],
+      filters: Seq[Filter],
+      manifestParts: Seq[(Long, String, Int)],
+      limit: Int = -1): ZarrReaderFactory = {
+    def probe[T](empty: T)(list: => T): T = try list catch { case _: Throwable => empty }
+    val segIndex = if (filters.isEmpty) Nil else probe(Seq.empty[(Long, Int)])(store.listStatsSegments())
+    val innerStats = filters.nonEmpty &&
+      metaJsons.exists { case (n, j) => ZarrMeta.parse(n, j).shardingSpec.isDefined } &&
+      probe(false)(store.hasInnerStatsDocs())
+    ZarrReaderFactory(store, metaJsons, outputNames, filters, limit, segIndex,
+      manifestParts, innerStats)
   }
 }
 
@@ -438,23 +464,6 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     if (kept == nRows) null else java.util.Arrays.copyOf(keep, kept)
   }
 
-  /** Window depth AND IO thread count. The reference pipelines exactly
-    * one chunk ahead on one task (`zarr_data_stream.rs:647-711`); a
-    * single IO thread only overlaps IO with decode, which at
-    * object-store latency leaves the task IO-SERIAL (decode is
-    * microseconds, the 20 ms GETs dominate). Matching the pool to the
-    * window parallelizes the waits themselves — ~depth× on
-    * latency-bound scans (ScanBench r11) — while depth still bounds
-    * buffered chunks per task, and tasks × depth bounds the per-host
-    * in-flight GET budget. Results are consumed in submission (FIFO)
-    * order, so the coordInFlight/coordCache invariant below is
-    * completion-order-independent. */
-  private val prefetchDepth = 4
-
-  private val io = Executors.newFixedThreadPool(prefetchDepth, { r =>
-    val t = new Thread(r, "zarr-prefetch"); t.setDaemon(true); t
-  }: java.util.concurrent.ThreadFactory)
-
   /** Chunk-statistics sidecar segments overlapping this partition's chunk
     * range — the segment INDEX (names only) was listed ONCE on the driver
     * at planning and shipped in the factory, so each task pays just the
@@ -491,31 +500,31 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
 
   /** Manifest-keyed chunks (staged DSv2 commits) apply only to 1-D
     * grids — the only shape the DSv2 writer produces. Declared BEFORE
-    * the eager `topUpPrefetch()` below, which already resolves keys. */
+    * the eager [[prefetch]] below, which already resolves keys. */
   private val manifest = graft.zarr.ChunkManifest(f.manifestParts.toVector)
   /** Coordinate chunk keys whose fetch has been SUBMITTED but not yet
-    * decoded into [[coordCache]]. The prefetch window submits up to
-    * [[prefetchDepth]] chunks before the first is decoded, and the cache
-    * is only written at decode time — without this set, every window
-    * slot re-fetches the same coordinate chunk (≈ depth−1 redundant GETs
-    * per coord chunk per grid row at object-store latency). Chunks are
-    * decoded in submission (FIFO) order, so a coord filtered here is
-    * always in the cache by the time a later chunk needs it. Declared
-    * BEFORE the eager `topUpPrefetch()` below. */
+    * decoded into [[coordCache]]. The prefetch window submits up to its
+    * depth in chunks before the first is decoded, and the cache is only
+    * written at decode time — without this set, every window slot
+    * re-fetches the same coordinate chunk (≈ depth−1 redundant GETs per
+    * coord chunk per grid row at object-store latency). Chunks are
+    * resolved at submission on this thread and decoded in submission
+    * (FIFO) order, so a coord filtered here is always in the cache by
+    * the time a later chunk needs it. Declared BEFORE [[prefetch]]. */
   private val coordInFlight = new java.util.HashSet[String]()
-  private val inflightQ =
-    new java.util.ArrayDeque[(Long, JFuture[Fetched])]()
-  private var nextToSubmit: Long = part.lo
   private var current: ColumnarBatch = null
 
-  private def topUpPrefetch(): Unit =
-    while (inflightQ.size() < prefetchDepth && nextToSubmit < part.hi) {
-      val o = nextToSubmit
-      nextToSubmit += 1
-      if (!statsSkip(o))
-        inflightQ.addLast((o, submitFetch(o, phase1)))
-    }
-  topUpPrefetch()
+  /** Phase-1 fetches of this partition's chunks, stats-skipped ones
+    * never submitted, through the shared window ([[ChunkPrefetcher]]):
+    * depth 4 on 4 IO threads. The reference pipelines exactly one chunk
+    * ahead on one task (`zarr_data_stream.rs:647-711`); a single IO
+    * thread only overlaps IO with decode, which at object-store latency
+    * leaves the task IO-SERIAL — matching the pool to the window
+    * parallelizes the waits themselves (~depth× on latency-bound scans,
+    * ScanBench r11). */
+  private val prefetch = new ChunkPrefetcher[(Long, Seq[(String, String)]), (Long, Fetched)](
+    Iterator.range(part.lo, part.hi).filterNot(statsSkip).map(o => (o, resolveFetch(o, phase1))),
+    { case (o, keys) => (o, fetchBytes(o, keys)) })
 
   private def chunkKeyFor(name: String, idx: Array[Int]): String = {
     val m = roleOf(name) match { case DataCol(mm) => mm; case CoordCol(mm, _) => mm }
@@ -541,17 +550,11 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     }.map(n => n -> chunkKeyFor(n, idx))
   }
 
-  /** Fetch raw bytes for `names` of chunk `o` on the IO thread. */
-  private def submitFetch(o: Long, names: Seq[String]): JFuture[Fetched] = {
-    val keys = resolveFetch(o, names)
-    io.submit(() => fetchBytes(o, keys))
-  }
-
   /** Fetch raw bytes for `names` of chunk `o` on the CALLER thread.
     * Phase-2 fetches use this: the caller blocks on the bytes anyway,
     * and routing them through the prefetch pool would queue each
-    * matching chunk's phase-2 GET behind up to [[prefetchDepth]]
-    * in-flight speculative phase-1 prefetches (head-of-line blocking
+    * matching chunk's phase-2 GET behind the window's in-flight
+    * speculative phase-1 prefetches (head-of-line blocking
     * that serializes phase-2-dominated scans); inline, phase 2
     * proceeds while the pool keeps prefetching phase 1 concurrently. */
   private def fetchNow(o: Long, names: Seq[String]): Fetched =
@@ -612,21 +615,13 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
       if (pendingRows > 0) { current = emitPending(); return true }
       return false
     }
-    while (!inflightQ.isEmpty || nextToSubmit < part.hi) {
-      topUpPrefetch()
-      val entry = inflightQ.pollFirst()
-      if (entry == null) {
-        // every remaining chunk was stats-skipped without a fetch
-        if (pendingRows > 0) { current = emitPending(); return true }
-        return false
-      }
-      val (o, fut) = entry
+    while (prefetch.hasNext) {
+      // the window refills as this chunk is handed over, so fetches
+      // continue while it is decoded, filtered and emitted
+      val (o, raw1) = prefetch.next()
       val idx = geometry.chunkIndex(o)
       val extent = geometry.chunkExtent(idx)
       val nRows = extent.product
-      val raw1 = fut.get()
-      // keep the window full while we decode/filter/emit this chunk
-      topUpPrefetch()
 
       val phase1Cols: Map[String, (ChunkColumn, Array[Int])] =
         phase1.map { n =>
@@ -679,7 +674,7 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
   override def get(): ColumnarBatch = current
 
   override def close(): Unit = {
-    io.shutdownNow()
+    prefetch.close()
     if (current != null) { current.close(); current = null }
   }
 }

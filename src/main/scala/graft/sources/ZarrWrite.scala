@@ -231,14 +231,6 @@ class ZarrBatchWrite(
   // validate types up front, driver-side
   schema.fields.foreach(f => ZarrWriteSupport.zarrTypeFor(f.dataType))
 
-  /** True append: when the target store already exists (and this is not
-    * an overwrite), new rows EXTEND every array along dim 0. The existing
-    * schema, chunk size and codec chain win over the options; the
-    * existing row count must be a whole number of chunks (a partial last
-    * chunk would need a read-modify-write — rejected with a clear
-    * error). */
-  private var existingMetas: Seq[ZarrArrayMeta] = Seq.empty
-
   /** Unique id for this write job: scopes staged chunk/stats keys so
     * attempts of distinct writes (and manifest parts committed by
     * EARLIER staged writes) can never collide or be cleaned by another
@@ -246,90 +238,81 @@ class ZarrBatchWrite(
   private val writeId: String =
     java.util.UUID.randomUUID().toString.replace("-", "").take(10)
 
-  private val appendState: (Long, Int, String) = {
-    existingMetas =
-      if (truncate) Seq.empty
-      else {
-        // only a genuinely absent (or array-less) store means "fresh
-        // write"; metadata of EXISTING arrays must parse — an
-        // unreadable/unsupported store has to ABORT the append, not be
-        // silently treated as empty and written over
-        val names =
-          try store.listArrays()
-          catch { case _: ZarrException => Seq.empty }
-        val metas = names.map(store.readMeta)
-        // v2 stores are READ-ONLY here: this writer emits v3 metadata
-        // and v3 chunk keys, and mixing them into a v2 layout would
-        // leave a store neither format reads back whole
-        metas.find(_.formatVersion == 2).foreach { m =>
-          throw new ZarrException(
-            s"append: ${store.root} is a Zarr v2 store (array ${m.name}); " +
-              "the writer is v3-only — read it and write a new store to migrate")
-        }
-        metas
-      }
-    if (truncate) (0L, chunkSize0, codec0)
+  /** True append: when the target store already exists (and this is not
+    * an overwrite), new rows EXTEND every array along dim 0. The existing
+    * schema, chunk size and codec chain win over the options; the
+    * existing row count must be a whole number of chunks (a partial last
+    * chunk would need a read-modify-write — rejected with a clear
+    * error). Metadata and the manifest parts of earlier staged writes
+    * (which must survive this commit's root rewrite) come from ONE
+    * committed view: after a root write lost behind the per-array
+    * documents, an advanced base paired with the old manifest would
+    * leave a gap of fill rows. No failure fallback: an absent store maps
+    * to empty, so anything thrown is a REAL error (transient IO, an
+    * unparseable array) that must abort, not be written over. */
+  private val (existingMetas, existingManifest): (Seq[ZarrArrayMeta], ChunkManifest) =
+    if (truncate) (Seq.empty, ChunkManifest.empty)
     else {
-      val existing = existingMetas
-      if (existing.isEmpty) (0L, chunkSize0, codec0)
-      else {
-        val byName = existing.map(m => m.name -> m).toMap
-        schema.fields.foreach { f =>
-          val m = byName.getOrElse(f.name, throw new ZarrException(
-            s"append: column ${f.name} not present in existing store ${store.root}"))
-          if (m.dataType.sparkType != f.dataType)
-            throw new ZarrException(
-              s"append: column ${f.name} type ${f.dataType.sql} != stored ${m.dataType.sparkType.sql}")
-          if (m.ndim != 1)
-            throw new ZarrException(s"append: array ${f.name} is not 1-D")
-        }
-        if (byName.size != schema.fields.length)
-          throw new ZarrException(
-            s"append: store has arrays ${existing.map(_.name).mkString(",")} but " +
-              s"dataframe has columns ${schema.fieldNames.mkString(",")}")
-        val m0 = byName(schema.fields.head.name)
-        // the appender flushes ONE row layout (shape(0), chunk_size) for
-        // every column; a legal store whose 1-D arrays are chunked or
-        // sized differently would get chunks written at ordinals its own
-        // metadata addresses elsewhere — refuse, never corrupt
-        byName.values.foreach { m =>
-          if (m.shape(0) != m0.shape(0) || m.chunkShape(0) != m0.chunkShape(0))
-            throw new ZarrException(
-              s"append: arrays disagree on row layout — ${m.name} has " +
-                s"${m.shape(0)} rows in chunks of ${m.chunkShape(0)} vs " +
-                s"${m0.name}'s ${m0.shape(0)} in ${m0.chunkShape(0)}; this " +
-                "appender requires a uniform 1-D layout across columns")
-        }
-        val cs = m0.chunkShape(0)
-        if (m0.shape(0) % cs != 0)
-          throw new ZarrException(
-            s"append: existing row count ${m0.shape(0)} is not a multiple of " +
-              s"chunk_size $cs (partial last chunk); rewrite with mode(overwrite)")
-        val cname = m0.codecs.map(_.name) match {
-          case ns if ns.contains("blosc") => "blosc"
-          case ns if ns.contains("gzip") => "gzip"
-          case ns if ns.contains("zstd") => "zstd"
-          case _ => "none"
-        }
-        (m0.shape(0), cs, cname)
+      val (metas, manifest) = store.committedView()
+      // v2 stores are READ-ONLY here: this writer emits v3 metadata
+      // and v3 chunk keys, and mixing them into a v2 layout would
+      // leave a store neither format reads back whole
+      metas.find(_.formatVersion == 2).foreach { m =>
+        throw new ZarrException(
+          s"append: ${store.root} is a Zarr v2 store (array ${m.name}); " +
+            "the writer is v3-only — read it and write a new store to migrate")
       }
+      (metas, if (metas.isEmpty) ChunkManifest.empty else manifest)
     }
-  }
+
+  private val appendState: (Long, Int, String) =
+    if (existingMetas.isEmpty) (0L, chunkSize0, codec0)
+    else {
+      val byName = existingMetas.map(m => m.name -> m).toMap
+      schema.fields.foreach { f =>
+        val m = byName.getOrElse(f.name, throw new ZarrException(
+          s"append: column ${f.name} not present in existing store ${store.root}"))
+        if (m.dataType.sparkType != f.dataType)
+          throw new ZarrException(
+            s"append: column ${f.name} type ${f.dataType.sql} != stored ${m.dataType.sparkType.sql}")
+        if (m.ndim != 1)
+          throw new ZarrException(s"append: array ${f.name} is not 1-D")
+      }
+      if (byName.size != schema.fields.length)
+        throw new ZarrException(
+          s"append: store has arrays ${existingMetas.map(_.name).mkString(",")} but " +
+            s"dataframe has columns ${schema.fieldNames.mkString(",")}")
+      val m0 = byName(schema.fields.head.name)
+      // the appender flushes ONE row layout (shape(0), chunk_size) for
+      // every column; a legal store whose 1-D arrays are chunked or
+      // sized differently would get chunks written at ordinals its own
+      // metadata addresses elsewhere — refuse, never corrupt
+      byName.values.foreach { m =>
+        if (m.shape(0) != m0.shape(0) || m.chunkShape(0) != m0.chunkShape(0))
+          throw new ZarrException(
+            s"append: arrays disagree on row layout — ${m.name} has " +
+              s"${m.shape(0)} rows in chunks of ${m.chunkShape(0)} vs " +
+              s"${m0.name}'s ${m0.shape(0)} in ${m0.chunkShape(0)}; this " +
+              "appender requires a uniform 1-D layout across columns")
+      }
+      val cs = m0.chunkShape(0)
+      if (m0.shape(0) % cs != 0)
+        throw new ZarrException(
+          s"append: existing row count ${m0.shape(0)} is not a multiple of " +
+            s"chunk_size $cs (partial last chunk); rewrite with mode(overwrite)")
+      val cname = m0.codecs.map(_.name) match {
+        case ns if ns.contains("blosc") => "blosc"
+        case ns if ns.contains("gzip") => "gzip"
+        case ns if ns.contains("zstd") => "zstd"
+        case _ => "none"
+      }
+      (m0.shape(0), cs, cname)
+    }
+
   private val baseRows: Long = appendState._1
   private val chunkSize: Int = appendState._2
   private val codec: String = appendState._3
   private val baseChunks: Long = baseRows / chunkSize
-
-  /** Manifest parts committed by earlier staged writes to this store —
-    * they must survive this commit's root-doc rewrite. */
-  private val existingManifest: ChunkManifest =
-    if (truncate || existingMetas.isEmpty) ChunkManifest.empty
-    // NO failure fallback: readChunkManifest already maps an absent root
-    // doc to empty, so anything thrown here is a REAL error (transient
-    // IO, corrupt root) — swallowing it into an empty manifest would let
-    // this commit rewrite the root without the prior manifest parts,
-    // permanently orphaning chunks earlier staged commits own
-    else store.readChunkManifest()
 
   if (rowsPerPartition > 0 && rowsPerPartition % chunkSize != 0)
     throw new ZarrException(
@@ -516,20 +499,13 @@ object ZarrBatchWrite {
     * anything this writer cannot encode, with a clear error, rather than
     * writing chunks that will not decode (or decode wrongly) later. */
   def validateEncodable(m: ZarrArrayMeta, root: String): Unit =
-    validateCodecList(m.codecs, m.name, root, insideShard = false)
+    validateCodecList(m.codecs, m.name, root)
 
-  private def validateCodecList(
-      codecs: Seq[CodecSpec], name: String, root: String, insideShard: Boolean): Unit = {
+  private def validateCodecList(codecs: Seq[CodecSpec], name: String, root: String): Unit = {
     codecs.foreach {
       // "endian" is the pre-rename alias of "bytes" (accepted on read);
-      // the encode path resolves both through Codecs.endianness
-      case CodecSpec("bytes" | "endian", cfg) =>
-        // big-endian is fine at the top level (ZarrDataWriter.encode
-        // honors the stored ByteOrder) but Sharding.encode is LE-only
-        if (insideShard && cfg.get("endian").exists(_.asText("little") == "big"))
-          throw new ZarrException(
-            s"append: array $name in $root uses a big-endian bytes codec inside " +
-              "sharding_indexed, which this writer cannot encode")
+      // ChunkColumn.encode honors either byte order, sharded or not
+      case CodecSpec("bytes" | "endian", _) => ()
       case CodecSpec("vlen-utf8", _) => () // array→bytes
       case CodecSpec("vlen-bytes", _) => () // array→bytes (binary columns)
       // append targets are strictly 1-D, where any legal transpose order
@@ -551,7 +527,7 @@ object ZarrBatchWrite {
         // the inner chain must be encodable too (Sharding.specOf also
         // rejects variable-size index codecs)
         val spec = Sharding.specOf(Seq(CodecSpec("sharding_indexed", cfg))).get
-        validateCodecList(spec.innerCodecs, name, root, insideShard = true)
+        validateCodecList(spec.innerCodecs, name, root)
       case CodecSpec(name0, _) if encodableBytesCodecs(name0) => ()
       case CodecSpec(name0, _) =>
         throw new ZarrException(
@@ -596,27 +572,14 @@ final class ZarrDataWriter(
   private val ncols = schema.fields.length
   private val colMetas: Array[ZarrArrayMeta] =
     schema.fields.zip(colMetaJsons).map { case (f, j) => ZarrMeta.parse(f.name, j) }
-  // stored element type (NOT re-derived from the Spark type: uint8/int16
-  // both surface as ShortType but have different widths on disk)
-  private val zts: Array[ZarrType] = colMetas.map(_.dataType)
-  private val colChains: Array[Seq[Codecs.BytesCodec]] = colMetas.map(m =>
-    Codecs.bytesCodecs(m.codecs, if (m.dataType.byteWidth > 0) m.dataType.byteWidth else 1))
-  private val colOrders: Array[java.nio.ByteOrder] = colMetas.map(m => Codecs.endianness(m.codecs))
-  // sharded columns: the buffered chunk becomes one shard object
-  private val colShards: Array[Option[Sharding.Spec]] =
-    colMetas.map(m => Sharding.specOf(m.codecs))
   private val buf = Array.fill(ncols)(new scala.collection.mutable.ArrayBuffer[Any](chunkSize))
   private var rowsInChunk = 0
   private var localChunk = 0
   private var totalRows = 0L
-  // per-chunk min/max over the REAL rows (stats describe stored values the
-  // reader will see within the array's valid extent — padding is outside it)
-  private val statsAcc: Array[scala.collection.mutable.ArrayBuffer[Option[ChunkStats.Bound]]] =
-    Array.fill(ncols)(scala.collection.mutable.ArrayBuffer.empty)
-  // per-chunk EXACT sums (integer columns only) — enables metadata-only
-  // SUM/AVG pushdown; computed over real rows, like min/max
-  private val sumAcc: Array[scala.collection.mutable.ArrayBuffer[Option[Long]]] =
-    Array.fill(ncols)(scala.collection.mutable.ArrayBuffer.empty)
+  // per-chunk bounds and exact sums over the REAL rows (stats describe
+  // stored values the reader will see within the array's valid extent —
+  // padding is outside it)
+  private val segment = new ChunkStats.SegmentRecorder(colMetas.map(m => m.name -> m.dataType))
 
   override def write(row: InternalRow): Unit = {
     var c = 0
@@ -641,6 +604,7 @@ final class ZarrDataWriter(
   private def flush(): Unit = {
     if (rowsInChunk == 0) return
     val realRows = rowsInChunk
+    if (stats) segment.record(buf(_))
     // per-inner-chunk stats for SHARDED columns: the same
     // `_stats/i<ord>.json` doc analyze backfills, emitted at write time
     // so a sharded tabular store masks data predicates with no second
@@ -649,66 +613,42 @@ final class ZarrDataWriter(
     // segments; the staged path parks them at task-scoped names the
     // commit copies to final ordinals.
     val docCols = Seq.newBuilder[ChunkStats.InnerColInput]
-    var anyDoc = false
     var c = 0
     while (c < ncols) {
-      val zt = zts(c)
+      val m = colMetas(c)
       val vals = buf(c)
-      if (stats) {
-        statsAcc(c) += ChunkStats.minMaxBound(zt, vals)
-        sumAcc(c) += ChunkStats.chunkSum(zt, vals)
-      }
       // pad edge chunk to full chunk_shape with the array's declared
       // fill_value (Zarr v3 stores full chunks; the reader truncates via
       // array shape) — a conforming writer pads with fill_value, not
-      // zero, so appends to a non-zero-fill store stay interoperable.
-      // ZarrMeta.parseFill boxes the value in the same JVM type this
-      // buffer carries for every ZarrType.
-      val fill: Any = colMetas(c).fillValue
-      while (vals.length < chunkSize) vals += fill
-      val enc = colShards(c) match {
-        case Some(sp) =>
-          Sharding.encode(zt, Seq(chunkSize), sp, vals.toIndexedSeq)
-        case None =>
-          val raw = ZarrDataWriter.encode(zt, vals.toSeq, colOrders(c))
-          colChains(c).foldLeft(raw)((b, cc) => cc.encode(b))
-      }
+      // zero, so appends to a non-zero-fill store stay interoperable
+      while (vals.length < chunkSize) vals += m.fillValue
+      val enc = ChunkColumn.encode(m, vals)
       val key =
         if (rowsPerPartition > 0) {
           val ord = baseChunks + partitionId * (rowsPerPartition / chunkSize) + localChunk
-          Seq("c", ord.toString).mkString(colMetas(c).chunkKeySeparator)
+          Seq("c", ord.toString).mkString(m.chunkKeySeparator)
         } else s"c.part$writeId-$partitionId/$localChunk" // final key; commit maps it via manifest
-      store.writeChunk(schema.fields(c).name, key, enc)
-      // the Bytes exclusion mirrors the cube kernel and analyze (one
-      // rule across all three emitters): binary payloads carry no order,
-      // so per-inner bounds would be garbage — sharded binary columns
-      // are masked by COORDINATE predicates only
-      if (stats && zt != ZarrType.Bytes) colShards(c).foreach { sp =>
-        val name = schema.fields(c).name
+      store.writeChunk(m.name, key, enc)
+      if (stats && ChunkStats.hasInnerStats(m)) {
         // both key layouts are the object's FINAL resting place (the
         // manifest maps ordinals, it never moves bytes), so the
         // mtime/etag freshness tokens can be recorded right here — one
         // HEAD per shard, next to its PUT
-        val st = store.objectStat(name, key)
-        docCols += ChunkStats.InnerColInput(name, zt, sp.innerShape,
-          enc.length.toLong, st.map(_.mtime).getOrElse(-1L),
-          Sharding.encodedIndexSum(sp, enc, Array(chunkSize)),
-          ChunkStats.innerBounds(vals(_), zt, sp.innerShape.toArray,
-            Array(chunkSize), Array(realRows)),
-          etag = st.map(_.etag).getOrElse(""))
-        anyDoc = true
+        docCols += ChunkStats.innerCol(m, Some(enc), store.objectStat(m.name, key),
+          vals(_), Array(realRows))
       }
-      buf(c).clear()
+      vals.clear()
       c += 1
     }
-    if (anyDoc) {
+    val docs = docCols.result()
+    if (docs.nonEmpty) {
       val dkey =
         if (rowsPerPartition > 0)
           ChunkStats.innerKey(
             baseChunks + partitionId * (rowsPerPartition / chunkSize) + localChunk)
         else ChunkStats.tabularInnerStagingKey(writeId, partitionId, localChunk)
       store.writeText(dkey,
-        ChunkStats.encodeInner(Nil, Nil, Seq(chunkSize), docCols.result()))
+        ChunkStats.encodeInner(Nil, Nil, Seq(chunkSize), docs))
       wroteInnerDocs = true
     }
     rowsInChunk = 0
@@ -720,10 +660,6 @@ final class ZarrDataWriter(
   override def commit(): WriterCommitMessage = {
     flush()
     if (stats && localChunk > 0) {
-      val doc = ChunkStats.encodeBounds(
-        schema.fields.toSeq.zipWithIndex.map { case (f, c) =>
-          (f.name, zts(c), statsAcc(c).toIndexedSeq, sumAcc(c).toIndexedSeq)
-        })
       val key =
         if (rowsPerPartition > 0)
           // aligned fast path: the task knows its global first ordinal
@@ -732,50 +668,11 @@ final class ZarrDataWriter(
         else
           // staged path: driver commit copies to the final ordinal name
           ChunkStats.stagingKey(writeId, partitionId, localChunk)
-      store.writeText(key, doc)
+      store.writeText(key, segment.doc())
     }
     ZarrCommit(partitionId, totalRows, wroteInnerDocs)
   }
 
   override def abort(): Unit = ()
   override def close(): Unit = ()
-}
-
-object ZarrDataWriter {
-  def encode(zt: ZarrType, vals: Seq[Any],
-      order: java.nio.ByteOrder = java.nio.ByteOrder.LITTLE_ENDIAN): Array[Byte] = {
-    import java.nio.ByteBuffer
-    if (zt == ZarrType.Str)
-      return ChunkColumn.encodeVlenUtf8(vals.map(v => if (v == null) "" else v.toString).toArray)
-    if (zt == ZarrType.Bytes)
-      // null binary → empty payload: the Bytes fill semantics, mirroring
-      // the null-StringType → "" handling above (Spark binary columns
-      // are nullable by default; a per-element throw aborted the write)
-      return ChunkColumn.encodeVlenBytes(vals.map {
-        case null => Array.emptyByteArray
-        case b: Array[Byte] => b
-        case other => throw new ZarrException(
-          s"binary array element is not Array[Byte]: $other")
-      }.toArray)
-    val bb = ByteBuffer.allocate(vals.length * zt.byteWidth).order(order)
-    zt match {
-      case ZarrType.Bool => vals.foreach(v => bb.put(if (v.asInstanceOf[Boolean]) 1.toByte else 0.toByte))
-      case ZarrType.Int8 => vals.foreach(v => bb.put(v.asInstanceOf[Byte]))
-      case ZarrType.Int16 => vals.foreach(v => bb.putShort(v.asInstanceOf[Short]))
-      case ZarrType.Int32 => vals.foreach(v => bb.putInt(v.asInstanceOf[Int]))
-      case ZarrType.Int64 => vals.foreach(v => bb.putLong(v.asInstanceOf[Long]))
-      case ZarrType.Float32 => vals.foreach(v => bb.putFloat(v.asInstanceOf[Float]))
-      case ZarrType.Float64 => vals.foreach(v => bb.putDouble(v.asInstanceOf[Double]))
-      // unsigned: Spark carries the widened signed value; the low bytes
-      // are the exact unsigned representation
-      case ZarrType.UInt8 => vals.foreach(v => bb.put(v.asInstanceOf[Short].toByte))
-      case ZarrType.UInt16 => vals.foreach(v => bb.putShort(v.asInstanceOf[Int].toShort))
-      case ZarrType.UInt32 => vals.foreach(v => bb.putInt(v.asInstanceOf[Long].toInt))
-      case ZarrType.UInt64 => vals.foreach { v =>
-        bb.putLong(v.asInstanceOf[java.math.BigDecimal].toBigInteger.longValue())
-      }
-      case _ => throw new ZarrException(s"unsupported write type $zt")
-    }
-    bb.array()
-  }
 }

@@ -146,30 +146,23 @@ object ZarrSink {
     } finally rows.unpersist()
   }
 
-  /** Current store row count, healing a torn staged-commit first: chunk
-    * renames complete before ANY per-column zarr.json is rewritten, so if
-    * column shapes disagree, the data for the max shape exists for every
-    * column and only the lagging metadata needs repair. */
+  /** Committed store row count, from the same view the writer extends
+    * ([[graft.zarr.ZarrStore.committedView]]): a commit writes the
+    * per-array documents before the root, so after a lost root write a
+    * per-array shape counts rows no reader sees — a flush re-run trusting
+    * it would drop its tail as "already appended". Only an absent or
+    * array-less store counts 0; an existing store whose metadata fails to
+    * parse aborts the stream (treating it as empty would re-append the
+    * whole replay). */
   private def storeRows(spark: SparkSession, path: String): Long = {
-    val st = store(spark, path)
-    // only an absent/array-less store means "0 rows so far"; an
-    // EXISTING store whose metadata fails to parse must abort the
-    // stream — treating it as empty would re-append the whole replay
-    val names =
-      try st.listArrays()
-      catch { case _: ZarrException => return 0L }
-    val metas = names.map(a => a -> st.readMeta(a))
+    val (metas, _) = store(spark, path).committedView()
     // the sink appends v3 chunk keys and rewrites shape metadata — a v2
     // destination must abort, not be half-upgraded in place
-    metas.find(_._2.formatVersion == 2).foreach { case (a, _) =>
+    metas.find(_.formatVersion == 2).foreach { m =>
       throw new ZarrException(
-        s"streaming sink: $path is a Zarr v2 store (array $a); the sink is v3-only")
+        s"streaming sink: $path is a Zarr v2 store (array ${m.name}); the sink is v3-only")
     }
-    val maxRows = metas.map(_._2.shape(0)).max
-    metas.filter(_._2.shape(0) != maxRows).foreach { case (a, m) =>
-      st.writeMeta(a, graft.zarr.ZarrMeta.withShape0(m.sourceJson, maxRows))
-    }
-    maxRows
+    if (metas.isEmpty) 0L else metas.map(_.shape(0)).max
   }
 
   /** Drain the carried tail into the store as a final (possibly partial)

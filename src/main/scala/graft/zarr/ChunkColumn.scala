@@ -232,6 +232,72 @@ object ChunkColumn {
         }
     }
 
+  /** Encode one chunk's row-major values, padded to the full chunk shape
+    * by the caller, into its stored object: the inverse of [[decode]].
+    * A sharded array packs its inner chunks through [[Sharding.encode]],
+    * omitting those listed in `skipInner` (row-major over the inner
+    * grid); a plain one is transposed when its chain says so,
+    * element-encoded and run through its bytes→bytes codecs. */
+  def encode(
+      meta: ZarrArrayMeta,
+      vals: scala.collection.IndexedSeq[Any],
+      skipInner: Set[Int] = Set.empty): Array[Byte] =
+    meta.shardingSpec match {
+      case Some(spec) =>
+        Sharding.encode(meta.dataType, meta.chunkShape.toSeq, spec, vals, skipInner)
+      case None =>
+        val stored: scala.collection.IndexedSeq[Any] =
+          meta.transposePerm.fold(vals)(p => Codecs.transposeValues(vals, p))
+        val ts = if (meta.dataType.byteWidth > 0) meta.dataType.byteWidth else 1
+        Codecs.bytesCodecs(meta.codecs, ts).foldLeft(
+          encodeElems(meta.dataType, stored, Codecs.endianness(meta.codecs)))((b, c) => c.encode(b))
+    }
+
+  /** The one element encoder: values → the `bytes`, `vlen-utf8` or
+    * `vlen-bytes` layout. Numbers are coerced to the stored width in
+    * `order` (unsigned types arrive widened; their low bytes are the
+    * stored value); a null string encodes as "" and a null binary
+    * element as the empty payload, each type's fill. */
+  private[zarr] def encodeElems(
+      zt: ZarrType,
+      vals: scala.collection.IndexedSeq[Any],
+      order: ByteOrder = ByteOrder.LITTLE_ENDIAN): Array[Byte] = zt match {
+    case ZarrType.Str =>
+      encodeVlenUtf8(vals.iterator.map(v => if (v == null) "" else v.toString).toArray)
+    case ZarrType.Bytes =>
+      encodeVlenBytes(vals.iterator.map {
+        case null => Array.emptyByteArray
+        case b: Array[Byte] => b
+        case other => throw new ZarrException(s"binary array element is not Array[Byte]: $other")
+      }.toArray)
+    case _ =>
+      def num(v: Any): Number = v match {
+        case n: Number => n
+        case b: Boolean => if (b) 1 else 0
+        case other => throw new ZarrException(s"not numeric: $other")
+      }
+      val n = vals.length
+      val bb = ByteBuffer.allocate(n * zt.byteWidth).order(order)
+      var i = 0
+      zt match {
+        case ZarrType.Bool =>
+          while (i < n) { bb.put(if (vals(i).asInstanceOf[Boolean]) 1.toByte else 0.toByte); i += 1 }
+        case ZarrType.Int8 | ZarrType.UInt8 =>
+          while (i < n) { bb.put(num(vals(i)).byteValue()); i += 1 }
+        case ZarrType.Int16 | ZarrType.UInt16 =>
+          while (i < n) { bb.putShort(num(vals(i)).shortValue()); i += 1 }
+        case ZarrType.Int32 | ZarrType.UInt32 =>
+          while (i < n) { bb.putInt(num(vals(i)).intValue()); i += 1 }
+        case ZarrType.Int64 | ZarrType.UInt64 =>
+          while (i < n) { bb.putLong(num(vals(i)).longValue()); i += 1 }
+        case ZarrType.Float32 =>
+          while (i < n) { bb.putFloat(num(vals(i)).floatValue()); i += 1 }
+        case _ => // Float64
+          while (i < n) { bb.putDouble(num(vals(i)).doubleValue()); i += 1 }
+      }
+      bb.array()
+  }
+
   /** Scatter transposed-order strings back to row-major chunk order
     * (A(perm(b)) = B(b), see [[Codecs.transposePerm]]). */
   def untransposeStrings(strs: Array[String], perm: Array[Int]): Array[String] =
@@ -352,14 +418,8 @@ object ChunkColumn {
     out
   }
 
-  def encodeVlenUtf8(values: Array[String]): Array[Byte] = {
-    val bufs = values.map(_.getBytes(StandardCharsets.UTF_8))
-    val total = 4 + bufs.map(_.length + 4).sum
-    val bb = ByteBuffer.allocate(total).order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(values.length)
-    bufs.foreach { b => bb.putInt(b.length); bb.put(b) }
-    bb.array()
-  }
+  def encodeVlenUtf8(values: Array[String]): Array[Byte] =
+    encodeVlenBytes(values.map(_.getBytes(StandardCharsets.UTF_8)))
 
   /** Inverse of [[decodeVlenBytes]] — the numcodecs VLenBytes framing
     * (u32-LE item count, then u32-LE length + raw bytes per item): the

@@ -153,9 +153,8 @@ object ChunkStats {
     * chunk's bound covers its IN-EXTENT elements only — what a scan of
     * those rows emits — and fully-out-of-extent slots record None.
     * `get` reads the row-major outer buffer (decoded column or write
-    * buffer). Shared by `analyze` and the cube writer's write-time
-    * emission. */
-  def innerBounds(
+    * buffer). */
+  private def innerBounds(
       get: Int => Any, zt: ZarrType, inner: Array[Int],
       chunkShape: Array[Int], extent: Array[Int]): IndexedSeq[Option[Bound]] = {
     val ndim = chunkShape.length
@@ -241,6 +240,64 @@ object ChunkStats {
       name: String, zt: ZarrType, inner: Seq[Int], objectLen: Long,
       mtime: Long, indexSum: Long, bounds: IndexedSeq[Option[Bound]],
       etag: String = "")
+
+  /** Whether column `m` gets per-inner-chunk stats: sharded, and not
+    * binary (payloads carry no order, so its inner bounds would be
+    * garbage; such columns are masked by coordinate predicates only). */
+  def hasInnerStats(m: ZarrArrayMeta): Boolean =
+    m.shardingSpec.isDefined && m.dataType != ZarrType.Bytes
+
+  /** One sharded column's entry in an inner doc: the inner bounds of
+    * one outer chunk's values (`get`, row-major over the chunk shape,
+    * in-extent elements only) and the freshness tokens of its stored
+    * shard — length and index checksum from `packed` (None = the shard
+    * is absent), mtime and etag from `st` (None = unknown). */
+  def innerCol(
+      m: ZarrArrayMeta, packed: Option[Array[Byte]], st: Option[ZarrStore.ObjStat],
+      get: Int => Any, extent: Array[Int]): InnerColInput = {
+    val sp = m.shardingSpec.get
+    InnerColInput(m.name, m.dataType, sp.innerShape,
+      packed.fold(-1L)(_.length.toLong), st.fold(-1L)(_.mtime),
+      packed.fold(-1L)(Sharding.encodedIndexSum(sp, _, m.chunkShape)),
+      innerBounds(get, m.dataType, sp.innerShape.toArray, m.chunkShape, extent),
+      st.fold("")(_.etag))
+  }
+
+  /** The per-chunk stats of one segment, the one recorder every
+    * emitter (tabular writer, cube kernel, `analyze`) shares: each
+    * [[record]] appends one chunk's bounds and exact sum per column,
+    * and [[doc]] encodes the run as a segment document. */
+  final class SegmentRecorder(cols: Seq[(String, ZarrType)]) {
+    private val bounds = Array.fill(cols.length)(Vector.newBuilder[Option[Bound]])
+    private val sums = Array.fill(cols.length)(Vector.newBuilder[Option[Long]])
+    private var n = 0
+
+    /** Chunks recorded since the last [[clear]]. */
+    def chunks: Int = n
+
+    /** Record one chunk: `vals(i)` are column i's values over the
+      * chunk's output rows (edge-truncated, coordinates broadcast). */
+    def record(vals: Int => scala.collection.Seq[Any]): Unit = {
+      cols.indices.foreach { i =>
+        val v = vals(i)
+        bounds(i) += minMaxBound(cols(i)._2, v)
+        sums(i) += chunkSum(cols(i)._2, v)
+      }
+      n += 1
+    }
+
+    /** The segment document; an empty `grid` leaves it grid-less (1-D). */
+    def doc(grid: Seq[Int] = Nil, dims: Seq[String] = Nil): String =
+      encodeBounds(cols.indices.map { i =>
+        (cols(i)._1, cols(i)._2, bounds(i).result(), sums(i).result())
+      }, grid, dims)
+
+    def clear(): Unit = {
+      bounds.foreach(_.clear())
+      sums.foreach(_.clear())
+      n = 0
+    }
+  }
 
   /** Encode one inner doc. An EMPTY `shape` marks a grid-less 1-D doc
     * (the tabular writer's — final shape unknown until commit),

@@ -725,7 +725,7 @@ object Codecs {
   /** Encode-direction value gather B(b) = A(perm(b)) — the one shared
     * implementation for both the unsharded writer and shard inner
     * chunks. */
-  def transposeValues(vals: Array[Any], perm: Array[Int]): Array[Any] = {
+  def transposeValues(vals: scala.collection.IndexedSeq[Any], perm: Array[Int]): Array[Any] = {
     if (vals.length != perm.length)
       throw new ZarrException(s"chunk has ${vals.length} values, expected ${perm.length}")
     Array.tabulate[Any](vals.length)(b => vals(perm(b)))

@@ -485,78 +485,53 @@ object Sharding {
   /** Encode one full outer chunk (`vals`, row-major, padded to full
     * chunk_shape by the caller) as a shard object. Inner chunks listed in
     * `skipInner` (row-major grid order) are omitted and indexed as
-    * absent. Encode-side restriction: the inner `bytes` codec must be
-    * little-endian (all metadata this library writes is). */
+    * absent. Each inner chunk runs through [[ChunkColumn.encodeElems]]
+    * in the inner `bytes` codec's byte order, then the inner chain. */
   def encode(
       dtype: ZarrType,
       shardShape: Seq[Int],
       spec: Spec,
-      vals: IndexedSeq[Any],
+      vals: scala.collection.IndexedSeq[Any],
       skipInner: Set[Int] = Set.empty): Array[Byte] = {
     val shard = shardShape.toArray
     require(vals.length == shard.product, s"vals ${vals.length} != shard ${shard.product}")
-    // vlen layouts (Str/Bytes) have no endianness; fixed-width types
-    // must match the LE the engine's encode paths emit
-    if (dtype != ZarrType.Str && dtype != ZarrType.Bytes &&
-      Codecs.endianness(spec.innerCodecs) != ByteOrder.LITTLE_ENDIAN)
-      throw new ZarrException("sharding encode supports little-endian inner bytes codec only")
     val runs = new Runs(shard, spec)
     import runs.{nInner, rowLenElems}
-    val innerElems = spec.innerElems
     val innerChain = Codecs.bytesCodecs(spec.innerCodecs,
       if (dtype.byteWidth > 0) dtype.byteWidth else 1)
-    val innerPerm = spec.innerPerm
+    val order = Codecs.endianness(spec.innerCodecs)
 
     def gather(gi: Int): Array[Any] = {
-      val out = new Array[Any](innerElems)
+      val out = new Array[Any](spec.innerElems)
       runs.forEachRun(gi) { (r, flat) =>
         var e = 0
         while (e < rowLenElems) { out(r * rowLenElems + e) = vals(flat + e); e += 1 }
       }
       // inner transpose: store the inner chunk dimension-permuted
-      innerPerm.map(Codecs.transposeValues(out, _)).getOrElse(out)
+      spec.innerPerm.map(Codecs.transposeValues(out, _)).getOrElse(out)
     }
 
-    val encoded = new Array[Array[Byte]](nInner)
-    var gi = 0
-    while (gi < nInner) {
-      if (!skipInner(gi)) {
-        val raw = ZarrWriter.encodeArray(dtype, gather(gi))
-        encoded(gi) = innerChain.foldLeft(raw)((b, c) => c.encode(b))
-      }
-      gi += 1
+    val encoded = Array.tabulate(nInner) { gi =>
+      if (skipInner(gi)) null
+      else innerChain.foldLeft(ChunkColumn.encodeElems(dtype, gather(gi), order))(
+        (b, c) => c.encode(b))
     }
-
     val encIndexSize = indexEncodedSize(spec, nInner)
     val dataBase = if (spec.indexAtEnd) 0L else encIndexSize.toLong
-    val idx = ByteBuffer.allocate(16 * nInner).order(indexOrder(spec))
+    val index = new Array[Long](2 * nInner)
     var off = dataBase
-    gi = 0
-    while (gi < nInner) {
-      if (encoded(gi) == null) { idx.putLong(MISSING); idx.putLong(MISSING) }
-      else { idx.putLong(off); idx.putLong(encoded(gi).length.toLong); off += encoded(gi).length }
-      gi += 1
+    encoded.zipWithIndex.foreach { case (e, gi) =>
+      if (e == null) { index(2 * gi) = MISSING; index(2 * gi + 1) = MISSING }
+      else { index(2 * gi) = off; index(2 * gi + 1) = e.length.toLong; off += e.length }
     }
-    val encIdx = spec.indexCodecs.foldLeft(idx.array()) {
-      case (b, CodecSpec("crc32c", _)) => Codecs.Crc32c.encode(b)
-      case (b, _) => b
-    }
-    assert(encIdx.length == encIndexSize)
-
     val dataLen = (off - dataBase).toInt
-    val out = new Array[Byte]((if (spec.indexAtEnd) dataLen + encIndexSize
-      else encIndexSize + dataLen))
-    var pos = if (spec.indexAtEnd) 0 else encIndexSize
-    gi = 0
-    while (gi < nInner) {
-      if (encoded(gi) != null) {
-        System.arraycopy(encoded(gi), 0, out, pos, encoded(gi).length)
-        pos += encoded(gi).length
-      }
-      gi += 1
+    val out = new Array[Byte](dataLen + encIndexSize)
+    var pos = dataBase.toInt
+    encoded.foreach { e =>
+      if (e != null) { System.arraycopy(e, 0, out, pos, e.length); pos += e.length }
     }
-    if (spec.indexAtEnd) System.arraycopy(encIdx, 0, out, dataLen, encIndexSize)
-    else System.arraycopy(encIdx, 0, out, 0, encIndexSize)
+    System.arraycopy(encodeIndex(spec, index), 0, out,
+      if (spec.indexAtEnd) dataLen else 0, encIndexSize)
     out
   }
 }

@@ -326,8 +326,7 @@ object ZarrMaintenance {
         // HEADs, sharded grids are small by design — but the sweep
         // still shards out with everything else.
         val needDocs = metas.zip(geom.roles).exists {
-          case (m, DataCol(_)) =>
-            m.shardingSpec.isDefined && m.dataType != ZarrType.Bytes
+          case (m, DataCol(_)) => ChunkStats.hasInnerStats(m)
           case _ => false
         }
         refresh.foreach { case (lo, hi) =>
@@ -415,14 +414,13 @@ object ZarrMaintenance {
           var written = 0L
           ranges.map { case (segFirst, segLen) => (segFirst until segFirst + segLen).toArray }
             .foreach { seg =>
-            val bounds = ms.map(_ => Vector.newBuilder[Option[ChunkStats.Bound]])
-            val sums = ms.map(_ => Vector.newBuilder[Option[Long]])
+            val segment = new ChunkStats.SegmentRecorder(ms.map(m => m.name -> m.dataType))
             // data-column bytes ride a depth-bounded prefetch window so
             // decode overlaps IO — a blocking GET per chunk per column
             // would serialize the whole range at object-store latency
             val pf = new ChunkPrefetcher[Long,
                 Map[String, (Option[Array[Byte]], Option[ZarrStore.ObjStat])]](
-              seg.toIndexedSeq.map(_.toLong),
+              seg.iterator.map(_.toLong),
               ord => {
                 val idx = g.chunkIndex(ord)
                 ms.flatMap { m =>
@@ -437,8 +435,7 @@ object ZarrMaintenance {
                       // bounds with the NEW object's mtime, defeating
                       // exactly the guard the token exists for
                       val pre =
-                        if (m.shardingSpec.isDefined && m.dataType != ZarrType.Bytes)
-                          st.objectStat(m.name, key)
+                        if (ChunkStats.hasInnerStats(m)) st.objectStat(m.name, key)
                         else None
                       Some(m.name -> ((st.readChunk(m.name, key), pre)))
                     case CoordCol(_, _) => None // tiny + cached below
@@ -451,88 +448,59 @@ object ZarrMaintenance {
                 val extent = g.chunkExtent(idx)
                 val nRows = extent.product
                 val raw = pf.next()
+                val cols = ms.map { m =>
+                  roleOf(m.name) match {
+                    case CoordCol(_, dim) =>
+                      coordCache.computeIfAbsent(s"${m.name}/${idx(dim)}", (_: String) =>
+                        ChunkColumn.decode(m, st.readChunk(m.name, m.chunkKey(Array(idx(dim))))))
+                    case DataCol(_) => ChunkColumn.decode(m, raw(m.name)._1)
+                  }
+                }
+                // bounds/sums over the chunk's OUTPUT rows: the mapping
+                // realizes edge truncation and coordinate broadcast, so
+                // recorded stats agree with what a scan of this chunk emits
+                segment.record { i =>
+                  val mapping = ChunkColumn.mapping(roleOf(ms(i).name), g.targetChunk, extent)
+                  if (mapping == null) (0 until nRows).map(cols(i).get)
+                  else (0 until nRows).map(r => cols(i).get(mapping(r)))
+                }
                 // sharded data columns additionally record per-INNER-chunk
                 // bounds into one `_stats/i<ord>.json` doc per shard, so
                 // data-column predicates can mask inner chunks before any
-                // shard byte is fetched (see ChunkStats inner-doc notes)
-                val innerCols = Seq.newBuilder[ChunkStats.InnerColInput]
-                ms.zipWithIndex.foreach { case (m, i) =>
-                  val role = roleOf(m.name)
-                  val col = role match {
-                    case CoordCol(_, dim) =>
-                      val ck = s"${m.name}/${idx(dim)}"
-                      val cached = coordCache.get(ck)
-                      if (cached != null) cached
-                      else {
-                        val c = ChunkColumn.decode(
-                          m, st.readChunk(m.name, m.chunkKey(Array(idx(dim)))))
-                        coordCache.put(ck, c)
-                        c
-                      }
-                    case DataCol(_) => ChunkColumn.decode(m, raw(m.name)._1)
-                  }
-                  // bounds/sums over the chunk's OUTPUT rows: the mapping
-                  // realizes edge truncation and coordinate broadcast, so
-                  // recorded stats agree with what a scan of this chunk emits
-                  val mapping = ChunkColumn.mapping(role, g.targetChunk, extent)
-                  val vals =
-                    if (mapping == null) (0 until nRows).map(col.get)
-                    else (0 until nRows).map(r => col.get(mapping(r)))
-                  bounds(i) += ChunkStats.minMaxBound(m.dataType, vals)
-                  sums(i) += ChunkStats.chunkSum(m.dataType, vals)
-                  role match {
-                    case DataCol(_) if m.shardingSpec.isDefined &&
-                        m.dataType != ZarrType.Bytes =>
-                      val spec = m.shardingSpec.get
+                // shard byte is fetched (see ChunkStats inner-doc notes).
+                // Freshness tokens: index checksum from the bytes already
+                // in hand; mtime from a HEAD that must AGREE with the
+                // pre-GET stat captured in the prefetch lambda — a swap
+                // anywhere inside the GET..HEAD bracket (same-length
+                // encodings included) makes pre != post, and the column
+                // is then SKIPPED for this ordinal: its bounds describe
+                // bytes the store no longer holds, and even a
+                // length-only record would let a constant-length rewrite
+                // pass the guard. A stably absent shard records
+                // fill-value bounds, and the reader's guard requires
+                // live absence.
+                val ic = ms.indices.flatMap { i =>
+                  val m = ms(i)
+                  roleOf(m.name) match {
+                    case DataCol(_) if ChunkStats.hasInnerStats(m) =>
                       val (bytes, preStat) = raw(m.name)
-                      // freshness tokens: index checksum from the bytes
-                      // already in hand; mtime from a HEAD that must
-                      // AGREE with the pre-GET stat captured in the
-                      // prefetch lambda — a swap anywhere inside the
-                      // GET..HEAD bracket (same-length encodings
-                      // included) makes pre != post, and the column is
-                      // then SKIPPED for this ordinal: its bounds
-                      // describe bytes the store no longer holds, and
-                      // even a length-only record would let a
-                      // constant-length rewrite pass the guard
-                      val key = mani.chunkKeyOf(m, idx, ord)
-                      val postStat = st.objectStat(m.name, key)
-                      bytes match {
-                        case Some(b) if postStat == preStat &&
-                            postStat.exists(_.len == b.length.toLong) =>
-                          innerCols += ChunkStats.InnerColInput(
-                            m.name, m.dataType, spec.innerShape,
-                            b.length.toLong, postStat.get.mtime,
-                            Sharding.encodedIndexSum(spec, b, g.targetChunk),
-                            ChunkStats.innerBounds(col.get, m.dataType,
-                              spec.innerShape.toArray, g.targetChunk, extent),
-                            etag = postStat.get.etag)
-                        case None if preStat.isEmpty && postStat.isEmpty =>
-                          // stably absent shard: fill-value bounds, and
-                          // the reader's guard requires live absence
-                          innerCols += ChunkStats.InnerColInput(
-                            m.name, m.dataType, spec.innerShape,
-                            -1L, -1L, -1L,
-                            ChunkStats.innerBounds(col.get, m.dataType,
-                              spec.innerShape.toArray, g.targetChunk, extent))
-                        case _ => () // swapped/appeared mid-analyze: decline
-                      }
-                    case _ => ()
+                      val postStat = st.objectStat(m.name, mani.chunkKeyOf(m, idx, ord))
+                      val stable = postStat == preStat &&
+                        bytes.fold(postStat.isEmpty)(b => postStat.exists(_.len == b.length.toLong))
+                      if (!stable) None // swapped/appeared mid-analyze: decline
+                      else Some(ChunkStats.innerCol(m, bytes, postStat, cols(i).get, extent))
+                    case _ => None
                   }
                 }
-                val ic = innerCols.result()
                 if (ic.nonEmpty)
                   st.writeText(ChunkStats.innerKey(ord),
                     ChunkStats.encodeInner(g.targetShape.toSeq, g.dimIdentity,
                       g.targetChunk.toSeq, ic))
               }
             } finally pf.close()
-            val cols = ms.zipWithIndex.map { case (m, i) =>
-              (m.name, m.dataType, bounds(i).result(), sums(i).result())
-            }
             st.writeText(
               ChunkStats.segmentKey(seg.head, seg.length),
-              ChunkStats.encodeBounds(cols, gridShape, dimIdent))
+              segment.doc(gridShape, dimIdent))
             written += seg.length
           }
           Iterator.single(written)

@@ -174,6 +174,21 @@ final case class ZarrStore(root: String, hadoopConfPairs: Seq[(String, String)] 
         }
     }
 
+  /** The committed state a writer extends: array metadata and chunk
+    * manifest from ONE root read ([[readRootSnapshot]]), per-array
+    * documents only when the store has no consolidated root. A commit
+    * writes the per-array documents first and the root last, so after a
+    * lost root write a per-array shape runs ahead of the manifest;
+    * extending from it would place the next rows past a gap that reads
+    * as fill values. No metas for an absent or array-less store. */
+  def committedView(): (Seq[ZarrArrayMeta], ChunkManifest) =
+    readRootSnapshot().getOrElse {
+      val names =
+        try listArrays()
+        catch { case _: ZarrException => Seq.empty }
+      (names.map(readMeta), readChunkManifest())
+    }
+
   def delete(): Unit = if (fs.exists(rootPath)) fs.delete(rootPath, true)
 
   /** Entries directly under the root as (name, isArrayDir), or None when

@@ -1,12 +1,10 @@
 package graft.zarr
 
-import java.nio.{ByteBuffer, ByteOrder}
-
 /** Minimal Zarr v3 writer: full chunks (edge chunks padded with fill, as
   * the v3 spec requires), little-endian `bytes` codec plus any configured
   * bytes→bytes codecs. Mirrors the reference's test-only writer
-  * (`/root/reference/crates/arrow-zarr/src/lib.rs:170-240`) and seeds a
-  * future DSv2 write path.
+  * (`lib.rs:170-240`); chunks are encoded by [[ChunkColumn.encode]], the
+  * one encoder every writer shares.
   */
 object ZarrWriter {
 
@@ -119,32 +117,14 @@ object ZarrWriter {
       metaJson(dtype, shape, chunkShape, fillJson, dimensionNames, chain, separator, timeMeta))
     store.writeMeta(name, meta.sourceJson)
 
-    val ndim = shape.length
     val grid = meta.gridShape
-    val shardSpec = Sharding.specOf(meta.codecs)
-    // top-level bytes codecs apply only on the unsharded path (a shard's
-    // chain lives inside sharding_indexed and is applied per inner chunk)
-    lazy val codecList = Codecs.bytesCodecs(meta.codecs,
-      if (dtype.byteWidth > 0) dtype.byteWidth else 1)
-    // unsharded transpose: store each chunk dimension-permuted
-    lazy val tperm = meta.transposePerm
-
-    // iterate all chunk indices
     val nChunks = grid.map(_.toLong).product
     var ord = 0L
     while (ord < nChunks) {
       val idx = ScanGeometry.indexOf(ord, grid)
-
-      if (!skipChunks(idx.toSeq)) {
-        val chunkVals = extractChunk(values, shape.toArray, chunkShape.toArray, idx, meta.fillValue)
-        val enc = shardSpec match {
-          case Some(sp) => Sharding.encode(dtype, chunkShape, sp, chunkVals)
-          case None =>
-            val stored = tperm.map(Codecs.transposeValues(chunkVals, _)).getOrElse(chunkVals)
-            codecList.foldLeft(encodeArray(dtype, stored))((b, c) => c.encode(b))
-        }
-        store.writeChunk(name, meta.chunkKey(idx), enc)
-      }
+      if (!skipChunks(idx.toSeq))
+        store.writeChunk(name, meta.chunkKey(idx), ChunkColumn.encode(meta,
+          extractChunk(values, shape.toArray, chunkShape.toArray, idx, meta.fillValue)))
       ord += 1
     }
   }
@@ -183,39 +163,6 @@ object ZarrWriter {
       r += 1
     }
     out
-  }
-
-  private[zarr] def encodeArray(dtype: ZarrType, vals: Array[Any]): Array[Byte] = {
-    if (dtype == ZarrType.Str)
-      return ChunkColumn.encodeVlenUtf8(vals.map(_.toString))
-    if (dtype == ZarrType.Bytes)
-      // null → empty payload (Bytes fill semantics), as on the Str path
-      return ChunkColumn.encodeVlenBytes(vals.map {
-        case null => Array.emptyByteArray
-        case b: Array[Byte] => b
-        case other => throw new ZarrException(
-          s"binary array element is not Array[Byte]: $other")
-      })
-    val bb = ByteBuffer.allocate(vals.length * dtype.byteWidth)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    dtype match {
-      case ZarrType.Bool => vals.foreach(v => bb.put(if (v.asInstanceOf[Boolean]) 1.toByte else 0.toByte))
-      case ZarrType.Int8 | ZarrType.UInt8 => vals.foreach(v => bb.put(num(v).byteValue()))
-      case ZarrType.Int16 | ZarrType.UInt16 => vals.foreach(v => bb.putShort(num(v).shortValue()))
-      case ZarrType.Int32 | ZarrType.UInt32 => vals.foreach(v => bb.putInt(num(v).intValue()))
-      case ZarrType.Int64 | ZarrType.UInt64 =>
-        vals.foreach(v => bb.putLong(num(v).longValue()))
-      case ZarrType.Float32 => vals.foreach(v => bb.putFloat(num(v).floatValue()))
-      case ZarrType.Float64 => vals.foreach(v => bb.putDouble(num(v).doubleValue()))
-      case ZarrType.Str | ZarrType.Bytes => () // handled above (vlen framings)
-    }
-    bb.array()
-  }
-
-  private def num(v: Any): Number = v match {
-    case n: Number => n
-    case b: Boolean => if (b) 1 else 0
-    case other => throw new ZarrException(s"not numeric: $other")
   }
 
   /** The reference's canonical fixture (`lib.rs:287-333`): `lat` 1-D len 8

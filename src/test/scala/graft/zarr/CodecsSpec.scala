@@ -365,11 +365,9 @@ class CodecsSpec extends AnyFunSuite {
   test("null binary elements encode as the empty payload (Bytes fill), like null Str -> \"\"") {
     // ADVICE r20: a null element must map to the Bytes fill (empty
     // payload), mirroring the Str path — not throw per-element
-    val viaWriter = ZarrWriter.encodeArray(ZarrType.Bytes,
+    val viaEncoder = ChunkColumn.encodeElems(ZarrType.Bytes,
       Array[Any](null, Array[Byte](1, 2, 3)))
-    val viaDsv2 = graft.sources.ZarrDataWriter.encode(ZarrType.Bytes,
-      Seq(null, Array[Byte](1, 2, 3)))
-    for (framed <- Seq(viaWriter, viaDsv2)) {
+    for (framed <- Seq(viaEncoder)) {
       val back = ChunkColumn.decodeVlenBytes(framed)
       assert(back.length == 2)
       assert(back(0).isEmpty, "null must decode as the empty payload")
@@ -377,7 +375,7 @@ class CodecsSpec extends AnyFunSuite {
     }
     // a non-binary element still refuses loudly
     intercept[ZarrException] {
-      ZarrWriter.encodeArray(ZarrType.Bytes, Array[Any]("nope"))
+      ChunkColumn.encodeElems(ZarrType.Bytes, Array[Any]("nope"))
     }
   }
 }

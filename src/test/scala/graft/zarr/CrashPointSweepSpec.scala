@@ -84,6 +84,10 @@ object CrashFileSystem {
   *    root: readers still see the old root, and the re-run's torn-commit
   *    heal re-consolidates it before refusing.
   *
+  * Two tabular cases sweep the DSv2 append (aligned and staged): each
+  * crash must leave the old rows, and a re-run of the same batch
+  * exactly the new ones.
+  *
   * After each maintenance crash the store reads exactly as before the
   * run, scans and metadata-answered aggregates alike. A crashed
   * `compactStats` is healed by re-running it plus an incremental
@@ -248,6 +252,84 @@ class CrashPointSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
             s"$at: shard $s reads neither old nor new: $got")
         }
       })
+  }
+
+  /** Tabular rows [from, until) in two equal partitions: (id, v = id/2). */
+  private def tabRows(from: Int, until: Int): DataFrame =
+    spark.range(from, until, 1, 2).select(col("id"), (col("id") * 0.5).as("v"))
+
+  private def tabScan(url: String): Seq[(Long, Double)] =
+    spark.read.format("zarr").load(url).select("id", "v").collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq.sorted
+
+  /** One tabular append case: a 20-row store, then a 20-row append, in
+    * chunks of 5 — `aligned` on the rows_per_partition path (final chunk
+    * keys), else on the staged path (task-scoped keys the commit maps
+    * through the root manifest), sharded with write-time inner docs.
+    * The crash sweep: every crash leaves exactly the old rows (the root
+    * is the commit point and is written last); re-running the same
+    * batch gives exactly the new rows — no fill rows from a base taken
+    * off a per-array document the lost root never committed, and no
+    * duplicates; vacuum then leaves no `c.part*` name the root manifest
+    * does not reference. */
+  private def tabularAppendCase(name: String, aligned: Boolean): Unit = {
+    def write(df: DataFrame, url: String, mode: String): Unit = {
+      val w = df.write.format("zarr").mode(mode).option("chunk_size", "5")
+      (if (aligned) w.option("rows_per_partition", "10") else w.option("inner_chunk_size", "1"))
+        .save(url)
+    }
+    val template = Paths.get(base, s"$name-template")
+    write(tabRows(0, 20), template.toString, "overwrite")
+    val oldRows = tabScan(template.toString)
+    val newRows = (0L until 40L).map(i => (i, i * 0.5))
+    assert(oldRows == newRows.take(20))
+    val run: String => Unit = url => write(tabRows(20, 40), url, "append")
+
+    val probe = Paths.get(base, s"$name-probe")
+    copyTree(template, probe)
+    CrashFileSystem.arm(Long.MaxValue)
+    run(s"graftcrash://$probe")
+    val calls = CrashFileSystem.count
+    CrashFileSystem.disarm()
+    assert(tabScan(probe.toString) == newRows, s"$name: uninterrupted append")
+    assert(calls >= 5, s"$name: only $calls mutations — the sweep would prove little")
+
+    def assertTabAggs(url: String, rows: Seq[(Long, Double)], at: String): Unit = {
+      val r = spark.read.format("zarr").load(url)
+        .agg(count(lit(1)), sum("id"), min("v"), max("v")).collect()(0)
+      assert(r.getLong(0) == rows.length && r.getLong(1) == rows.map(_._1).sum &&
+        r.getDouble(2) == rows.map(_._2).min && r.getDouble(3) == rows.map(_._2).max,
+        s"$at: aggregates $r disagree with the scan")
+    }
+    (1L to calls).foreach { n =>
+      val dir = Paths.get(base, s"$name-crash$n")
+      copyTree(template, dir)
+      val url = s"graftcrash://$dir"
+      val at = s"$name, crash at mutation $n of $calls"
+      CrashFileSystem.arm(n)
+      val crashed = try { run(url); false } catch { case _: Exception => true }
+      CrashFileSystem.disarm()
+      assert(crashed, s"$at: the append survived its injected crash")
+      assert(tabScan(url) == oldRows, s"$at: the store does not read as before")
+      assertTabAggs(url, oldRows, at)
+
+      run(url)
+      assert(tabScan(url) == newRows, s"$at: the re-run did not give exactly the new rows")
+      assertTabAggs(url, newRows, s"$at, after re-run")
+      ZarrMaintenance.vacuum(spark, url).collect()
+      assert(tabScan(url) == newRows, s"$at: vacuum changed the rows")
+      val referenced = ZarrStore(dir.toString).readChunkManifest().parts.map(_._2).toSet
+      val stray = stagingLeftovers(dir).filterNot(p => referenced(Paths.get(p).getFileName.toString))
+      assert(stray.isEmpty, s"$at: staging the manifest does not reference survived vacuum: $stray")
+    }
+  }
+
+  test("tabular aligned append: every crash leaves the old rows; a re-run gives exactly the new") {
+    tabularAppendCase("tab-aligned", aligned = true)
+  }
+
+  test("tabular staged append: every crash leaves the old rows; a re-run gives exactly the new") {
+    tabularAppendCase("tab-staged", aligned = false)
   }
 
   private def aggs(url: String): org.apache.spark.sql.Row =
