@@ -787,12 +787,12 @@ object ZarrRoundtrip {
         // (4) lose an inner doc (a foreign deletion / partial sync);
         // incremental analyze must re-cover and re-emit it
         val zs = graft.zarr.ZarrStore(path)
-        val ords = zs.listInnerStatsDocOrds()
+        val ords = zs.sidecar().innerOrds
         require(ords.nonEmpty, "q140: sharded store must carry inner docs")
         zs.deleteKey(graft.zarr.ChunkStats.innerKey(ords.head)): Unit
         require(graft.zarr.ZarrMaintenance.analyze(s, path, incremental = true) >= 1,
           "q140 analyze: the doc hole must trigger re-analysis")
-        require(zs.listInnerStatsDocOrds().contains(ords.head),
+        require(zs.sidecar().innerOrds.contains(ords.head),
           "q140 analyze: the deleted inner doc must be re-emitted")
         val healed = stat()
         require(healed.getDouble(7) == 1.0,
@@ -937,7 +937,7 @@ object ZarrRoundtrip {
           .save(path)
       }
       val zs = graft.zarr.ZarrStore(path)
-      require(zs.readChunkManifest().parts.nonEmpty,
+      require(zs.committedView().manifest.parts.nonEmpty,
         "q142 ingest: staged appends must accumulate manifest parts")
       require(zs.readMeta("text").shardingSpec.isDefined,
         "q142 ingest: the store must be sharded (inner_chunk_size)")

@@ -508,7 +508,7 @@ object ZarrCubeWrite {
     val swapHi = math.min(ordHi, committedHi)
     try {
       // ---- 3. retire the window's sidecar docs ----
-      retireStats(store, ordLo, retireHi)
+      retireStats(store, ordLo, retireHi, metas, writeId)
 
       // ---- 4. write every window chunk, and the changed coordinate chunks ----
       writeSlab(kept.map(_.unionByName(df)).getOrElse(df),
@@ -546,15 +546,14 @@ object ZarrCubeWrite {
       }
 
       // ---- 7. promote the staged stats: their chunks are final and visible ----
-      if (stageStats) promoteStagedSegments(store, writeId, dataMetas, grid)
+      if (stageStats) promoteStaged(store, writeId, dataMetas, grid)
     } catch {
       case e: Throwable =>
         // ---- 8. abort ----
         def quietly(f: => Unit): Unit = try f catch { case _: Throwable => () }
         if (fresh) quietly(if (ownRoot) store.delete() else store.deleteRootContents())
         else {
-          quietly(retireStats(store, ordLo, retireHi))
-          quietly(store.cleanStatsStaging(writeId))
+          quietly(retireStats(store, ordLo, retireHi, metas, writeId))
           quietly((dataMetas :+ coordMetas.head).foreach(m => store.cleanStaging(m.name, stageDir)))
         }
         throw e
@@ -562,35 +561,41 @@ object ZarrCubeWrite {
   }
   // scalastyle:on method.length
 
-  /** Retire every sidecar doc describing chunk ordinals in [lo, hi):
+  /** Retire, from ONE `_stats/` listing, every sidecar doc describing
+    * chunk ordinals in [lo, hi), and write `writeId`'s staged docs:
     * per-inner-chunk docs are deleted, and so is every stats segment
     * intersecting the window. The walk is over the RAW listing:
     * overlap-suppressed files are exactly a crashed attempt's leftovers
     * whose ordinals are being reused, and skipping them would let them
     * suppress the fresh segments. An UNSUPPRESSED straddler keeps its
-    * out-of-window pieces as narrower segments, so coverage outside the
-    * window (zero-GET aggregates) survives; a suppressed one is
-    * ambiguous everywhere and goes whole, as does an untrimmable doc —
-    * which only declines coverage. */
-  private def retireStats(store: ZarrStore, lo: Long, hi: Long): Unit = {
-    store.listInnerStatsDocOrds().foreach { o =>
-      if (o >= lo && o < hi) store.deleteKey(ChunkStats.innerKey(o))
-    }
-    val raw = store.listStatsSegmentsRaw()
-    val unsuppressed = ZarrStore.unsuppressedSegments(raw).toSet
-    raw.foreach { case (first, n) =>
+    * out-of-window pieces as narrower segments, re-encoded from the
+    * parsed segment under its own grid signature, so coverage outside
+    * the window (zero-GET aggregates) survives; a suppressed one is
+    * ambiguous everywhere and goes whole, as does an unparseable or
+    * grid-less doc — which only declines coverage. */
+  private def retireStats(
+      store: ZarrStore, lo: Long, hi: Long, metas: Seq[ZarrArrayMeta], writeId: String): Unit = {
+    val listing = store.sidecar()
+    listing.innerOrds.foreach(o => if (o >= lo && o < hi) store.deleteKey(ChunkStats.innerKey(o)))
+    listing.staged.filter(_.ofWrite(writeId)).foreach(st => store.deleteKey(st.key))
+    val unsuppressed = listing.unsuppressed.toSet
+    val ztOf: String => Option[ZarrType] = n => metas.find(_.name == n).map(_.dataType)
+    listing.raw.foreach { case (first, n) =>
       if (first < hi && first + n > lo) {
         val key = ChunkStats.segmentKey(first, n)
-        val straddles = unsuppressed((first, n)) && (first < lo || first + n > hi)
-        val doc = if (straddles) store.readText(key) else None
+        val straddler =
+          if (!unsuppressed((first, n)) || (first >= lo && first + n <= hi)) None
+          else store.readText(key).flatMap(doc =>
+            try Some(ChunkStats.parse(first, n, doc, ztOf)) catch { case _: Exception => None })
         store.deleteKey(key)
-        doc.flatMap(parseSegment).foreach { parsed =>
-          if (first < lo)
-            trimSegment(parsed.deepCopy(), (lo - first).toInt, 0)
-              .foreach(store.writeText(ChunkStats.segmentKey(first, (lo - first).toInt), _))
-          if (first + n > hi)
-            trimSegment(parsed, (first + n - hi).toInt, (hi - first).toInt)
-              .foreach(store.writeText(ChunkStats.segmentKey(hi, (first + n - hi).toInt), _))
+        straddler.flatMap(seg => seg.grid.map(seg -> _)).foreach { case (seg, (grid, dims)) =>
+          def keep(from: Long, until: Long): Unit = if (until > from) {
+            val len = (until - from).toInt
+            store.writeText(ChunkStats.segmentKey(from, len),
+              ChunkStats.mergeSegments(from, len, Seq(seg), ztOf, grid.toSeq, dims.toSeq))
+          }
+          keep(first, lo)
+          keep(hi, first + n)
         }
       }
     }
@@ -861,7 +866,9 @@ object ZarrCubeWrite {
     val trailingGrid = (1 until head.ndim).foldLeft(1L) { (a, d) =>
       a * ((head.shape(d) + head.chunkShape(d) - 1) / head.chunkShape(d))
     }
-    store.cleanStatsSegmentsFrom(grid0 * trailingGrid)
+    store.sidecar().raw.foreach { case (first, n) =>
+      if (first >= grid0 * trailingGrid) store.deleteKey(ChunkStats.segmentKey(first, n))
+    }
     healed
   }
 
@@ -930,10 +937,9 @@ object ZarrCubeWrite {
     (fromChunk until nChunks).flatMap { ci =>
       val real = axis.slice(ci * cs, ci * cs + cs)
       // a foreign store may shard even its coordinate axes; pack the
-      // padded chunk exactly like the data-array kernel does — incl.
-      // omitting all-padding inner chunks of the final edge shard
+      // padded chunk exactly like the data-array kernel does
       val packed = ChunkColumn.encode(m, real ++ Seq.fill(cs - real.length)(m.fillValue),
-        skipInnerOf(m, Array(real.length)))
+        Seq(real.length))
       val key = m.chunkKey(Array(ci))
       if (ci < stageBelow) {
         store.writeChunk(m.name, s"$stageDir/$key", packed)
@@ -945,98 +951,35 @@ object ZarrCubeWrite {
     }
   }
 
-  /** Promote one write's staged cube segments to final keys —
-    * metadata-sized text copies (the 1-D staged-commit pattern,
-    * `ZarrWrite` commit). Called only once every chunk the segments
-    * describe is durable at its final key AND visible under the shape
-    * the segments were computed for; a crash mid-promotion leaves a mix
-    * of promoted and staged docs, which only declines coverage (staged
-    * `c.part*` names are invisible to readers and reclaimed by
-    * cleanStatsStaging / vacuum). */
-  private def promoteStagedSegments(
+  /** Promote one write's staged sidecar docs to their final keys —
+    * metadata-sized text copies found by ONE `_stats/` LIST. Called only
+    * once every chunk the docs describe is durable at its final key AND
+    * visible under the shape the docs were computed for; a crash
+    * mid-promotion leaves a mix of promoted and staged docs, which only
+    * declines coverage (staged `c.part*` names are invisible to readers
+    * and reclaimed by a re-run's retire or vacuum). */
+  private def promoteStaged(
       store: ZarrStore, writeId: String,
-      dataMetas: Seq[ZarrArrayMeta], grid: Seq[Int]): Unit = {
-    store.listCubeStagedSegments(writeId).foreach { case (first, n) =>
-      val sk = ChunkStats.cubeStagingKey(writeId, first, n)
-      store.readText(sk).foreach(doc =>
-        store.writeText(ChunkStats.segmentKey(first, n), doc))
-      store.deleteKey(sk)
-    }
-    store.listCubeStagedInnerDocs(writeId).foreach { ord =>
-      val sk = ChunkStats.cubeInnerStagingKey(writeId, ord)
-      store.readText(sk).foreach { doc =>
-        // stamp each column's final-object mtime: the staged doc cannot
-        // know it (the swap's copy fallback creates a new object), and
-        // without it the freshness guard degrades to length-only — the
-        // exact hole constant-length encodings exploit. One HEAD per
-        // promoted column, bounded by the staged window size.
-        val idx = ScanGeometry.indexOf(ord, grid.toArray)
-        val keyOf = dataMetas.map(m => m.name -> m.chunkKey(idx)).toMap
-        store.writeText(ChunkStats.innerKey(ord), ChunkStats.withInnerMtimes(doc,
-          name => keyOf.get(name).flatMap(k => store.objectStat(name, k))))
-      }
-      store.deleteKey(sk)
-    }
-  }
-
-  /** Parse a stats-segment document for trimming. Returns None — caller
-    * drops the doc whole — when it is not a grid-signed cube segment
-    * (reinterpreting a malformed doc could misdescribe data). */
-  private def parseSegment(
-      doc: String): Option[com.fasterxml.jackson.databind.node.ObjectNode] =
-    try {
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val root = mapper.readTree(doc).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      val g = root.get("grid")
-      val cols = root.get("cols")
-      if (g == null || !g.isArray || cols == null || !cols.isObject) None
-      else Some(root)
-    } catch { case _: Exception => None }
-
-  /** Slice a parsed stats-segment document to the `keepLen` chunks
-    * starting at segment-relative position `fromRel`: per-chunk arrays
-    * (min/max/sum) are sliced, `approx` indices filtered and re-based,
-    * everything else (string-order marker, grid signature, dims) carried
-    * verbatim. Mutates `root` (callers keeping both straddle pieces pass
-    * a deepCopy for the first). Returns None — caller drops the piece —
-    * when an array disagrees with the name-coded segment length. */
-  private def trimSegment(
-      root: com.fasterxml.jackson.databind.node.ObjectNode,
-      keepLen: Int, fromRel: Int): Option[String] = {
-    if (keepLen <= 0) return None
-    try {
-      val cols = root.get("cols")
-      val it = cols.fields()
-      while (it.hasNext) {
-        val e = it.next()
-        val c = e.getValue.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-        def slice(name: String): Boolean = {
-          val arr = c.get(name)
-          if (arr == null) true // absent array (e.g. no sums) is fine
-          else if (!arr.isArray || arr.size() < fromRel + keepLen) false
-          else {
-            val kept = (fromRel until fromRel + keepLen).map(arr.get)
-            val out = c.putArray(name)
-            kept.foreach(out.add)
-            true
-          }
-        }
-        if (!slice("min") || !slice("max") || !slice("sum")) return None
-        val ap = c.get("approx")
-        if (ap != null) {
-          if (!ap.isArray) return None
-          val kept = (0 until ap.size()).map(ap.get(_).asInt())
-            .filter(i => i >= fromRel && i < fromRel + keepLen).map(_ - fromRel)
-          if (kept.isEmpty) c.remove("approx")
-          else {
-            val out = c.putArray("approx")
-            kept.foreach(out.add)
-          }
+      dataMetas: Seq[ZarrArrayMeta], grid: Seq[Int]): Unit =
+    store.sidecar().staged.filter(_.ofWrite(writeId)).foreach { st =>
+      store.readText(st.key).foreach { doc =>
+        st.target.foreach {
+          case fin @ ChunkStats.InnerFile(ord) =>
+            // stamp each column's final-object mtime: the staged doc
+            // cannot know it (the swap's copy fallback creates a new
+            // object), and without it the freshness guard degrades to
+            // length-only — the exact hole constant-length encodings
+            // exploit. One HEAD per promoted column, bounded by the
+            // staged window size.
+            val idx = ScanGeometry.indexOf(ord, grid.toArray)
+            val keyOf = dataMetas.map(m => m.name -> m.chunkKey(idx)).toMap
+            store.writeText(fin.key, ChunkStats.withInnerMtimes(doc,
+              name => keyOf.get(name).flatMap(k => store.objectStat(name, k))))
+          case fin => store.writeText(fin.key, doc)
         }
       }
-      Some(new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(root))
-    } catch { case _: Exception => None }
-  }
+      store.deleteKey(st.key)
+    }
 
   /** One coordinate axis as a global sorted distinct, with the cube
     * layout's validity checks (bounded, non-NULL, finite). */
@@ -1092,7 +1035,7 @@ object ZarrCubeWrite {
       stageBelowOrd: Long,
       stageDir: String,
       // when nonEmpty, this slab's stats segments are staged too
-      // (ChunkStats.cubeStagingKey) — a durable FINAL-key segment must
+      // (ChunkStats.stagingKey) — a durable FINAL-key segment must
       // never describe chunk bytes that are still at staging keys; the
       // caller promotes them after the chunk swap
       stageStatsWriteId: String): Unit = {
@@ -1221,7 +1164,8 @@ object ZarrCubeWrite {
         // cannot see yet (the caller promotes after the chunk swap)
         val key =
           if (stageStatsWriteId.nonEmpty)
-            ChunkStats.cubeStagingKey(stageStatsWriteId, segFirst, segment.chunks)
+            ChunkStats.stagingKey(stageStatsWriteId,
+              ChunkStats.SegmentFile(segFirst, segment.chunks))
           else ChunkStats.segmentKey(segFirst, segment.chunks)
         store.writeText(key, segment.doc(grid.toSeq, dims.toSeq))
       }
@@ -1259,7 +1203,7 @@ object ZarrCubeWrite {
       while (c < ncols) {
         val m = metas(c)
         val vals = buf(c)
-        val packed = ChunkColumn.encode(m, vals, skipInnerOf(m, extent))
+        val packed = ChunkColumn.encode(m, vals, extent.toSeq)
         // a committed object's rewrite is staged, never truncated in
         // place: the caller swaps it in only after the slab is durable
         val key =
@@ -1280,7 +1224,7 @@ object ZarrCubeWrite {
       if (innerCols.nonEmpty) {
         val ikey =
           if (stageStatsWriteId.nonEmpty)
-            ChunkStats.cubeInnerStagingKey(stageStatsWriteId, curOrd)
+            ChunkStats.stagingKey(stageStatsWriteId, ChunkStats.InnerFile(curOrd))
           else ChunkStats.innerKey(curOrd)
         store.writeText(ikey, ChunkStats.encodeInner(
           shape.toSeq, dims.toSeq, chunkShape.toSeq, innerCols))
@@ -1331,21 +1275,6 @@ object ZarrCubeWrite {
     flushSegment()
     (rows, chunks)
   }
-
-  /** Inner chunks of an edge shard of `m` that lie ENTIRELY beyond the
-    * array extent (pure fill padding): omitted from the shard and
-    * indexed absent — no reader ever requests them, and the object
-    * shrinks. Empty for unsharded arrays and interior chunks. */
-  private def skipInnerOf(m: ZarrArrayMeta, extent: Array[Int]): Set[Int] =
-    m.shardingSpec match {
-      case Some(sp) if !extent.sameElements(m.chunkShape) =>
-        val ig = Array.tabulate(extent.length)(d => m.chunkShape(d) / sp.innerShape(d))
-        (0 until ig.product).filter { gi =>
-          ScanGeometry.indexOf(gi, ig).zipWithIndex
-            .exists { case (id, d) => id.toLong * sp.innerShape(d) >= extent(d) }
-        }.toSet
-      case _ => Set.empty
-    }
 
   /** Output rows of one chunk for coordinate `d`: the axis slice repeated
     * with the broadcast multiplicity, as a strided O(1)-memory view. */

@@ -76,9 +76,18 @@ class ZarrDataSource extends TableProvider with DataSourceRegister {
     ZarrStore(path, hadoopPairs ++ rangedPairs)
   }
 
+  /** The committed view [[inferSchema]] read, for the [[getTable]] of the
+    * same `load()`: Spark resolves a table through one provider instance,
+    * inferSchema then getTable, and both must see ONE root read. getTable
+    * takes it and clears it, so a view never outlives one load(). */
+  private var pendingView: Option[(String, ZarrStore.View)] = None
+
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val store = storeFor(options)
-    ZarrDataSource.schemaOf(ZarrDataSource.metasOf(store))
+    val view = store.committedView()
+    val schema = ZarrDataSource.schemaOf(view.arrays)
+    pendingView = Some(store.root -> view)
+    schema
   }
 
   override def getTable(
@@ -95,14 +104,20 @@ class ZarrDataSource extends TableProvider with DataSourceRegister {
     // options (every read, every tabular write) keep the pure-V2 path
     val cubeWrite = options.containsKey("dims") ||
       options.containsKey("append_dim") || options.containsKey("region_dim")
+    val pending = pendingView.collect { case (root, v) if root == store.root => v }
+    pendingView = None
     // a missing/empty store with a caller-supplied schema is a WRITE
     // target (df.write.format("zarr").save(path))
-    val metas =
-      try ZarrDataSource.metasOf(store)
-      catch {
-        case _: ZarrException if schema != null && schema.nonEmpty => Seq.empty[ZarrArrayMeta]
+    val (metas, manifest) =
+      try {
+        val view = pending.getOrElse(store.committedView())
+        (view.arrays, view.manifest)
+      } catch {
+        case _: ZarrException if schema != null && schema.nonEmpty =>
+          (Seq.empty[ZarrArrayMeta], ChunkManifest.empty)
       }
-    if (metas.isEmpty) return new ZarrTable(store, schema, Seq.empty, cubeWrite = cubeWrite)
+    if (metas.isEmpty)
+      return new ZarrTable(store, schema, Seq.empty, manifest, cubeWrite = cubeWrite)
     val inferred = ZarrDataSource.schemaOf(metas)
     // a user-supplied schema is a column selection + type assertion for
     // READS (reference `table_provider.rs:147-163`) — but the same entry
@@ -110,7 +125,7 @@ class ZarrDataSource extends TableProvider with DataSourceRegister {
     // is only an error if the table is then scanned (validated lazily in
     // newScanBuilder)
     if (schema == null || schema.isEmpty || schema == inferred)
-      return new ZarrTable(store, inferred, metas, cubeWrite = cubeWrite)
+      return new ZarrTable(store, inferred, metas, manifest, cubeWrite = cubeWrite)
     val byName = inferred.fields.map(f => f.name -> f).toMap
     val mismatch: Option[String] = schema.fields.iterator.flatMap { f =>
       byName.get(f.name) match {
@@ -122,11 +137,13 @@ class ZarrDataSource extends TableProvider with DataSourceRegister {
       }
     }.take(1).toSeq.headOption
     mismatch match {
-      case Some(err) => new ZarrTable(store, schema, metas, Some(err), cubeWrite = cubeWrite)
+      case Some(err) =>
+        new ZarrTable(store, schema, metas, manifest, Some(err), cubeWrite = cubeWrite)
       case None =>
         val effective = StructType(schema.fields.map(f => byName(f.name)))
         val selected = effective.fields.map(_.name).toSet
-        new ZarrTable(store, effective, metas.filter(m => selected(m.name)), cubeWrite = cubeWrite)
+        new ZarrTable(store, effective, metas.filter(m => selected(m.name)), manifest,
+          cubeWrite = cubeWrite)
     }
   }
 }
@@ -147,13 +164,11 @@ object ZarrDataSource {
       StructField(m.name, m.dataType.sparkType, nullable = true, metadata = md)
     })
 
-  /** All array metadata of a store: ONE root-document read on
-    * consolidated stores (ZarrWrite output), falling back to the
-    * reference's list-then-GET-per-array shape (`config.rs:201-258`)
-    * everywhere else. */
-  def metasOf(store: ZarrStore): Seq[ZarrArrayMeta] =
-    store.readConsolidatedMetas()
-      .getOrElse(store.listArrays().map(store.readMeta))
+  /** All array metadata of a store ([[ZarrStore.committedView]]): ONE
+    * root-document read on consolidated stores (ZarrWrite output),
+    * falling back to the reference's list-then-GET-per-array shape
+    * (`config.rs:201-258`) everywhere else. */
+  def metasOf(store: ZarrStore): Seq[ZarrArrayMeta] = store.committedView().arrays
 
   /** An option's value, parsed once; a malformed value is refused with
     * the option's name instead of escaping as a bare JVM parse error. */
@@ -166,9 +181,15 @@ object ZarrDataSource {
     }
 }
 
+/** A store resolved by one `load()`: the metadata and chunk manifest of
+  * ONE committed view ([[ZarrStore.committedView]]), pinned together for
+  * every query over it — a scan never re-reads the root, so a DataFrame
+  * over a manifest-keyed store run after an overwrite fails loudly (its
+  * manifest parts are gone) rather than pairing old shapes with new
+  * chunk keys. */
 class ZarrTable(
     store: ZarrStore, tableSchema: StructType, metas: Seq[ZarrArrayMeta],
-    schemaError: Option[String] = None, cubeWrite: Boolean = false)
+    manifest: ChunkManifest, schemaError: Option[String] = None, cubeWrite: Boolean = false)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
   override def name(): String = s"zarr:${store.root}"
@@ -199,7 +220,7 @@ class ZarrTable(
       throw new ZarrException(
         s"zarr store not found or empty at ${store.root}: nothing to read " +
           "(the user-supplied schema deferred this check so the path could be a write target)")
-    new ZarrScanBuilder(store, tableSchema, metas, options)
+    new ZarrScanBuilder(store, tableSchema, metas, manifest, options)
   }
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -211,6 +232,7 @@ class ZarrScanBuilder(
     store: ZarrStore,
     tableSchema: StructType,
     metas: Seq[ZarrArrayMeta],
+    manifest: ChunkManifest,
     options: CaseInsensitiveStringMap)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns
@@ -222,6 +244,12 @@ class ZarrScanBuilder(
   private var pushed: Array[Filter] = Array.empty
   private var limit: Int = -1
   private var aggScan: Option[ZarrAggScan] = None
+
+  /** The plan's ONE `_stats/` LIST, taken on first use and shared by
+    * aggregate planning, CBO statistics, the reader factory (segment
+    * index, inner-doc flag) and runtime-filter partitioning. The sidecar
+    * is auxiliary: a failed LIST plans without it. */
+  private lazy val sidecar: ZarrStore.Sidecar = ZarrStore.Sidecar.orEmpty(store)
 
   import org.apache.spark.sql.connector.expressions.aggregate._
   import org.apache.spark.sql.connector.expressions.{Expression, NamedReference}
@@ -290,7 +318,7 @@ class ZarrScanBuilder(
     })
     val stats = fns.filterNot(f => f._1 == "count" || f._1 == "count_star")
     if (stats.isEmpty)
-      return Some(new ZarrAggScan(store, aggMetas, schema, fns,
+      return Some(new ZarrAggScan(store, aggMetas, manifest, schema, fns,
         fns.map(_ => geom.numRows), complete = true, 0L, Nil, options))
     // SUM/AVG over zero rows is NULL, which this path does not model —
     // and a 0-chunk grid trivially "covers fully"; decline instead
@@ -299,7 +327,7 @@ class ZarrScanBuilder(
     // the one ordinal walk over grid `g`: (complete, per-function merged
     // values, served chunks, served rows, uncovered runs)
     def walk(g: ScanGeometry, ms: Seq[ZarrArrayMeta]) = {
-      val (segs, exact) = ChunkStats.usableSegments(store, ms, g)
+      val (segs, exact) = ChunkStats.usableSegments(store, sidecar.unsuppressed, ms, g)
       val acc = new Array[Any](fns.length)
       var served, servedRows = 0L
       val uncovered = Seq.newBuilder[(Long, Long)]
@@ -368,12 +396,13 @@ class ZarrScanBuilder(
         case _ => acc(i)
       }
     }
-    Some(new ZarrAggScan(store, aggMetas, schema, fns, row, complete, served, uncovered, options))
+    Some(new ZarrAggScan(store, aggMetas, manifest, schema, fns, row, complete, served,
+      uncovered, options))
   }
 
   // Spark probes supportCompletePushDown then pushAggregation with the
-  // same Aggregation; memoize so the sidecar IO (LIST + segment GETs)
-  // runs once per builder, not per probe
+  // same Aggregation; memoize so the segment GETs run once per builder,
+  // not per probe
   private var aggMemo: Option[(String, Option[ZarrAggScan])] = None
   private def aggPlan(agg: Aggregation): Option[ZarrAggScan] = aggMemo match {
     case Some((k, plan)) if k == agg.toString => plan
@@ -420,7 +449,8 @@ class ZarrScanBuilder(
   override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan =
-    aggScan.getOrElse(new ZarrScan(store, metas, required, pushed, options, limit))
+    aggScan.getOrElse(
+      new ZarrScan(store, metas, manifest, required, pushed, options, limit, () => sidecar))
 }
 
 /** The aggregate scan (see [[ZarrScanBuilder.planAggregation]]). One
@@ -432,6 +462,7 @@ class ZarrScanBuilder(
 class ZarrAggScan(
     store: ZarrStore,
     aggMetas: Seq[ZarrArrayMeta],
+    manifest: ChunkManifest,
     schema: StructType,
     fns: Seq[(String, String)],
     servedRow: Seq[Any],
@@ -471,7 +502,8 @@ class ZarrAggScan(
     val reader =
       if (uncovered.isEmpty) None
       else Some(ZarrReaderFactory.planned(store, aggMetas.map(m => m.name -> m.sourceJson),
-        valueCols, Nil, ChunkManifest.requiredParts(store, aggMetas.map(_.sourceJson))))
+        valueCols, Nil, ChunkManifest.validateRequired(store.root, aggMetas.map(_.sourceJson),
+          manifest), () => ZarrStore.Sidecar.empty))
     // overflow semantics of the executor-side partial SUM must match
     // what Spark's Sum over the same scanned rows would do: throw under
     // ANSI (the 4.x default), wrap otherwise — resolved at plan time
@@ -580,10 +612,12 @@ final case class ZarrAggReaderFactory(
 class ZarrScan(
     store: ZarrStore,
     metas: Seq[ZarrArrayMeta],
+    manifest: ChunkManifest,
     required: StructType,
     pushed: Array[Filter],
     options: CaseInsensitiveStringMap,
-    limit: Int = -1)
+    limit: Int,
+    sidecar: () => ZarrStore.Sidecar)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
 
@@ -634,12 +668,10 @@ class ZarrScan(
     val n = ZarrScan.partitionCount(options, total).toInt
     // runtime filters (delivered via filter() between the factory-built
     // planning pass and THIS post-filter re-plan) ride on the partitions,
-    // with one driver-side stats-sidecar LIST so readers can chunk-skip
-    // on them with zero extra metadata round-trips
+    // with the plan's sidecar listing so readers can chunk-skip on them
+    // with zero extra metadata round-trips
     val rt = runtimeFilters.toSeq
-    val rtSegs =
-      if (rt.isEmpty) Nil
-      else try store.listStatsSegments() catch { case _: Throwable => Nil }
+    val rtSegs = if (rt.isEmpty) Nil else sidecar().unsuppressed
     geometry.partitionRanges(n)
       .map { case (lo, hi) =>
         // each partition carries ONLY its overlapping slice of the
@@ -654,15 +686,10 @@ class ZarrScan(
   override def createReaderFactory(): PartitionReaderFactory = {
     val metaJsons = readNames.map(n => n -> byName(n).sourceJson)
     // rename-free staged commits key chunks through the root-doc
-    // manifest; ONE driver-side read covers the whole scan. When any
-    // read array carries the manifest storage transformer, an
-    // empty/unreadable manifest must be a HARD error: resolving staged
-    // ordinals to canonical keys would silently read fill values — the
-    // exact failure the must-understand transformer exists to prevent,
-    // and it must protect this reader too, not only generic tools.
+    // manifest the table's view pinned with these metas
     ZarrReaderFactory.planned(store, metaJsons, required.fields.map(_.name).toSeq,
       (pushed ++ runtimeFilters).toSeq,
-      ChunkManifest.requiredParts(store, metaJsons.map(_._2)), limit)
+      ChunkManifest.validateRequired(store.root, metaJsons.map(_._2), manifest), sidecar, limit)
   }
 
   /** Runtime (join-derived) filters — e.g. a broadcast join's IN-set on
@@ -698,9 +725,8 @@ class ZarrScan(
     * the chunk-stats sidecar (Catalyst folds them into `ColumnStat` via
     * `DataSourceV2Relation.transformV2Stats`, informing join reorder and
     * filter selectivity over zarr tables). Gated behind
-    * `spark.sql.cbo.enabled`: the sidecar read is driver-side IO
-    * (LIST + segment GETs) that default planning must not pay on every
-    * query. Numeric columns only — their sidecar values are the same
+    * `spark.sql.cbo.enabled`: the segment GETs are driver-side IO that
+    * default planning must not pay on every query. Numeric columns only — their sidecar values are the same
     * boxed primitives catalyst `ColumnStat` carries; strings/decimals
     * are skipped. `nullCount` is exactly 0: zarr reads never produce
     * nulls (fill values, SURVEY §1.3). Memoized per Scan. */
@@ -719,7 +745,8 @@ class ZarrScan(
         val cols = required.fields.map(_.name).filter(n =>
           byName.get(n).exists(m => numeric(m.dataType)))
         if (cols.nonEmpty) {
-          val (segs, exact) = ChunkStats.usableSegments(store, metas, geometry)
+          val (segs, exact) =
+            ChunkStats.usableSegments(store, sidecar().unsuppressed, metas, geometry)
           if (exact) {
             val ranges = ChunkStats.exactRanges(cols.toSeq, segs)
             cols.foreach { n =>

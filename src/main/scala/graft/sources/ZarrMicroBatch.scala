@@ -59,33 +59,23 @@ class ZarrMicroBatchStream(
     emitPartialTail: Boolean = false)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
-  /** Per-trigger view of the store. Consolidated stores (every
-    * ZarrWrite output) are read via ONE root-document GET — the root
-    * doc is the store's atomic commit point, so shapes and the chunk
-    * manifest come from the SAME document and a trigger can never pair
-    * a new shape with a stale manifest (which would resolve fresh
-    * ordinals to canonical keys that do not exist → silent fill
-    * values), nor observe a multi-column append's per-array metadata
-    * PUTs torn (which would crash geometry resolution). Stores without
-    * consolidated metadata (hand-built fixtures) fall back to per-array
-    * reads — such stores were never staged-committed, and single-doc
-    * writers don't race multi-column commits. */
-  private def snapshot(): (ScanGeometry, Seq[(String, String)], Vector[(Long, String, Int)]) =
-    store.readRootSnapshot() match {
-      case Some((all, manifest)) =>
-        val byName = all.map(m => m.name -> m).toMap
-        val metas = arrayNames.map(n => byName.getOrElse(n,
-          throw new ZarrException(
-            s"stream over ${store.root}: array '$n' missing from consolidated metadata")))
-        val jsons = metas.map(m => m.name -> m.sourceJson)
-        val parts = ChunkManifest.validateRequired(store.root, jsons.map(_._2), manifest)
-        (ScanGeometry.resolve(metas), jsons, parts)
-      case None =>
-        val metas = arrayNames.map(store.readMeta)
-        val jsons = metas.map(m => m.name -> m.sourceJson)
-        (ScanGeometry.resolve(metas), jsons,
-          ChunkManifest.requiredParts(store, jsons.map(_._2)))
-    }
+  /** Per-trigger view of the store ([[ZarrStore.committedView]]): one
+    * root-document GET on consolidated stores (every ZarrWrite output).
+    * The root doc is the store's atomic commit point, so shapes and the
+    * chunk manifest come from the SAME document: a trigger can never
+    * pair a new shape with a stale manifest (which would resolve fresh
+    * ordinals to canonical keys that do not exist → silent fill values),
+    * nor observe a multi-column append's per-array metadata PUTs torn
+    * (which would crash geometry resolution). */
+  private def snapshot(): (ScanGeometry, Seq[(String, String)], Vector[(Long, String, Int)]) = {
+    val view = store.committedView()
+    val byName = view.arrays.map(m => m.name -> m).toMap
+    val metas = arrayNames.map(n => byName.getOrElse(n,
+      throw new ZarrException(s"stream over ${store.root}: array '$n' missing from the store")))
+    val jsons = metas.map(m => m.name -> m.sourceJson)
+    (ScanGeometry.resolve(metas), jsons,
+      ChunkManifest.validateRequired(store.root, jsons.map(_._2), view.manifest))
+  }
 
   @volatile private var planned: (Seq[(String, String)], Vector[(Long, String, Int)]) =
     (Seq.empty, Vector.empty)
@@ -188,8 +178,9 @@ class ZarrMicroBatchStream(
     // is rejected, so a racing ingest can only decline masking, never
     // misdescribe. The usual length/mtime/index-checksum guards apply
     // unchanged executor-side. The manifest is the SAME snapshot as the
-    // planned metadata.
-    ZarrReaderFactory.planned(store, metaJsons, outputNames, pushed, manifestParts)
+    // planned metadata; the sidecar is listed per batch, as it grows.
+    ZarrReaderFactory.planned(store, metaJsons, outputNames, pushed, manifestParts,
+      () => ZarrStore.Sidecar.orEmpty(store))
   }
 
   override def commit(end: Offset): Unit = ()

@@ -36,7 +36,7 @@ final case class ZarrReaderFactory(
       * (read ONCE from the root doc at planning; [[graft.zarr.ChunkManifest]]). */
     manifestParts: Seq[(Long, String, Int)] = Nil,
     /** Whether the store carries per-inner-chunk stats docs
-      * (`_stats/i<ord>.json`) — driver-listed once, so readers on
+      * (`_stats/i<ord>.json`) — from the plan's listing, so readers on
       * never-analyzed stores skip the per-shard doc probe entirely. */
     innerStatsPresent: Boolean = false)
     extends PartitionReaderFactory {
@@ -65,27 +65,27 @@ final case class ZarrReaderFactory(
 
 object ZarrReaderFactory {
 
-  /** The reader factory of a planned scan. With pushed filters, two
-    * driver-side probes ship to every task: ONE LIST of the stats
-    * sidecar (readers GET only their overlapping segments, never LIST)
-    * and, when a read array is sharded, one LIST telling readers whether
-    * per-inner-chunk stats docs exist at all (a never-analyzed store
-    * must not pay a 404 GET per shard probing for them). Both are
-    * auxiliary: a failing probe plans without it. `manifestParts` come
-    * from the caller — a stream must pair them with the metadata of its
-    * own snapshot, never with a second, possibly newer root read. */
+  /** The reader factory of a planned scan. With pushed filters, the
+    * plan's `_stats/` listing ships to every task: the segment index
+    * (readers GET only their overlapping segments, never LIST) and, when
+    * a read array is sharded, whether per-inner-chunk stats docs exist
+    * at all (a never-analyzed store must not pay a 404 GET per shard
+    * probing for them); `sidecar` is called once, and only then.
+    * `manifestParts` come from the caller — they must be read with the
+    * metadata of the same view, never from a second, newer root read. */
   def planned(
       store: ZarrStore,
       metaJsons: Seq[(String, String)],
       outputNames: Seq[String],
       filters: Seq[Filter],
       manifestParts: Seq[(Long, String, Int)],
+      sidecar: () => ZarrStore.Sidecar,
       limit: Int = -1): ZarrReaderFactory = {
-    def probe[T](empty: T)(list: => T): T = try list catch { case _: Throwable => empty }
-    val segIndex = if (filters.isEmpty) Nil else probe(Seq.empty[(Long, Int)])(store.listStatsSegments())
+    lazy val listing = sidecar()
+    val segIndex = if (filters.isEmpty) Nil else listing.unsuppressed
     val innerStats = filters.nonEmpty &&
       metaJsons.exists { case (n, j) => ZarrMeta.parse(n, j).shardingSpec.isDefined } &&
-      probe(false)(store.hasInnerStatsDocs())
+      listing.innerOrds.nonEmpty
     ZarrReaderFactory(store, metaJsons, outputNames, filters, limit, segIndex,
       manifestParts, innerStats)
   }
@@ -341,7 +341,7 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     val masks = Seq.newBuilder[(Array[Int], Array[Boolean])]
     val (coordPairs, rest) = pairs.partition { case (n, _) => coordDimOf.contains(n) }
     coordPairs.foreach { case (n, k) =>
-      val bytes = f.store.readChunk(n, k)
+      val bytes = present(o, n, k, f.store.readChunk(n, k))
       if (maskingPossible)
         coordCache.putIfAbsent(s"$n/${idx(coordDimOf(n))}",
           ChunkColumn.decode(roleOf(n).meta, bytes))
@@ -387,10 +387,10 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
                   }
                   else
                     try {
-                      val bytes = Sharding.readRanged(f.store, n, k, spec,
+                      val bytes = present(o, n, k, Sharding.readRanged(f.store, n, k, spec,
                         m.chunkShape, mask,
                         knownLen = live.flatten.map(_.len),
-                        expectIndexSum = statsRef.map(_.indexSum).getOrElse(-1L))
+                        expectIndexSum = statsRef.map(_.indexSum).getOrElse(-1L)))
                       // record the mask only once the ranged read
                       // succeeded: a stale-index retry must not leave
                       // this attempt's mask driving row emission
@@ -405,9 +405,23 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
               if (stale) attempt(useStats = false) else None)
           case _ => None
         }
-      out += (n -> ranged.getOrElse(f.store.readChunk(n, k)))
+      out += (n -> ranged.getOrElse(present(o, n, k, f.store.readChunk(n, k))))
     }
     Fetched(out.result(), masks.result())
+  }
+
+  /** `bytes` read for key `k` of column `n`'s chunk `o`. An absent object
+    * reads as fill values — except at a manifest-resolved key, which a
+    * staged writer always fills: that object is gone only when the store
+    * was overwritten or compacted under this plan's pinned manifest, so
+    * the read fails rather than return fill values. */
+  private def present(
+      o: Long, n: String, k: String, bytes: Option[Array[Byte]]): Option[Array[Byte]] = {
+    if (bytes.isEmpty && geometry.ndim == 1 && manifest.keyFor(o).isDefined)
+      throw new ZarrException(s"chunk $o of $n in ${f.store.root} resolves through the " +
+        s"chunk manifest to $k, which is absent: the store changed after this plan " +
+        "read its metadata — load it again")
+    bytes
   }
 
   /** Extent-row indices (row-major) surviving every keep-mask, or null

@@ -253,7 +253,8 @@ class ZarrBatchWrite(
   private val (existingMetas, existingManifest): (Seq[ZarrArrayMeta], ChunkManifest) =
     if (truncate) (Seq.empty, ChunkManifest.empty)
     else {
-      val (metas, manifest) = store.committedView()
+      val view = store.committedView()
+      val metas = view.metas
       // v2 stores are READ-ONLY here: this writer emits v3 metadata
       // and v3 chunk keys, and mixing them into a v2 layout would
       // leave a store neither format reads back whole
@@ -262,7 +263,7 @@ class ZarrBatchWrite(
           s"append: ${store.root} is a Zarr v2 store (array ${m.name}); " +
             "the writer is v3-only — read it and write a new store to migrate")
       }
-      (metas, if (metas.isEmpty) ChunkManifest.empty else manifest)
+      (metas, if (metas.isEmpty) ChunkManifest.empty else view.manifest)
     }
 
   private val appendState: (Long, Int, String) =
@@ -356,10 +357,7 @@ class ZarrBatchWrite(
     // segments AND inner docs at ordinals this write is about to (re)use
     // — purge them so a stale doc can never describe the chunks written
     // now
-    else {
-      store.cleanStatsSegmentsFrom(baseChunks)
-      store.cleanInnerDocsFrom(baseChunks)
-    }
+    else retireFrom(staged = false)
     ZarrWriterFactory(store, schema.json, chunkSize, colMetaJsons, rowsPerPartition,
       baseChunks, stats, writeId)
   }
@@ -395,34 +393,24 @@ class ZarrBatchWrite(
             s"zarr write alignment violated: partition ${c.partitionId} has ${c.rows} rows " +
               s"(not a multiple of chunk_size=$chunkSize); use ZarrWriteSupport.alignForWrite")
       }
+      // each task staged its stats docs under scope `<writeId>-<pid>` at
+      // task-local final names (`s0_<n>`, `i<j>`); ONE `_stats/` LIST
+      // finds them all, and each is COPIED to its global ordinal
+      // (metadata-sized text, not an O(data) rename) — inner docs exist
+      // only for sharded columns, one per SHARD, and a sharded layout
+      // exists precisely to keep the stored object count small
+      val staged = if (stats) store.sidecar().staged.filter(_.ofWrite(writeId)) else Nil
       var nextChunk = baseChunks
       val newParts = Vector.newBuilder[(Long, String, Int)]
       nonEmpty.foreach { c =>
         val nChunks = ((c.rows + chunkSize - 1) / chunkSize).toInt
         newParts += ((nextChunk, s"c.part$writeId-${c.partitionId}", nChunks))
-        // stats segment staged under the task's attempt key gets COPIED
-        // to its final first-ordinal name (metadata-sized text, not an
-        // O(data) rename) and the staging object dropped
-        if (stats) {
-          val sk = ChunkStats.stagingKey(writeId, c.partitionId, nChunks)
-          store.readText(sk).foreach(doc =>
-            store.writeText(ChunkStats.segmentKey(nextChunk, nChunks), doc))
-          store.deleteKey(sk)
-        }
-        // per-inner-chunk docs (sharded columns only): copy each task's
-        // staged docs to their final ordinals. O(chunks) metadata-sized
-        // text copies at commit — proportional to SHARD count, and a
-        // sharded layout exists precisely to keep the stored object
-        // count small; unsharded writes skip this loop entirely
-        if (c.innerDocs) {
-          var j = 0
-          while (j < nChunks) {
-            val ik = ChunkStats.tabularInnerStagingKey(writeId, c.partitionId, j)
-            store.readText(ik).foreach(doc =>
-              store.writeText(ChunkStats.innerKey(nextChunk + j), doc))
-            store.deleteKey(ik)
-            j += 1
-          }
+        val base = nextChunk
+        staged.filter(_.scope == s"$writeId-${c.partitionId}").foreach { st =>
+          st.target.collect {
+            case ChunkStats.SegmentFile(0L, n) if n == nChunks => ChunkStats.SegmentFile(base, n)
+            case ChunkStats.InnerFile(j) if j < nChunks => ChunkStats.InnerFile(base + j)
+          }.foreach(fin => store.readText(st.key).foreach(store.writeText(fin.key, _)))
         }
         nextChunk += nChunks
       }
@@ -442,7 +430,7 @@ class ZarrBatchWrite(
             "and reset the manifest; raise via option manifest_warn_parts.")
       // this write's staged stats docs are all consumed — drop them
       // (scoped by writeId: a concurrent write's staging must survive)
-      store.cleanStatsStaging(writeId)
+      staged.foreach(st => store.deleteKey(st.key))
     }
     val total = baseRows + counts.map(_.rows).sum
     // the persisted zarr.json is the SAME document the writers derived
@@ -472,14 +460,24 @@ class ZarrBatchWrite(
       // staged commits, which live under their own c.part<id>- dirs; only
       // THIS write's staging (scoped by writeId) is removed
       schema.fields.foreach(f => store.cleanStaging(f.name, s"c.part$writeId-"))
-      store.cleanStatsStaging(writeId)
       // aligned tasks write FINAL segment keys and inner docs (no
       // staging) — remove any at ordinals past the surviving base or
       // they would describe chunks the rolled-back shape[0] does not own
-      store.cleanStatsSegmentsFrom(baseChunks)
-      store.cleanInnerDocsFrom(baseChunks)
+      retireFrom(staged = true)
     }
   }
+
+  /** Retire, from ONE `_stats/` listing, every committed sidecar doc at
+    * an ordinal at or past the base — segments by first ordinal, inner
+    * docs by ordinal — and, when `staged`, this write's staged docs
+    * (scoped by writeId: a concurrent write's staging must survive). */
+  private def retireFrom(staged: Boolean): Unit =
+    store.sidecar().entries.foreach {
+      case e @ ChunkStats.SegmentFile(first, _) if first >= baseChunks => store.deleteKey(e.key)
+      case e @ ChunkStats.InnerFile(ord) if ord >= baseChunks => store.deleteKey(e.key)
+      case e: ChunkStats.StagedFile if staged && e.ofWrite(writeId) => store.deleteKey(e.key)
+      case _ => ()
+    }
 }
 
 object ZarrBatchWrite {
@@ -538,12 +536,7 @@ object ZarrBatchWrite {
   }
 }
 
-final case class ZarrCommit(
-    partitionId: Int, rows: Long,
-    /** Whether the task staged per-inner-chunk stats docs (sharded
-      * columns with stats on) — lets the commit skip the per-chunk
-      * staging probe entirely for the common unsharded write. */
-    innerDocs: Boolean = false) extends WriterCommitMessage
+final case class ZarrCommit(partitionId: Int, rows: Long) extends WriterCommitMessage
 
 final case class ZarrWriterFactory(
     store: ZarrStore, schemaJson: String, chunkSize: Int, colMetaJsons: Seq[String],
@@ -611,7 +604,8 @@ final class ZarrDataWriter(
     // corpus read. Docs are grid-less (empty shape — the final shape is
     // unknown until commit), accepted for 1-D scans like grid-less
     // segments; the staged path parks them at task-scoped names the
-    // commit copies to final ordinals.
+    // commit copies to final ordinals. Padding inner chunks of the edge
+    // shard are omitted (ChunkColumn.encode's extent rule).
     val docCols = Seq.newBuilder[ChunkStats.InnerColInput]
     var c = 0
     while (c < ncols) {
@@ -622,7 +616,7 @@ final class ZarrDataWriter(
       // array shape) — a conforming writer pads with fill_value, not
       // zero, so appends to a non-zero-fill store stay interoperable
       while (vals.length < chunkSize) vals += m.fillValue
-      val enc = ChunkColumn.encode(m, vals)
+      val enc = ChunkColumn.encode(m, vals, Seq(realRows))
       val key =
         if (rowsPerPartition > 0) {
           val ord = baseChunks + partitionId * (rowsPerPartition / chunkSize) + localChunk
@@ -646,16 +640,16 @@ final class ZarrDataWriter(
         if (rowsPerPartition > 0)
           ChunkStats.innerKey(
             baseChunks + partitionId * (rowsPerPartition / chunkSize) + localChunk)
-        else ChunkStats.tabularInnerStagingKey(writeId, partitionId, localChunk)
+        else ChunkStats.stagingKey(scope, ChunkStats.InnerFile(localChunk))
       store.writeText(dkey,
         ChunkStats.encodeInner(Nil, Nil, Seq(chunkSize), docs))
-      wroteInnerDocs = true
     }
     rowsInChunk = 0
     localChunk += 1
   }
 
-  private var wroteInnerDocs = false
+  /** This task's staging scope for stats docs the commit promotes. */
+  private def scope: String = s"$writeId-$partitionId"
 
   override def commit(): WriterCommitMessage = {
     flush()
@@ -667,10 +661,10 @@ final class ZarrDataWriter(
             baseChunks + partitionId * (rowsPerPartition / chunkSize), localChunk)
         else
           // staged path: driver commit copies to the final ordinal name
-          ChunkStats.stagingKey(writeId, partitionId, localChunk)
+          ChunkStats.stagingKey(scope, ChunkStats.SegmentFile(0L, localChunk))
       store.writeText(key, segment.doc())
     }
-    ZarrCommit(partitionId, totalRows, wroteInnerDocs)
+    ZarrCommit(partitionId, totalRows)
   }
 
   override def abort(): Unit = ()

@@ -155,7 +155,7 @@ object ZarrSink {
     * parse aborts the stream (treating it as empty would re-append the
     * whole replay). */
   private def storeRows(spark: SparkSession, path: String): Long = {
-    val (metas, _) = store(spark, path).committedView()
+    val metas = store(spark, path).committedView().metas
     // the sink appends v3 chunk keys and rewrites shape metadata — a v2
     // destination must abort, not be half-upgraded in place
     metas.find(_.formatVersion == 2).foreach { m =>

@@ -234,17 +234,28 @@ object ChunkColumn {
 
   /** Encode one chunk's row-major values, padded to the full chunk shape
     * by the caller, into its stored object: the inverse of [[decode]].
-    * A sharded array packs its inner chunks through [[Sharding.encode]],
-    * omitting those listed in `skipInner` (row-major over the inner
-    * grid); a plain one is transposed when its chain says so,
-    * element-encoded and run through its bytes→bytes codecs. */
+    * `extent` is the chunk's in-array extent per dim (Nil: all of it). A
+    * sharded array packs its inner chunks through [[Sharding.encode]];
+    * those lying wholly past the extent hold only padding, so they are
+    * omitted and indexed absent — no reader requests them, and an absent
+    * inner chunk reads as fill. A plain one is transposed when its chain
+    * says so, element-encoded and run through its bytes→bytes codecs. */
   def encode(
       meta: ZarrArrayMeta,
       vals: scala.collection.IndexedSeq[Any],
-      skipInner: Set[Int] = Set.empty): Array[Byte] =
+      extent: Seq[Int] = Nil): Array[Byte] =
     meta.shardingSpec match {
       case Some(spec) =>
-        Sharding.encode(meta.dataType, meta.chunkShape.toSeq, spec, vals, skipInner)
+        val padding =
+          if (extent.isEmpty || extent == meta.chunkShape.toSeq) Set.empty[Int]
+          else {
+            val grid = Array.tabulate(extent.length)(d => meta.chunkShape(d) / spec.innerShape(d))
+            (0 until grid.product).filter { gi =>
+              ScanGeometry.indexOf(gi, grid).zipWithIndex
+                .exists { case (g, d) => g.toLong * spec.innerShape(d) >= extent(d) }
+            }.toSet
+          }
+        Sharding.encode(meta.dataType, meta.chunkShape.toSeq, spec, vals, padding)
       case None =>
         val stored: scala.collection.IndexedSeq[Any] =
           meta.transposePerm.fold(vals)(p => Codecs.transposeValues(vals, p))

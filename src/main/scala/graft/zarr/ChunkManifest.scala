@@ -96,13 +96,6 @@ object ChunkManifest {
 
   private val mapper = new ObjectMapper()
 
-  /** Manifest parts for a scan over arrays with the given metadata
-    * documents. When any array carries the must-understand manifest
-    * transformer, a missing/empty/unreadable manifest is a HARD error:
-    * falling back to canonical keys would resolve staged ordinals to
-    * nonexistent objects and silently emit fill values — the exact
-    * corruption the transformer marker exists to prevent, which must
-    * protect this reader no less than generic Zarr tools. */
   /** Does this array metadata document declare the manifest storage
     * transformer? Parses the `storage_transformers` array — a substring
     * probe would false-positive on e.g. an attribute VALUE mentioning
@@ -115,36 +108,25 @@ object ChunkManifest {
         _.path("name").asText("") == transformerName)
     } catch { case _: Throwable => false }
 
-  def requiredParts(
-      store: ZarrStore, metaJsons: Seq[String]): Vector[(Long, String, Int)] = {
-    val needed = metaJsons.exists(declaresTransformer)
-    val manifest =
-      try store.readChunkManifest()
-      catch {
-        case e: Throwable =>
-          if (needed) failUnreadable(store.root, e) else ChunkManifest.empty
-      }
-    validateRequired(store.root, metaJsons, manifest)
-  }
-
-  /** Same hard-error contract as [[requiredParts]] for callers that
-    * already hold the manifest (read atomically alongside the metadata
-    * from one root document — the streaming source's per-trigger view). */
+  /** Manifest parts for a scan over arrays with the given metadata
+    * documents, `manifest` read from the same root document as the
+    * metadata ([[ZarrStore.committedView]]). When any array carries the
+    * must-understand manifest transformer, a missing/empty manifest is a
+    * HARD error: falling back to canonical keys would resolve staged
+    * ordinals to nonexistent objects and silently emit fill values — the
+    * exact corruption the transformer marker exists to prevent, which
+    * must protect this reader no less than generic Zarr tools. */
   def validateRequired(
       storeRoot: String,
       metaJsons: Seq[String],
       manifest: ChunkManifest): Vector[(Long, String, Int)] = {
     if (metaJsons.exists(declaresTransformer) && manifest.isEmpty)
-      failUnreadable(storeRoot, null)
+      throw new ZarrException(
+        s"store $storeRoot: arrays are manifest-keyed ($transformerName) but the " +
+          "root-document chunk manifest is missing or unreadable — refusing to read " +
+          "(canonical-key fallback would silently return fill values)")
     manifest.parts
   }
-
-  private def failUnreadable(root: String, cause: Throwable): Nothing =
-    throw new ZarrException(
-      s"store $root: arrays are manifest-keyed ($transformerName) but the " +
-        "root-document chunk manifest is missing or unreadable — refusing to read " +
-        "(canonical-key fallback would silently return fill values)" +
-        (if (cause != null) s": ${cause.getMessage}" else ""))
 
   /** Parse from a store root `zarr.json` document (empty when absent or
     * malformed — the manifest is load-bearing only for stores that wrote
@@ -161,7 +143,7 @@ object ChunkManifest {
         // damaged entry would otherwise silently remap ordinal 0 to a
         // bogus directory (fill values for real chunks); dropping only
         // the bad entry is as unsound (its ordinal range would fall
-        // back to canonical keys). Empty → requiredParts hard-fails for
+        // back to canonical keys). Empty → validateRequired hard-fails for
         // manifest-keyed stores, which is the loud outcome we want.
         val wellFormed = entries.forall(e =>
           e.isArray && e.size() == 3 &&

@@ -32,35 +32,70 @@ object ChunkStats {
     * by analyze's unit sizing and sidecar compaction's group packing. */
   val maxSegmentChunks = 4096
 
-  /** Final segment key. The ordinal range lives in the NAME so a listing
-    * alone tells a reader which segments its chunk range needs. */
-  def segmentKey(first: Long, chunks: Int): String =
-    s"$dirName/s${first}_$chunks.json"
+  // ---- `_stats/` names: the one grammar every writer and lister shares ----
 
-  /** Staging key for the unaligned write path (final first-ordinal is
-    * only known at commit, which copies staging → [[segmentKey]] — a
-    * metadata-sized text object, so the copy is not an O(data) rename).
-    * Scoped by writeId so attempts of distinct jobs cannot collide. */
-  def stagingKey(writeId: String, partitionId: Int, chunks: Int): String =
-    s"$dirName/c.part$writeId-${partitionId}_$chunks.json"
+  /** One `_stats/` file, known by its name alone. */
+  sealed trait Entry {
+    def name: String
+    /** Key under the store root. */
+    final def key: String = s"$dirName/$name"
+  }
 
-  /** Staging key for cube-slab segments whose CHUNKS are themselves
-    * staged (ragged append edge rows, region overwrites): a durable
-    * final-key segment must never describe bytes readers cannot see
-    * yet, so these docs sit at `c.part*` names (invisible to
-    * [[graft.zarr.ZarrStore.listStatsSegments]], reclaimed by vacuum /
-    * cleanStatsStaging) until the caller promotes them to
-    * [[segmentKey]] AFTER the chunk swap. The final ordinal range is
-    * known at write time, so the name carries it for the promotion. */
-  def cubeStagingKey(writeId: String, first: Long, chunks: Int): String =
-    s"$dirName/c.part$writeId-s${first}_$chunks.json"
+  /** A committed segment over chunk ordinals [first, first + chunks).
+    * The range lives in the NAME, so a listing alone tells a reader which
+    * segments its chunk range needs. */
+  final case class SegmentFile(first: Long, chunks: Int) extends Entry {
+    def name: String = s"s${first}_$chunks.json"
+  }
 
+  /** The committed per-inner-chunk doc of outer chunk `ord`. */
+  final case class InnerFile(ord: Long) extends Entry {
+    def name: String = s"i$ord.json"
+  }
+
+  /** A staged entry `c.part<scope>-<final name>`: a doc whose final name
+    * must not be visible yet (its chunks are staged, or its ordinals are
+    * only known at commit). `scope` is the write that staged it — a cube
+    * write's id, or `<writeId>-<partitionId>` for a tabular task, whose
+    * final names are task-local (`s0_<n>`, `i<j>`). Every `c.part*` name
+    * is staged, also one whose suffix is no final name (an old-form
+    * leftover): readers never see it and vacuum reclaims it. */
+  final case class StagedFile(name: String) extends Entry {
+    private val cut = name.lastIndexOf('-')
+    def scope: String =
+      if (cut < 0) name.drop(stagedPrefix.length) else name.substring(stagedPrefix.length, cut)
+    /** The final entry this one promotes to, when the suffix names one. */
+    def target: Option[Entry] = if (cut < 0) None else finalEntry(name.substring(cut + 1))
+    /** Staged by write `writeId` (any of its tasks)? */
+    def ofWrite(writeId: String): Boolean = scope == writeId || scope.startsWith(s"$writeId-")
+  }
+
+  private val stagedPrefix = "c.part"
   private val NameRe = """s(\d+)_(\d+)\.json""".r
+  private val InnerNameRe = """i(\d+)\.json""".r
 
-  def parseSegmentName(name: String): Option[(Long, Int)] = name match {
-    case NameRe(f, c) => Some((f.toLong, c.toInt))
+  private def finalEntry(name: String): Option[Entry] = name match {
+    case NameRe(f, c) => Some(SegmentFile(f.toLong, c.toInt))
+    case InnerNameRe(o) => Some(InnerFile(o.toLong))
     case _ => None
   }
+
+  /** The entry a `_stats/` file name denotes, or None for a foreign name. */
+  def parseName(name: String): Option[Entry] =
+    if (name.startsWith(stagedPrefix)) Some(StagedFile(name)) else finalEntry(name)
+
+  def segmentKey(first: Long, chunks: Int): String = SegmentFile(first, chunks).key
+
+  /** Key of the per-inner-chunk stats doc of outer chunk `ord`. */
+  def innerKey(ord: Long): String = InnerFile(ord).key
+
+  /** Key under which write scope `scope` stages the doc whose final entry
+    * is `target`. */
+  def stagingKey(scope: String, target: Entry): String =
+    StagedFile(s"$stagedPrefix$scope-${target.name}").key
+
+  def parseInnerName(name: String): Option[Long] =
+    finalEntry(name).collect { case InnerFile(o) => o }
 
   // ---- per-INNER-chunk sidecar (`_stats/i<outerOrdinal>.json`) ----
   //
@@ -119,34 +154,6 @@ object ChunkStats {
   // Bounds are computed over the inner region's IN-EXTENT rows of the
   // DECODED buffer, so absent inner chunks record [fill, fill] — the
   // values a scan of those rows actually emits.
-
-  private val InnerNameRe = """i(\d+)\.json""".r
-
-  /** Key of the per-inner-chunk stats doc of outer chunk `ord`. */
-  def innerKey(ord: Long): String = s"$dirName/i$ord.json"
-
-  def parseInnerName(name: String): Option[Long] = name match {
-    case InnerNameRe(o) => Some(o.toLong)
-    case _ => None
-  }
-
-  /** Staging key for inner docs whose CHUNKS are themselves staged
-    * (region overwrites: the shape signature cannot reject a same-shape
-    * doc, and an equal-length coincidence could defeat the length guard
-    * in the pre-swap window — so the doc stays at an invisible
-    * `c.part*` name until the caller promotes it after the chunk
-    * swap). Append slabs stage too for uniformity, though their docs
-    * are already inert pre-commit (they carry the not-yet-committed
-    * shape). */
-  def cubeInnerStagingKey(writeId: String, ord: Long): String =
-    s"$dirName/c.part$writeId-i$ord.json"
-
-  /** Staging key for the 1-D tabular writer's inner docs on the staged
-    * (manifest) path: the task's global first ordinal is only known at
-    * commit, which copies staging → [[innerKey]] (metadata-sized text).
-    * Chunk index `j` is task-local, like the chunk part files. */
-  def tabularInnerStagingKey(writeId: String, partitionId: Int, j: Int): String =
-    s"$dirName/c.part$writeId-${partitionId}_i$j.json"
 
   /** Per-inner-chunk bounds of one assembled outer chunk (row-major
     * over the inner grid of `inner` inside `chunkShape`): each inner
@@ -787,7 +794,8 @@ object ChunkStats {
   }
 
   /** Re-encode a CONTIGUOUS run of parsed segments as ONE document
-    * covering `[first, first + total)` — the sidecar-compaction merge.
+    * covering `[first, first + total)` — the sidecar-compaction merge,
+    * and (one source reaching past the range) a retire's straddle trim.
     * Bounds, sums and clamped-bound (approx) markers are preserved
     * per ordinal exactly; a column absent from a source segment is
     * simply unrecorded over that range (null bounds — the same shape a
@@ -809,9 +817,12 @@ object ChunkStats {
         val sums = Array.fill[Option[Long]](total)(None)
         sources.foreach { s =>
           val off = (s.first - first).toInt
+          // a source may reach past [first, first + total): only its
+          // ordinals inside are carried (the straddle trim of a retire)
+          val (lo, hi) = (math.max(0, -off), math.min(s.chunks, total - off))
           s.cols.get(nm).foreach { case (mins, maxs) =>
-            var i = 0
-            while (i < s.chunks) {
+            var i = lo
+            while (i < hi) {
               if (mins(i) != null)
                 bounds(off + i) = Some(Bound(mins(i), maxs(i),
                   exact = !s.approx.get(nm).exists(_.contains(i))))
@@ -819,8 +830,8 @@ object ChunkStats {
             }
           }
           s.sums.get(nm).foreach { ss =>
-            var i = 0
-            while (i < s.chunks) {
+            var i = lo
+            while (i < hi) {
               if (ss(i) != null) sums(off + i) = Some(ss(i).longValue)
               i += 1
             }
@@ -884,19 +895,20 @@ object ChunkStats {
     * append) and [[gridCompatible]] (a segment recorded against a
     * DIFFERENT grid — a 1-D coordinate scan over an N-D-analyzed store, a
     * reordered cross product — enumerates different chunks under the
-    * same ordinals). Overlapping segments were already dropped pairwise
-    * by `listStatsSegments` (stale vs live is undecidable). Over-coverage,
+    * same ordinals). `listed` is the plan's unsuppressed listing
+    * ([[ZarrStore.Sidecar.unsuppressed]]: overlapping segments dropped
+    * pairwise, stale vs live is undecidable). Over-coverage,
     * a grid-incompatible or vanished segment clears the flag; any read or
     * parse failure degrades to no segments at all (the sidecar is
     * auxiliary and must never fail a query). */
   def usableSegments(
       store: ZarrStore,
+      listed: Seq[(Long, Int)],
       metas: Seq[ZarrArrayMeta],
       geom: ScanGeometry): (Seq[Segment], Boolean) = {
     val total = geom.numChunks
     val ztOf: String => Option[ZarrType] = n => metas.find(_.name == n).map(_.dataType)
     try {
-      val listed = store.listStatsSegments()
       val usable = listed
         .filter { case (first, n) => first >= 0 && first + n <= total }
         .flatMap { case (first, n) =>

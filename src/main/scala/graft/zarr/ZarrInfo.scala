@@ -45,9 +45,11 @@ object ZarrInfo {
     * from the driver's listings; the counts are identical either way
     * (spec-pinned). An operator sizing a compaction or migration must
     * use `n_stored_objects`, never the capacity. `stats_covered_chunks` is
-    * the store-level sidecar coverage clamped to each array's own grid
-    * (coverage counts grid ordinals, which can exceed a 1-D coordinate's
-    * chunk count on an N-D store). */
+    * the store-level sidecar coverage — the live segments
+    * ([[ZarrStore.liveSegments]], the rule `describeStats` applies) of
+    * the store grid, the largest array grid — clamped to each array's
+    * own grid (coverage counts grid ordinals, which can exceed a 1-D
+    * coordinate's chunk count on an N-D store). */
   def describe(
       spark: SparkSession, path: String, countStored: Boolean = false): DataFrame =
     describeImpl(spark, path, countStored, ZarrDistWalk.InlineMax)
@@ -61,18 +63,19 @@ object ZarrInfo {
     // sessionState.newHadoopConf() carries per-session overrides (e.g.
     // credentials) that sparkContext.hadoopConfiguration lacks
     val store = ZarrStore(path, ZarrStore.fsPairs(spark.sessionState.newHadoopConf()))
-    val metas = store.readConsolidatedMetas()
-      .getOrElse(store.listArrays().map(store.readMeta))
+    val metas = store.committedView().arrays
     // sidecar coverage is a STORE-level fact (segments describe grid
     // ordinals shared by every array of the grid); repeated per row —
     // clamped to the row's own grid — so a bare `describe(...).show()`
-    // reads complete
-    val covered = store.listStatsSegments().map(_._2.toLong).sum
+    // reads complete. Segments past the grid are phantoms, not coverage.
+    val gridOf = metas.map(m => m.name -> m.gridShape.map(_.toLong).product).toMap
+    val covered = ZarrStore.liveSegments(store.sidecar().raw, gridOf.values.max)
+      .map(_._2.toLong).sum
     val storedCounts =
       if (countStored) ZarrDistWalk.countStored(spark, store, metas, inlineMax)
       else Map.empty[String, Long]
     val rows = metas.sortBy(m => (!m.isCoordinate, m.name)).map { m =>
-      val gridChunks = m.gridShape.map(_.toLong).product
+      val gridChunks = gridOf(m.name)
       Row(
         m.name,
         if (m.isCoordinate) "coordinate" else "data",
@@ -125,8 +128,7 @@ object ZarrInfo {
   def describeStats(spark: SparkSession, path: String): DataFrame = {
     import scala.jdk.CollectionConverters._
     val store = ZarrStore(path, ZarrStore.fsPairs(spark.sessionState.newHadoopConf()))
-    val metas = store.readConsolidatedMetas()
-      .getOrElse(store.listArrays().map(store.readMeta))
+    val metas = store.committedView().arrays
     // a typo'd path / empty store fails inside geometry resolution with
     // a bare requirement message — the operator-facing dashboard call
     // must name itself and the store it could not describe
@@ -134,34 +136,20 @@ object ZarrInfo {
       try ScanGeometry.resolve(metas)
       catch { case e: Exception =>
         throw new ZarrException(s"describeStats($path): ${e.getMessage}") }
-    // ONE `_stats/` LIST serves segments AND inner docs; its pages
-    // stream through a bounded buffer (RemoteIterator — S3A lists
-    // lazily) instead of materializing every FileStatus up front
-    val segs = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
-    var nInner = 0L
-    try {
-      val it = store.fs.listStatusIterator(
-        new org.apache.hadoop.fs.Path(store.rootPath, ChunkStats.dirName))
-      while (it.hasNext) {
-        val name = it.next().getPath.getName
-        ChunkStats.parseSegmentName(name) match {
-          case Some(p) => segs += p
-          case None => if (ChunkStats.parseInnerName(name).isDefined) nInner += 1
-        }
-      }
-    } catch { case _: java.io.FileNotFoundException => () }
+    // ONE `_stats/` LIST serves segments AND inner docs
+    val listing = store.sidecar()
     val numChunks = geom.numChunks
-    val live = ZarrStore.liveSegments(segs.sortBy(_._1).toSeq, numChunks)
+    val live = ZarrStore.liveSegments(listing.raw, numChunks)
     val covered = math.min(live.map(_._2.toLong).sum, numChunks)
     val minSegs =
       (covered + ChunkStats.maxSegmentChunks - 1) / ChunkStats.maxSegmentChunks
     val row = Row(
       metas.size.toLong,
       numChunks,
-      segs.size.toLong,
+      listing.raw.size.toLong,
       live.size.toLong,
       minSegs,
-      nInner,
+      listing.innerOrds.size.toLong,
       covered,
       if (numChunks == 0) 0.0 else covered.toDouble / numChunks)
     spark.createDataFrame(

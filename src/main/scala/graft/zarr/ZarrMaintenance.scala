@@ -80,7 +80,7 @@ object ZarrMaintenance {
           "writes a FRESH store — delete the destination (a prior/partial " +
           "run) and re-run")
     val srcStore = ZarrStore(srcPath, pairs)
-    val srcMetas = srcStore.listArrays().map(srcStore.readMeta)
+    val srcMetas = srcStore.committedView().arrays
     val geom = ScanGeometry.resolve(srcMetas)
     // one recursive driver listing per array, whatever the size: the
     // rewrite below is the job, the counts only report its economy
@@ -160,7 +160,7 @@ object ZarrMaintenance {
         codec = dstCodec, stats = true, truncate = false,
         shardShapeOpt = if (shardShapeNd.nonEmpty) Some(shardShapeNd) else None)
     }
-    (before, stored(dstStore, dstStore.listArrays().map(dstStore.readMeta)))
+    (before, stored(dstStore, dstStore.committedView().arrays))
   }
 
   /** Driver-side check that a 1-D coordinate axis is strictly ascending —
@@ -268,7 +268,12 @@ object ZarrMaintenance {
         "analyze: refresh ranges require incremental mode (a full analyze already refreshes everything)")
     val hadoopPairs = ZarrStore.fsPairs(spark.sparkContext.hadoopConfiguration)
     val store = ZarrStore(path, hadoopPairs)
-    val metas = store.listArrays().map(store.readMeta).sortBy(_.name)
+    // the committed view: after a root write lost behind the per-array
+    // documents, their shapes run past the root's grid and the manifest,
+    // and bounds recorded there (fill values at canonical keys) would
+    // describe the chunks a later re-run writes
+    val view = store.committedView()
+    val metas = view.arrays
     // sharded arrays analyze fine: a stored object is one outer chunk
     // (the shard), ChunkColumn.decode unpacks it exactly as the scan
     // does, and stats are recorded per outer chunk — the granularity
@@ -282,8 +287,7 @@ object ZarrMaintenance {
         case e: ZarrException =>
           throw new ZarrException(s"analyze: ${e.getMessage}")
       }
-    val manifestParts =
-      if (geom.ndim == 1) store.readChunkManifest().parts else Vector.empty
+    val manifestParts = if (geom.ndim == 1) view.manifest.parts else Vector.empty
     val numChunks = geom.numChunks
     val metaJsons = metas.map(m => m.name -> m.sourceJson)
     // bound each segment DOCUMENT (one shared ceiling with sidecar
@@ -304,12 +308,16 @@ object ZarrMaintenance {
       }
     }
     // the contiguous segment ranges to (re)analyze: full mode purges the
-    // sidecar and covers the whole grid; incremental keeps every VALID
-    // segment/doc and covers only the complement
+    // sidecar (inner docs too) and covers the whole grid; incremental
+    // keeps every VALID segment/doc and covers only the complement. ONE
+    // `_stats/` LIST serves either.
+    val listing = store.sidecar()
     val targets: Seq[(Long, Int)] =
       if (!incremental) {
-        store.cleanStatsSegmentsFrom(0L)
-        store.deleteInnerStatsDocs() // re-analyze refreshes inner stats too
+        listing.entries.foreach {
+          case e @ (_: ChunkStats.SegmentFile | _: ChunkStats.InnerFile) => store.deleteKey(e.key)
+          case _ => ()
+        }
         splitRuns(Seq((0L, numChunks)))
       } else {
         // ---- sidecar sweep: docs first, then segments, both through
@@ -344,7 +352,7 @@ object ZarrMaintenance {
         // windowed shard. Deletion runs through the same scheduler.
         val (windowOrds, sweepOrds) =
           if (!needDocs) (Seq.empty[Long], Seq.empty[Long])
-          else store.listInnerStatsDocOrds().partition(o => inRefresh(o, 1L))
+          else listing.innerOrds.partition(o => inRefresh(o, 1L))
         ZarrDistWalk.run(spark, windowOrds, sweepInlineMax) { ords =>
           val st = ZarrStore(path, hadoopPairs)
           ords.foreach(o => st.deleteKey(ChunkStats.innerKey(o)): Unit)
@@ -358,15 +366,15 @@ object ZarrMaintenance {
         // describes also has its COVERING inner doc (when docs are
         // needed): re-analyzing a doc-less ordinal writes a NEW segment
         // over its range, and an overlapping retained segment would
-        // make listStatsSegments suppress BOTH sides — the run must
+        // make the listing's overlap rule suppress BOTH sides — the run must
         // retire the partial segment and re-analyze its whole range,
         // the same all-or-nothing discipline the append's edge
         // retirement applies. Presumed-liveness (suppression, range,
         // doc coverage) is decidable from the listings + doc sweep, so
         // it rides the unit args; the per-segment GET+parse is the
         // distributed part.
-        val unsuppressed = store.listStatsSegments().toSet
-        val tagged = store.listStatsSegmentsRaw().map { case (first, n) =>
+        val unsuppressed = listing.unsuppressed.toSet
+        val tagged = listing.raw.map { case (first, n) =>
           (first, n, unsuppressed((first, n)) &&
             first >= 0 && first + n <= numChunks &&
             !inRefresh(first, n.toLong) &&
@@ -572,7 +580,7 @@ object ZarrMaintenance {
       spark: SparkSession, path: String, inlineMax: Long): (Long, Long) = {
     val pairs = ZarrStore.fsPairs(spark.sessionState.newHadoopConf())
     val store = ZarrStore(path, pairs)
-    val metas = store.listArrays().map(store.readMeta).sortBy(_.name)
+    val metas = store.committedView().arrays
     val geom =
       try ScanGeometry.resolve(metas)
       catch { case e: ZarrException =>
@@ -580,7 +588,7 @@ object ZarrMaintenance {
     // ONE raw LIST serves both the before-count and the live set (a
     // second `_stats/` LIST is O(segments/1000) paginated requests at
     // the scale this op targets)
-    val raw = store.listStatsSegmentsRaw()
+    val raw = store.sidecar().raw
     val before = raw.size.toLong
     // committed, unsuppressed, in-grid, NON-EMPTY segments only —
     // sorted by first (ZarrStore.liveSegments, the ONE rule this op
@@ -669,8 +677,9 @@ object ZarrMaintenance {
     import scala.jdk.CollectionConverters._
     val pairs = ZarrStore.fsPairs(spark.sessionState.newHadoopConf())
     val store = ZarrStore(path, pairs)
-    val metas = store.listArrays().map(store.readMeta).sortBy(_.name)
-    val maniParts = store.readChunkManifest().parts
+    val view = store.committedView()
+    val metas = view.arrays
+    val maniParts = view.manifest.parts
     val partDirs: Set[String] = maniParts.map(_._2).toSet
     val capacity = ZarrDistWalk.gridCapacity(metas)
 
@@ -682,8 +691,21 @@ object ZarrMaintenance {
     // job
     val fanTarget = if (capacity > inlineMax) ZarrDistWalk.fanTarget(spark) else 0
     val fs = store.fs
+    // a commit writes the per-array documents before the root; after a
+    // lost root write, the chunks a per-array shape addresses past the
+    // root's belong to that commit, which the next cube write's
+    // torn-commit heal brings into view — so no slot either document
+    // addresses is an orphan
+    def sparedGrid(m: ZarrArrayMeta): Seq[Long] = {
+      val own =
+        if (!view.consolidated) None
+        else try Some(store.readMeta(m.name).gridShape).filter(_.length == m.ndim)
+        catch { case _: Exception => None }
+      m.gridShape.indices.map(d =>
+        own.fold(m.gridShape(d))(g => math.max(g(d), m.gridShape(d))).toLong)
+    }
     val planned = metas.map { m =>
-      val grid = m.gridShape.map(_.toLong).toSeq
+      val grid = sparedGrid(m)
       val arrayDir = new Path(store.rootPath, m.name)
       val (files, stagingDirs, units) =
         ZarrDistWalk.planArray(fs, store.rootPath, m.name, fanTarget)
@@ -718,18 +740,11 @@ object ZarrMaintenance {
       val colTypes = metas.map(m => m.name -> m.dataType.zarrName).toMap
       val (numChunks, ndim, grid, dims) =
         (geom.numChunks, geom.ndim, geom.gridShape.toSeq, geom.dimIdentity)
-      phantoms += ZarrDistWalk.run(spark, store.listStatsSegments(), inlineMax)(segs =>
+      val listing = store.sidecar()
+      phantoms += ZarrDistWalk.run(spark, listing.unsuppressed, inlineMax)(segs =>
         Seq(ZarrDistWalk.vacuumSegmentsUnit(
           path, pairs, segs, numChunks, ndim, grid, dims, colTypes))).sum
-      val statsDir = new Path(store.rootPath, ChunkStats.dirName)
-      val innerOrds = Seq.newBuilder[Long]
-      if (fs.exists(statsDir))
-        fs.listStatus(statsDir).foreach { st =>
-          val nm = st.getPath.getName
-          if (nm.startsWith("c.part")) {
-            if (fs.delete(st.getPath, false)) phantoms += 1
-          } else ChunkStats.parseInnerName(nm).foreach(innerOrds += _)
-        }
+      phantoms += listing.staged.count(st => store.deleteKey(st.key))
       // per-inner-chunk docs: phantom when out of grid, unreadable,
       // signed for a shape/grid the store no longer has, or ALL-STALE
       // against the live objects' length/mtime/etag (every reader
@@ -739,7 +754,7 @@ object ZarrMaintenance {
       // GET+HEAD the driver must not serialize at scale.
       val metaJsons = metas.map(m => m.name -> m.sourceJson)
       val docParts = if (geom.ndim == 1) maniParts else Vector.empty
-      phantoms += ZarrDistWalk.run(spark, innerOrds.result(), inlineMax)(ords =>
+      phantoms += ZarrDistWalk.run(spark, listing.innerOrds, inlineMax)(ords =>
         Seq(ZarrDistWalk.vacuumInnerDocsUnit(path, pairs, ords, metaJsons, docParts))).sum
     }
 

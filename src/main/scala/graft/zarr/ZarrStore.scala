@@ -131,63 +131,34 @@ final case class ZarrStore(root: String, hadoopConfPairs: Seq[(String, String)] 
     finally out.close()
   }
 
-  /** Chunk manifest from the root document (rename-free staged commits;
-    * empty for canonical-keyed stores). */
-  def readChunkManifest(): ChunkManifest =
-    readText("zarr.json").map(ChunkManifest.parse).getOrElse(ChunkManifest.empty)
-
-  /** Array metadata from the root document's `consolidated_metadata`, or
-    * None when absent/uninlined — callers fall back to per-array reads.
-    * Sorted by name to match [[listArrays]] schema order. */
-  def readConsolidatedMetas(): Option[Seq[ZarrArrayMeta]] =
-    readRootSnapshot().map(_._1)
-
-  /** ONE root-document read giving the store's atomic commit-point view:
-    * consolidated array metadata AND the chunk manifest parsed from the
-    * SAME document. Callers that need both (the streaming source's
-    * per-trigger view) must use this rather than two separate root
-    * reads — a staged-append commit replaces the root doc in one PUT,
-    * and pairing a new shape with a stale manifest resolves fresh
-    * ordinals to canonical keys that do not exist (silent fill values). */
-  def readRootSnapshot(): Option[(Seq[ZarrArrayMeta], ChunkManifest)] =
-    readText("zarr.json") match {
-      case Some(doc) =>
-        // a v3 root EXISTS: it is the authority. Returning None here
-        // (uninlined consolidated metadata) sends callers to the live
-        // per-array fallback — it must NOT fall through to a leftover
-        // v2 `.zmetadata` sidecar, whose stale shapes/dtypes would
-        // silently override the v3 store after a v2→v3 migration
-        ZarrMeta.parseConsolidated(doc) match {
-          case metas if metas.nonEmpty =>
-            Some((metas.sortBy(_.name), ChunkManifest.parse(doc)))
-          case _ => None
-        }
+  /** THE committed state of the store, from ONE root-document read: the
+    * consolidated array metadata (v3 `consolidated_metadata`, else a v2
+    * `.zmetadata`) and the chunk manifest of the SAME document — a
+    * staged-append commit replaces the root in one PUT, and pairing a
+    * new shape with a stale manifest resolves fresh ordinals to
+    * canonical keys that do not exist (silent fill values). Per-array
+    * documents are read only when the store has no consolidated root:
+    * a commit writes them first and the root last, so after a lost root
+    * write a per-array shape runs ahead of what readers see. A v3 root
+    * is the authority whenever it exists — a leftover v2 `.zmetadata`
+    * must never override it after a v2→v3 migration. An absent or
+    * array-less store yields no metas and records why
+    * ([[ZarrStore.View.arrays]]). */
+  def committedView(): ZarrStore.View = {
+    val root = readText("zarr.json")
+    val consolidated = root match {
+      case Some(doc) => ZarrMeta.parseConsolidated(doc)
       case None =>
-        // Zarr v2 consolidated metadata (one-GET inference for v2
-        // stores; v2 has no chunk manifest — canonical keys only)
-        readText(".zmetadata").flatMap { doc =>
-          ZarrMeta.parseV2Consolidated(doc) match {
-            case metas if metas.nonEmpty =>
-              Some((metas.sortBy(_.name), ChunkManifest.empty))
-            case _ => None
-          }
-        }
+        readText(".zmetadata").fold(Seq.empty[ZarrArrayMeta])(ZarrMeta.parseV2Consolidated)
     }
-
-  /** The committed state a writer extends: array metadata and chunk
-    * manifest from ONE root read ([[readRootSnapshot]]), per-array
-    * documents only when the store has no consolidated root. A commit
-    * writes the per-array documents first and the root last, so after a
-    * lost root write a per-array shape runs ahead of the manifest;
-    * extending from it would place the next rows past a gap that reads
-    * as fill values. No metas for an absent or array-less store. */
-  def committedView(): (Seq[ZarrArrayMeta], ChunkManifest) =
-    readRootSnapshot().getOrElse {
-      val names =
-        try listArrays()
-        catch { case _: ZarrException => Seq.empty }
-      (names.map(readMeta), readChunkManifest())
+    val manifest = root.fold(ChunkManifest.empty)(ChunkManifest.parse)
+    if (consolidated.nonEmpty)
+      ZarrStore.View(consolidated.sortBy(_.name), manifest, consolidated = true)
+    else (try Right(listArrays()) catch { case e: ZarrException => Left(e.getMessage) }) match {
+      case Right(names) => ZarrStore.View(names.map(readMeta), manifest, consolidated = false)
+      case Left(why) => ZarrStore.View(Nil, manifest, consolidated = false, missing = Some(why))
     }
+  }
 
   def delete(): Unit = if (fs.exists(rootPath)) fs.delete(rootPath, true)
 
@@ -230,73 +201,28 @@ final case class ZarrStore(root: String, hadoopConfPairs: Seq[(String, String)] 
     }
   }
 
-  /** Every committed stats-segment file physically present, sorted by
-    * first ordinal, WITHOUT the overlap suppression [[listStatsSegments]]
-    * applies. Writers retiring segments must walk this raw listing:
-    * overlap-suppressed files are exactly the leftovers of a failed
-    * write whose ordinals are being reused, and skipping them would
-    * leave them on disk to overlap (and suppress) the fresh segments. */
-  def listStatsSegmentsRaw(): Seq[(Long, Int)] = {
-    val dir = new Path(rootPath, ChunkStats.dirName)
-    try fs.listStatus(dir).toSeq
-      .flatMap(st => ChunkStats.parseSegmentName(st.getPath.getName))
-      .sortBy(_._1)
-    catch { case _: java.io.FileNotFoundException => Seq.empty }
+  /** The ONE listing of the `_stats/` sidecar: a single LIST, each name
+    * parsed by [[ChunkStats.parseName]]. Segments, inner docs and staged
+    * `c.part*` entries all come from it; callers filter it and delete
+    * through [[deleteKey]]. Pages stream (RemoteIterator — S3A lists
+    * lazily) and only parsed names are kept. Throws what the LIST
+    * throws; an absent sidecar is an empty one. */
+  def sidecar(): ZarrStore.Sidecar = {
+    val out = Seq.newBuilder[ChunkStats.Entry]
+    try {
+      val it = fs.listStatusIterator(new Path(rootPath, ChunkStats.dirName))
+      while (it.hasNext) ChunkStats.parseName(it.next().getPath.getName).foreach(out += _)
+    } catch { case _: java.io.FileNotFoundException => () }
+    ZarrStore.Sidecar(out.result())
   }
+
+  /** Every committed stats-segment file physically present, sorted by
+    * first ordinal, WITHOUT overlap suppression ([[ZarrStore.Sidecar.raw]]). */
+  def listStatsSegmentsRaw(): Seq[(Long, Int)] = sidecar().raw
 
   /** Committed stats segments READERS may trust: (firstChunkOrdinal,
-    * nChunks), sorted, overlaps suppressed. One LIST of `_stats/` —
-    * segment ordinal ranges live in the names, so a reader learns which
-    * segments cover its chunk range without a read. */
-  def listStatsSegments(): Seq[(Long, Int)] =
-    ZarrStore.unsuppressedSegments(listStatsSegmentsRaw())
-
-
-  /** Whether any per-inner-chunk stats doc (`_stats/i<ord>.json`,
-    * [[ChunkStats.innerKey]]) exists — one LIST, evaluated at scan
-    * planning so readers on never-analyzed stores don't pay a 404 GET
-    * per shard probing for docs that cannot exist. */
-  def hasInnerStatsDocs(): Boolean = {
-    val dir = new Path(rootPath, ChunkStats.dirName)
-    try fs.listStatus(dir).exists(st =>
-      ChunkStats.parseInnerName(st.getPath.getName).isDefined)
-    catch { case _: java.io.FileNotFoundException => false }
-  }
-
-  /** Ordinals of every committed per-inner-chunk stats doc — one LIST
-    * of `_stats/` (incremental analyze's coverage sweep). */
-  def listInnerStatsDocOrds(): Seq[Long] = {
-    val dir = new Path(rootPath, ChunkStats.dirName)
-    try fs.listStatus(dir).toSeq
-      .flatMap(st => ChunkStats.parseInnerName(st.getPath.getName))
-    catch { case _: java.io.FileNotFoundException => Seq.empty }
-  }
-
-  /** Delete every per-inner-chunk stats doc (re-analyze refresh). */
-  def deleteInnerStatsDocs(): Unit = {
-    val dir = new Path(rootPath, ChunkStats.dirName)
-    try fs.listStatus(dir).foreach { st =>
-      if (ChunkStats.parseInnerName(st.getPath.getName).isDefined)
-        fs.delete(st.getPath, false)
-    } catch { case _: java.io.FileNotFoundException => () }
-  }
-
-  /** Remove leftover staged stats segments of ONE write
-    * (`_stats/c.part<writeId>*`). Staging keys embed the writeId exactly
-    * so concurrent jobs cannot collide — an unscoped cleanup would let a
-    * committing write delete a still-running write's staged stats, which
-    * then commits silently without segments (pushdowns and chunk skips
-    * quietly degrade for that data). */
-  def cleanStatsStaging(writeId: String): Unit = {
-    val dir = new Path(rootPath, ChunkStats.dirName)
-    if (fs.exists(dir))
-      // the trailing '-' is load-bearing: every staged stats key is
-      // c.part<writeId>-..., and without the delimiter one write's
-      // cleanup matches any CONCURRENT write whose longer id extends
-      // this one — exactly the cross-write deletion scoping forbids
-      fs.listStatus(dir).filter(_.getPath.getName.startsWith(s"c.part$writeId-"))
-        .foreach(st => fs.delete(st.getPath, false))
-  }
+    * nChunks), sorted, overlaps suppressed ([[ZarrStore.Sidecar.unsuppressed]]). */
+  def listStatsSegments(): Seq[(Long, Int)] = sidecar().unsuppressed
 
   /** Metadata-only move of a chunk object. On true filesystems
     * (local/HDFS) this is cheap; on S3A it is COPY+DELETE — which is why
@@ -432,39 +358,6 @@ final case class ZarrStore(root: String, hadoopConfPairs: Seq[(String, String)] 
     }
   }
 
-  /** Staged per-inner-chunk docs of ONE write: ordinals parsed from
-    * `_stats/c.part<writeId>-i<ord>.json` names
-    * ([[ChunkStats.cubeInnerStagingKey]]), for promotion to
-    * [[ChunkStats.innerKey]] after the chunk swap. */
-  def listCubeStagedInnerDocs(writeId: String): Seq[Long] = {
-    val prefix = s"c.part$writeId-i"
-    val re = "^i(\\d+)\\.json$".r
-    val dir = new Path(rootPath, ChunkStats.dirName)
-    try fs.listStatus(dir).toSeq.flatMap { st =>
-      val nm = st.getPath.getName
-      if (!nm.startsWith(prefix)) None
-      else re.findFirstMatchIn(nm.drop(prefix.length - 1)).map(_.group(1).toLong)
-    }.sorted
-    catch { case _: java.io.FileNotFoundException => Seq.empty }
-  }
-
-  /** Staged cube-slab segments of ONE write: the (first, n) ranges
-    * parsed from `_stats/c.part<writeId>-s<first>_<n>.json` names
-    * ([[ChunkStats.cubeStagingKey]]), for promotion to final keys after
-    * the chunk swap. */
-  def listCubeStagedSegments(writeId: String): Seq[(Long, Int)] = {
-    val prefix = s"c.part$writeId-s"
-    val re = "^s(\\d+)_(\\d+)\\.json$".r
-    val dir = new Path(rootPath, ChunkStats.dirName)
-    try fs.listStatus(dir).toSeq.flatMap { st =>
-      val nm = st.getPath.getName
-      if (!nm.startsWith(prefix)) None
-      else re.findFirstMatchIn(nm.drop(prefix.length - 1))
-        .map(m => (m.group(1).toLong, m.group(2).toInt))
-    }.sortBy(_._1)
-    catch { case _: java.io.FileNotFoundException => Seq.empty }
-  }
-
   /** Delete one object; true iff it existed and the delete succeeded
     * (reclaim REPORTS count only confirmed deletions — callers that
     * just want the object gone ignore the result). */
@@ -483,40 +376,6 @@ final case class ZarrStore(root: String, hadoopConfPairs: Seq[(String, String)] 
       fs.listStatus(dir).filter(_.getPath.getName.startsWith(prefix))
         .foreach(st => fs.delete(st.getPath, true))
   }
-
-  /** Delete committed (final-keyed) per-inner-chunk stats docs whose
-    * ordinal is at or after `fromOrd` — the inner-doc twin of
-    * [[cleanStatsSegmentsFrom]]: an aborted append's leftover docs
-    * describe chunks a later append will reuse (and the cube append's
-    * ragged-edge rewrite must retire its window's docs before the
-    * swap, since the smaller-leading-extent acceptance would otherwise
-    * keep them live over REWRITTEN chunks). */
-  def cleanInnerDocsFrom(fromOrd: Long): Unit = {
-    val dir = new Path(rootPath, ChunkStats.dirName)
-    if (fs.exists(dir))
-      fs.listStatus(dir).foreach { st =>
-        ChunkStats.parseInnerName(st.getPath.getName).foreach { ord =>
-          if (ord >= fromOrd) fs.delete(st.getPath, false)
-        }
-      }
-  }
-
-  /** Delete committed (final-keyed) stats segments whose range starts at
-    * or after chunk ordinal `fromChunk`. Aligned appends write final
-    * segment keys from the tasks, so an aborted aligned append leaves
-    * segments describing chunks the store does not own (shape[0] excludes
-    * them) — they would poison coverage checks and, once a later append
-    * reuses those ordinals, describe since-overwritten chunks. Called
-    * from abort() and defensively before every write. */
-  def cleanStatsSegmentsFrom(fromChunk: Long): Unit = {
-    val dir = new Path(rootPath, ChunkStats.dirName)
-    if (fs.exists(dir))
-      fs.listStatus(dir).foreach { st =>
-        ChunkStats.parseSegmentName(st.getPath.getName).foreach { case (first, _) =>
-          if (first >= fromChunk) fs.delete(st.getPath, false)
-        }
-      }
-  }
 }
 
 object ZarrStore {
@@ -530,11 +389,52 @@ object ZarrStore {
       .filter(_._1.startsWith("fs.")).toSeq
   }
 
+  /** A store's committed state ([[ZarrStore.committedView]]): array
+    * metadata sorted by name, the chunk manifest of the same root
+    * document, whether the metadata came from a consolidated root, and —
+    * for an absent or array-less store — why it has no arrays. */
+  final case class View(
+      metas: Seq[ZarrArrayMeta], manifest: ChunkManifest,
+      consolidated: Boolean, missing: Option[String] = None) {
+    /** The metas of a store that must exist: an absent or array-less
+      * store fails with [[ZarrStore.listArrays]]' message. */
+    def arrays: Seq[ZarrArrayMeta] = {
+      missing.foreach(why => throw new ZarrException(why))
+      metas
+    }
+  }
+
+  /** One `_stats/` listing ([[ZarrStore.sidecar]]), parsed. */
+  final case class Sidecar(entries: Seq[ChunkStats.Entry]) {
+    /** Segment files (first, n), first-sorted, WITHOUT overlap
+      * suppression. Writers retiring segments must walk this: suppressed
+      * files are exactly the leftovers of a failed write whose ordinals
+      * are being reused, and skipping them would leave them to overlap
+      * (and suppress) the fresh segments. */
+    lazy val raw: Seq[(Long, Int)] =
+      entries.collect { case ChunkStats.SegmentFile(f, n) => (f, n) }.sortBy(_._1)
+    /** The segments readers may trust ([[unsuppressedSegments]]). */
+    lazy val unsuppressed: Seq[(Long, Int)] = unsuppressedSegments(raw)
+    /** Ordinals of the committed per-inner-chunk docs, sorted. */
+    lazy val innerOrds: Seq[Long] =
+      entries.collect { case ChunkStats.InnerFile(o) => o }.sorted
+    /** Every staged `c.part*` entry, parseable suffix or not. */
+    lazy val staged: Seq[ChunkStats.StagedFile] =
+      entries.collect { case s: ChunkStats.StagedFile => s }
+  }
+
+  object Sidecar {
+    val empty: Sidecar = Sidecar(Nil)
+
+    /** The read side's listing: the sidecar is auxiliary there, so a
+      * failed LIST plans without it (writers and maintenance call
+      * [[ZarrStore.sidecar]] and let the failure abort them). */
+    def orEmpty(store: ZarrStore): Sidecar =
+      try store.sidecar() catch { case _: Throwable => empty }
+  }
+
   /** Overlap suppression over a raw (first-sorted) segment listing —
-    * the rule [[ZarrStore.listStatsSegments]] applies; exposed so a
-    * caller already holding the raw listing (sidecar compaction, which
-    * also needs the raw COUNT) does not pay a second `_stats/` LIST —
-    * O(segments/1000) paginated requests on object stores. */
+    * the rule [[ZarrStore.Sidecar.unsuppressed]] applies. */
   def unsuppressedSegments(raw0: Seq[(Long, Int)]): Seq[(Long, Int)] = {
     // zero-length entries claim NO ordinals: they can neither serve a
     // reader nor conflict with one, but left in the sweep they would

@@ -122,9 +122,11 @@ object ZarrWriter {
     var ord = 0L
     while (ord < nChunks) {
       val idx = ScanGeometry.indexOf(ord, grid)
+      val extent = idx.indices.map(d =>
+        math.min(chunkShape(d).toLong, shape(d) - idx(d).toLong * chunkShape(d)).toInt)
       if (!skipChunks(idx.toSeq))
         store.writeChunk(name, meta.chunkKey(idx), ChunkColumn.encode(meta,
-          extractChunk(values, shape.toArray, chunkShape.toArray, idx, meta.fillValue)))
+          extractChunk(values, shape.toArray, chunkShape.toArray, idx, meta.fillValue), extent))
       ord += 1
     }
   }

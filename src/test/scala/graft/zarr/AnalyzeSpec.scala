@@ -475,7 +475,7 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
       val st = ZarrStore(url)
       assert(st.listStatsSegmentsRaw().size > 64,
         s"fixture must exceed the inline threshold: ${st.listStatsSegmentsRaw().size}")
-      assert(st.listInnerStatsDocOrds().size > 64)
+      assert(st.sidecar().innerOrds.size > 64)
       // junk every failure class: out-of-grid segment, unreadable doc,
       // guard-stale doc (mtime bumped past the recorded token)
       st.writeText(ChunkStats.segmentKey(500, 4), "{}")
@@ -487,7 +487,7 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     def sidecar(url: String): (Seq[(Long, Int)], Seq[Long]) = {
       val st = ZarrStore(url)
-      (st.listStatsSegmentsRaw(), st.listInnerStatsDocOrds().sorted)
+      (st.listStatsSegmentsRaw(), st.sidecar().innerOrds.sorted)
     }
     val urlA = s"graftstat://$base/abdrv"
     val urlB = s"graftstat://$base/abdist"

@@ -38,7 +38,8 @@ class ConsolidatedMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val store = ZarrStore(s"$base/c1",
       Seq("fs.graftstat.impl" -> classOf[RecordingFileSystem].getName))
-    val metas = store.readConsolidatedMetas()
+    val view = store.committedView()
+    val metas = Option.when(view.consolidated)(view.metas)
     assert(metas.isDefined && metas.get.map(_.name) == Seq("id", "name", "v"))
     assert(metas.get.forall(_.shape(0) == 64))
 
@@ -59,7 +60,8 @@ class ConsolidatedMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
       .option("chunk_size", "16").save(url)
     (32 until 48).map(i => (i.toLong, i * 1.0)).toDF("id", "v")
       .coalesce(1).write.format("zarr").mode("append").save(url)
-    val metas = ZarrStore(s"$base/c2").readConsolidatedMetas()
+    val view = ZarrStore(s"$base/c2").committedView()
+    val metas = Option.when(view.consolidated)(view.metas)
     assert(metas.exists(_.forall(_.shape(0) == 48)))
     assert(spark.read.format("zarr").load(url).count() == 48)
   }
@@ -70,7 +72,7 @@ class ConsolidatedMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(8L), Seq(4), (0 until 8).map(_.toLong: Any),
       None, ZarrWriter.CodecChain.raw)
     store.writeStoreRootMeta() // bare group doc, no consolidated field
-    assert(store.readConsolidatedMetas().isEmpty)
+    assert(!store.committedView().consolidated)
     val df = spark.read.format("zarr").load(s"$base/c3")
     assert(df.schema.fieldNames.toSeq == Seq("x"))
     assert(df.count() == 8)
@@ -91,7 +93,7 @@ class ConsolidatedMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
         |"x/.zarray":{"zarr_format":2,"shape":[4],"chunks":[4],
         |"dtype":"<f8","compressor":null,"fill_value":0,"order":"C"}}}""".stripMargin
     JF.write(Paths.get(s"$base/c4/.zmetadata"), stale.getBytes)
-    assert(store.readConsolidatedMetas().isEmpty,
+    assert(!store.committedView().consolidated,
       "v3 root present: the snapshot must decline, not read the sidecar")
     val df = spark.read.format("zarr").load(s"$base/c4")
     assert(df.count() == 8, "per-array fallback must see the live v3 store")

@@ -318,7 +318,7 @@ class CrashPointSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
       assertTabAggs(url, newRows, s"$at, after re-run")
       ZarrMaintenance.vacuum(spark, url).collect()
       assert(tabScan(url) == newRows, s"$at: vacuum changed the rows")
-      val referenced = ZarrStore(dir.toString).readChunkManifest().parts.map(_._2).toSet
+      val referenced = ZarrStore(dir.toString).committedView().manifest.parts.map(_._2).toSet
       val stray = stagingLeftovers(dir).filterNot(p => referenced(Paths.get(p).getFileName.toString))
       assert(stray.isEmpty, s"$at: staging the manifest does not reference survived vacuum: $stray")
     }
@@ -330,6 +330,42 @@ class CrashPointSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("tabular staged append: every crash leaves the old rows; a re-run gives exactly the new") {
     tabularAppendCase("tab-staged", aligned = false)
+  }
+
+  test("torn staged append: a full analyze writes no segment past the root's grid") {
+    // a staged tabular append crashed at its last mutation, the root
+    // write: the per-array documents say 40 rows (8 chunks) over a root,
+    // and a manifest, that still commit 20 (4 chunks)
+    def write(df: DataFrame, url: String, mode: String): Unit =
+      df.write.format("zarr").mode(mode).option("chunk_size", "5")
+        .option("inner_chunk_size", "1").save(url)
+    val template = Paths.get(base, "torn-template")
+    write(tabRows(0, 20), template.toString, "overwrite")
+    val probe = Paths.get(base, "torn-probe")
+    copyTree(template, probe)
+    CrashFileSystem.arm(Long.MaxValue)
+    write(tabRows(20, 40), s"graftcrash://$probe", "append")
+    val calls = CrashFileSystem.count
+    val dir = Paths.get(base, "torn")
+    copyTree(template, dir)
+    CrashFileSystem.arm(calls)
+    intercept[Exception](write(tabRows(20, 40), s"graftcrash://$dir", "append"))
+    CrashFileSystem.disarm()
+    val store = ZarrStore(dir.toString)
+    assert(store.readMeta("id").shape(0) == 40 &&
+      store.committedView().metas.forall(_.shape(0) == 20), "precondition: a torn commit")
+
+    ZarrMaintenance.analyze(spark, dir.toString)
+    def pastGrid(): Seq[String] = {
+      val listing = store.sidecar()
+      listing.raw.collect { case (f, n) if f + n > 4 => ChunkStats.segmentKey(f, n) } ++
+        listing.innerOrds.collect { case o if o >= 4 => ChunkStats.innerKey(o) }
+    }
+    assert(pastGrid().isEmpty, s"analyze described chunks past the root's grid: ${pastGrid()}")
+    // sidecar compaction plans over the same committed grid
+    ZarrMaintenance.compactStats(spark, dir.toString)
+    assert(pastGrid().isEmpty, s"compactStats merged past the root's grid: ${pastGrid()}")
+    assert(tabScan(dir.toString) == (0L until 20L).map(i => (i, i * 0.5)))
   }
 
   private def aggs(url: String): org.apache.spark.sql.Row =

@@ -82,7 +82,7 @@ class StatsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(allRanges(url) == rangesBefore,
       "per-ordinal bounds must survive the merge exactly")
     // inner docs untouched; aggregates identical; still metadata-only
-    assert(st.listInnerStatsDocOrds().size == 66)
+    assert(st.sidecar().innerOrds.size == 66)
     RecordingFileSystem.opened.clear()
     val aggAfter = spark.read.format("zarr").load(url)
       .agg(count(lit(1)), min("x"), max("x"), sum("id")).collect()(0)

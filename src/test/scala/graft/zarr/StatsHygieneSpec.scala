@@ -96,13 +96,21 @@ class StatsHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.map(_.getLong(0)).sorted.toSeq == (32L until 48L))
   }
 
-  test("cleanStatsSegmentsFrom removes only segments at/after the base ordinal") {
+  test("the _stats/ listing parses segments, inner docs and staging") {
     val store = ZarrStore(s"$base/cleanfrom")
-    store.writeText(ChunkStats.segmentKey(0, 5), "{}")
     store.writeText(ChunkStats.segmentKey(5, 2), "{}")
-    store.writeText(ChunkStats.segmentKey(9, 1), "{}")
-    store.cleanStatsSegmentsFrom(5)
-    assert(store.listStatsSegments() == Seq((0L, 5)))
+    store.writeText(ChunkStats.segmentKey(0, 5), "{}")
+    store.writeText(ChunkStats.innerKey(3), "{}")
+    store.writeText(ChunkStats.stagingKey("w1-0", ChunkStats.SegmentFile(0L, 4)), "{}")
+    store.writeText(s"${ChunkStats.dirName}/c.partdead-0_4.json", "{}") // old-form leftover
+    store.writeText(s"${ChunkStats.dirName}/notes.txt", "{}") // foreign: not an entry
+    val listing = store.sidecar()
+    assert(listing.raw == Seq((0L, 5), (5L, 2)))
+    assert(listing.innerOrds == Seq(3L))
+    assert(listing.staged.map(_.name).sorted == Seq("c.partdead-0_4.json", "c.partw1-0-s0_4.json"))
+    val staged = listing.staged.filter(_.ofWrite("w1"))
+    assert(staged.map(s => (s.scope, s.target)) == Seq(("w1-0", Some(ChunkStats.SegmentFile(0L, 4)))))
+    assert(listing.staged.filterNot(_.ofWrite("w1")).forall(_.target.isEmpty))
   }
 
   test("pushed SUM/AVG equals the scanned truth on random stores (staged + aligned)") {

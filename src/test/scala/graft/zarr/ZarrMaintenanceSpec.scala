@@ -600,7 +600,7 @@ class ZarrMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
         .option("chunk_size", "16").save(path)
     }
     val store = ZarrStore(path)
-    assume(store.readChunkManifest().parts.nonEmpty, "expected a staged commit")
+    assume(store.committedView().manifest.parts.nonEmpty, "expected a staged commit")
     val before = spark.read.format("zarr").load(path)
       .orderBy("a").collect().toSeq
     val counts = ZarrMaintenance.vacuum(spark, path).collect()
@@ -624,15 +624,15 @@ class ZarrMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
         .save(src)
     }
     val srcStore = ZarrStore(src)
-    assert(srcStore.readChunkManifest().parts.length == 5)
+    assert(srcStore.committedView().manifest.parts.length == 5)
     assert(srcStore.readMeta("id").sourceJson.contains(ChunkManifest.transformerName))
     ZarrMaintenance.compact(spark, src, dst, chunkSize = 64, innerChunkSize = 16)
     // the compacted store is fully canonical: no manifest entries in the
     // root doc, no must-understand transformer marker on any array —
     // generic Zarr v3 tools can read it again
     val dstStore = ZarrStore(dst)
-    assert(dstStore.readChunkManifest().isEmpty,
-      s"compacted store still carries manifest parts: ${dstStore.readChunkManifest().parts}")
+    assert(dstStore.committedView().manifest.isEmpty,
+      s"compacted store still carries manifest parts: ${dstStore.committedView().manifest.parts}")
     assert(!dstStore.readMeta("id").sourceJson.contains(ChunkManifest.transformerName))
     assert(spark.read.format("zarr").load(dst).orderBy("id").collect()
       .map(_.getLong(0)).toSeq == (0L until 160L))

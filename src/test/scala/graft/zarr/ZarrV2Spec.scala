@@ -83,9 +83,9 @@ class ZarrV2Spec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test(".zmetadata consolidated: one-GET inference returns all three arrays") {
-    val snap = ZarrStore(store1d).readRootSnapshot()
-    assert(snap.isDefined, "v2 .zmetadata must satisfy readRootSnapshot")
-    val (metas, manifest) = snap.get
+    val view = ZarrStore(store1d).committedView()
+    assert(view.consolidated, "v2 .zmetadata must satisfy the committed view")
+    val (metas, manifest) = (view.metas, view.manifest)
     assert(metas.map(_.name) == Seq("flag", "id64", "u8"))
     assert(metas.forall(_.formatVersion == 2))
     assert(manifest.isEmpty)
@@ -488,9 +488,9 @@ class ZarrV2Spec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("typed store .zmetadata: one-GET snapshot covers all 18 arrays incl. strings/filters/binary") {
-    val snap = ZarrStore(storeTyped).readRootSnapshot()
-    assert(snap.isDefined, "typed-store .zmetadata must satisfy readRootSnapshot")
-    val (metas, manifest) = snap.get
+    val view = ZarrStore(storeTyped).committedView()
+    assert(view.consolidated, "typed-store .zmetadata must satisfy the committed view")
+    val (metas, manifest) = (view.metas, view.manifest)
     assert(metas.length == 18, metas.map(_.name).mkString(","))
     assert(manifest.isEmpty)
     assert(metas.find(_.name == "blob").get.dataType == ZarrType.Bytes)

@@ -66,7 +66,7 @@ class ZarrWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     // every array is marked with the must-understand storage transformer
     // so generic Zarr tools fail loudly instead of reading fill values
     val store = ZarrStore(s"$base/multi")
-    val manifest = store.readChunkManifest()
+    val manifest = store.committedView().manifest
     assert(manifest.parts.length == 3, manifest.parts)
     assert(manifest.parts.map(_._1) == Vector(0L, 2L, 4L))
     assert(manifest.parts.forall(_._3 == 2))
@@ -88,7 +88,7 @@ class ZarrWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     part(0, 40).write.format("zarr").mode("overwrite").option("chunk_size", "10").save(p)
     part(40, 100).write.format("zarr").mode("append").option("chunk_size", "10").save(p)
     val store = ZarrStore(p)
-    assert(store.readChunkManifest().parts.length == 5) // 2 + 3 tasks
+    assert(store.committedView().manifest.parts.length == 5) // 2 + 3 tasks
     val back = spark.read.format("zarr").load(p).orderBy("id").collect()
     assert(back.length == 100)
     back.zipWithIndex.foreach { case (r, i) =>
@@ -105,7 +105,7 @@ class ZarrWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     ZarrWriteSupport.alignForWrite(
       (0 until 40).map(i => (i.toLong, i * 2.0)).toDF("id", "v"), 20)
       .write.format("zarr").mode("overwrite").option("chunk_size", "10").save(p)
-    assert(ZarrStore(p).readChunkManifest().parts.nonEmpty)
+    assert(ZarrStore(p).committedView().manifest.parts.nonEmpty)
     // corrupt the root doc: drop the manifest attribute while the arrays
     // keep their must-understand transformer marker (a crashed/truncated
     // root rewrite, or a tool that stripped unknown attributes)
@@ -145,7 +145,7 @@ class ZarrWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     } finally ZarrWriteSupport.warnSink = realSink
     val store = ZarrStore(p)
-    assert(store.readChunkManifest().parts.length == 6)
+    assert(store.committedView().manifest.parts.length == 6)
     // the 5th and 6th commits crossed the threshold (5 parts) — the
     // commit recommends compaction instead of growing silently
     val err = warnings.toString
@@ -386,7 +386,7 @@ class ZarrWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = spark.read.format("zarr").load(pth)
       .collect().map(_.getLong(0)).sorted
     assert(all.toSeq == (0L until 24L))
-    assert(ZarrStore(pth).readChunkManifest().keyFor(4L).isDefined)
+    assert(ZarrStore(pth).committedView().manifest.keyFor(4L).isDefined)
   }
 
   test("append to an un-encodable codec chain fails with a clear error") {

@@ -177,6 +177,19 @@ assert bb.count() == 64, "sharded blob rows"
 assert bb.agg(F.sum(F.length("blob"))).collect()[0][0] == \
     sum(i % 7 for i in range(64)), "sharded blob byte lengths"
 
+# EDGE SHARD from Python: 100 rows in 16-row shards of 4-row inner
+# chunks leave a 4-row last shard whose 3 all-padding inner chunks are
+# not stored (indexed absent); whole and ranged reads see exactly the rows
+ed_path = "/tmp/pyzarr-edge-shard"
+spark.range(0, 100).selectExpr("id", "id * 3 AS w").coalesce(1) \
+    .write.format("zarr").mode("overwrite").option("chunk_size", "16") \
+    .option("inner_chunk_size", "4").save(ed_path)
+for rr in ("never", "always"):
+    ed = spark.read.format("zarr").option("ranged_reads", rr).load(ed_path)
+    assert sorted(r[0] for r in ed.select("w").collect()) == \
+        [3 * i for i in range(100)], f"edge shard rows, ranged_reads={rr}"
+    assert ed.filter("w >= 291").count() == 3, f"edge shard filter, ranged_reads={rr}"
+
 # zarr_timestamp: the datetime64 -> TIMESTAMP ergonomics helper is a
 # registered SQL function (native expression), callable from Python SQL
 spark._jvm.graft.functions.VectorFunctions.register(spark._jsparkSession)
