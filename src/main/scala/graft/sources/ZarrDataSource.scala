@@ -9,6 +9,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
@@ -245,11 +246,12 @@ class ZarrScanBuilder(
   private var limit: Int = -1
   private var aggScan: Option[ZarrAggScan] = None
 
-  /** The plan's ONE `_stats/` LIST, taken on first use and shared by
-    * aggregate planning, CBO statistics, the reader factory (segment
-    * index, inner-doc flag) and runtime-filter partitioning. The sidecar
-    * is auxiliary: a failed LIST plans without it. */
-  private lazy val sidecar: ZarrStore.Sidecar = ZarrStore.Sidecar.orEmpty(store)
+  /** The plan's ONE `_stats/` LIST and its memo of parsed segments,
+    * taken on first use and shared by aggregate planning, CBO
+    * statistics, partition pruning (static and runtime filters) and the
+    * reader factory's inner-doc flag: no segment is GET twice in one
+    * plan. The sidecar is auxiliary: a failed LIST plans without it. */
+  private val sidecar: PlanSidecar = new PlanSidecar(store, metas)
 
   import org.apache.spark.sql.connector.expressions.aggregate._
   import org.apache.spark.sql.connector.expressions.{Expression, NamedReference}
@@ -326,8 +328,8 @@ class ZarrScanBuilder(
 
     // the one ordinal walk over grid `g`: (complete, per-function merged
     // values, served chunks, served rows, uncovered runs)
-    def walk(g: ScanGeometry, ms: Seq[ZarrArrayMeta]) = {
-      val (segs, exact) = ChunkStats.usableSegments(store, sidecar.unsuppressed, ms, g)
+    def walk(g: ScanGeometry) = {
+      val (segs, exact) = ChunkStats.usableSegments(sidecar, g)
       val acc = new Array[Any](fns.length)
       var served, servedRows = 0L
       val uncovered = Seq.newBuilder[(Long, Long)]
@@ -375,7 +377,7 @@ class ZarrScanBuilder(
         full.ndim > geom.ndim && stats.forall(f => full.dimIdentity.contains(f._2)))
       catch { case _: ZarrException => None }
     val (complete, acc, served, servedRows, uncovered) =
-      try storeGrid.map(walk(_, metas)).filter(_._1).getOrElse(walk(geom, aggMetas))
+      try storeGrid.map(walk).filter(_._1).getOrElse(walk(geom))
       catch { case _: ArithmeticException => return None }
     if (!complete && (served == 0 || fns.exists(_._1 == "avg"))) return None
     // AVG = exact long sum / exact count, guarded so toDouble is
@@ -450,7 +452,7 @@ class ZarrScanBuilder(
 
   override def build(): Scan =
     aggScan.getOrElse(
-      new ZarrScan(store, metas, manifest, required, pushed, options, limit, () => sidecar))
+      new ZarrScan(store, metas, manifest, required, pushed, options, limit, sidecar))
 }
 
 /** The aggregate scan (see [[ZarrScanBuilder.planAggregation]]). One
@@ -474,6 +476,15 @@ class ZarrAggScan(
 
   private val uncoveredChunks = uncovered.map(r => r._2 - r._1).sum
 
+  private lazy val geometry = ScanGeometry.resolve(aggMetas)
+  /** The uncovered runs through the one planner; without filters it
+    * reads no sidecar. */
+  private lazy val plan = ZarrPlanner.plan(uncovered, Nil, geometry,
+    new PlanSidecar(store, aggMetas), ZarrScan.partitionCount(options, _))
+  // COUNT needs no chunk bytes (rows come from the batches; zarr reads
+  // never produce nulls): the reader emits only the value columns
+  private val valueCols = fns.collect { case (fn @ ("min" | "max" | "sum"), c) => c }.distinct
+
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
   override def description(): String =
@@ -481,29 +492,17 @@ class ZarrAggScan(
     else s"ZarrPartialAggScan ${store.root} served=$servedChunks " +
       s"uncoveredChunks=$uncoveredChunks") + s" [${schema.fieldNames.mkString(",")}]"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    // the served row rides a sentinel partition (lo = -1); the uncovered
-    // ordinals are partitioned like the plain scan would partition them
-    val per =
-      if (uncovered.isEmpty) 1L
-      else {
-        val n = ZarrScan.partitionCount(options, uncoveredChunks)
-        (uncoveredChunks + n - 1) / n
-      }
-    (ZarrInputPartition(-1L, -1L) +: uncovered.flatMap { case (lo, hi) =>
-      (lo until hi by per).map(s => ZarrInputPartition(s, math.min(hi, s + per)))
-    }).toArray
-  }
+  // the served row rides a sentinel partition (lo = -1)
+  override def planInputPartitions(): Array[InputPartition] =
+    (ZarrInputPartition(-1L, -1L) +: plan.partitions).toArray
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // COUNT needs no chunk bytes (rows come from the batches; zarr reads
-    // never produce nulls): the reader emits only the value columns
-    val valueCols = fns.collect { case (fn @ ("min" | "max" | "sum"), c) => c }.distinct
     val reader =
       if (uncovered.isEmpty) None
       else Some(ZarrReaderFactory.planned(store, aggMetas.map(m => m.name -> m.sourceJson),
         valueCols, Nil, ChunkManifest.validateRequired(store.root, aggMetas.map(_.sourceJson),
-          manifest), () => ZarrStore.Sidecar.empty))
+          manifest), () => ZarrStore.Sidecar.empty,
+        ZarrPlanner.sharedCoords(store, geometry, valueCols, plan.partitions)))
     // overflow semantics of the executor-side partial SUM must match
     // what Spark's Sum over the same scanned rows would do: throw under
     // ANSI (the 4.x default), wrap otherwise — resolved at plan time
@@ -617,22 +616,23 @@ class ZarrScan(
     pushed: Array[Filter],
     options: CaseInsensitiveStringMap,
     limit: Int,
-    sidecar: () => ZarrStore.Sidecar)
+    sidecar: PlanSidecar)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
 
   private val byName = metas.map(m => m.name -> m).toMap
 
-  /** Arrays the reader must open: projected ones first (output order),
+  /** Arrays the reader fetches: projected ones first (output order),
     * then any predicate-only columns (reference's filter/projection
     * column sharing, `zarr_data_stream.rs:943-963`). */
-  private val readNames: Seq[String] = {
+  private val fetchedNames: Seq[String] = {
     val proj = required.fields.map(_.name).toSeq
-    val predOnly = pushed.flatMap(ChunkFilter.references).distinct
+    proj ++ pushed.flatMap(ChunkFilter.references).distinct
       .filterNot(proj.contains).filter(byName.contains)
-    val all = proj ++ predOnly
-    if (all.nonEmpty) all else metas.map(_.name) // count(*): grid from full table
   }
+  /** Arrays the grid resolves over; count(*) takes it from the full table. */
+  private val readNames: Seq[String] =
+    if (fetchedNames.nonEmpty) fetchedNames else metas.map(_.name)
 
   private[sources] lazy val geometry: ScanGeometry =
     ScanGeometry.resolve(readNames.map(byName))
@@ -657,31 +657,27 @@ class ZarrScan(
       s"pushed=[${pushed.mkString(",")}]" +
       (if (limit >= 0) s" limit=$limit" else "")
 
+  /** The plan under the static filters and `rt`, pruned on the driver
+    * through the plan's sidecar (a pushed limit bounds the candidates). */
+  private def planWith(rt: Seq[Filter]): ZarrPlanner.Plan =
+    ZarrPlanner.plan(ZarrPlanner.candidates(geometry, limit), pushed.toSeq, geometry,
+      sidecar, ZarrScan.partitionCount(options, _), rt)
+
+  private lazy val staticPlan: ZarrPlanner.Plan = planWith(Nil)
+  /** The plan the last [[planInputPartitions]] returned. */
+  @volatile private var lastPlan: Option[ZarrPlanner.Plan] = None
+
+  /** Runtime filters (delivered via filter() after the first planning
+    * pass) re-plan through the same planner and segment memo. */
   override def planInputPartitions(): Array[InputPartition] = {
-    // a pushed limit bounds how many chunks can possibly contribute rows
-    val total =
-      if (limit < 0) geometry.numChunks
-      else {
-        val rowsPerChunk = math.max(1L, geometry.targetChunk.map(_.toLong).product)
-        math.min(geometry.numChunks, (limit + rowsPerChunk - 1) / rowsPerChunk)
-      }
-    val n = ZarrScan.partitionCount(options, total).toInt
-    // runtime filters (delivered via filter() between the factory-built
-    // planning pass and THIS post-filter re-plan) ride on the partitions,
-    // with the plan's sidecar listing so readers can chunk-skip on them
-    // with zero extra metadata round-trips
-    val rt = runtimeFilters.toSeq
-    val rtSegs = if (rt.isEmpty) Nil else sidecar().unsuppressed
-    geometry.partitionRanges(n)
-      .map { case (lo, hi) =>
-        // each partition carries ONLY its overlapping slice of the
-        // segment index — the full index duplicated across thousands of
-        // serialized partitions would dominate task-binary size
-        val mySegs = rtSegs.filter { case (first, c) => first < hi && first + c > lo }
-        ZarrInputPartition(lo, hi, rt, mySegs): InputPartition
-      }
-      .toArray
+    val plan = if (runtimeFilters.isEmpty) staticPlan else planWith(runtimeFilters.toSeq)
+    lastPlan = Some(plan)
+    plan.partitions.toArray
   }
+
+  /** Coordinate chunks the static plan's partitions share, read once. */
+  private lazy val sharedCoords =
+    ZarrPlanner.sharedCoords(store, geometry, fetchedNames, staticPlan.partitions)
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val metaJsons = readNames.map(n => n -> byName(n).sourceJson)
@@ -689,7 +685,20 @@ class ZarrScan(
     // manifest the table's view pinned with these metas
     ZarrReaderFactory.planned(store, metaJsons, required.fields.map(_.name).toSeq,
       (pushed ++ runtimeFilters).toSeq,
-      ChunkManifest.validateRequired(store.root, metaJsons.map(_._2), manifest), sidecar, limit)
+      ChunkManifest.validateRequired(store.root, metaJsons.map(_._2), manifest),
+      () => sidecar.listing, sharedCoords, limit)
+  }
+
+  override def supportedCustomMetrics(): Array[CustomMetric] = ZarrScan.driverMetrics
+
+  /** What planning did, on the scan node: chunks planned and pruned by
+    * the last plan, and coordinate chunks shipped to the tasks. */
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = {
+    val plan = lastPlan.getOrElse(staticPlan)
+    Array(
+      ZarrScan.taskMetric("chunksPlanned", plan.planned),
+      ZarrScan.taskMetric("chunksPruned", plan.pruned),
+      ZarrScan.taskMetric("coordChunksShipped", sharedCoords.length.toLong))
   }
 
   /** Runtime (join-derived) filters — e.g. a broadcast join's IN-set on
@@ -746,7 +755,7 @@ class ZarrScan(
           byName.get(n).exists(m => numeric(m.dataType)))
         if (cols.nonEmpty) {
           val (segs, exact) =
-            ChunkStats.usableSegments(store, sidecar().unsuppressed, metas, geometry)
+            ChunkStats.usableSegments(sidecar, geometry)
           if (exact) {
             val ranges = ChunkStats.exactRanges(cols.toSeq, segs)
             cols.foreach { n =>
@@ -778,14 +787,47 @@ object ZarrScan {
     val requested = ZarrDataSource.opt(options, "partitions")(_.toInt).getOrElse(default)
     math.max(1L, math.min(total, requested.toLong))
   }
+
+  /** The scan node's driver metrics ([[ZarrScan.reportDriverMetrics]]). */
+  val driverMetrics: Array[CustomMetric] =
+    Array(new ChunksPlannedMetric, new ChunksPrunedMetric, new CoordChunksShippedMetric)
+
+  def taskMetric(metric: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = metric
+    override def value(): Long = v
+  }
 }
 
-/** A contiguous chunk-ordinal range, plus any runtime (join-derived)
-  * filters. Runtime filters travel on the partition because Spark may
+// Spark re-creates a metric by class name to aggregate its values, so
+// each is a class with a no-argument constructor.
+final class ChunksPlannedMetric extends CustomSumMetric {
+  override def name(): String = "chunksPlanned"
+  override def description(): String = "chunks planned"
+}
+final class ChunksPrunedMetric extends CustomSumMetric {
+  override def name(): String = "chunksPruned"
+  override def description(): String = "chunks pruned by the stats sidecar"
+}
+final class CoordChunksShippedMetric extends CustomSumMetric {
+  override def name(): String = "coordChunksShipped"
+  override def description(): String = "coordinate chunks shipped to tasks"
+}
+
+/** A contiguous chunk-ordinal range `[lo, hi)` planned by
+  * [[ZarrPlanner]], less the `skip` ranges the planner pruned inside it
+  * (non-empty only when more runs survived than there are partitions),
+  * plus any runtime (join-derived) filters. The planner prunes, tasks
+  * never GET segments: every ordinal a partition reads survived the
+  * sidecar. Runtime filters travel on the partition because Spark may
   * build the reader factory BEFORE `SupportsRuntimeFiltering.filter`
-  * fires, but re-plans partitions after it — `rtSegIndex` carries the
-  * matching driver-side stats-segment listing for the same reason. */
+  * fires, but re-plans partitions after it; the reader still
+  * decode-and-tests with them. */
 final case class ZarrInputPartition(
     lo: Long, hi: Long,
-    runtimeFilters: Seq[Filter] = Nil,
-    rtSegIndex: Seq[(Long, Int)] = Nil) extends InputPartition
+    skip: Seq[(Long, Long)] = Nil,
+    runtimeFilters: Seq[Filter] = Nil) extends InputPartition {
+
+  /** The ordinal runs the partition reads: `[lo, hi)` minus `skip`. */
+  def runs: Seq[(Long, Long)] =
+    ((lo +: skip.map(_._2)) zip (skip.map(_._1) :+ hi)).filter(r => r._2 > r._1)
+}

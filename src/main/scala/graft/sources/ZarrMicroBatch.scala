@@ -67,23 +67,30 @@ class ZarrMicroBatchStream(
     * ordinals to canonical keys that do not exist → silent fill values),
     * nor observe a multi-column append's per-array metadata PUTs torn
     * (which would crash geometry resolution). */
-  private def snapshot(): (ScanGeometry, Seq[(String, String)], Vector[(Long, String, Int)]) = {
+  private def snapshot(): Snapshot = {
     val view = store.committedView()
     val byName = view.arrays.map(m => m.name -> m).toMap
     val metas = arrayNames.map(n => byName.getOrElse(n,
       throw new ZarrException(s"stream over ${store.root}: array '$n' missing from the store")))
     val jsons = metas.map(m => m.name -> m.sourceJson)
-    (ScanGeometry.resolve(metas), jsons,
+    Snapshot(metas, ScanGeometry.resolve(metas), jsons,
       ChunkManifest.validateRequired(store.root, jsons.map(_._2), view.manifest))
   }
 
-  @volatile private var planned: (Seq[(String, String)], Vector[(Long, String, Int)]) =
-    (Seq.empty, Vector.empty)
+  private final case class Snapshot(
+      metas: Seq[ZarrArrayMeta], geometry: ScanGeometry,
+      metaJsons: Seq[(String, String)], manifestParts: Vector[(Long, String, Int)])
+
+  /** The last planned batch: its snapshot, its sidecar (listed per
+    * batch, as the sidecar grows with the store) and its shared
+    * coordinate chunks. */
+  @volatile private var planned: Option[(Snapshot, PlanSidecar,
+    Seq[(String, Int, Option[Array[Byte]])])] = None
 
   override def initialOffset(): Offset = ZarrOffset(0L)
 
   private def availableOffset(): ZarrOffset = {
-    val (g, _, _) = snapshot()
+    val g = snapshot().geometry
     // Default: only COMPLETE dim-0 chunk slabs are committed — a
     // generic Zarr writer may legitimately REWRITE a partial trailing
     // chunk as the array grows, and emitting it early would leave the
@@ -149,27 +156,23 @@ class ZarrMicroBatchStream(
     val hi0 = end.asInstanceOf[ZarrOffset]
     val lo = lo0.chunks
     val hi = hi0.chunks
-    val (g, metaJsons, manifestParts) = snapshot()
-    checkUnit(lo0, g)
-    checkUnit(hi0, g)
-    planned = (metaJsons, manifestParts)
-    if (hi <= lo) Array.empty
-    else {
-      // split the new window into up to 32 contiguous ordinal ranges
-      // (one partition each; per-partition chunk counts are unbounded —
-      // admission control, not this split, bounds batch size)
-      val n = math.max(1, math.min(hi - lo, 32L)).toInt
-      val per = math.max(1L, (hi - lo + n - 1) / n)
-      (0 until n).iterator
-        .map(i => (lo + i * per, math.min(hi, lo + (i + 1) * per)))
-        .filter { case (a, b) => b > a }
-        .map { case (a, b) => ZarrInputPartition(a, b): InputPartition }
-        .toArray
-    }
+    val snap = snapshot()
+    checkUnit(lo0, snap.geometry)
+    checkUnit(hi0, snap.geometry)
+    val sidecar = new PlanSidecar(store, snap.metas)
+    // the new window through the one planner, into up to 32 partitions
+    // (per-partition chunk counts are unbounded — admission control,
+    // not this split, bounds batch size)
+    val plan = ZarrPlanner.plan(if (hi > lo) Seq((lo, hi)) else Nil, pushed, snap.geometry,
+      sidecar, math.min(_, 32L))
+    planned = Some((snap, sidecar,
+      ZarrPlanner.sharedCoords(store, snap.geometry, arrayNames, plan.partitions)))
+    plan.partitions.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val (metaJsons, manifestParts) = planned
+    val (snap, sidecar, sharedCoords) = planned.getOrElse(
+      throw new IllegalStateException("createReaderFactory before planInputPartitions"))
     // per-inner-chunk stats docs are CONSUMABLE in streaming since docs
     // became append-surviving (smaller-leading-extent acceptance): a doc
     // written by the append that produced this batch's slab — or any
@@ -178,9 +181,9 @@ class ZarrMicroBatchStream(
     // is rejected, so a racing ingest can only decline masking, never
     // misdescribe. The usual length/mtime/index-checksum guards apply
     // unchanged executor-side. The manifest is the SAME snapshot as the
-    // planned metadata; the sidecar is listed per batch, as it grows.
-    ZarrReaderFactory.planned(store, metaJsons, outputNames, pushed, manifestParts,
-      () => ZarrStore.Sidecar.orEmpty(store))
+    // planned metadata; the sidecar is the batch's own listing.
+    ZarrReaderFactory.planned(store, snap.metaJsons, outputNames, pushed, snap.manifestParts,
+      () => sidecar.listing, sharedCoords)
   }
 
   override def commit(end: Offset): Unit = ()

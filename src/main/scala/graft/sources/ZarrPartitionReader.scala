@@ -8,7 +8,9 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
 /** Executor-side reader: one [[ZarrInputPartition]] = one contiguous range
-  * of chunk ordinals over the scan geometry's grid.
+  * of chunk ordinals over the scan geometry's grid, less its `skip`
+  * ranges. The planner prunes, tasks never GET segments: every ordinal
+  * here survived the `_stats/` sidecar on the driver ([[ZarrPlanner]]).
   *
   * Pipeline per chunk (mirrors `zarr_data_stream.rs:829-916`):
   *  1. raw bytes of the *predicate* columns arrive (prefetched while the
@@ -23,7 +25,8 @@ import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
   *
   * Coordinate (1-D) chunks are cached for the reader's lifetime: in a 2-D
   * grid the same `lat` chunk is needed by every chunk in its row — the
-  * cache removes O(grid) redundant reads.
+  * cache removes O(grid) redundant reads. It starts with the chunks the
+  * plan shared between partitions and read once on the driver.
   */
 final case class ZarrReaderFactory(
     store: ZarrStore,
@@ -31,14 +34,16 @@ final case class ZarrReaderFactory(
     outputNames: Seq[String],
     filters: Seq[Filter],
     limit: Int = -1,
-    statsSegmentIndex: Seq[(Long, Int)] = Nil,
     /** Ordinal → task-attempt-key mapping for rename-free staged commits
       * (read ONCE from the root doc at planning; [[graft.zarr.ChunkManifest]]). */
     manifestParts: Seq[(Long, String, Int)] = Nil,
     /** Whether the store carries per-inner-chunk stats docs
       * (`_stats/i<ord>.json`) — from the plan's listing, so readers on
       * never-analyzed stores skip the per-shard doc probe entirely. */
-    innerStatsPresent: Boolean = false)
+    innerStatsPresent: Boolean = false,
+    /** Coordinate chunks several partitions read, fetched once by the
+      * planner: (array, chunk index, stored bytes; None = absent). */
+    sharedCoords: Seq[(String, Int, Option[Array[Byte]])] = Nil)
     extends PartitionReaderFactory {
 
   override def supportColumnarReads(partition: InputPartition): Boolean = true
@@ -65,14 +70,13 @@ final case class ZarrReaderFactory(
 
 object ZarrReaderFactory {
 
-  /** The reader factory of a planned scan. With pushed filters, the
-    * plan's `_stats/` listing ships to every task: the segment index
-    * (readers GET only their overlapping segments, never LIST) and, when
-    * a read array is sharded, whether per-inner-chunk stats docs exist
-    * at all (a never-analyzed store must not pay a 404 GET per shard
-    * probing for them); `sidecar` is called once, and only then.
-    * `manifestParts` come from the caller — they must be read with the
-    * metadata of the same view, never from a second, newer root read. */
+  /** The reader factory of a planned read. With filters and a sharded
+    * read array, the plan's `_stats/` listing tells every task whether
+    * per-inner-chunk stats docs exist at all (a never-analyzed store
+    * must not pay a 404 GET per shard probing for them); `sidecar` is
+    * called only then. `manifestParts` come from the caller — they must
+    * be read with the metadata of the same view, never from a second,
+    * newer root read. `sharedCoords` are [[ZarrPlanner.sharedCoords]]. */
   def planned(
       store: ZarrStore,
       metaJsons: Seq[(String, String)],
@@ -80,14 +84,13 @@ object ZarrReaderFactory {
       filters: Seq[Filter],
       manifestParts: Seq[(Long, String, Int)],
       sidecar: () => ZarrStore.Sidecar,
+      sharedCoords: Seq[(String, Int, Option[Array[Byte]])],
       limit: Int = -1): ZarrReaderFactory = {
-    lazy val listing = sidecar()
-    val segIndex = if (filters.isEmpty) Nil else listing.unsuppressed
     val innerStats = filters.nonEmpty &&
       metaJsons.exists { case (n, j) => ZarrMeta.parse(n, j).shardingSpec.isDefined } &&
-      listing.innerOrds.nonEmpty
-    ZarrReaderFactory(store, metaJsons, outputNames, filters, limit, segIndex,
-      manifestParts, innerStats)
+      sidecar().innerOrds.nonEmpty
+    ZarrReaderFactory(store, metaJsons, outputNames, filters, limit,
+      manifestParts, innerStats, sharedCoords)
   }
 }
 
@@ -103,8 +106,6 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     * but it always re-plans input partitions afterwards — so the
     * partition is the only handoff that reliably sees them. */
   private val filters: Seq[Filter] = f.filters ++ part.runtimeFilters
-  private val segIndex: Seq[(Long, Int)] =
-    if (f.statsSegmentIndex.nonEmpty) f.statsSegmentIndex else part.rtSegIndex
   private val geometry = ScanGeometry.resolve(metas)
   private val roleOf: Map[String, ColumnRole] =
     metas.map(_.name).zip(geometry.roles).toMap
@@ -127,6 +128,9 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
   // Concurrent: the prefetch IO threads also decode coords into it when
   // computing inner-chunk masks for ranged shard reads (below).
   private val coordCache = new java.util.concurrent.ConcurrentHashMap[String, ChunkColumn]()
+  f.sharedCoords.foreach { case (n, ci, bytes) =>
+    coordCache.put(s"$n/$ci", ChunkColumn.decode(metaOf(n), bytes))
+  }
 
   // ---- ranged shard reads (inner-chunk masking) ----
   //
@@ -478,40 +482,6 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     if (kept == nRows) null else java.util.Arrays.copyOf(keep, kept)
   }
 
-  /** Chunk-statistics sidecar segments overlapping this partition's chunk
-    * range — the segment INDEX (names only) was listed ONCE on the driver
-    * at planning and shipped in the factory, so each task pays just the
-    * few overlapping segment GETs, never a LIST (at thousands of tasks a
-    * per-reader LIST would be the dominant metadata cost). Consulted
-    * BEFORE any chunk fetch is submitted: a chunk whose recorded ranges
-    * cannot satisfy the filters is skipped with zero chunk IO. Stores
-    * without sidecars (empty index) fall back to the reference's
-    * decode-and-test skip unchanged. Stats ordinals enumerate a SPECIFIC
-    * chunk grid row-major: grid-less segments (the 1-D write path) apply
-    * to 1-D scan grids only; `analyze` segments carry a grid signature
-    * and apply exactly when it matches this scan's geometry — so an N-D
-    * (e.g. lat/lon) store skips chunks with zero GETs after analyze. */
-  private val statsSegments: Seq[ChunkStats.Segment] =
-    if (filters.isEmpty || segIndex.isEmpty) Seq.empty
-    else {
-      segIndex
-        .filter { case (first, n) => first < part.hi && first + n > part.lo }
-        .flatMap { case (first, n) =>
-          // the sidecar is auxiliary: a corrupt/unreadable segment must
-          // never fail the scan — those chunks just decode-and-test
-          try f.store.readText(ChunkStats.segmentKey(first, n))
-            .map(json => ChunkStats.parse(first, n, json, ztOf))
-          catch { case _: Throwable => None }
-        }
-        .filter(ChunkStats.gridCompatible(_, geometry))
-    }
-
-  /** Read-free skip: true iff the sidecar proves no row of chunk `o` can
-    * satisfy the pushed filters. */
-  private def statsSkip(o: Long): Boolean =
-    statsSegments.exists(seg => seg.contains(o) &&
-      !ChunkStats.mayMatch(filters, col => seg.range(col, o)))
-
   /** Manifest-keyed chunks (staged DSv2 commits) apply only to 1-D
     * grids — the only shape the DSv2 writer produces. Declared BEFORE
     * the eager [[prefetch]] below, which already resolves keys. */
@@ -528,8 +498,8 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
   private val coordInFlight = new java.util.HashSet[String]()
   private var current: ColumnarBatch = null
 
-  /** Phase-1 fetches of this partition's chunks, stats-skipped ones
-    * never submitted, through the shared window ([[ChunkPrefetcher]]):
+  /** Phase-1 fetches of this partition's chunks, skipped ranges never
+    * submitted, through the shared window ([[ChunkPrefetcher]]):
     * depth 4 on 4 IO threads. The reference pipelines exactly one chunk
     * ahead on one task (`zarr_data_stream.rs:647-711`); a single IO
     * thread only overlaps IO with decode, which at object-store latency
@@ -537,7 +507,8 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     * parallelizes the waits themselves (~depth× on latency-bound scans,
     * ScanBench r11). */
   private val prefetch = new ChunkPrefetcher[(Long, Seq[(String, String)]), (Long, Fetched)](
-    Iterator.range(part.lo, part.hi).filterNot(statsSkip).map(o => (o, resolveFetch(o, phase1))),
+    part.runs.iterator.flatMap { case (a, b) => Iterator.range(a, b) }
+      .map(o => (o, resolveFetch(o, phase1))),
     { case (o, keys) => (o, fetchBytes(o, keys)) })
 
   private def chunkKeyFor(name: String, idx: Array[Int]): String = {

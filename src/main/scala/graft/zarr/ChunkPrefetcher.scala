@@ -55,3 +55,16 @@ final class ChunkPrefetcher[A, B](
 
   override def close(): Unit = io.shutdownNow()
 }
+
+object ChunkPrefetcher {
+  /** `fetch` of every item through one window of `depth` threads, in
+    * item order: the driver's form of the window, for the few objects a
+    * plan reads (stats segments, shared coordinate chunks). One item
+    * runs on the caller thread. */
+  def fetchAll[A, B](items: Seq[A], depth: Int = 8)(fetch: A => B): Seq[B] =
+    if (items.length <= 1) items.map(fetch)
+    else {
+      val window = new ChunkPrefetcher(items, fetch, math.min(depth, items.length))
+      try items.map(_ => window.next()) finally window.close()
+    }
+}

@@ -895,25 +895,23 @@ object ChunkStats {
     * append) and [[gridCompatible]] (a segment recorded against a
     * DIFFERENT grid — a 1-D coordinate scan over an N-D-analyzed store, a
     * reordered cross product — enumerates different chunks under the
-    * same ordinals). `listed` is the plan's unsuppressed listing
+    * same ordinals). The segments are the plan's unsuppressed listing
     * ([[ZarrStore.Sidecar.unsuppressed]]: overlapping segments dropped
-    * pairwise, stale vs live is undecidable). Over-coverage,
+    * pairwise, stale vs live is undecidable), read through the plan's
+    * [[PlanSidecar]], so no segment is GET twice in one plan. Over-coverage,
     * a grid-incompatible or vanished segment clears the flag; any read or
     * parse failure degrades to no segments at all (the sidecar is
     * auxiliary and must never fail a query). */
   def usableSegments(
-      store: ZarrStore,
-      listed: Seq[(Long, Int)],
-      metas: Seq[ZarrArrayMeta],
+      sidecar: PlanSidecar,
       geom: ScanGeometry): (Seq[Segment], Boolean) = {
     val total = geom.numChunks
-    val ztOf: String => Option[ZarrType] = n => metas.find(_.name == n).map(_.dataType)
+    val listed = sidecar.listing.unsuppressed
     try {
-      val usable = listed
-        .filter { case (first, n) => first >= 0 && first + n <= total }
-        .flatMap { case (first, n) =>
-          store.readText(segmentKey(first, n)).map(json => parse(first, n, json, ztOf))
-        }
+      val inGrid = listed.filter { case (first, n) => first >= 0 && first + n <= total }
+      sidecar.load(inGrid)
+      val usable = inGrid
+        .flatMap { case (first, n) => sidecar.segment(first, n) }
         .filter(gridCompatible(_, geom))
       val tiled = usable.foldLeft(0L) { (next, seg) =>
         if (seg.first == next) next + seg.chunks else -1L

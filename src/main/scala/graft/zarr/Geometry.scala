@@ -83,19 +83,6 @@ final case class ScanGeometry(
         })
         .getOrElse("")
     }
-
-  /** Split [0, numChunks) into `n` contiguous ranges (reference
-    * `zarr_data_stream.rs:805-817`); over-partitioning yields empty
-    * ranges, which the reader treats as an empty stream. */
-  def partitionRanges(n: Int): Seq[(Long, Long)] = {
-    val total = numChunks
-    val per = math.max(1L, (total + n - 1) / n)
-    (0 until n).map { i =>
-      val lo = math.min(total, i.toLong * per)
-      val hi = math.min(total, lo + per)
-      (lo, hi)
-    }
-  }
 }
 
 object ScanGeometry {

@@ -12,11 +12,18 @@ class MemoBoundsSpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
 
+  private var made = List.empty[SparkSession]
+
+  /** A new session on its own SparkContext. The spec stops only the
+    * sessions it made (one a failed test left live): a live session of
+    * another suite shares the one SparkContext a JVM may hold, so
+    * stopping ours would stop it too — the spec cannot run beside it
+    * and is cancelled instead. */
   private def fresh(): SparkSession = {
-    // make sure getOrCreate builds a NEW session (a leaked active
-    // session from a prior suite would otherwise be returned — and then
-    // stopped by this spec under it)
-    SparkSession.getActiveSession.foreach(_.stop())
+    made.foreach(_.stop())
+    val foreign = (SparkSession.getActiveSession ++ SparkSession.getDefaultSession)
+      .filterNot(_.sparkContext.isStopped)
+    assume(foreign.isEmpty, "another suite's SparkSession is live in this JVM")
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val s = SparkSession.builder()
@@ -26,6 +33,7 @@ class MemoBoundsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    made ::= s
     s
   }
 
