@@ -64,12 +64,24 @@ object Bench {
         else newCal <= cal && medianOk(1.0)
     }
 
+  /** Core count a BENCH_BEST record was measured at. Records written
+    * before the `cpus` field existed were all set at `local[32]`. Only a
+    * sweep at the same core count competes with a record: per-query
+    * times at 4 and at 32 cores are not comparable, whatever the probe
+    * says. */
+  def bestCpus(record: com.fasterxml.jackson.databind.JsonNode): Int = {
+    val c = record.path("cpus")
+    if (c.isIntegralNumber) c.asInt else 32
+  }
+
   def main(args: Array[String]): Unit = {
     // optional args: query names to time (isolated A/B runs with the
     // same warmup + calibration discipline); the driver runs unfiltered
     val only: Set[String] = args.toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // the core count the records carry; `*` means every core
+    val nCpus = cpus.toIntOption.getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -206,7 +218,7 @@ object Bench {
     val calEnd = calibrate()
     val cal = s"""{"start":${fmt(calStart)},"end":${fmt(calEnd)}}"""
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"stat":"median","queries":$qs,"spread":$spread,"failed":$failedJson,"calibration":$cal,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"stat":"median","queries":$qs,"spread":$spread,"failed":$failedJson,"calibration":$cal,"sf":"$sfDir","cpus":$nCpus}"""
     // The process prints ONLY a bounded-size digest (~1 KB): the
     // driver's per-round capture keeps a small window, and the full
     // ~12 KB record flooded it every round since r7 (BENCH_r7..r15
@@ -224,7 +236,7 @@ object Bench {
     val digestQs = ok.toSeq.sortBy { case (_, t) => -t(runs / 2) }.take(20)
       .map { case (k, t) => "\"" + k + "\":" + f"${t(runs / 2)}%.2f" }
       .mkString("{", ",", "}")
-    val digestLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"stat":"median","queries":$digestQs,"queries_truncated":true,"n_queries":${ok.size},"failed":$failedJson,"calibration":$cal,"sf":"$sfDir"}"""
+    val digestLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"stat":"median","queries":$digestQs,"queries_truncated":true,"n_queries":${ok.size},"failed":$failedJson,"calibration":$cal,"sf":"$sfDir","cpus":$nCpus}"""
     println(digestLine)
     // the stdout digest reaches the driver prefixed with sbt's "[info] "
     // logger tag, which defeats a strict JSON parse — the same line is
@@ -289,11 +301,18 @@ object Bench {
         // shrank) is stale — its total is not comparable to the current
         // sweep's — but it may only be reset from a comparably quiet
         // box (see shouldReplaceBest)
-        val stored: Option[(Double, Int, Map[String, Double])] =
+        val record: Option[com.fasterxml.jackson.databind.JsonNode] =
           if (java.nio.file.Files.exists(bestPath)) {
+            try Some(new com.fasterxml.jackson.databind.ObjectMapper()
+              .readTree(java.nio.file.Files.readAllBytes(bestPath)))
+            catch { case _: Throwable => None }
+          } else None
+        // keyed on (sf, cpus): a record from another core count neither
+        // guards this sweep nor is replaced by it
+        val otherCpus = record.map(bestCpus).filter(_ != nCpus)
+        val stored: Option[(Double, Int, Map[String, Double])] =
+          record.flatMap { root =>
             try {
-              val root = new com.fasterxml.jackson.databind.ObjectMapper()
-                .readTree(java.nio.file.Files.readAllBytes(bestPath))
               val cal = root.path("calibration")
               // a record without BOTH numeric probes is unguarded (old
               // format / hand edit) — treat as absent so the current
@@ -311,11 +330,13 @@ object Bench {
                   cal.path("end").asDouble), qn.size(), qm.result()))
               } else None
             } catch { case _: Throwable => None }
-          } else None
+          }
         val newMedians: Map[String, Double] =
           ok.map { case (k, t) => k -> t(runs / 2) }.toMap
-        val replace = shouldReplaceBest(stored, newCal, ok.size, newMedians)
-        if (replace) {
+        if (otherCpus.nonEmpty)
+          System.err.println(
+            s"[bench] BENCH_BEST kept (record at cpus=${otherCpus.get}, this sweep at cpus=$nCpus)")
+        else if (shouldReplaceBest(stored, newCal, ok.size, newMedians)) {
           java.nio.file.Files.write(bestPath,
             (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
           System.err.println(f"[bench] BENCH_BEST updated (probe $newCal%.2f)")

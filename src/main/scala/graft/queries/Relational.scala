@@ -26,6 +26,16 @@ object Relational {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
+  // q03's broadcast gate, memoized per (session, sf dir) like
+  // Tables.load, so building the DataFrame a second time starts no
+  // Spark job. Entries of stopped sessions are swept on every access.
+  private val ordersRows = scala.collection.mutable.Map.empty[(SparkSession, String), Long]
+
+  private def ordersRowCount(s: SparkSession, dir: String): Long = synchronized {
+    ordersRows.filterInPlace { case ((ss, _), _) => !ss.sparkContext.isStopped }
+    ordersRows.getOrElseUpdate((s, dir), t(s, dir, "orders").count())
+  }
+
   val defs: Seq[QueryDef] = Seq(
 
     // ---- aggregation: partial+final hash agg over the fact table ----
@@ -103,7 +113,7 @@ object Relational {
         .join(broadcast(cust), col("c_custkey") === col("o_custkey"))
         .select(col("o_orderkey"))
       val keySide =
-        if (t(s, dir, "orders").count() <= 8L * 1000 * 1000) broadcast(ords)
+        if (ordersRowCount(s, dir) <= 8L * 1000 * 1000) broadcast(ords)
         else ords
       t(s, dir, "lineitem")
         .join(keySide, col("o_orderkey") === col("l_orderkey"))

@@ -768,6 +768,12 @@ object ZarrCubeWrite {
     CubeTarget(metasH, dims, coordMetas, dataMetas)
   }
 
+  /** Run [[append]]'s target checks and torn-commit heal alone: a
+    * replayed [[graft.streaming.ZarrCubeSink]] batch whose coordinates
+    * are already on the axis completes a commit torn before the root. */
+  private[graft] def healTornAppend(store: ZarrStore, path: String): Unit =
+    resolveCubeTarget(store, path, None, "append_dim"): Unit
+
   /** Repair the torn-metadata window of an interrupted append commit.
     *
     * The append protocol writes every chunk object (slab data AND the

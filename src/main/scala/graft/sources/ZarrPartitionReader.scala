@@ -505,7 +505,7 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     * thread only overlaps IO with decode, which at object-store latency
     * leaves the task IO-SERIAL — matching the pool to the window
     * parallelizes the waits themselves (~depth× on latency-bound scans,
-    * ScanBench r11). */
+    * such as perfbench's `cube_select` at 5 ms per request). */
   private val prefetch = new ChunkPrefetcher[(Long, Seq[(String, String)]), (Long, Fetched)](
     part.runs.iterator.flatMap { case (a, b) => Iterator.range(a, b) }
       .map(o => (o, resolveFetch(o, phase1))),

@@ -23,7 +23,10 @@ import org.apache.spark.sql.functions.col
   *    BEFORE the root commit re-runs the append; the orphaned
   *    final-key chunks beyond the committed shape are overwritten);
   *  - every slab coordinate on the axis → the batch already committed
-  *    (a replay of a crash AFTER the root commit) → no-op;
+  *    (a replay of a crash AFTER the axis commit signal) → no-op, except
+  *    that a crash before the root write left readers of the root on the
+  *    old extent: the replay re-consolidates the root through the
+  *    append's own torn-commit heal;
   *  - a mix → not a replay shape at all (coordinate reuse / out-of-
   *    order slabs) → loud refusal, like every cube-write violation.
   * No marker file, no tail buffer, no per-query lifecycle: restarting
@@ -189,7 +192,8 @@ object ZarrCubeSink {
           false
         }
         val onAxis = slabCoords.count(onAxisCoord)
-        if (onAxis == slabCoords.length) () // replayed batch: committed
+        if (onAxis == slabCoords.length) // replayed batch: committed
+          ZarrCubeWrite.healTornAppend(store, path)
         else if (onAxis == 0)
           ZarrCubeWrite.append(batch, path, dimsOpt = None,
             appendDim = dims.head, stats = stats, maxAxisLen = maxAxisLen)

@@ -323,11 +323,12 @@ object Sharding {
   /** Shared decode pool for intra-shard parallelism. A shard packs many
     * independently-compressed inner chunks; decoding them serially
     * starves CPUs whenever there are fewer shard-tasks than cores (the
-    * exact regime big-shard stores create: ScanBench's 8M-row store is
-    * 4 shards — 4 tasks on a 32-core box). Inner chunks write disjoint
-    * regions of the output buffer, so the fan-out is safe; when task
-    * parallelism already saturates the cores, work-stealing just
-    * interleaves at the same total cost. Daemon threads, JVM-wide. */
+    * exact regime big-shard stores create: an 8M-row column in shards
+    * of 2M rows is 4 shards — 4 tasks on a 32-core box). Inner chunks
+    * write disjoint regions of the output buffer, so the fan-out is
+    * safe; when task parallelism already saturates the cores,
+    * work-stealing just interleaves at the same total cost. Daemon
+    * threads, JVM-wide. */
   private lazy val decodePool = java.util.concurrent.Executors.newWorkStealingPool(
     math.max(2, Runtime.getRuntime.availableProcessors()))
 

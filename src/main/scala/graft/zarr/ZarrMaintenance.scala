@@ -12,8 +12,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * `compact` rewrites the store into a fresh one with production
   * chunking and `sharding_indexed` packing (many logical chunks per
   * stored object with a binary index), which is the layout the read
-  * path scans fastest (ScanBench: sharded parity with parquet after
-  * the parallel intra-shard decode).
+  * path scans fastest (one GET per shard, and the inner chunks decode
+  * in parallel — `Sharding`'s intra-shard decode pool).
   *
   * Runs as one distributed pass: the chunked scan feeds the parallel
   * append writer; row order is preserved (the scan enumerates chunks

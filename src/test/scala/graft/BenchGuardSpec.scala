@@ -79,4 +79,13 @@ class BenchGuardSpec extends AnyFunSuite {
       qmap("q1" -> 1.2, "q2" -> 2.4, "q4" -> 1.0)),
       "churned registry with contended common queries must not reset")
   }
+
+  test("a record is keyed by its core count; a record without one was set at 32") {
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    // every record before the field existed was set at local[32]
+    assert(Bench.bestCpus(json.readTree("""{"metric":"total","sf":"/d/sf0.1"}""")) == 32)
+    assert(Bench.bestCpus(json.readTree("""{"metric":"total","cpus":4}""")) == 4)
+    // a malformed field is no core count: the legacy default holds
+    assert(Bench.bestCpus(json.readTree("""{"metric":"total","cpus":"four"}""")) == 32)
+  }
 }

@@ -257,6 +257,24 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("q03: a second build of the DataFrame starts no Spark job (broadcast gate memoized)") {
+    // the first build counts orders for the broadcast gate (and lists
+    // the parquet footers); a rebuild must reuse both
+    SparkEntry.queries("q03_join_agg")(spark, dir)
+    @volatile var jobs = List[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs ::= js.stageInfos.map(_.name).mkString(",")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      SparkEntry.queries("q03_join_agg")(spark, dir).queryExecution.executedPlan
+      // listener delivery is async, as in the q69 pin
+      Thread.sleep(500)
+      assert(jobs.isEmpty, s"q03 rebuild must start no job, saw: ${jobs.mkString("; ")}")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("q91: PQ encoding is a pure scan — codebook in-plan, sort-only exchange") {
     val p = plan("q91_pq_encode")
     assert(!p.contains("Join"), s"codebook must ride as a plan literal, not a join\n$p")

@@ -14,6 +14,7 @@ class AggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var base: String = _
+  private val fsLog = RecordingFileSystem.log("graftstat")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -36,7 +37,7 @@ class AggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ungrouped count/min/max answer with ZERO chunk reads") {
     val df = spark.read.format("zarr").load(s"graftstat://$base/store")
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val r = df.agg(
       count(lit(1)).as("n"), min("id").as("min_id"), max("id").as("max_id"),
       min("v").as("min_v"), max("v").as("max_v"),
@@ -45,7 +46,7 @@ class AggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getLong(1) == 0 && r.getLong(2) == 79)
     assert(r.getDouble(3) == 100.5 - 79 && r.getDouble(4) == 100.5)
     assert(r.getString(5) == "k0")
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/store/(id|v|name)/c/\\d+$"))
     assert(chunkOpens.isEmpty,
       s"metadata-only aggregate read chunks: ${chunkOpens.mkString(", ")}")
@@ -91,11 +92,11 @@ class AggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("sum/avg answer from sidecar chunk sums with ZERO chunk reads") {
     val df = spark.read.format("zarr").load(s"graftstat://$base/store")
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val r = df.agg(sum("id").as("s"), avg("id").as("a")).collect()(0)
     assert(r.getLong(0) == (0L until 80L).sum)
     assert(r.getDouble(1) == (0L until 80L).sum.toDouble / 80)
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/store/(id|v|name)/c/\\d+$"))
     assert(chunkOpens.isEmpty,
       s"sidecar sum/avg read chunks: ${chunkOpens.mkString(", ")}")
@@ -152,13 +153,13 @@ class AggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.contains("ZarrPartialAggScan"), plan)
     assert(plan.contains("served=4"), plan)
     assert(plan.contains("uncoveredChunks=4"), plan)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val r = agg.collect()(0)
     assert(r.getLong(0) == 0 && r.getLong(1) == 127)
     assert(r.getLong(2) == (0L until 128L).sum && r.getLong(3) == 128)
     // appended chunks commit rename-free under manifest-staged keys, so
     // count every data open under the array dirs (exclude metadata/stats)
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/halfcov/(id|v|name)/.*"))
       .filterNot(p => p.contains("_stats") || p.endsWith("zarr.json") || p.endsWith(".zarray"))
     assert(chunkOpens.nonEmpty && chunkOpens.forall(_.contains("/id/")),
@@ -179,10 +180,10 @@ class AggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.filter("id >= 5").agg(min("id")).collect()(0).getLong(0) == 5)
     // COUNT needs no chunk bytes: count(v) alongside min(id) must not
     // fetch any v chunk — rows come from the extent
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val r3 = df.agg(count(col("v")).as("cv"), min("id").as("mn")).collect()(0)
     assert(r3.getLong(0) == 128 && r3.getLong(1) == 0)
-    val vOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val vOpens = fsLog.gets
       .filter(p => p.contains("/halfcov/v/") && !p.contains("_stats")
         && !p.endsWith("zarr.json") && !p.endsWith(".zarray"))
     assert(vOpens.isEmpty,
@@ -245,7 +246,7 @@ class AggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = spark.read.format("zarr").load(url)
 
     // full coverage: complete metadata-only answer, zero chunk GETs
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val full = df.agg(min("v").as("mn"), max("v").as("mx"),
       sum("v").as("s"), avg("v").as("a"), count(lit(1)).as("n"))
     assert(full.queryExecution.executedPlan.toString.contains("ZarrAggScan"))
@@ -253,7 +254,7 @@ class AggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getLong(0) == 0 && r.getLong(1) == 63)
     assert(r.getLong(2) == (0L until 64L).sum && r.getLong(4) == 64)
     assert(r.getDouble(3) == (0L until 64L).sum.toDouble / 64)
-    assert(RecordingFileSystem.opened.toArray.map(_.toString)
+    assert(fsLog.gets
       .count(_.matches(".*/nd/(row|col|v)/c/.*")) == 0)
 
     // lose ONE segment: the hybrid serves the remaining chunks from
@@ -266,11 +267,11 @@ class AggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.contains("ZarrPartialAggScan"), plan)
     assert(plan.contains(s"served=${9 - lostN}"), plan)
     assert(plan.contains(s"uncoveredChunks=$lostN"), plan)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val r2 = agg.collect()(0)
     assert(r2.getLong(0) == 0 && r2.getLong(1) == 63)
     assert(r2.getLong(2) == (0L until 64L).sum)
-    val vOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val vOpens = fsLog.gets
       .filter(_.matches(".*/nd/v/c/\\d+/\\d+$")).distinct
     val expected = (lostFirst until lostFirst + lostN)
       .map(o => s"$base/nd/v/c/${o / 3}/${o % 3}").toSet
@@ -387,7 +388,7 @@ class AggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ZarrMaintenance.analyze(spark, url) > 0)
     val df = spark.read.format("zarr").load(url)
 
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val agg = df.agg(min("time").as("mn"), max("time").as("mx"))
     assert(agg.queryExecution.executedPlan.toString.contains("ZarrAggScan"),
       agg.queryExecution.executedPlan.toString)
@@ -395,7 +396,7 @@ class AggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t0 = 1700000000000000000L
     val day = 86400L * 1000000000L
     assert(r.getLong(0) == t0 && r.getLong(1) == t0 + 3 * day, r.toString)
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/climate_lone/(time|lat|lon|temp)/.*"))
       .filterNot(_.contains("zattrs")).filterNot(_.contains("zarray"))
     assert(chunkOpens.isEmpty,

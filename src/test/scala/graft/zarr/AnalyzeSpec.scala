@@ -16,6 +16,7 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var base: String = _
+  private val fsLog = RecordingFileSystem.log("graftstat")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -49,12 +50,12 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(segs.map(_._2).sum == 3 && segs.head._1 == 0L,
       s"segments must cover ordinals [0, 3): $segs")
     val df = spark.read.format("zarr").load(url)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val r = df.agg(count(lit(1)), min("id64"), max("id64"), max("u8")).collect()(0)
     assert(r.getLong(0) == 11)
     assert(r.getLong(1) == 1000000000000L && r.getLong(2) == 1000000000010L)
     assert(r.getShort(3) == 255)
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/v2/(flag|id64|u8)/\\d+$"))
     assert(chunkOpens.isEmpty,
       s"post-analyze metadata-only aggregate read chunks: ${chunkOpens.mkString(", ")}")
@@ -73,11 +74,11 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ZarrStore(url).listStatsSegments().isEmpty)
     assert(ZarrMaintenance.analyze(spark, url) == 4) // 60/16 -> 4 chunks
     val df = spark.read.format("zarr").load(url)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val r = df.agg(min("x"), max("x"), sum("id")).collect()(0)
     assert(r.getDouble(0) == 0.0 && r.getDouble(1) == 3.5 * 59)
     assert(r.getLong(2) == 59L * 60 / 2)
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/v3/(id|x)/c/\\d+$"))
     assert(chunkOpens.isEmpty,
       s"restored sidecar must serve the aggregate: ${chunkOpens.mkString(", ")}")
@@ -89,7 +90,7 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val n = ZarrMaintenance.analyze(spark, url)
     assert(n == 4, s"(5,7) grid with (3,4) chunks = 2x2 = 4 chunks, analyzed $n")
     val df = spark.read.format("zarr").load(url)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     // temp[i][j] = 10i+j+0.5 with chunk (1,1) ABSENT (fill 99.5);
     // counts[i][j] = 100i+j (int32, F order) — sum is exact
     val r = df.agg(count(lit(1)), min("temp"), max("temp"),
@@ -98,7 +99,7 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getDouble(1) == 0.5 && r.getDouble(2) == 99.5)
     assert(r.getInt(3) == 0 && r.getInt(4) == 406)
     assert(r.getLong(5) == (for (i <- 0 until 5; j <- 0 until 7) yield 100L * i + j).sum)
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/v2nd/(temp|counts|pressure)/\\d+\\.\\d+$"))
     assert(chunkOpens.isEmpty,
       s"post-analyze 2-D metadata-only aggregate read chunks: ${chunkOpens.mkString(", ")}")
@@ -115,7 +116,7 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val segs = ZarrStore(url).listStatsSegments()
     assert(segs.map(_._2).sum == 9 && segs.head._1 == 0L, segs.toString)
     val df = spark.read.format("zarr").load(url)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     // MIN/MAX over the 2-D data array AND a broadcast coordinate answer
     // metadata-only (coordinate bounds were recorded per target chunk)
     val r = df.agg(count(lit(1)), min("data"), max("data"),
@@ -123,7 +124,7 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getLong(0) == 64)
     assert(r.getDouble(1) == 0.0 && r.getDouble(2) == 63.0)
     assert(r.getDouble(3) == 38.0 && r.getDouble(4) == 38.7)
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/latlon/(lat|lon|data)/c/.*"))
     assert(chunkOpens.isEmpty,
       s"lat/lon metadata-only aggregate read chunks: ${chunkOpens.mkString(", ")}")
@@ -131,13 +132,13 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // segments do not describe — but MIN/MAX are order statistics,
     // invariant under broadcast multiplicity, so (round 13) they serve
     // from the full-coverage STORE-grid segments, metadata-only
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val loneAgg = df.select("lat").agg(min("lat"), max("lat"))
     assert(loneAgg.queryExecution.executedPlan.toString.contains("ZarrAggScan"),
       loneAgg.queryExecution.executedPlan.toString)
     val lone = loneAgg.collect()(0)
     assert(lone.getDouble(0) == 38.0 && lone.getDouble(1) == 38.7)
-    assert(RecordingFileSystem.opened.toArray.map(_.toString)
+    assert(fsLog.gets
       .count(_.matches(".*/latlon/(lat|lon|data)/c/.*")) == 0,
       "lone-coordinate min/max must be metadata-only")
     // SUM over the lone coordinate DOES depend on multiplicity (the 1-D
@@ -157,19 +158,19 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .forEach(p => Files.delete(p))
     assert(ZarrMaintenance.analyze(spark, url) == 4) // 64/16 outer shards
     val df = spark.read.format("zarr").load(url)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val r = df.agg(min("x"), max("x"), sum("id")).collect()(0)
     assert(r.getDouble(0) == 0.0 && r.getDouble(1) == 1.5 * 63)
     assert(r.getLong(2) == (0L until 64L).sum)
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/sharded/(id|x)/(c|c\\.part[^/]*)/\\d+$"))
     assert(chunkOpens.isEmpty,
       s"restored sharded sidecar must serve the aggregate: ${chunkOpens.mkString(", ")}")
     // and a filtered scan skips whole shards via the rebuilt stats
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val rows = df.filter("id >= 48").select("id").collect()
     assert(rows.map(_.getLong(0)).sorted.toSeq == (48L until 64L))
-    val opens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val opens = fsLog.gets
       .filter(_.matches(".*/sharded/id/(c|c\\.part[^/]*)/\\d+$")).distinct
     assert(opens.nonEmpty && opens.forall(_.endsWith("/3")),
       s"shards 0-2 must be stats-skipped: ${opens.mkString(", ")}")
@@ -190,22 +191,22 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
       ZarrWriter.CodecChain.raw)
     assert(ZarrMaintenance.analyze(spark, url) == 8)
     val df = spark.read.format("zarr").load(url)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val r = df.agg(count(lit(1)), min("val"), max("val"), sum("val"),
       min("time"), max("time")).collect()(0)
     assert(r.getLong(0) == 64)
     assert(r.getLong(1) == 0 && r.getLong(2) == 63)
     assert(r.getLong(3) == (0L until 64L).sum)
     assert(r.getLong(4) == 1000L && r.getLong(5) == 1003L)
-    assert(RecordingFileSystem.opened.toArray.map(_.toString)
+    assert(fsLog.gets
       .count(_.matches(".*/cube/(time|val)/c/.*")) == 0,
       "3-D metadata-only aggregate must read no chunks")
     // a time-coordinate filter keeps grid slab 0 only: row-major 2x2x2
     // grid -> ordinals 0..3 (time chunk 0); chunks 4..7 skip with no GET
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val rows = df.filter("time <= 1001").select("val").collect()
     assert(rows.length == 32)
-    val valOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val valOpens = fsLog.gets
       .filter(_.matches(".*/cube/val/c/\\d+/\\d+/\\d+$")).distinct
     assert(valOpens.length == 4 && valOpens.forall(_.contains("/c/0/")),
       s"time filter must prune to the first grid slab: ${valOpens.mkString(", ")}")
@@ -224,11 +225,11 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .coalesce(1).write.format("zarr").mode("append")
       .option("chunk_size", "16").save(url)
     val df = spark.read.format("zarr").load(url)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val r = df.agg(count(lit(1)), min("id"), max("id"), sum("id")).collect()(0)
     assert(r.getLong(0) == 48 && r.getLong(1) == 0 && r.getLong(2) == 47)
     assert(r.getLong(3) == (0L until 48L).sum)
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/grow/id/(c|c\\.part[^/]*)/\\d+$"))
     assert(chunkOpens.isEmpty,
       s"pre-append analyze segments must still serve the aggregate: ${chunkOpens.mkString(", ")}")
@@ -246,12 +247,12 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // all-coords geometry: cross product in (sorted) field order -> 3x2 grid
     assert(ZarrMaintenance.analyze(spark, url) == 6)
     val df = spark.read.format("zarr").load(url) // SELECT aa, bb = cross product
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val r = df.agg(count(lit(1)), min("aa"), max("aa"), sum("bb")).collect()(0)
     assert(r.getLong(0) == 24)
     assert(r.getLong(1) == 10L && r.getLong(2) == 15L)
     assert(r.getLong(3) == 6L * (100 + 101 + 102 + 103)) // each bb repeats 6x
-    assert(RecordingFileSystem.opened.toArray.map(_.toString)
+    assert(fsLog.gets
       .count(_.matches(".*/cross/(aa|bb)/c/.*")) == 0,
       "cross-product metadata-only aggregate must read no chunks")
     // a lone-coordinate selection (1-D grid [3]) must not consume the
@@ -313,12 +314,12 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .option("append_dim", "day").option("stats", "false").save(url)
     // plus an out-of-grid junk segment the sweep must retire
     ZarrStore(url).writeText(ChunkStats.segmentKey(500, 4), "{}")
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     assert(ZarrMaintenance.analyze(spark, url, incremental = true) == 1,
       "incremental must analyze exactly the appended shard")
     // data reads touched ONLY the new shard's object (ordinal 2 = grid
     // index (2,0) → key c/2/0); the covered shards were never fetched
-    val dataOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val dataOpens = fsLog.gets
       .filter(_.matches(".*/incr/v/c/\\d+/\\d+$")).distinct
     assert(dataOpens.nonEmpty && dataOpens.forall(_.endsWith("/c/2/0")),
       s"incremental must not re-read covered shards: ${dataOpens.mkString(", ")}")
@@ -332,18 +333,18 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"coverage must be whole after incremental: $segsAfter")
     assert(Files.exists(Paths.get(s"$base/incr/_stats/i2.json")))
     // fully covered → the next incremental run is a data-free no-op
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     assert(ZarrMaintenance.analyze(spark, url, incremental = true) == 0L)
-    assert(RecordingFileSystem.opened.toArray.map(_.toString)
+    assert(fsLog.gets
       .count(_.matches(".*/incr/v/c/\\d+/\\d+$")) == 0,
       "a covered store's incremental analyze must read no chunk bytes")
     // and the restored coverage serves: data-predicate masking on the
     // appended shard, metadata-only aggregates over the whole store
     val df = spark.read.format("zarr").load(url)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val r = df.agg(count(lit(1)), min("v"), max("v")).collect()(0)
     assert(r.getLong(0) == 96 && r.getDouble(1) == 0.0 && r.getDouble(2) == 1107.0)
-    assert(RecordingFileSystem.opened.toArray.map(_.toString)
+    assert(fsLog.gets
       .count(_.matches(".*/incr/(day|x|v)/c/.*")) == 0,
       "post-incremental metadata-only aggregate must read no chunks")
   }
@@ -372,10 +373,10 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val shard1 = Paths.get(s"$base/stale/v/c/1/0")
     Files.setLastModifiedTime(shard1, java.nio.file.attribute.FileTime
       .fromMillis(Files.getLastModifiedTime(shard1).toMillis + 2000))
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     assert(ZarrMaintenance.analyze(spark, url, incremental = true) == 1,
       "the guard-stale doc's ordinal must be re-analyzed")
-    val dataOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val dataOpens = fsLog.gets
       .filter(_.matches(".*/stale/v/c/\\d+/\\d+$")).distinct
     assert(dataOpens.nonEmpty && dataOpens.forall(_.endsWith("/c/1/0")),
       s"only the stale shard may be re-read: ${dataOpens.mkString(", ")}")
@@ -398,9 +399,9 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
     segs = ZarrStore(url).listStatsSegments()
     assert(segs.map(_._2).sum == 2 && segs.head._1 == 0L, s"$segs")
     // fully covered and fresh: the next run is a data-free no-op
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     assert(ZarrMaintenance.analyze(spark, url, incremental = true) == 0L)
-    assert(RecordingFileSystem.opened.toArray.map(_.toString)
+    assert(fsLog.gets
       .count(_.matches(".*/stale/v/c/\\d+/\\d+$")) == 0,
       "a fresh covered store's incremental analyze must read no chunks")
   }
@@ -432,10 +433,10 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // plain incremental: rightly a no-op (nothing detectable moved)
     assert(ZarrMaintenance.analyze(spark, url, incremental = true) == 0L)
     // the surgical middle: refresh exactly the rewritten window
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     assert(ZarrMaintenance.analyzeRefresh(spark, url, Seq((2L, 3L))) == 1,
       "exactly the refreshed window must be re-analyzed")
-    val dataOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val dataOpens = fsLog.gets
       .filter(_.matches(".*/refresh/v/c/\\d+$")).distinct
     assert(dataOpens.nonEmpty && dataOpens.forall(_.endsWith("/v/c/2")),
       s"only the refreshed window may be re-read: ${dataOpens.mkString(", ")}")
@@ -443,12 +444,12 @@ class AnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(segs.map(_._2).sum == 4 && segs.head._1 == 0L,
       s"coverage must stay whole: $segs")
     // metadata-only max now sees the rewritten values (47 + 1000)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val r = spark.read.format("zarr").load(url)
       .agg(max("v"), min("v")).collect()(0)
     assert(r.getDouble(0) == 1047.0 && r.getDouble(1) == 0.0,
       s"refreshed bounds must serve the live values: $r")
-    assert(RecordingFileSystem.opened.toArray.map(_.toString)
+    assert(fsLog.gets
       .count(_.matches(".*/refresh/(id|v)/c/\\d+$")) == 0,
       "post-refresh metadata-only aggregate must read no chunks")
     // refusals stay loud: full mode rejects refresh, ranges must be in-grid

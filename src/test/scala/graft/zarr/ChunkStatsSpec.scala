@@ -1,30 +1,11 @@
 package graft.zarr
 
-import java.net.URI
 import java.nio.file.Files
-import java.util.Collections
 
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.sources._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-
-/** FileSystem that records every opened path — proves stats-skipped
-  * chunks are never fetched (not merely fetched-and-discarded). */
-class RecordingFileSystem extends RawLocalFileSystem {
-  override def getScheme: String = "graftstat"
-  override def getUri: URI = URI.create("graftstat:///")
-  override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
-    RecordingFileSystem.opened.add(f.toUri.getPath)
-    super.open(f, bufferSize)
-  }
-}
-
-object RecordingFileSystem {
-  val opened: java.util.List[String] =
-    Collections.synchronizedList(new java.util.ArrayList[String]())
-}
 
 /** Chunk-statistics sidecar: write-side emission (staged + aligned paths,
   * append), read-side read-free skipping with zero chunk GETs, fallback
@@ -33,6 +14,7 @@ class ChunkStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var base: String = _
+  private val fsLog = RecordingFileSystem.log("graftstat")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -65,14 +47,14 @@ class ChunkStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(store.listStatsSegments() == Seq((0L, 5)),
       "one segment covering chunks [0,5) expected")
 
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val rows = spark.read.format("zarr").load(url)
       .filter("id >= 64").select("id", "v").collect()
     assert(rows.map(_.getLong(0)).sorted.toSeq == (64L until 80L))
     // staged-write chunks live at manifest-mapped task-attempt keys
     // (c.part<writeId>-<pid>/<j>); ordinal 4 of this single-task write
     // is .../c.part*-0/4
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/s1/(id|v|name)/(c|c\\.part[^/]*)/\\d+$"))
     // only chunk 4 may be touched — chunks 0-3 are excluded by the
     // sidecar before any fetch is submitted
@@ -303,11 +285,11 @@ class ChunkStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     (0 until 80).map(i => Tuple1(f"k$i%03d " + "x" * 100)).toDF("text")
       .coalesce(1)
       .write.format("zarr").mode("overwrite").option("chunk_size", "16").save(url)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val rows = spark.read.format("zarr").load(url)
       .filter("text >= 'k064'").collect()
     assert(rows.length == 16)
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/s7/text/(c|c\\.part[^/]*)/\\d+$"))
     // chunks 0-3 (k000..k063) are refuted by their clamped hi bounds
     // BEFORE any fetch; only chunk 4 is read
@@ -328,12 +310,12 @@ class ChunkStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     (0 until 80).map(i => Tuple1(key(i) + " " + ("😀" * 40) + ("д" * 60))).toDF("text")
       .coalesce(1)
       .write.format("zarr").mode("overwrite").option("chunk_size", "16").save(url)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val cut = key(64)
     val rows = spark.read.format("zarr").load(url)
       .filter(org.apache.spark.sql.functions.col("text") >= cut).collect()
     assert(rows.length == 16)
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/s7u/text/(c|c\\.part[^/]*)/\\d+$"))
     // chunks 0-3 refuted by their clamped non-ASCII hi bounds with no
     // fetch; only chunk 4 is read
@@ -376,15 +358,15 @@ class ChunkStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // a coordinate predicate prunes a whole grid ROW: lat > 38.55 keeps
     // lat chunk 2 only -> target chunks (2,0),(2,1),(2,2)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val rows = df.filter("lat > 38.55").select("lat", "lon", "data").collect()
     assert(rows.length == 16) // lat in {38.6, 38.7} x 8 lons
     assert(rows.map(_.getDouble(2)).sorted.toSeq == (48 until 64).map(_.toDouble))
-    val dataOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val dataOpens = fsLog.gets
       .filter(_.matches(".*/latlon2d/data/c/\\d+/\\d+$")).distinct
     assert(dataOpens.length == 3 && dataOpens.forall(_.contains("/c/2/")),
       s"only grid row 2 may be fetched: ${dataOpens.mkString(", ")}")
-    val latOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val latOpens = fsLog.gets
       .filter(_.matches(".*/latlon2d/lat/c/\\d+$")).distinct
     assert(latOpens.forall(_.endsWith("/2")),
       s"stats-skipped lat chunks were fetched: ${latOpens.mkString(", ")}")
@@ -392,10 +374,10 @@ class ChunkStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a DATA predicate prunes to the matching chunks: row-major values
     // 0..63, so data > 59 (values 60..63, bottom row) lives in chunks
     // (2,1) and (2,2) only
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val hot = df.filter("data > 59.0").select("data").collect()
     assert(hot.map(_.getDouble(0)).sorted.toSeq == (60 until 64).map(_.toDouble))
-    val hotOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val hotOpens = fsLog.gets
       .filter(_.matches(".*/latlon2d/data/c/\\d+/\\d+$")).distinct.sorted.toSeq
     assert(hotOpens == Seq(s"$base/latlon2d/data/c/2/1", s"$base/latlon2d/data/c/2/2"),
       s"data > 59 must touch exactly chunks (2,1),(2,2): ${hotOpens.mkString(", ")}")
@@ -403,10 +385,10 @@ class ChunkStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // all-coordinates cross product (SELECT lat, lon) shares the same
     // grid signature -> the sidecar prunes it too, with zero lon GETs
     // for non-matching lon chunks
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val cross = df.filter("lon > -116.45").select("lat", "lon").collect()
     assert(cross.length == 8 * 2) // lon in {-116.4, -116.3}
-    val lonOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val lonOpens = fsLog.gets
       .filter(_.matches(".*/latlon2d/lon/c/\\d+$")).distinct
     assert(lonOpens.forall(_.endsWith("/2")),
       s"cross-product scan fetched stats-skipped lon chunks: ${lonOpens.mkString(", ")}")

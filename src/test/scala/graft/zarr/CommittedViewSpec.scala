@@ -1,37 +1,11 @@
 package graft.zarr
 
-import java.net.URI
 import java.nio.file.{Files, Paths}
-import java.util.Collections
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-
-/** A local FileSystem (scheme `graftreq`) recording every object GET
-  * (`open`) and every directory LIST (`listStatus`, which
-  * `listStatusIterator` pages through) as "GET <path>" / "LIST <path>". */
-class RequestRecordingFileSystem extends RawLocalFileSystem {
-  override def getScheme: String = "graftreq"
-  override def getUri: URI = URI.create("graftreq:///")
-  override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
-    RequestRecordingFileSystem.requests.add(s"GET ${f.toUri.getPath}")
-    super.open(f, bufferSize)
-  }
-  override def listStatus(f: Path): Array[FileStatus] = {
-    RequestRecordingFileSystem.requests.add(s"LIST ${f.toUri.getPath}")
-    super.listStatus(f)
-  }
-}
-
-object RequestRecordingFileSystem {
-  val requests: java.util.List[String] =
-    Collections.synchronizedList(new java.util.ArrayList[String]())
-}
 
 /** One committed view and one `_stats/` listing per plan: a read plans
   * from one root-document GET and one sidecar LIST; a DataFrame pins the
@@ -42,6 +16,7 @@ class CommittedViewSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var base: String = _
+  private val fsLog = RecordingFileSystem.log("graftreq")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -49,11 +24,11 @@ class CommittedViewSpec extends AnyFunSuite with BeforeAndAfterAll {
       .appName("committed-view-spec")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.graftreq.impl", classOf[RequestRecordingFileSystem].getName)
+      .config("spark.hadoop.fs.graftreq.impl", classOf[RecordingFileSystem].getName)
       .getOrCreate()
     // also on a session some earlier suite left running
     spark.sparkContext.hadoopConfiguration
-      .set("fs.graftreq.impl", classOf[RequestRecordingFileSystem].getName)
+      .set("fs.graftreq.impl", classOf[RecordingFileSystem].getName)
     spark.sparkContext.setLogLevel("ERROR")
     base = Files.createTempDirectory("zarr-view").toString
   }
@@ -73,10 +48,10 @@ class CommittedViewSpec extends AnyFunSuite with BeforeAndAfterAll {
     ZarrMaintenance.analyze(spark, dir)
     assert(ZarrStore(dir).sidecar().innerOrds.nonEmpty, "precondition: inner docs")
 
-    RequestRecordingFileSystem.requests.clear()
+    fsLog.clear()
     val got = spark.read.format("zarr").load(s"graftreq://$dir")
       .filter($"t" >= 5L).agg(sum("v")).collect()(0).getDouble(0)
-    val reqs = RequestRecordingFileSystem.requests.asScala.toList
+    val reqs = fsLog.requests
     assert(got == (for (t <- 5 until 8; x <- 0 until 6) yield t * 10.0 + x).sum)
     val rootGets = reqs.count(_ == s"GET $dir/zarr.json")
     val statsLists = reqs.count(_ == s"LIST $dir/_stats")

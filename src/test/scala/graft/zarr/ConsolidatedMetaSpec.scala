@@ -14,6 +14,7 @@ class ConsolidatedMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var base: String = _
+  private val fsLog = RecordingFileSystem.log("graftstat")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -43,10 +44,10 @@ class ConsolidatedMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(metas.isDefined && metas.get.map(_.name) == Seq("id", "name", "v"))
     assert(metas.get.forall(_.shape(0) == 64))
 
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val schema = spark.read.format("zarr").load(url).schema
     assert(schema.fieldNames.toSeq == Seq("id", "name", "v"))
-    val metaOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val metaOpens = fsLog.gets
       .filter(_.endsWith("zarr.json"))
     assert(metaOpens.nonEmpty && metaOpens.forall(_.endsWith("/c1/zarr.json")),
       s"schema inference must read only the root document, opened: ${metaOpens.mkString(", ")}")

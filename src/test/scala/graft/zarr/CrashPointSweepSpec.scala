@@ -84,6 +84,9 @@ object CrashFileSystem {
   *    root: readers still see the old root, and the re-run's torn-commit
   *    heal re-consolidates it before refusing.
   *
+  * One case drives the same aligned append through `ZarrCubeSink`,
+  * whose replay of a batch on the axis completes a torn root.
+  *
   * Two tabular cases sweep the DSv2 append (aligned and staged): each
   * crash must leave the old rows, and a re-run of the same batch
   * exactly the new ones.
@@ -234,6 +237,19 @@ class CrashPointSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ragged append: every crash point leaves the old or the new state") {
     appendCase("ragged", baseSteps = 3, newSteps = 2)
+  }
+
+  test("cube sink: a replay after any crash point reaches the new state") {
+    // the sink classifies a replay by the dim-0 coordinate meta, so a
+    // batch torn between that meta and the root is a replay: the replay
+    // must complete the root, not leave readers on the old extent
+    val oldRows = rowsOf(slab(0, 4))
+    val newRows = rowsOf(slab(0, 6))
+    sweep("sink", slab(0, 4), newRows,
+      url => graft.streaming.ZarrCubeSink.appendBatch(slab(4, 6), 1L, url, Seq("t", "x")),
+      duplicateOk = false,
+      (rows, at) => assert(rows == oldRows || rows == newRows,
+        s"$at: store reads neither the old nor the new state: $rows"))
   }
 
   test("region overwrite: every crash point leaves each shard old or new") {

@@ -20,6 +20,7 @@ class DriverPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var base: String = _
+  private val fsLog = RecordingFileSystem.log("graftreq")
   // a 12 x 6 x 8 (t, y, x) cube in 2 x 6 x 8 shards: 6 scan chunks along
   // t, one y and one x coordinate chunk shared by all of them
   private var cube: String = _
@@ -35,10 +36,10 @@ class DriverPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
       .appName("driver-pruning-spec")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.graftreq.impl", classOf[RequestRecordingFileSystem].getName)
+      .config("spark.hadoop.fs.graftreq.impl", classOf[RecordingFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.hadoopConfiguration
-      .set("fs.graftreq.impl", classOf[RequestRecordingFileSystem].getName)
+      .set("fs.graftreq.impl", classOf[RecordingFileSystem].getName)
     spark.sparkContext.setLogLevel("ERROR")
     base = Files.createTempDirectory("zarr-driver-prune").toString
     val sp = spark; import sp.implicits._
@@ -138,11 +139,11 @@ class DriverPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val listing = ZarrStore(cube).sidecar()
     assert(listing.unsuppressed == Seq((0L, 6)) && listing.innerOrds.nonEmpty,
       "precondition: analyzed, one segment")
-    RequestRecordingFileSystem.requests.clear()
+    fsLog.clear()
     val q = spark.read.format("zarr").load(url)
       .filter(col("t").isin(0L, 11L)).select("t", "y", "x", "v")
     val rows = q.collect()
-    val reqs = RequestRecordingFileSystem.requests.asScala.toList
+    val reqs = fsLog.requests
     assert(rows.length == 2 * 6 * 8)
     assert(rows.map(_.getDouble(3)).sorted.toSeq == (for (t <- Seq(0, 11); y <- 0 until 6;
       x <- 0 until 8) yield value(t, y, x)).sorted)

@@ -1,4 +1,4 @@
-package graft.tools
+package graft.zarr
 
 import java.net.URI
 

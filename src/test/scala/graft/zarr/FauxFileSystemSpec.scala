@@ -1,54 +1,11 @@
 package graft.zarr
 
-import java.net.URI
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
-import org.apache.hadoop.util.Progressable
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-
-/** A FileSystem for a scheme Hadoop does not know out of the box. It is
-  * resolvable ONLY through the `fs.graftfaux.impl` conf key, so any read
-  * or write that succeeds against `graftfaux://` URIs proves the
-  * driver's `fs.*` configuration actually reached the executor-side
-  * `ZarrStore` FileSystem resolution (a fresh `new Configuration()`
-  * without the propagated pairs throws "No FileSystem for scheme").
-  * Instrumented with static counters so the test can also assert the IO
-  * went through THIS class, not a cached `file://` handle. */
-class FauxFileSystem extends RawLocalFileSystem {
-  override def getScheme: String = "graftfaux"
-  override def getUri: URI = URI.create("graftfaux:///")
-
-  override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
-    FauxFileSystem.opens.incrementAndGet()
-    super.open(f, bufferSize)
-  }
-
-  override def create(
-      f: Path,
-      overwrite: Boolean,
-      bufferSize: Int,
-      replication: Short,
-      blockSize: Long,
-      progress: Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
-    FauxFileSystem.creates.incrementAndGet()
-    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
-  }
-
-  override def rename(src: Path, dst: Path): Boolean = {
-    FauxFileSystem.renames.incrementAndGet()
-    super.rename(src, dst)
-  }
-}
-
-object FauxFileSystem {
-  val opens = new AtomicInteger(0)
-  val creates = new AtomicInteger(0)
-  val renames = new AtomicInteger(0)
-}
 
 /** End-to-end zarr write + read over a non-`file:` scheme (VERDICT r2
   * "what's missing" #2): exercises `ZarrDataSource.storeFor`'s fs.* conf
@@ -58,6 +15,7 @@ class FauxFileSystemSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var base: String = _
+  private val fsLog = RecordingFileSystem.log("graftfaux")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -66,7 +24,7 @@ class FauxFileSystemSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       // the ONLY registration of the scheme — no core-site.xml entry
-      .config("spark.hadoop.fs.graftfaux.impl", classOf[FauxFileSystem].getName)
+      .config("spark.hadoop.fs.graftfaux.impl", classOf[RecordingFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     base = Files.createTempDirectory("zarr-faux").toString
@@ -82,8 +40,8 @@ class FauxFileSystemSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("id", "v", "name")
       .coalesce(1)
     df.write.format("zarr").mode("overwrite").option("chunk_size", "16").save(url)
-    assert(FauxFileSystem.creates.get() > 0,
-      "writes must go through FauxFileSystem.create")
+    assert(fsLog.creates > 0,
+      "writes must go through RecordingFileSystem.create")
 
     val back = spark.read.format("zarr").load(url)
     assert(back.schema.fieldNames.sorted.toSeq == Seq("id", "name", "v"))
@@ -92,8 +50,8 @@ class FauxFileSystemSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(7).getAs[Long]("id") == 7L)
     assert(rows(7).getAs[Double]("v") == 3.5)
     assert(rows(7).getAs[String]("name") == "n7")
-    assert(FauxFileSystem.opens.get() > 0,
-      "reads must go through FauxFileSystem.open")
+    assert(fsLog.gets.length > 0,
+      "reads must go through RecordingFileSystem.open")
   }
 
   test("filter pushdown still applies on the non-default scheme") {
@@ -113,10 +71,10 @@ class FauxFileSystemSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the chunk bytes; the manifest commit must not issue any.
     val df = graft.sources.ZarrWriteSupport.alignForWrite(
       (0 until 60).map(i => (i.toLong, i * 3.0)).toDF("id", "v"), 20)
-    FauxFileSystem.renames.set(0)
+    fsLog.clear()
     df.write.format("zarr").mode("overwrite").option("chunk_size", "10").save(url)
-    assert(FauxFileSystem.renames.get() == 0,
-      s"staged commit must be rename-free, saw ${FauxFileSystem.renames.get()} renames")
+    assert(fsLog.renames == 0,
+      s"staged commit must be rename-free, saw ${fsLog.renames} renames")
     val back = spark.read.format("zarr").load(url).orderBy("id").collect()
     assert(back.length == 60)
     assert(back(59).getAs[Double]("v") == 177.0)

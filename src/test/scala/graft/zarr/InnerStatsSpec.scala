@@ -2,7 +2,6 @@ package graft.zarr
 
 import java.nio.file.Files
 
-import graft.tools.LatencyFileSystem
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,6 +19,7 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var base: String = _
+  private val fsLog = RecordingFileSystem.log("graftlat")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -27,7 +27,7 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .appName("inner-stats-spec")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.graftlat.impl", classOf[LatencyFileSystem].getName)
+      .config("spark.hadoop.fs.graftlat.impl", classOf[RecordingFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     base = Files.createTempDirectory("zarr-innerstats").toString
@@ -73,9 +73,9 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** 32x32 store, ONE (32,32) shard of 8x8 inner chunks (16), data =
     * row-major ordinal (spatially correlated, like real measurements). */
   private def buildStore(dir: String): Unit = {
-    LatencyFileSystem.reset(0)
+    fsLog.clear()
     val st = ZarrStore(dir,
-      Seq("fs.graftlat.impl" -> classOf[LatencyFileSystem].getName))
+      Seq("fs.graftlat.impl" -> classOf[RecordingFileSystem].getName))
     st.writeStoreRootMeta()
     ZarrWriter.writeArray(st, "lat", ZarrType.Float64, Seq(32), Seq(32),
       (0 until 32).map(_.toDouble), Some(Seq("lat")), ZarrWriter.CodecChain.bloscLz4)
@@ -98,7 +98,7 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def run(mode: String): (Seq[String], Int, Long, Long) = {
       hc.set("graft.zarr.ranged.reads", mode)
       try {
-        LatencyFileSystem.reset(0)
+        fsLog.clear()
         val df = spark.read.format("zarr").load(url)
           .filter("data >= 768.0").select("data")
         val rows = df.collect().map(_.toString).sorted.toSeq
@@ -106,8 +106,8 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
           case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
             s.metrics("numOutputRows").value
         }.head
-        (rows, LatencyFileSystem.chunkGets("datapred"),
-          LatencyFileSystem.chunkBytes("datapred"), scanned)
+        (rows, fsLog.chunkGets("datapred"),
+          fsLog.chunkBytes("datapred"), scanned)
       } finally hc.unset("graft.zarr.ranged.reads")
     }
     val (wholeRows, wholeGets, wholeBytes, wholeScanned) = run("never")
@@ -131,7 +131,7 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the object length definitely changes while the stale doc claims
     // bounds 0..1023 per band
     val st = ZarrStore(dir,
-      Seq("fs.graftlat.impl" -> classOf[LatencyFileSystem].getName))
+      Seq("fs.graftlat.impl" -> classOf[RecordingFileSystem].getName))
     ZarrWriter.writeArray(st, "data", ZarrType.Float64, Seq(32, 32), Seq(32, 32),
       (0 until 1024).map(_ => 0.0), Some(Seq("lat", "lon")),
       ZarrWriter.CodecChain.bloscLz4.sharded(Seq(8, 8)))
@@ -255,8 +255,8 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("RAGGED APPEND: untouched shard's masking stays LIVE (byte-counted); edge docs retired and re-emitted") {
     val dir = s"$base/ragged/store"
     val url = s"graftlat://$dir"
-    val pairs = Seq("fs.graftlat.impl" -> classOf[LatencyFileSystem].getName)
-    LatencyFileSystem.reset(0)
+    val pairs = Seq("fs.graftlat.impl" -> classOf[RecordingFileSystem].getName)
+    fsLog.clear()
     // 7 days: ragged base (7 % 4 != 0) — shard 0 = days 0..3 (full),
     // shard 1 = days 4..6 (edge). Write-time docs, no analyze.
     cubeSlab(0, 7).write.format("zarr").mode("append")
@@ -293,10 +293,10 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def run(mode: String): (Seq[String], Long) = {
       hc.set("graft.zarr.ranged.reads", mode)
       try {
-        LatencyFileSystem.reset(0)
+        fsLog.clear()
         val rows = spark.read.format("zarr").load(url)
           .filter("value <= 103.0").collect().map(_.toString).sorted.toSeq
-        (rows, LatencyFileSystem.chunkBytes("ragged"))
+        (rows, fsLog.chunkBytes("ragged"))
       } finally hc.unset("graft.zarr.ranged.reads")
     }
     val (wholeRows, wholeBytes) = run("never")
@@ -309,9 +309,9 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("MTIME guard: a same-length foreign rewrite (constant-length encoding) is caught") {
     val dir = s"$base/mtguard"
-    LatencyFileSystem.reset(0)
+    fsLog.clear()
     val st = ZarrStore(dir,
-      Seq("fs.graftlat.impl" -> classOf[LatencyFileSystem].getName))
+      Seq("fs.graftlat.impl" -> classOf[RecordingFileSystem].getName))
     st.writeStoreRootMeta()
     ZarrWriter.writeArray(st, "lat", ZarrType.Float64, Seq(32), Seq(32),
       (0 until 32).map(_.toDouble), Some(Seq("lat")), ZarrWriter.CodecChain.bloscLz4)
@@ -369,7 +369,7 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // same index bytes (raw codec), values reversed.
     val dir = s"$base/etguard"
     val pairs = Seq("fs.graftetag.impl" ->
-      classOf[graft.tools.EtagFileSystem].getName)
+      classOf[EtagFileSystem].getName)
     val st = ZarrStore(dir, pairs)
     st.writeStoreRootMeta()
     ZarrWriter.writeArray(st, "lat", ZarrType.Float64, Seq(32), Seq(32),
@@ -381,7 +381,7 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ZarrWriter.CodecChain.raw.sharded(Seq(8, 8)))
     val url = s"graftetag://$dir"
     spark.sparkContext.hadoopConfiguration
-      .set("fs.graftetag.impl", classOf[graft.tools.EtagFileSystem].getName)
+      .set("fs.graftetag.impl", classOf[EtagFileSystem].getName)
     ZarrMaintenance.analyze(spark, url)
     val doc0 = ChunkStats.parseInner(st.readText("_stats/i0.json").get,
       _ => Some(ZarrType.Float64)).get

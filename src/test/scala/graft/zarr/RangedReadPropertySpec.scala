@@ -374,9 +374,9 @@ class RangedReadPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     // equal an in-memory reference of the NEW values, for every case.
     val rnd = new Random(1808202618L)
     val etagPairs = Seq("fs.graftetag.impl" ->
-      classOf[graft.tools.EtagFileSystem].getName)
+      classOf[EtagFileSystem].getName)
     spark.sparkContext.hadoopConfiguration
-      .set("fs.graftetag.impl", classOf[graft.tools.EtagFileSystem].getName)
+      .set("fs.graftetag.impl", classOf[EtagFileSystem].getName)
     (0 until 10).foreach { caseNo =>
       val ndim = 2
       val shape = Array.fill(ndim)(8 + rnd.nextInt(9))        // 8..16

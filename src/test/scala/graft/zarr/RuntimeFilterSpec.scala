@@ -18,6 +18,7 @@ class RuntimeFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var url: String = _
+  private val fsLog = RecordingFileSystem.log("graftstat")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -54,14 +55,14 @@ class RuntimeFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.parquet(keysPath)
     val keys = spark.read.parquet(keysPath).where(col("tag") =!= "zz")
     val joined = fact.join(broadcast(keys), col("id") === col("k"))
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     // no orderBy: a range exchange would SAMPLE the input first and read
     // every surviving chunk twice, muddying the open counts below
     val rows = joined.select(col("id"), col("v")).collect().sortBy(_.getLong(0))
     assert(rows.map(_.getLong(0)).toSeq == Seq(3L, 7L))
     assert(rows.map(_.getDouble(1)).toSeq == Seq(7.5, 17.5))
     // staged commits key chunks under c.part<writeId>-<p>/<ordinal>
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/store/(id|v)/c(\\.part[^/]+)?/\\d+$"))
     // both joined keys live in chunk ordinal 0: runtime filtering must
     // keep the scan to ONE chunk per column (vs 5 chunks unpruned)
@@ -97,12 +98,12 @@ class RuntimeFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq((0L, "a"), (99L, "zz")).toDF("k", "tag").write.parquet(keysPath)
     val keys = spark.read.parquet(keysPath).where(col("tag") =!= "zz")
     val joined = fact.join(broadcast(keys), col("row") === col("k"))
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val rows = joined.select(col("row"), col("col"), col("data"))
       .collect().sortBy(_.getDouble(2))
     assert(rows.length == 8) // one grid row x 8 cols
     assert(rows.map(_.getDouble(2)).toSeq == (0 until 8).map(_.toDouble))
-    val dataOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val dataOpens = fsLog.gets
       .filter(_.matches(".*/nd/data/c/\\d+/\\d+$")).distinct
     // row = 0 lives in grid row 0 only: the runtime IN-set plus the
     // grid-signed sidecar must keep data GETs to chunks (0,0),(0,1),(0,2)

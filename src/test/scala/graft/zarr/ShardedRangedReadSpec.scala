@@ -2,7 +2,6 @@ package graft.zarr
 
 import java.nio.file.Files
 
-import graft.tools.LatencyFileSystem
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,6 +16,7 @@ class ShardedRangedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var base: String = _
+  private val fsLog = RecordingFileSystem.log("graftlat")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -24,7 +24,7 @@ class ShardedRangedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
       .appName("sharded-ranged-read-spec")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.graftlat.impl", classOf[LatencyFileSystem].getName)
+      .config("spark.hadoop.fs.graftlat.impl", classOf[RecordingFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     base = Files.createTempDirectory("zarr-ranged").toString
@@ -146,9 +146,9 @@ class ShardedRangedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** lat/lon sharded store: data 32x32 in ONE 32x32 shard of 8x8 inner
     * chunks (16 inner), coords plain-chunked at 32. */
   private def buildLatLon(dir: String): Unit = {
-    LatencyFileSystem.reset(0)
+    fsLog.clear()
     val st = ZarrStore(dir,
-      Seq("fs.graftlat.impl" -> classOf[LatencyFileSystem].getName))
+      Seq("fs.graftlat.impl" -> classOf[RecordingFileSystem].getName))
     st.writeStoreRootMeta()
     ZarrWriter.writeArray(st, "lat", ZarrType.Float64, Seq(32), Seq(32),
       (0 until 32).map(_.toDouble), Some(Seq("lat")), ZarrWriter.CodecChain.bloscLz4)
@@ -168,7 +168,7 @@ class ShardedRangedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     // NOTE: no orderBy — a global sort adds a range-partitioner SAMPLING
     // pass that executes the scan twice; sort driver-side instead
     def run(): (Seq[String], Int, Long, Long) = {
-      LatencyFileSystem.reset(0)
+      fsLog.clear()
       val df = spark.read.format("zarr").load(url)
         .filter("lat >= 8.0 AND lat < 16.0 AND lon >= 16.0 AND lon < 24.0")
       val rows = df.collect().map(_.toString).sorted.toSeq
@@ -178,7 +178,7 @@ class ShardedRangedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
         case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
           s.metrics("numOutputRows").value
       }.head
-      (rows, LatencyFileSystem.chunkGets("e2e"), LatencyFileSystem.chunkBytes("e2e"), scanned)
+      (rows, fsLog.chunkGets("e2e"), fsLog.chunkBytes("e2e"), scanned)
     }
     hc.set("graft.zarr.ranged.reads", "never")
     val (wholeRows, wholeGets, wholeBytes, wholeScanned) = run()
@@ -207,7 +207,7 @@ class ShardedRangedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     val url = s"graftlat://$dir"
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("graft.zarr.ranged.reads", "always")
-    LatencyFileSystem.reset(0)
+    fsLog.clear()
     // every inner chunk's lat box refutes the predicate: the all-false
     // mask already forces zero emitted rows, so the index GET and the
     // synthetic-shard decode the reader used to pay bought nothing
@@ -215,8 +215,8 @@ class ShardedRangedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter("lat >= 100.0 AND lon >= 16.0").collect()
     hc.unset("graft.zarr.ranged.reads")
     assert(rows.isEmpty)
-    assert(LatencyFileSystem.chunkGets("e2e-allref") == 2,
-      s"lat + lon only — got ${LatencyFileSystem.chunkGets("e2e-allref")}")
+    assert(fsLog.chunkGets("e2e-allref") == 2,
+      s"lat + lon only — got ${fsLog.chunkGets("e2e-allref")}")
   }
 
   test("unselective predicate keeps the single-GET whole-shard path") {
@@ -225,14 +225,14 @@ class ShardedRangedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     val url = s"graftlat://${dir}"
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("graft.zarr.ranged.reads", "always")
-    LatencyFileSystem.reset(0)
+    fsLog.clear()
     // keeps 3 of 4 lat bands (75% of inner chunks): not worth the extra
     // index round-trip, so the reader must fall back to one whole GET
     val rows = spark.read.format("zarr").load(url)
       .filter("lat >= 8.0").collect()
     hc.unset("graft.zarr.ranged.reads")
     assert(rows.length == 24 * 32)
-    assert(LatencyFileSystem.chunkGets("e2e-unsel") == 3) // lat + lon + 1 whole shard
+    assert(fsLog.chunkGets("e2e-unsel") == 3) // lat + lon + 1 whole shard
   }
 
   test("data-column predicates do not trigger inner masking (values unknown without the bytes)") {
@@ -241,17 +241,17 @@ class ShardedRangedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     val url = s"graftlat://${dir}"
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("graft.zarr.ranged.reads", "always")
-    LatencyFileSystem.reset(0)
+    fsLog.clear()
     val rows = spark.read.format("zarr").load(url)
       .filter("data >= 1000.0").collect()
     hc.unset("graft.zarr.ranged.reads")
     assert(rows.length == 24)
-    assert(LatencyFileSystem.chunkGets("e2e-datapred") == 3)
+    assert(fsLog.chunkGets("e2e-datapred") == 3)
   }
 
   test("edge shards: ranged reads trim to the valid extent like whole reads") {
     val dir = s"$base/e2e-edge"
-    LatencyFileSystem.reset(0)
+    fsLog.clear()
     val st = ZarrStore(dir)
     st.writeStoreRootMeta()
     // 20 rows: shard rows of 16 → second shard row is a ragged edge
@@ -286,7 +286,7 @@ class ShardedRangedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a shared conf mutation
     hc.set("graft.zarr.ranged.reads", "never")
     try {
-      LatencyFileSystem.reset(0)
+      fsLog.clear()
       val df = spark.read.format("zarr").option("ranged_reads", "always").load(url)
         .filter("lat >= 8.0 AND lat < 16.0 AND lon >= 16.0 AND lon < 24.0")
       val rows = df.collect()
@@ -313,9 +313,9 @@ class ShardedRangedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     // ranged fetch must slice its variable-length inner chunks by the
     // shard index's stored offsets, byte-exactly, with fewer bytes
     val dir = s"$base/e2e-vlen"
-    LatencyFileSystem.reset(0)
+    fsLog.clear()
     val st = ZarrStore(dir,
-      Seq("fs.graftlat.impl" -> classOf[LatencyFileSystem].getName))
+      Seq("fs.graftlat.impl" -> classOf[RecordingFileSystem].getName))
     st.writeStoreRootMeta()
     ZarrWriter.writeArray(st, "lat", ZarrType.Float64, Seq(32), Seq(32),
       (0 until 32).map(_.toDouble), Some(Seq("lat")), ZarrWriter.CodecChain.bloscLz4)
@@ -329,14 +329,14 @@ class ShardedRangedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
       fillJson = "null")
     val url = s"graftlat://$dir"
     def run(mode: String): (Seq[(Double, Double, Array[Byte])], Int, Long) = {
-      LatencyFileSystem.reset(0)
+      fsLog.clear()
       val rows = spark.read.format("zarr").option("ranged_reads", mode).load(url)
         .filter("lat >= 8.0 AND lat < 16.0 AND lon >= 16.0 AND lon < 24.0")
         .collect()
         .map(r => (r.getAs[Double]("lat"), r.getAs[Double]("lon"),
           r.getAs[Array[Byte]]("blob")))
         .sortBy(t => (t._1, t._2)).toSeq
-      (rows, LatencyFileSystem.chunkGets("e2e-vlen"), LatencyFileSystem.chunkBytes("e2e-vlen"))
+      (rows, fsLog.chunkGets("e2e-vlen"), fsLog.chunkBytes("e2e-vlen"))
     }
     val (wholeRows, wholeGets, wholeBytes) = run("never")
     val (rangedRows, rangedGets, rangedBytes) = run("always")

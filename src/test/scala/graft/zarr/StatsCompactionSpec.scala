@@ -19,6 +19,7 @@ class StatsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var base: String = _
+  private val fsLog = RecordingFileSystem.log("graftstat")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -73,28 +74,28 @@ class StatsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val aggBefore = spark.read.format("zarr").load(url)
       .agg(count(lit(1)), min("x"), max("x"), sum("id")).collect()(0)
 
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val (before, after) = ZarrMaintenance.compactStats(spark, url)
     assert(before == 66L && after == 1L, s"$before -> $after")
-    assert(RecordingFileSystem.opened.toArray.map(_.toString)
+    assert(fsLog.gets
       .count(_.matches(".*/tab/(id|x)/c/\\d+$")) == 0,
       "sidecar compaction must read no chunk bytes")
     assert(allRanges(url) == rangesBefore,
       "per-ordinal bounds must survive the merge exactly")
     // inner docs untouched; aggregates identical; still metadata-only
     assert(st.sidecar().innerOrds.size == 66)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val aggAfter = spark.read.format("zarr").load(url)
       .agg(count(lit(1)), min("x"), max("x"), sum("id")).collect()(0)
     assert(aggAfter == aggBefore)
-    assert(RecordingFileSystem.opened.toArray.map(_.toString)
+    assert(fsLog.gets
       .count(_.matches(".*/tab/(id|x)/c/\\d+$")) == 0,
       "post-compaction metadata-only aggregate must read no chunks")
     // chunk skip still serves from the merged doc: one chunk matches
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     assert(spark.read.format("zarr").load(url)
       .filter(col("id") >= 1040L).count() == 16)
-    val opened = RecordingFileSystem.opened.toArray.map(_.toString)
+    val opened = fsLog.gets
       .filter(_.matches(".*/tab/id/c/\\d+$")).distinct
     assert(opened.size <= 1, s"merged bounds must still skip: $opened")
     // idempotent: nothing left to merge

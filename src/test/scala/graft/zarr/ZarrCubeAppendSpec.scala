@@ -20,6 +20,7 @@ class ZarrCubeAppendSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var base: String = _
+  private val fsLog = RecordingFileSystem.log("graftstat")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -95,24 +96,24 @@ class ZarrCubeAppendSpec extends AnyFunSuite with BeforeAndAfterAll {
     appendSlab(slab(4, 6), path) // 6×5×7, grid 6×3×2
 
     val df = spark.read.format("zarr").load(path)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val r = df.agg(count(lit(1)).as("cnt"), min("time"), max("time"),
       min("temp"), max("temp"), sum("n")).collect()(0)
     assert(r.getLong(0) == 6 * 35L)
     assert(r.getLong(1) == t0 && r.getLong(2) == t0 + 5 * day)
     assert(r.getDouble(3) == 0.0 && r.getDouble(4) == 5046.0)
     assert(r.getLong(5) == (0 until 210).map(_.toLong).sum)
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/grow_stat/(time|lat|lon|temp|n)/c/.*"))
     assert(chunkOpens.isEmpty,
       s"metadata-only agg on an appended store read chunks: ${chunkOpens.mkString(", ")}")
 
     // predicate over the APPENDED slab prunes to that slab's data chunks
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val s5 = df.filter(col("time") >= t0 + 5 * day)
       .agg(sum("n").as("s")).collect()(0).getLong(0)
     assert(s5 == (175 until 210).map(_.toLong).sum)
-    val dataOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val dataOpens = fsLog.gets
       .filter(_.matches(".*/grow_stat/(temp|n)/c/.*")).distinct
     assert(dataOpens.length <= 12,
       s"slab scan read ${dataOpens.length}: ${dataOpens.mkString(", ")}")

@@ -19,6 +19,7 @@ class ZarrCubeRegionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var base: String = _
+  private val fsLog = RecordingFileSystem.log("graftstat")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -102,12 +103,12 @@ class ZarrCubeRegionSpec extends AnyFunSuite with BeforeAndAfterAll {
     rewrite(slab(2, 4, vBase = 500000.0), path)
 
     val df = spark.read.format("zarr").load(path)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val r = df.agg(count(lit(1)).as("cnt"), min("temp"), max("temp")).collect()(0)
     assert(r.getLong(0) == 210L)
     assert(r.getDouble(1) == 0.0) // day 0 untouched
     assert(r.getDouble(2) == 500000.0 + 3046.0) // NEW day-3 maximum
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/stat/(time|lat|lon|temp)/c/.*"))
     assert(chunkOpens.isEmpty,
       s"metadata-only agg after a region swap read chunks: ${chunkOpens.mkString(", ")}")

@@ -21,6 +21,7 @@ class ZarrCubeShardSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var base: String = _
+  private val fsLog = RecordingFileSystem.log("graftstat")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -87,11 +88,11 @@ class ZarrCubeShardSpec extends AnyFunSuite with BeforeAndAfterAll {
       .option("chunk_shape", "1,2,4").option("shard_shape", "2,4,4")
       .save(path)
     val df = spark.read.format("zarr").load(path)
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val r = df.agg(count(lit(1)).as("cnt"), min("temp"), max("temp")).collect()(0)
     assert(r.getLong(0) == 140L)
     assert(r.getDouble(1) == 0.0 && r.getDouble(2) == 3046.0)
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/shardstat/(time|lat|lon|temp)/c/.*"))
     assert(chunkOpens.isEmpty,
       s"metadata-only agg on a fresh sharded cube read chunks: ${chunkOpens.mkString(", ")}")

@@ -18,6 +18,7 @@ class ZarrCubeWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var base: String = _
+  private val fsLog = RecordingFileSystem.log("graftstat")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -98,21 +99,21 @@ class ZarrCubeWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == exp, "4-D roundtrip must be value-exact")
 
     // zero-GET metadata aggregate over the 4-D grid-signed sidecar
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val agg = back.agg(count(lit(1)), min("v"), max("v"), sum("v")).collect()(0)
     assert(agg.getLong(0) == 240L && agg.getLong(1) == 0L &&
       agg.getLong(2) == 239L && agg.getLong(3) == (0 until 240).map(_.toLong).sum)
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/four_d/(time|level|lat|lon|v)/c/.*"))
     assert(chunkOpens.isEmpty,
       s"4-D metadata-only agg read chunks: ${chunkOpens.mkString(", ")}")
 
     // coordinate predicate prunes to one time-chunk-row of the grid
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val s3 = back.filter(col("time") >= t0 + 2 * day)
       .agg(sum("v")).collect()(0).getLong(0)
     assert(s3 == (120 until 240).map(_.toLong).sum)
-    val dataOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val dataOpens = fsLog.gets
       .filter(_.matches(".*/four_d/v/c/.*")).distinct
     assert(dataOpens.length <= 12,
       s"4-D pruned scan read ${dataOpens.length} chunks: ${dataOpens.mkString(", ")}")
@@ -135,23 +136,23 @@ class ZarrCubeWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
       .save(path)
     val df = spark.read.format("zarr").load(path)
     // metadata-only aggregates answer with ZERO chunk GETs
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val r = df.agg(count(lit(1)).as("cnt"), min("temp"), max("temp"),
       min("time"), max("time"), sum("n")).collect()(0)
     assert(r.getLong(0) == 140L)
     assert(r.getDouble(1) == 0.0 && r.getDouble(2) == 3046.0)
     assert(r.getLong(5) == (0 until 140).map(_.toLong).sum)
-    val chunkOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val chunkOpens = fsLog.gets
       .filter(_.matches(".*/climate_stat/(time|lat|lon|temp|n)/c/.*"))
     assert(chunkOpens.isEmpty, s"metadata-only agg read chunks: ${chunkOpens.mkString(", ")}")
     // time-slab predicate reads only the matching slab's data chunks
     val t0 = 1700000000000000000L
     val day = 86400L * 1000000000L
-    RecordingFileSystem.opened.clear()
+    fsLog.clear()
     val slab = df.filter(col("time") >= t0 + 3 * day)
       .agg(sum("n").as("s")).collect()(0).getLong(0)
     assert(slab == (105 until 140).map(_.toLong).sum)
-    val dataOpens = RecordingFileSystem.opened.toArray.map(_.toString)
+    val dataOpens = fsLog.gets
       .filter(_.matches(".*/climate_stat/(temp|n)/c/.*")).distinct
     // grid is 4×3×2 = 24 chunks; the t=3 slab is 6 of them, 2 data cols
     assert(dataOpens.length <= 12, s"slab scan read ${dataOpens.length}: ${dataOpens.mkString(", ")}")
