@@ -138,7 +138,11 @@ object ZarrCubeWrite {
     val inventory = store.rootInventory()
     if (truncate) store.delete()
     else inventory.foreach { entries =>
-      val arrays = entries.collect { case (n, true) => n }.sorted
+      // the root commits a fresh store before its per-array documents,
+      // so a committed array may not have one yet
+      val arrays = (entries.collect { case (n, true) => n } ++
+        store.readText("zarr.json").toSeq.flatMap(ZarrMeta.parseConsolidated).map(_.name))
+        .distinct.sorted
       if (arrays.nonEmpty)
         throw new ZarrException(
           s"cube write targets a FRESH store but $path already holds arrays " +
@@ -146,11 +150,15 @@ object ZarrCubeWrite {
             "or mode('append') with option('append_dim', <dim>) to extend it " +
             "along its first dimension")
       // an EMPTY zarr store root (a bare root doc / stats sidecar, no
-      // arrays) is a legitimate fresh target; anything else present is
+      // arrays) is a legitimate fresh target, and so are this write's
+      // own array dirs holding only chunks (a crashed attempt's uploads,
+      // which the re-run overwrites); anything else present is
       // unrelated user data this write must not touch — refuse before
       // any IO so the failure cleanup can never reach it
+      val own = (dims ++ dataCols.map(_.name)).toSet
       val foreign = entries.collect { case (n, false)
-        if n != "zarr.json" && n != graft.zarr.ChunkStats.dirName => n }.sorted
+        if n != "zarr.json" && n != graft.zarr.ChunkStats.dirName &&
+          !(own(n) && store.holdsOnlyChunks(n)) => n }.sorted
       if (foreign.nonEmpty)
         throw new ZarrException(
           s"cube write target $path is an existing directory holding non-zarr " +
@@ -399,7 +407,8 @@ object ZarrCubeWrite {
     *     must be dense (every cell exactly once);
     *  2. window rows the slab does not supply — the committed part of a
     *     ragged edge chunk-row — are read back and folded in;
-    *  3. every sidecar doc over the window retires ([[retireStats]]);
+    *  3. every sidecar doc over the window retires
+    *     ([[ZarrStore.Sidecar.retire]]);
     *  4. [[writeSlab]] writes each window chunk; the STAGING RULE: a
     *     chunk is staged under a write-scoped `c.part*` dir iff its
     *     ordinal is below `committedHi` (it replaces a committed
@@ -412,8 +421,10 @@ object ZarrCubeWrite {
     *  6. commit: a growing write writes every changed array meta, the
     *     dim-0 coordinate LAST (the streaming sink's commit signal),
     *     then the consolidated root — the single commit point readers
-    *     see; a region writes nothing;
-    *  7. staged stats promote to final keys;
+    *     see; a fresh write commits its root before the metas (a crash
+    *     between them is completed by the next append's target
+    *     resolution); a region writes nothing;
+    *  7. staged stats promote to final keys ([[ZarrStore.Sidecar.promote]]);
     *  8. on failure, one abort path: a fresh store's partial output is
     *     removed (the root itself only if `ownRoot`); otherwise the
     *     window's sidecar docs retire again and the write's staging
@@ -447,6 +458,7 @@ object ZarrCubeWrite {
     // a window reaching the committed end also owns every ordinal past
     // it: those docs can only be a failed earlier write's leftovers
     val retireHi = if (ordHi >= committedHi) Long.MaxValue else ordHi
+    val ztOf: String => Option[ZarrType] = n => metas.find(_.name == n).map(_.dataType)
     val fresh = committed0 == 0L
     val grows = slabHi0 > committed0
 
@@ -508,7 +520,7 @@ object ZarrCubeWrite {
     val swapHi = math.min(ordHi, committedHi)
     try {
       // ---- 3. retire the window's sidecar docs ----
-      retireStats(store, ordLo, retireHi, metas, writeId)
+      store.sidecar().retire(store, ordLo, retireHi, writeId, ztOf)
 
       // ---- 4. write every window chunk, and the changed coordinate chunks ----
       writeSlab(kept.map(_.unionByName(df)).getOrElse(df),
@@ -540,66 +552,37 @@ object ZarrCubeWrite {
 
       // ---- 6. commit: changed metas, dim-0 coordinate last, root ----
       if (grows) {
+        def root(): Unit =
+          store.writeStoreRootMeta(metas.map(m => m.name -> m.sourceJson), ChunkManifest.empty)
+        // a fresh store's root goes FIRST: readers of a store without a
+        // root list its per-array documents, and some of them would
+        // show a store missing arrays
+        if (fresh) root()
         ((if (fresh) metas.filterNot(_.name == dims.head) else dataMetas) :+ coordMetas.head)
           .foreach(m => store.writeMeta(m.name, m.sourceJson))
-        store.writeStoreRootMeta(metas.map(m => m.name -> m.sourceJson), ChunkManifest.empty)
+        if (!fresh) root()
       }
 
       // ---- 7. promote the staged stats: their chunks are final and visible ----
-      if (stageStats) promoteStaged(store, writeId, dataMetas, grid)
+      // stamping each final object's mtime/etag into the inner docs: the
+      // staged docs cannot know them (the swap's copy fallback creates a
+      // new object), and without them the freshness guard degrades to
+      // length-only — the hole constant-length encodings exploit
+      if (stageStats) store.sidecar().promote(store, writeId, _.target, (name, ord) =>
+        dataMetas.find(_.name == name).map(_.chunkKey(ScanGeometry.indexOf(ord, grid.toArray))))
     } catch {
       case e: Throwable =>
         // ---- 8. abort ----
         def quietly(f: => Unit): Unit = try f catch { case _: Throwable => () }
         if (fresh) quietly(if (ownRoot) store.delete() else store.deleteRootContents())
         else {
-          quietly(retireStats(store, ordLo, retireHi, metas, writeId))
+          quietly(store.sidecar().retire(store, ordLo, retireHi, writeId, ztOf))
           quietly((dataMetas :+ coordMetas.head).foreach(m => store.cleanStaging(m.name, stageDir)))
         }
         throw e
     } finally kept.foreach(_.unpersist())
   }
   // scalastyle:on method.length
-
-  /** Retire, from ONE `_stats/` listing, every sidecar doc describing
-    * chunk ordinals in [lo, hi), and write `writeId`'s staged docs:
-    * per-inner-chunk docs are deleted, and so is every stats segment
-    * intersecting the window. The walk is over the RAW listing:
-    * overlap-suppressed files are exactly a crashed attempt's leftovers
-    * whose ordinals are being reused, and skipping them would let them
-    * suppress the fresh segments. An UNSUPPRESSED straddler keeps its
-    * out-of-window pieces as narrower segments, re-encoded from the
-    * parsed segment under its own grid signature, so coverage outside
-    * the window (zero-GET aggregates) survives; a suppressed one is
-    * ambiguous everywhere and goes whole, as does an unparseable or
-    * grid-less doc — which only declines coverage. */
-  private def retireStats(
-      store: ZarrStore, lo: Long, hi: Long, metas: Seq[ZarrArrayMeta], writeId: String): Unit = {
-    val listing = store.sidecar()
-    listing.innerOrds.foreach(o => if (o >= lo && o < hi) store.deleteKey(ChunkStats.innerKey(o)))
-    listing.staged.filter(_.ofWrite(writeId)).foreach(st => store.deleteKey(st.key))
-    val unsuppressed = listing.unsuppressed.toSet
-    val ztOf: String => Option[ZarrType] = n => metas.find(_.name == n).map(_.dataType)
-    listing.raw.foreach { case (first, n) =>
-      if (first < hi && first + n > lo) {
-        val key = ChunkStats.segmentKey(first, n)
-        val straddler =
-          if (!unsuppressed((first, n)) || (first >= lo && first + n <= hi)) None
-          else store.readText(key).flatMap(doc =>
-            try Some(ChunkStats.parse(first, n, doc, ztOf)) catch { case _: Exception => None })
-        store.deleteKey(key)
-        straddler.flatMap(seg => seg.grid.map(seg -> _)).foreach { case (seg, (grid, dims)) =>
-          def keep(from: Long, until: Long): Unit = if (until > from) {
-            val len = (until - from).toInt
-            store.writeText(ChunkStats.segmentKey(from, len),
-              ChunkStats.mergeSegments(from, len, Seq(seg), ztOf, grid.toSeq, dims.toSeq))
-          }
-          keep(first, lo)
-          keep(hi, first + n)
-        }
-      }
-    }
-  }
 
   /** The store a cube write targets, with the session's `fs.*` conf. */
   private def openStore(
@@ -676,6 +659,14 @@ object ZarrCubeWrite {
   private def resolveCubeTarget(
       store: ZarrStore, path: String, dimsOpt: Option[Seq[String]],
       opName: String): CubeTarget = {
+    // ONE root read: the manifest gate, the committed (consolidated)
+    // extents the torn-commit heal compares against, and the arrays a
+    // fresh write committed before their per-array documents — a crash
+    // between the two is completed here, so the listing sees them all
+    val rootDoc = store.readText("zarr.json")
+    rootDoc.toSeq.flatMap(ZarrMeta.parseConsolidated).foreach { m =>
+      if (!store.chunkObjectExists(m.name, "zarr.json")) store.writeMeta(m.name, m.sourceJson)
+    }
     val names =
       try store.listArrays()
       catch { case e: ZarrException =>
@@ -692,9 +683,6 @@ object ZarrCubeWrite {
         s"$opName: $path is a Zarr v2 store (array ${m.name}); the writer " +
           "is v3-only — compact it to a v3 store first")
     }
-    // ONE root read: the manifest gate and the committed (consolidated)
-    // extents the torn-commit heal compares against
-    val rootDoc = store.readText("zarr.json")
     if (rootDoc.exists(d => ChunkManifest.parse(d).parts.nonEmpty))
       throw new ZarrException(
         s"$opName: $path carries a chunk manifest (staged tabular " +
@@ -806,8 +794,8 @@ object ZarrCubeWrite {
     *    the commit completes, and a replay of the same append is then
     *    refused as a duplicate (its coordinates are on the axis).
     * Either way the root is re-consolidated from the healed metas and
-    * stats segments beyond the healed grid are purged (a rolled-back
-    * slab's segments must not describe phantom ordinals). */
+    * the sidecar docs beyond the healed grid retire (a rolled-back
+    * slab's docs must not describe phantom ordinals). */
   private def healTornShape0(
       store: ZarrStore, metas: Seq[ZarrArrayMeta], dims: Seq[String],
       rootS0: Option[Long]): Seq[ZarrArrayMeta] = {
@@ -872,9 +860,8 @@ object ZarrCubeWrite {
     val trailingGrid = (1 until head.ndim).foldLeft(1L) { (a, d) =>
       a * ((head.shape(d) + head.chunkShape(d) - 1) / head.chunkShape(d))
     }
-    store.sidecar().raw.foreach { case (first, n) =>
-      if (first >= grid0 * trailingGrid) store.deleteKey(ChunkStats.segmentKey(first, n))
-    }
+    store.sidecar().retire(store, grid0 * trailingGrid, Long.MaxValue, "",
+      n => healed.find(_.name == n).map(_.dataType))
     healed
   }
 
@@ -956,36 +943,6 @@ object ZarrCubeWrite {
       }
     }
   }
-
-  /** Promote one write's staged sidecar docs to their final keys —
-    * metadata-sized text copies found by ONE `_stats/` LIST. Called only
-    * once every chunk the docs describe is durable at its final key AND
-    * visible under the shape the docs were computed for; a crash
-    * mid-promotion leaves a mix of promoted and staged docs, which only
-    * declines coverage (staged `c.part*` names are invisible to readers
-    * and reclaimed by a re-run's retire or vacuum). */
-  private def promoteStaged(
-      store: ZarrStore, writeId: String,
-      dataMetas: Seq[ZarrArrayMeta], grid: Seq[Int]): Unit =
-    store.sidecar().staged.filter(_.ofWrite(writeId)).foreach { st =>
-      store.readText(st.key).foreach { doc =>
-        st.target.foreach {
-          case fin @ ChunkStats.InnerFile(ord) =>
-            // stamp each column's final-object mtime: the staged doc
-            // cannot know it (the swap's copy fallback creates a new
-            // object), and without it the freshness guard degrades to
-            // length-only — the exact hole constant-length encodings
-            // exploit. One HEAD per promoted column, bounded by the
-            // staged window size.
-            val idx = ScanGeometry.indexOf(ord, grid.toArray)
-            val keyOf = dataMetas.map(m => m.name -> m.chunkKey(idx)).toMap
-            store.writeText(fin.key, ChunkStats.withInnerMtimes(doc,
-              name => keyOf.get(name).flatMap(k => store.objectStat(name, k))))
-          case fin => store.writeText(fin.key, doc)
-        }
-      }
-      store.deleteKey(st.key)
-    }
 
   /** One coordinate axis as a global sorted distinct, with the cube
     * layout's validity checks (bounded, non-NULL, finite). */

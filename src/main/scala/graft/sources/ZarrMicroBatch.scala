@@ -79,7 +79,7 @@ class ZarrMicroBatchStream(
 
   private final case class Snapshot(
       metas: Seq[ZarrArrayMeta], geometry: ScanGeometry,
-      metaJsons: Seq[(String, String)], manifestParts: Vector[(Long, String, Int)])
+      metaJsons: Seq[(String, String)], manifest: ChunkManifest)
 
   /** The last planned batch: its snapshot, its sidecar (listed per
     * batch, as the sidecar grows with the store) and its shared
@@ -182,7 +182,7 @@ class ZarrMicroBatchStream(
     // misdescribe. The usual length/mtime/index-checksum guards apply
     // unchanged executor-side. The manifest is the SAME snapshot as the
     // planned metadata; the sidecar is the batch's own listing.
-    ZarrReaderFactory.planned(store, snap.metaJsons, outputNames, pushed, snap.manifestParts,
+    ZarrReaderFactory.planned(store, snap.metaJsons, outputNames, pushed, snap.manifest,
       () => sidecar.listing, sharedCoords)
   }
 

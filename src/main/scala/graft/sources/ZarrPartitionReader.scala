@@ -36,7 +36,7 @@ final case class ZarrReaderFactory(
     limit: Int = -1,
     /** Ordinal → task-attempt-key mapping for rename-free staged commits
       * (read ONCE from the root doc at planning; [[graft.zarr.ChunkManifest]]). */
-    manifestParts: Seq[(Long, String, Int)] = Nil,
+    manifest: ChunkManifest = ChunkManifest.empty,
     /** Whether the store carries per-inner-chunk stats docs
       * (`_stats/i<ord>.json`) — from the plan's listing, so readers on
       * never-analyzed stores skip the per-shard doc probe entirely. */
@@ -74,15 +74,15 @@ object ZarrReaderFactory {
     * read array, the plan's `_stats/` listing tells every task whether
     * per-inner-chunk stats docs exist at all (a never-analyzed store
     * must not pay a 404 GET per shard probing for them); `sidecar` is
-    * called only then. `manifestParts` come from the caller — they must
-    * be read with the metadata of the same view, never from a second,
+    * called only then. `manifest` comes from the caller — it must be
+    * read with the metadata of the same view, never from a second,
     * newer root read. `sharedCoords` are [[ZarrPlanner.sharedCoords]]. */
   def planned(
       store: ZarrStore,
       metaJsons: Seq[(String, String)],
       outputNames: Seq[String],
       filters: Seq[Filter],
-      manifestParts: Seq[(Long, String, Int)],
+      manifest: ChunkManifest,
       sidecar: () => ZarrStore.Sidecar,
       sharedCoords: Seq[(String, Int, Option[Array[Byte]])],
       limit: Int = -1): ZarrReaderFactory = {
@@ -90,7 +90,7 @@ object ZarrReaderFactory {
       metaJsons.exists { case (n, j) => ZarrMeta.parse(n, j).shardingSpec.isDefined } &&
       sidecar().innerOrds.nonEmpty
     ZarrReaderFactory(store, metaJsons, outputNames, filters, limit,
-      manifestParts, innerStats, sharedCoords)
+      manifest, innerStats, sharedCoords)
   }
 }
 
@@ -114,7 +114,6 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
   // re-derivations of the same fact
   private val metaOf: Map[String, ZarrArrayMeta] =
     metas.map(m => m.name -> m).toMap
-  private val ztOf: String => Option[ZarrType] = n => metaOf.get(n).map(_.dataType)
 
   private val predicateNames: Seq[String] =
     filters.flatMap(ChunkFilter.references).distinct.filter(roleOf.contains)
@@ -163,25 +162,16 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     }
   }
 
-  /** Coordinate chunk values for `name` at grid position `chunkIdx` —
-    * from the cache, else one (tiny) GET. Callable from IO threads.
-    * The cache-miss fetch resolves the key through the SAME manifest
-    * path [[chunkKeyFor]] applies (1-D manifest-keyed stores would
-    * otherwise decode fill values from an absent canonical key into the
-    * mask — unreachable today because 1-D coord chunks are never shared
-    * and the fetchBytes call always populates the cache first, but the
-    * invariant must not hinge on prefetch ordering). */
-  private def coordColumnFor(name: String, chunkIdx: Int): ChunkColumn = {
-    val key = s"$name/$chunkIdx"
+  /** Coordinate chunk values for coordinate `name` of chunk `o` (grid
+    * index `idx`) — from the cache, else one (tiny) GET through the
+    * manifest key rule. Callable from IO threads. */
+  private def coordColumnFor(name: String, idx: Array[Int], o: Long): ChunkColumn = {
+    val key = s"$name/${idx(coordDimOf(name))}"
     val cached = coordCache.get(key)
     if (cached != null) cached
     else {
-      val m = roleOf(name).meta
-      val storeKey =
-        if (geometry.ndim == 1 && !manifest.isEmpty)
-          manifest.keyFor(chunkIdx).getOrElse(m.chunkKey(Array(chunkIdx)))
-        else m.chunkKey(Array(chunkIdx))
-      val c = ChunkColumn.decode(m, f.store.readChunk(name, storeKey))
+      val c = ChunkColumn.decode(roleOf(name).meta,
+        f.store.readChunk(name, f.manifest.chunkKeyOf(roleOf(name), idx, o)))
       coordCache.putIfAbsent(key, c)
       c
     }
@@ -201,8 +191,11 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
       }
     }
 
-  /** Per-ordinal parsed+validated inner-stats doc cache (None = absent
-    * or signature mismatch). Concurrent: consulted from IO threads. */
+  /** The one inner-doc verdict vacuum and analyze apply too. */
+  private val innerDocs = new ChunkStats.InnerDocs(geometry, f.manifest)
+
+  /** Per-ordinal accepted inner-stats doc cache (None = absent or not
+    * accepted). Concurrent: consulted from IO threads. */
   private val idocCache =
     new java.util.concurrent.ConcurrentHashMap[Long, Option[ChunkStats.InnerDoc]]()
 
@@ -210,18 +203,7 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     val cached = idocCache.get(o)
     if (cached != null) cached
     else {
-      // the sidecar is auxiliary: any failure here just stops masking
-      val doc =
-        try f.store.readText(ChunkStats.innerKey(o))
-          .flatMap(ChunkStats.parseInner(_, ztOf))
-          // gridCompatible's acceptance for inner docs: trailing extents,
-          // chunk and dim identity exact; smaller leading extent OK (a
-          // dim-0 append never re-addresses or rewrites a surviving
-          // doc's shard — edge-window docs are retired by the append)
-          .filter(d => ChunkStats.innerDocCompatible(d,
-            geometry.targetShape.toSeq, geometry.targetChunk.toSeq,
-            geometry.dimIdentity))
-        catch { case _: Throwable => None }
+      val doc = innerDocs.read(f.store, o)
       idocCache.putIfAbsent(o, doc)
       doc
     }
@@ -250,21 +232,12 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     if (maskable.isEmpty) return None
     val ndim = geometry.ndim
     val inner = spec.innerShape.toArray
-    if (inner.length != ndim) return None
-    val grid = new Array[Int](ndim)
-    var d = 0
-    while (d < ndim) {
-      val c = geometry.targetChunk(d)
-      if (inner(d) <= 0 || c % inner(d) != 0) return None
-      grid(d) = c / inner(d)
-      d += 1
-    }
+    val grid = Sharding.innerGrid(geometry.targetChunk, spec).getOrElse(return None)
     val nInner = grid.product
     val dataStats: Option[ChunkStats.InnerColStats] =
       if (!useStats || !f.innerStatsPresent ||
         !maskable.exists(ft => ChunkFilter.references(ft).contains(name))) None
-      else idocFor(o).flatMap(_.cols.get(name))
-        .filter(cs => cs.inner.sameElements(inner) && cs.mins.length == nInner)
+      else idocFor(o).flatMap(innerDocs.column(_, name))
     // filters referencing `name` participate only when its bounds exist
     val usable = maskable.filter { ft =>
       !ChunkFilter.references(ft).contains(name) || dataStats.isDefined
@@ -276,7 +249,7 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
       usable.flatMap(ChunkFilter.references).distinct
         .filter(coordDimOf.contains).map { n =>
           val dim = coordDimOf(n)
-          val col = coordColumnFor(n, idx(dim))
+          val col = coordColumnFor(n, idx, o)
           n -> Array.tabulate(grid(dim)) { gd =>
             val lo = gd * inner(dim)
             val hi = math.min((gd + 1).toLong * inner(dim), extent(dim).toLong).toInt
@@ -421,7 +394,7 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     * the read fails rather than return fill values. */
   private def present(
       o: Long, n: String, k: String, bytes: Option[Array[Byte]]): Option[Array[Byte]] = {
-    if (bytes.isEmpty && geometry.ndim == 1 && manifest.keyFor(o).isDefined)
+    if (bytes.isEmpty && f.manifest.mappedKey(geometry.chunkIndex(o), o).isDefined)
       throw new ZarrException(s"chunk $o of $n in ${f.store.root} resolves through the " +
         s"chunk manifest to $k, which is absent: the store changed after this plan " +
         "read its metadata — load it again")
@@ -482,10 +455,6 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     if (kept == nRows) null else java.util.Arrays.copyOf(keep, kept)
   }
 
-  /** Manifest-keyed chunks (staged DSv2 commits) apply only to 1-D
-    * grids — the only shape the DSv2 writer produces. Declared BEFORE
-    * the eager [[prefetch]] below, which already resolves keys. */
-  private val manifest = graft.zarr.ChunkManifest(f.manifestParts.toVector)
   /** Coordinate chunk keys whose fetch has been SUBMITTED but not yet
     * decoded into [[coordCache]]. The prefetch window submits up to its
     * depth in chunks before the first is decoded, and the cache is only
@@ -511,16 +480,6 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
       .map(o => (o, resolveFetch(o, phase1))),
     { case (o, keys) => (o, fetchBytes(o, keys)) })
 
-  private def chunkKeyFor(name: String, idx: Array[Int]): String = {
-    val m = roleOf(name) match { case DataCol(mm) => mm; case CoordCol(mm, _) => mm }
-    if (geometry.ndim == 1 && !manifest.isEmpty)
-      manifest.keyFor(idx(0)).getOrElse(m.chunkKey(Array(idx(0))))
-    else roleOf(name) match {
-      case DataCol(_) => m.chunkKey(idx)
-      case CoordCol(_, dim) => m.chunkKey(Array(idx(dim)))
-    }
-  }
-
   /** Resolve which (name, storage key) pairs chunk `o` actually needs —
     * cached and already-in-flight coordinate chunks are not re-fetched. */
   private def resolveFetch(o: Long, names: Seq[String]): Seq[(String, String)] = {
@@ -532,7 +491,7 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
           !coordCache.containsKey(key) && coordInFlight.add(key)
         case _ => true
       }
-    }.map(n => n -> chunkKeyFor(n, idx))
+    }.map(n => n -> f.manifest.chunkKeyOf(roleOf(n), idx, o))
   }
 
   /** Fetch raw bytes for `names` of chunk `o` on the CALLER thread.

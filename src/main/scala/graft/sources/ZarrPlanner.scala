@@ -63,8 +63,9 @@ object ZarrPlanner {
   private def length(runs: Seq[(Long, Long)]): Long = runs.map(r => r._2 - r._1).sum
 
   /** The runs of `candidates` the sidecar cannot refute. A chunk is
-    * refuted when a listed segment that overlaps the candidates, parses
-    * and is [[ChunkStats.gridCompatible]] with `geometry` records
+    * refuted when a listed segment that overlaps the candidates, lies
+    * inside the grid ([[ChunkStats.inGrid]]), parses and is
+    * [[ChunkStats.gridCompatible]] with `geometry` records
     * ranges under which no row can satisfy `filters`
     * ([[ChunkStats.mayMatch]]). A failed GET or parse prunes nothing:
     * the sidecar is auxiliary, and those chunks decode-and-test. */
@@ -75,7 +76,8 @@ object ZarrPlanner {
       sidecar: PlanSidecar): Seq[(Long, Long)] = {
     if (filters.isEmpty || candidates.isEmpty) return candidates
     val overlapping = sidecar.listing.unsuppressed.filter { case (first, n) =>
-      candidates.exists { case (lo, hi) => first < hi && first + n > lo }
+      ChunkStats.inGrid(first, n, geometry.numChunks) &&
+        candidates.exists { case (lo, hi) => first < hi && first + n > lo }
     }
     sidecar.load(overlapping)
     val segs = overlapping

@@ -355,9 +355,9 @@ class ZarrBatchWrite(
     if (truncate) store.delete()
     // a previously-failed aligned append may have left final-keyed stats
     // segments AND inner docs at ordinals this write is about to (re)use
-    // — purge them so a stale doc can never describe the chunks written
+    // — retire them so a stale doc can never describe the chunks written
     // now
-    else retireFrom(staged = false)
+    else retire()
     ZarrWriterFactory(store, schema.json, chunkSize, colMetaJsons, rowsPerPartition,
       baseChunks, stats, writeId)
   }
@@ -393,28 +393,33 @@ class ZarrBatchWrite(
             s"zarr write alignment violated: partition ${c.partitionId} has ${c.rows} rows " +
               s"(not a multiple of chunk_size=$chunkSize); use ZarrWriteSupport.alignForWrite")
       }
-      // each task staged its stats docs under scope `<writeId>-<pid>` at
-      // task-local final names (`s0_<n>`, `i<j>`); ONE `_stats/` LIST
-      // finds them all, and each is COPIED to its global ordinal
-      // (metadata-sized text, not an O(data) rename) — inner docs exist
-      // only for sharded columns, one per SHARD, and a sharded layout
-      // exists precisely to keep the stored object count small
-      val staged = if (stats) store.sidecar().staged.filter(_.ofWrite(writeId)) else Nil
       var nextChunk = baseChunks
       val newParts = Vector.newBuilder[(Long, String, Int)]
       nonEmpty.foreach { c =>
         val nChunks = ((c.rows + chunkSize - 1) / chunkSize).toInt
         newParts += ((nextChunk, s"c.part$writeId-${c.partitionId}", nChunks))
-        val base = nextChunk
-        staged.filter(_.scope == s"$writeId-${c.partitionId}").foreach { st =>
-          st.target.collect {
-            case ChunkStats.SegmentFile(0L, n) if n == nChunks => ChunkStats.SegmentFile(base, n)
-            case ChunkStats.InnerFile(j) if j < nChunks => ChunkStats.InnerFile(base + j)
-          }.foreach(fin => store.readText(st.key).foreach(store.writeText(fin.key, _)))
-        }
         nextChunk += nChunks
       }
-      manifestOut = existingManifest ++ newParts.result()
+      val parts = newParts.result()
+      manifestOut = existingManifest ++ parts
+      // each task staged its stats docs under scope `<writeId>-<pid>` at
+      // task-local final names (`s0_<n>`, `i<j>`); ONE `_stats/` LIST
+      // finds them all, and each is COPIED to its global ordinal
+      // (metadata-sized text, not an O(data) rename) — inner docs exist
+      // only for sharded columns, one per SHARD, and a sharded layout
+      // exists precisely to keep the stored object count small. Their
+      // mtime/etag were recorded next to each shard's PUT: the manifest
+      // maps ordinals, it never moves bytes
+      if (stats) {
+        val partOf = parts.map { case (first, dir, n) =>
+          dir.stripPrefix("c.part") -> ((first, n)) }.toMap
+        store.sidecar().promote(store, writeId, st => partOf.get(st.scope).flatMap {
+          case (base, n) => st.target.collect {
+            case ChunkStats.SegmentFile(0L, `n`) => ChunkStats.SegmentFile(base, n)
+            case ChunkStats.InnerFile(j) if j < n => ChunkStats.InnerFile(base + j)
+          }
+        }, (_, ord) => manifestOut.keyFor(ord))
+      }
       // growth bound: the manifest is O(write tasks) PER COMMIT and
       // append commits concatenate, so a long-lived micro-batch ingest
       // (many small staged commits) grows the root document every reader
@@ -428,9 +433,6 @@ class ZarrBatchWrite(
             "of root-document JSON fetched by every reader). Run " +
             "graft.zarr.ZarrMaintenance.compact to rewrite to canonical keys " +
             "and reset the manifest; raise via option manifest_warn_parts.")
-      // this write's staged stats docs are all consumed — drop them
-      // (scoped by writeId: a concurrent write's staging must survive)
-      staged.foreach(st => store.deleteKey(st.key))
     }
     val total = baseRows + counts.map(_.rows).sum
     // the persisted zarr.json is the SAME document the writers derived
@@ -463,21 +465,15 @@ class ZarrBatchWrite(
       // aligned tasks write FINAL segment keys and inner docs (no
       // staging) — remove any at ordinals past the surviving base or
       // they would describe chunks the rolled-back shape[0] does not own
-      retireFrom(staged = true)
+      retire()
     }
   }
 
-  /** Retire, from ONE `_stats/` listing, every committed sidecar doc at
-    * an ordinal at or past the base — segments by first ordinal, inner
-    * docs by ordinal — and, when `staged`, this write's staged docs
-    * (scoped by writeId: a concurrent write's staging must survive). */
-  private def retireFrom(staged: Boolean): Unit =
-    store.sidecar().entries.foreach {
-      case e @ ChunkStats.SegmentFile(first, _) if first >= baseChunks => store.deleteKey(e.key)
-      case e @ ChunkStats.InnerFile(ord) if ord >= baseChunks => store.deleteKey(e.key)
-      case e: ChunkStats.StagedFile if staged && e.ofWrite(writeId) => store.deleteKey(e.key)
-      case _ => ()
-    }
+  /** Retire every sidecar doc at or past the base, and this write's
+    * staged docs ([[ZarrStore.Sidecar.retire]]). */
+  private def retire(): Unit =
+    store.sidecar().retire(store, baseChunks, Long.MaxValue, writeId,
+      n => existingMetas.find(_.name == n).map(_.dataType))
 }
 
 object ZarrBatchWrite {

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.sources.ZarrCubeWrite
-import graft.zarr.{ChunkFilter, ZarrException, ZarrMaintenance, ZarrStore}
+import graft.zarr.{ChunkFilter, ZarrException, ZarrMaintenance, ZarrMeta, ZarrStore}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
@@ -160,7 +160,10 @@ object ZarrCubeSink {
     // refusal ("already holds arrays ... use mode(overwrite)")
     val axisMeta =
       try Some(store.readMeta(dims.head))
-      catch { case _: java.io.FileNotFoundException => None }
+      catch { case _: java.io.FileNotFoundException =>
+        // a first batch commits its root before the per-array documents
+        store.readText("zarr.json").toSeq.flatMap(ZarrMeta.parseConsolidated)
+          .find(_.name == dims.head) }
     val existingAxis: Option[Array[Any]] =
       axisMeta.map(m => ZarrCubeWrite.readAscendingAxis(store, m, path,
         "the cube sink appends to ascending-axis cube stores only"))

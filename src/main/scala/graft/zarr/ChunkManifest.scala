@@ -52,20 +52,29 @@ final case class ChunkManifest(parts: Vector[(Long, String, Int)]) {
     None
   }
 
-  /** Storage key of array `m`'s chunk at row-major ordinal `ord` under
-    * geometry `g` — manifest-mapped when an entry exists, else the
-    * canonical key. ONE resolver for every ordinal-addressed consumer
-    * (the analyze job, vacuum's doc walk, incremental analyze's doc
-    * sweep), mirroring the scan's own resolution so a maintenance pass
-    * can never stat a different object than the reader fetches. */
-  def chunkKeyOf(m: ZarrArrayMeta, g: ScanGeometry, ord: Long): String =
-    chunkKeyOf(m, g.chunkIndex(ord), ord)
+  /** Storage key of `role`'s chunk at grid index `idx`, row-major
+    * ordinal `ord` — THE manifest key rule, which the scan, the analyze
+    * job and the sidecar sweeps all resolve through, so a maintenance
+    * pass can never stat a different object than the reader fetches.
+    * Entries map the ordinals of a 1-D grid (the only shape the staged
+    * writer commits), so only a 1-D grid index resolves through them;
+    * every other chunk — any N-D grid position, an unmapped ordinal —
+    * keeps the canonical key of its array's own chunk index (a
+    * coordinate's along its dim). */
+  def chunkKeyOf(role: ColumnRole, idx: Array[Int], ord: Long): String =
+    mappedKey(idx, ord).getOrElse(role match {
+      case DataCol(m) => m.chunkKey(idx)
+      case CoordCol(m, dim) => m.chunkKey(Array(idx(dim)))
+    })
 
-  /** [[chunkKeyOf]] with the chunk index already in hand — per-ordinal
-    * loops compute it once and resolve keys for many columns. */
+  /** [[chunkKeyOf]] for data array `m`. */
   def chunkKeyOf(m: ZarrArrayMeta, idx: Array[Int], ord: Long): String =
-    if (isEmpty) m.chunkKey(idx)
-    else keyFor(ord).getOrElse(m.chunkKey(idx))
+    chunkKeyOf(DataCol(m), idx, ord)
+
+  /** The manifest-mapped key of the chunk at grid index `idx` under
+    * [[chunkKeyOf]]'s rule, or None when its key is canonical. */
+  def mappedKey(idx: Array[Int], ord: Long): Option[String] =
+    if (idx.length == 1 && !isEmpty) keyFor(ord) else None
 
   /** JSON value for the root document attribute: `[[first,"dir",n],…]`. */
   def toJsonValue: String =
@@ -119,13 +128,13 @@ object ChunkManifest {
   def validateRequired(
       storeRoot: String,
       metaJsons: Seq[String],
-      manifest: ChunkManifest): Vector[(Long, String, Int)] = {
+      manifest: ChunkManifest): ChunkManifest = {
     if (metaJsons.exists(declaresTransformer) && manifest.isEmpty)
       throw new ZarrException(
         s"store $storeRoot: arrays are manifest-keyed ($transformerName) but the " +
           "root-document chunk manifest is missing or unreadable — refusing to read " +
           "(canonical-key fallback would silently return fill values)")
-    manifest.parts
+    manifest
   }
 
   /** Parse from a store root `zarr.json` document (empty when absent or

@@ -120,15 +120,17 @@ object ChunkStats {
   //     accepted for 1-D scans only — 1-D ordinals are append-stable,
   //     the same argument grid-less segments rest on;
   //  2. every path that REWRITES a described chunk retires its docs
-  //     first: the region-overwrite path and the cube append's
-  //     ragged-edge rewrite both delete the window's docs before
-  //     swapping chunks and re-emit fresh ones via c.part staging
-  //     promoted only after the swap; 1-D overwrite truncates the
-  //     whole store, and the 1-D append path refuses unaligned bases
-  //     (no committed chunk is ever rewritten);
+  //     first, through the one [[ZarrStore.Sidecar.retire]]: the
+  //     region overwrite and the cube append's ragged-edge rewrite
+  //     retire the window's docs before swapping chunks and re-emit
+  //     fresh ones via c.part staging, promoted only after the swap
+  //     ([[ZarrStore.Sidecar.promote]]); the 1-D append retires every
+  //     doc at or past its base; 1-D overwrite truncates the whole
+  //     store, and the 1-D append path refuses unaligned bases (no
+  //     committed chunk is ever rewritten);
   //  3. the doc records each column's shard OBJECT LENGTH, MODIFICATION
-  //     TIME (`mt`) and ETAG (`et`; mt and et filled at promotion for
-  //     staged swaps): the reader compares them against the one HEAD it
+  //     TIME (`mt`) and ETAG (`et`; a staged swap's doc lacks mt and et,
+  //     which promotion stamps): the reader compares them against the one HEAD it
   //     issues anyway before a ranged read, and on mismatch ignores
   //     the doc's bounds for that column. Length alone is defeatable
   //     by constant-length encodings (a raw-codec shard of the same
@@ -336,8 +338,8 @@ object ChunkStats {
   }
 
   /** May `doc`'s ordinal be interpreted against a store with the given
-    * geometry? The inner-doc analogue of [[gridCompatible]], shared by
-    * the reader and vacuum so acceptance can never drift:
+    * geometry? The inner-doc analogue of [[gridCompatible]], applied
+    * through the one verdict [[InnerDocs]]:
     *  - empty doc shape (tabular writer): 1-D stores only, chunk must
     *    match (1-D ordinals are append-stable; rewrite paths retire);
     *  - else trailing extents, chunk shape and per-dim identity must
@@ -353,36 +355,40 @@ object ChunkStats {
       (1 until shape.length).forall(i => d.shape(i) == shape(i)) &&
       d.chunk.toSeq == chunk && d.dims.toSeq == dims
 
-  /** Rewrite an inner doc's per-column `mt`/`et` freshness tokens from
-    * live object stats — the staged-swap promotion step: a staged doc
-    * cannot know the final object's modification time or etag
-    * (FileContext rename preserves the staged file's mtime but the copy
-    * fallback does not, and object-store etags are assigned at PUT), so
-    * the promoter stats each final object once and stamps the doc. The
-    * stamp is only applied when the live length equals the doc's
+  /** Stamp the `mt`/`et` freshness tokens of every inner-doc column that
+    * lacks `mt` from live object stats — the promotion step of
+    * [[ZarrStore.Sidecar.promote]]. A staged swap's doc cannot know the
+    * final object's modification time or etag (FileContext rename
+    * preserves the staged file's mtime but the copy fallback does not,
+    * and object-store etags are assigned at PUT), so it records none and
+    * the promoter stats each final object once; a column that carries
+    * `mt` was recorded next to its object's PUT and is left as written.
+    * The stamp is only applied when the live length equals the doc's
     * recorded length (anything else leaves the tokens unset and the
     * reader's length guard declines the mask). */
-  def withInnerMtimes(
+  def stampInner(
       json: String, statOf: String => Option[ZarrStore.ObjStat]): String =
     try {
       val root = mapper.readTree(json)
       val colsNode = root.get("cols")
       if (colsNode == null) return json
+      var stamped = false
       val it = colsNode.fieldNames()
       while (it.hasNext) {
         val name = it.next()
         val c = colsNode.get(name).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
         val lenN = c.get("len")
-        if (lenN != null) statOf(name) match {
-          case Some(st) if st.len == lenN.asLong() =>
-            c.put("mt", st.mtime)
-            if (st.etag.nonEmpty) c.put("et", st.etag) else c.remove("et"): Unit
-          case _ =>
-            c.remove("mt")
-            c.remove("et"): Unit
+        if (lenN != null && !c.has("mt")) {
+          stamped = true
+          statOf(name) match {
+            case Some(st) if st.len == lenN.asLong() =>
+              c.put("mt", st.mtime)
+              if (st.etag.nonEmpty) c.put("et", st.etag) else c.remove("et"): Unit
+            case _ => c.remove("et"): Unit
+          }
         }
       }
-      mapper.writeValueAsString(root)
+      if (stamped) mapper.writeValueAsString(root) else json
     } catch { case _: Exception => json }
 
   /** Parse + structurally validate an inner-stats doc; None on anything
@@ -442,6 +448,65 @@ object ChunkStats {
       }
       Some(InnerDoc(shape, dims, chunk, b.result()))
     } catch { case _: Exception => None }
+
+  /** THE inner-doc verdict on one geometry — the rule the reader's
+    * inner masking, vacuum's doc walk and incremental analyze's doc
+    * sweep all apply, so what a scan masks with, what vacuum keeps and
+    * what analyze counts as coverage cannot drift. A doc is ACCEPTED
+    * ([[read]]) when its ordinal lies in the grid and it parses and is
+    * [[innerDocCompatible]] with the geometry; a column of an accepted
+    * doc is USABLE ([[column]]) when it is a sharded, non-binary data
+    * column whose recorded inner shape and bound count match the live
+    * sharding spec; a usable column is FRESH ([[fresh]]) when it passes
+    * [[InnerColStats.freshAgainst]] against one live HEAD of its object,
+    * taken only when asked. The reader takes that HEAD itself, before
+    * its ranged read. `geometry` resolves the arrays read (a scan's
+    * selection or the whole store), `manifest` is the committed one. */
+  final class InnerDocs(geometry: ScanGeometry, manifest: ChunkManifest) {
+    private val ztOf: Map[String, ZarrType] =
+      geometry.roles.map(r => r.meta.name -> r.meta.dataType).toMap
+
+    /** The columns a doc can describe: each sharded, non-binary data
+      * column with its inner grid under the live sharding spec (None
+      * when the spec does not tile the chunk — never usable). */
+    val columns: Map[String, (ZarrArrayMeta, Option[Array[Int]])] =
+      geometry.roles.collect { case DataCol(m) if hasInnerStats(m) =>
+        m.name -> ((m, Sharding.innerGrid(geometry.targetChunk, m.shardingSpec.get)))
+      }.toMap
+
+    /** The doc of ordinal `ord`, read and accepted; None when absent, out
+      * of the grid, malformed or signed for another geometry (the
+      * sidecar is auxiliary: any failure declines it). */
+    def read(store: ZarrStore, ord: Long): Option[InnerDoc] =
+      if (ord < 0 || ord >= geometry.numChunks) None
+      else try store.readText(innerKey(ord)).flatMap(parseInner(_, ztOf.get))
+        .filter(innerDocCompatible(_, geometry.targetShape.toSeq,
+          geometry.targetChunk.toSeq, geometry.dimIdentity))
+      catch { case _: Throwable => None }
+
+    /** Column `name` of accepted doc `d`, when usable. */
+    def column(d: InnerDoc, name: String): Option[InnerColStats] =
+      columns.get(name).flatMap { case (m, grid) =>
+        d.cols.get(name).filter(cs => grid.exists(g =>
+          cs.inner.sameElements(m.shardingSpec.get.innerShape) && cs.mins.length == g.product))
+      }
+
+    /** Is column `name` of doc `d` (ordinal `ord`) usable and fresh? */
+    def fresh(store: ZarrStore, d: InnerDoc, name: String, ord: Long): Boolean =
+      column(d, name).exists { cs =>
+        val idx = geometry.chunkIndex(ord)
+        cs.freshAgainst(store.objectStat(name, manifest.chunkKeyOf(columns(name)._1, idx, ord)))
+      }
+
+    /** Does the doc of `ord` hold a fresh usable column for `every`
+      * sharded data column (analyze's coverage) or for at least one
+      * (vacuum's liveness: a doc a reader could still mask with)? */
+    def live(store: ZarrStore, ord: Long, every: Boolean): Boolean =
+      read(store, ord).exists { d =>
+        if (every) columns.keys.forall(fresh(store, d, _, ord))
+        else columns.keys.exists(fresh(store, d, _, ord))
+      }
+  }
 
   /** Strings up to this length are stored as EXACT bounds. */
   private val maxStrLen = 64
@@ -886,6 +951,13 @@ object ChunkStats {
         ds.toSeq == dims
     }
 
+  /** Does segment `(first, n)` lie wholly inside a grid of `numChunks`
+    * chunks? One reaching past the committed grid is a failed write's
+    * leftover: the planner and aggregate pushdown never trust it, and
+    * vacuum and incremental analyze delete it. */
+  def inGrid(first: Long, n: Int, numChunks: Long): Boolean =
+    first >= 0 && first + n <= numChunks
+
   /** The sidecar segments usable on `geom`'s grid, and whether they tile
     * `[0, numChunks)` EXACTLY — the precondition for any complete
     * metadata-only answer (aggregate pushdown, CBO column statistics);
@@ -908,9 +980,9 @@ object ChunkStats {
     val total = geom.numChunks
     val listed = sidecar.listing.unsuppressed
     try {
-      val inGrid = listed.filter { case (first, n) => first >= 0 && first + n <= total }
-      sidecar.load(inGrid)
-      val usable = inGrid
+      val within = listed.filter { case (first, n) => inGrid(first, n, total) }
+      sidecar.load(within)
+      val usable = within
         .flatMap { case (first, n) => sidecar.segment(first, n) }
         .filter(gridCompatible(_, geom))
       val tiled = usable.foldLeft(0L) { (next, seg) =>

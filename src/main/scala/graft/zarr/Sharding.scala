@@ -129,6 +129,14 @@ object Sharding {
     }
   }
 
+  /** Inner chunks per dim of one outer chunk of `shardShape` under
+    * `spec`, or None when the inner shape does not tile it (wrong rank,
+    * or an extent that does not divide). */
+  def innerGrid(shardShape: Array[Int], spec: Spec): Option[Array[Int]] =
+    if (shardShape.length != spec.innerShape.length ||
+      shardShape.zip(spec.innerShape).exists { case (s, i) => i <= 0 || s % i != 0 }) None
+    else Some(gridOf(shardShape, spec))
+
   /** Number of inner chunks of one outer chunk under `spec`. */
   def innerCount(shardShape: Array[Int], spec: Spec): Int = gridOf(shardShape, spec).product
 

@@ -87,9 +87,7 @@ private[zarr] object ZarrDistWalk {
 
   /** The segment document `doc` of (first, n), parsed, iff it parses and
     * is grid-compatible under [[ChunkStats.gridCompatibleWith]] — THE
-    * segment-validity rule analyze, vacuum and compactStats apply, each
-    * with its own rule for an absent document and its own keep/delete
-    * decision on top. */
+    * segment-validity rule the segment sweep and compactStats apply. */
   def validSegment(
       first: Long, n: Int, doc: String, ndim: Int, gridShape: Seq[Int],
       dims: Seq[String], colTypes: Map[String, String]): Option[ChunkStats.Segment] =
@@ -217,170 +215,62 @@ private[zarr] object ZarrDistWalk {
     n
   }
 
-  /** Validate-and-reclaim a batch of per-inner-chunk stats docs
-    * (`_stats/i<ord>.json`): a doc is a PHANTOM — deleted, counted —
-    * when its ordinal is past the committed grid, it is unreadable,
-    * its shape/chunk/dims signature is incompatible with the store's
-    * geometry under [[ChunkStats.innerDocCompatible]] (a smaller
-    * LEADING extent is compatible: docs survive dim-0 appends by
-    * design), or EVERY recorded column fails the reader's
-    * length/mtime/etag freshness rule against one live HEAD — object
-    * mtimes only move forward, so an all-stale doc is PERMANENTLY
-    * declined by every reader and is dead weight each scan re-HEADs
-    * forever. A doc with ANY fresh column stays live (the reader still
-    * uses that column's bounds). Names are driver-LISTed once; the
-    * per-doc GET+parse+HEAD is the O(shards) cost [[run]] shards out. */
-  def vacuumInnerDocsUnit(
-      root: String, pairs: Seq[(String, String)], ords: Seq[Long],
-      metaJsons: Seq[(String, String)],
-      manifestParts: Vector[(Long, String, Int)]): Long = {
-    val store = ZarrStore(root, pairs)
-    val ms = metaJsons.map { case (nm, j) => ZarrMeta.parse(nm, j) }
-    val g = ScanGeometry.resolve(ms)
-    val mani = ChunkManifest(manifestParts)
-    val ztOf: String => Option[ZarrType] =
-      n => ms.find(_.name == n).map(_.dataType)
-    val byName: Map[String, ZarrArrayMeta] = ms.map(m => m.name -> m).toMap
-    val numChunks = g.numChunks
-    var reclaimed = 0L
-    ords.foreach { ord =>
-      val live = ord < numChunks &&
-        (store.readText(ChunkStats.innerKey(ord)) match {
-          // the READER's acceptance rule, verbatim (innerDocCompatible
-          // + the per-column freshness guard): vacuum must never
-          // reclaim a doc a scan would still trust — in particular
-          // docs with a SMALLER leading extent, which stay live across
-          // dim-0 appends by design
-          case Some(doc) => ChunkStats.parseInner(doc, ztOf)
-            .exists(d => ChunkStats.innerDocCompatible(d,
-              g.targetShape.toSeq, g.targetChunk.toSeq, g.dimIdentity) &&
-              (d.cols.isEmpty || d.cols.exists { case (name, cs) =>
-                // the reader's freshness rule (ONE shared definition)
-                byName.get(name).exists(m => cs.freshAgainst(
-                  store.objectStat(m.name, mani.chunkKeyOf(m, g, ord))))
-              }))
-          case None => false
-        })
-      // count only CONFIRMED deletions (the vacuumUnit discipline)
-      if (!live && store.deleteKey(ChunkStats.innerKey(ord))) reclaimed += 1
-    }
-    reclaimed
-  }
-
-  /** Validate-and-reclaim a batch of stats SEGMENTS: a segment is a
-    * PHANTOM — deleted, counted — when its range reaches past the
-    * committed grid or it fails [[validSegment]]. The segment twin of
-    * [[vacuumInnerDocsUnit]]: segment counts scale with WRITE TASKS (a
-    * long-lived micro-batch ingest can hold 10^5), where a driver-serial
-    * GET per segment is minutes at object-store latency. */
-  def vacuumSegmentsUnit(
-      root: String, pairs: Seq[(String, String)], segs: Seq[(Long, Int)],
+  /** THE segment sweep of vacuum and incremental analyze: each listed
+    * segment `(first, n, presumed)` is KEPT (`true`) when `presumed`,
+    * inside the committed grid and its document passes [[validSegment]];
+    * an absent document (deleted since the LIST) is left alone and not
+    * reported; anything else is DELETED and reported `false` when the
+    * deletion is confirmed (reclaim reports count only confirmed
+    * deletions, so a task retry cannot inflate them). `presumed` is
+    * the caller's listing-derived verdict — vacuum presumes every
+    * unsuppressed segment, incremental analyze only those its refresh
+    * windows and doc sweep leave standing — so a segment it rules out
+    * costs no GET. Segment counts scale with WRITE TASKS (a long-lived
+    * micro-batch ingest can hold 10^5), where a driver-serial GET per
+    * segment is minutes at object-store latency: [[run]] shards it. */
+  def sweepSegmentsUnit(
+      root: String, pairs: Seq[(String, String)], segs: Seq[(Long, Int, Boolean)],
       numChunks: Long, ndim: Int, gridShape: Seq[Int], dims: Seq[String],
-      colTypes: Map[String, String]): Long = {
-    val store = ZarrStore(root, pairs)
-    segs.count { case (first, n) =>
-      val key = ChunkStats.segmentKey(first, n)
-      // an absent segment (deleted since the LIST) is left alone
-      (first < 0 || first + n > numChunks || store.readText(key).exists(doc =>
-        validSegment(first, n, doc, ndim, gridShape, dims, colTypes).isEmpty)) &&
-        // count only CONFIRMED deletions (the vacuumUnit discipline)
-        store.deleteKey(key)
-    }.toLong
-  }
-
-  /** Coverage-validate a batch of per-inner-chunk stats docs for
-    * INCREMENTAL analyze. Name-presence is NOT coverage: a
-    * signature-incompatible or guard-stale doc keeps masking silently
-    * declined on its shard while the run reports success — exactly the
-    * degradation the sweep exists to repair. An ordinal COVERS iff a
-    * full analyze of it would produce nothing better:
-    *  - the doc parses and is [[ChunkStats.innerDocCompatible]] with the
-    *    store's live geometry;
-    *  - EVERY currently-sharded non-binary data column has an entry
-    *    whose inner shape matches the live sharding spec (with the
-    *    expected per-inner bound count), and whose recorded object
-    *    length/mtime match one live HEAD under the READER's exact rule
-    *    (recorded len < 0 requires live absence; mt < 0 degrades to
-    *    length-only — legacy docs, matching what the reader will
-    *    actually accept).
-    * Non-covering docs are DELETED — re-analysis of the uncovered range
-    * re-emits them fresh (same retire-then-rewrite discipline as the
-    * append's edge window). Returns the covering ordinals. Metas ride
-    * as (name, sourceJson) pairs and the 1-D manifest as raw parts so
-    * the unit is a plain-strings task closure, like every walk unit. */
-  def analyzeDocsUnit(
-      root: String, pairs: Seq[(String, String)], ords: Seq[Long],
-      metaJsons: Seq[(String, String)],
-      manifestParts: Vector[(Long, String, Int)]): Seq[Long] = {
-    val store = ZarrStore(root, pairs)
-    val ms = metaJsons.map { case (nm, j) => ZarrMeta.parse(nm, j) }
-    val g = ScanGeometry.resolve(ms)
-    val mani = ChunkManifest(manifestParts)
-    val ztOf: String => Option[ZarrType] =
-      n => ms.find(_.name == n).map(_.dataType)
-    val roleOf: Map[String, ColumnRole] = ms.map(_.name).zip(g.roles).toMap
-    // the columns a fresh analyze of a covered ordinal would record
-    val statCols = ms.filter(m => roleOf(m.name) match {
-      case DataCol(_) => m.shardingSpec.isDefined && m.dataType != ZarrType.Bytes
-      case _ => false
-    })
-    val numChunks = g.numChunks
-    val covered = Seq.newBuilder[Long]
-    ords.foreach { ord =>
-      val ok = ord >= 0 && ord < numChunks &&
-        (store.readText(ChunkStats.innerKey(ord)) match {
-          case Some(json) => ChunkStats.parseInner(json, ztOf).exists { d =>
-            ChunkStats.innerDocCompatible(d, g.targetShape.toSeq,
-              g.targetChunk.toSeq, g.dimIdentity) &&
-              statCols.forall { m =>
-                d.cols.get(m.name).exists { cs =>
-                  val spec = m.shardingSpec.get
-                  val inner = spec.innerShape.toArray
-                  // expected bound count under the live spec (the
-                  // reader's nInner); non-dividing specs cannot occur
-                  // in a readable store, but degrade to shape-only
-                  val nInner =
-                    if (inner.exists(i => i <= 0) || g.targetChunk.zip(inner)
-                      .exists { case (c, i) => c % i != 0 }) -1
-                    else g.targetChunk.zip(inner).map { case (c, i) => c / i }.product
-                  cs.inner.sameElements(inner) &&
-                    (nInner < 0 || cs.mins.length == nInner) &&
-                    // the reader's freshness rule (ONE shared
-                    // definition, one HEAD through the scan's own key
-                    // resolution)
-                    cs.freshAgainst(store.objectStat(m.name,
-                      mani.chunkKeyOf(m, g, ord)))
-                }
-              }
-          }
-          case None => false
-        })
-      if (ok) covered += ord
-      else store.deleteKey(ChunkStats.innerKey(ord)): Unit
-    }
-    covered.result()
-  }
-
-  /** Coverage-validate a batch of stats SEGMENTS for INCREMENTAL
-    * analyze: `presumed` carries the driver's LIST-derived verdict
-    * (unsuppressed, range inside the grid, every ordinal's inner doc
-    * covering — all decidable from listings + the doc sweep, no GET).
-    * A presumed-live segment covers iff it passes [[validSegment]];
-    * everything else is DELETED up front — an invalid segment proves
-    * nothing and, left in place, would overlap-suppress the fresh
-    * segments re-analysis writes over its range. Returns the covered
-    * `[first, end)` ranges. */
-  def analyzeSegmentsUnit(
-      root: String, pairs: Seq[(String, String)],
-      segs: Seq[(Long, Int, Boolean)], ndim: Int, gridShape: Seq[Int],
-      dims: Seq[String], colTypes: Map[String, String]): Seq[(Long, Long)] = {
+      colTypes: Map[String, String]): Seq[((Long, Int), Boolean)] = {
     val store = ZarrStore(root, pairs)
     segs.flatMap { case (first, n, presumed) =>
       val key = ChunkStats.segmentKey(first, n)
-      if (presumed && store.readText(key).exists(doc =>
-        validSegment(first, n, doc, ndim, gridShape, dims, colTypes).isDefined))
-        Some((first, first + n))
-      else { store.deleteKey(key); None }
+      val verdict =
+        if (!presumed || !ChunkStats.inGrid(first, n, numChunks)) Some(false)
+        else store.readText(key).map(doc =>
+          validSegment(first, n, doc, ndim, gridShape, dims, colTypes).isDefined)
+      verdict.collect {
+        case true => (first, n) -> true
+        case false if store.deleteKey(key) => (first, n) -> false
+      }
+    }
+  }
+
+  /** THE inner-doc sweep of vacuum and incremental analyze, under the
+    * one verdict [[ChunkStats.InnerDocs]]: each listed doc `(ord,
+    * presumed)` is KEPT (`true`) when `presumed` and the doc holds a
+    * fresh usable column for `every` sharded data column (analyze's
+    * coverage: an ordinal is covered iff a full analyze of it would
+    * produce nothing better) or for at least one (vacuum's liveness:
+    * a doc a reader could still mask with — object mtimes only move
+    * forward, so a doc with none is declined by every reader forever
+    * and is dead weight each scan re-HEADs). Anything else is DELETED
+    * and reported `false` when the deletion is confirmed — re-analysis
+    * re-emits a deleted ordinal's doc fresh. Names are driver-LISTed
+    * once; the per-doc GET+parse+HEAD is the O(shards) cost [[run]]
+    * shards out. Metas ride as (name, sourceJson) pairs, so the unit
+    * is a plain-data task closure like every walk unit. */
+  def sweepInnerDocsUnit(
+      root: String, pairs: Seq[(String, String)], ords: Seq[(Long, Boolean)],
+      metaJsons: Seq[(String, String)], manifest: ChunkManifest,
+      every: Boolean): Seq[(Long, Boolean)] = {
+    val store = ZarrStore(root, pairs)
+    val docs = new ChunkStats.InnerDocs(ScanGeometry.resolve(
+      metaJsons.map { case (nm, j) => ZarrMeta.parse(nm, j) }), manifest)
+    ords.flatMap { case (ord, presumed) =>
+      if (presumed && docs.live(store, ord, every)) Some(ord -> true)
+      else if (store.deleteKey(ChunkStats.innerKey(ord))) Some(ord -> false)
+      else None
     }
   }
 

@@ -222,9 +222,9 @@ object ZarrMaintenance {
     * segments are DELETED and their ranges re-analyzed (they prove
     * nothing and would otherwise overlap-suppress the fresh segments);
     * on stores with sharded data columns an ordinal also needs a
-    * COVERING `i<ord>.json` doc — parseable, signature-compatible and
-    * guard-fresh against one live HEAD ([[ZarrDistWalk.analyzeDocsUnit]]
-    * carries the exact rule), so a foreign in-place shard rewrite gets
+    * COVERING `i<ord>.json` doc — one the reader would mask with for
+    * every sharded column ([[ChunkStats.InnerDocs]] carries the exact
+    * rule), so a foreign in-place shard rewrite gets
     * its bounds refreshed by the next incremental run instead of
     * leaving masking silently declined until a FULL analyze. The sweep
     * itself (one GET per segment + one GET/HEAD per doc) runs through
@@ -287,7 +287,7 @@ object ZarrMaintenance {
         case e: ZarrException =>
           throw new ZarrException(s"analyze: ${e.getMessage}")
       }
-    val manifestParts = if (geom.ndim == 1) view.manifest.parts else Vector.empty
+    val manifest = view.manifest
     val numChunks = geom.numChunks
     val metaJsons = metas.map(m => m.name -> m.sourceJson)
     // bound each segment DOCUMENT (one shared ceiling with sidecar
@@ -314,25 +314,22 @@ object ZarrMaintenance {
     val listing = store.sidecar()
     val targets: Seq[(Long, Int)] =
       if (!incremental) {
-        listing.entries.foreach {
-          case e @ (_: ChunkStats.SegmentFile | _: ChunkStats.InnerFile) => store.deleteKey(e.key)
-          case _ => ()
-        }
+        listing.retire(store, 0L, Long.MaxValue, "", n => metas.find(_.name == n).map(_.dataType))
         splitRuns(Seq((0L, numChunks)))
       } else {
         // ---- sidecar sweep: docs first, then segments, both through
-        // the ZarrDistWalk visitors and scheduler (inline ≤
+        // the ZarrDistWalk sweeps and scheduler (inline ≤
         // sweepInlineMax objects, one Spark job above; a driver-serial
         // GET per segment is minutes at the 10^5-segment ingest scale).
         //
         // sharded data columns additionally need a COVERING inner doc
-        // per ordinal: parseable, signature-compatible AND guard-fresh
-        // against the live object (analyzeDocsUnit — name-presence
-        // alone would leave a stale doc's shard silently unmasked
-        // forever while every run reports success). Non-covering docs
-        // are deleted and their ordinals re-analyzed. O(shards) GETs +
-        // HEADs, sharded grids are small by design — but the sweep
-        // still shards out with everything else.
+        // per ordinal: the reader would mask with it for every sharded
+        // column (ChunkStats.InnerDocs — name-presence alone would
+        // leave a stale doc's shard silently unmasked forever while
+        // every run reports success). Non-covering docs are deleted and
+        // their ordinals re-analyzed. O(shards) GETs + HEADs, sharded
+        // grids are small by design — but the sweep still shards out
+        // with everything else.
         val needDocs = metas.zip(geom.roles).exists {
           case (m, DataCol(_)) => ChunkStats.hasInnerStats(m)
           case _ => false
@@ -344,24 +341,16 @@ object ZarrMaintenance {
         }
         def inRefresh(first: Long, n: Long): Boolean =
           refresh.exists { case (lo, hi) => first < hi && first + n > lo }
-        // forced-refresh windows: their docs are retired UNVALIDATED
-        // (the retire-then-rewrite discipline — a declined column
-        // during re-analysis must not leave a half-old doc behind), so
-        // they are split out of the sweep input up front: validating a
-        // doc only to delete it would waste a GET + per-column HEAD per
-        // windowed shard. Deletion runs through the same scheduler.
-        val (windowOrds, sweepOrds) =
-          if (!needDocs) (Seq.empty[Long], Seq.empty[Long])
-          else listing.innerOrds.partition(o => inRefresh(o, 1L))
-        ZarrDistWalk.run(spark, windowOrds, sweepInlineMax) { ords =>
-          val st = ZarrStore(path, hadoopPairs)
-          ords.foreach(o => st.deleteKey(ChunkStats.innerKey(o)): Unit)
-          Seq.empty[Long]
-        }: Unit
+        // forced-refresh windows' docs are not presumed: they retire
+        // UNVALIDATED (the retire-then-rewrite discipline — a declined
+        // column during re-analysis must not leave a half-old doc
+        // behind), without the GET + per-column HEAD validation costs
         val docOrds: Set[Long] =
-          ZarrDistWalk.run(spark, sweepOrds, sweepInlineMax)(ords =>
-            ZarrDistWalk.analyzeDocsUnit(
-              path, hadoopPairs, ords, metaJsons, manifestParts)).toSet
+          if (!needDocs) Set.empty
+          else ZarrDistWalk.run(spark, listing.innerOrds.map(o => (o, !inRefresh(o, 1L))),
+            sweepInlineMax)(ords => ZarrDistWalk.sweepInnerDocsUnit(
+              path, hadoopPairs, ords, metaJsons, manifest, every = true))
+            .collect { case (o, true) => o }.toSet
         // a segment counts as covering ONLY when every ordinal it
         // describes also has its COVERING inner doc (when docs are
         // needed): re-analyzing a doc-less ordinal writes a NEW segment
@@ -369,22 +358,21 @@ object ZarrMaintenance {
         // make the listing's overlap rule suppress BOTH sides — the run must
         // retire the partial segment and re-analyze its whole range,
         // the same all-or-nothing discipline the append's edge
-        // retirement applies. Presumed-liveness (suppression, range,
+        // retirement applies. Presumed-liveness (suppression, refresh,
         // doc coverage) is decidable from the listings + doc sweep, so
         // it rides the unit args; the per-segment GET+parse is the
         // distributed part.
         val unsuppressed = listing.unsuppressed.toSet
         val tagged = listing.raw.map { case (first, n) =>
-          (first, n, unsuppressed((first, n)) &&
-            first >= 0 && first + n <= numChunks &&
-            !inRefresh(first, n.toLong) &&
+          (first, n, unsuppressed((first, n)) && !inRefresh(first, n.toLong) &&
             (!needDocs || (first until first + n).forall(docOrds.contains)))
         }
         val colTypes = metas.map(m => m.name -> m.dataType.zarrName).toMap
         val (ndim, grid, dims) = (geom.ndim, geom.gridShape.toSeq, geom.dimIdentity)
         val covered = ZarrDistWalk.run(spark, tagged, sweepInlineMax)(segs =>
-          ZarrDistWalk.analyzeSegmentsUnit(
-            path, hadoopPairs, segs, ndim, grid, dims, colTypes))
+          ZarrDistWalk.sweepSegmentsUnit(
+            path, hadoopPairs, segs, numChunks, ndim, grid, dims, colTypes))
+          .collect { case ((first, n), true) => (first, first + n) }
         // merge valid coverage into disjoint sorted runs
         val merged = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
         covered.sortBy(_._1).foreach { case (lo, hi) =>
@@ -412,7 +400,6 @@ object ZarrMaintenance {
       .mapPartitions { ranges =>
         {
           val st = ZarrStore(path, hadoopPairs)
-          val mani = ChunkManifest(manifestParts)
           val ms = metaJsons.map { case (nm, j) => ZarrMeta.parse(nm, j) }
           val g = ScanGeometry.resolve(ms)
           val roleOf: Map[String, ColumnRole] = ms.map(_.name).zip(g.roles).toMap
@@ -434,7 +421,7 @@ object ZarrMaintenance {
                 ms.flatMap { m =>
                   roleOf(m.name) match {
                     case DataCol(_) =>
-                      val key = mani.chunkKeyOf(m, idx, ord)
+                      val key = manifest.chunkKeyOf(m, idx, ord)
                       // PRE-GET stat for sharded stats columns: the
                       // mtime freshness token must BRACKET the data
                       // read — a same-length (constant-length codec)
@@ -492,7 +479,7 @@ object ZarrMaintenance {
                   roleOf(m.name) match {
                     case DataCol(_) if ChunkStats.hasInnerStats(m) =>
                       val (bytes, preStat) = raw(m.name)
-                      val postStat = st.objectStat(m.name, mani.chunkKeyOf(m, idx, ord))
+                      val postStat = st.objectStat(m.name, manifest.chunkKeyOf(m, idx, ord))
                       val stable = postStat == preStat &&
                         bytes.fold(postStat.isEmpty)(b => postStat.exists(_.len == b.length.toLong))
                       if (!stable) None // swapped/appeared mid-analyze: decline
@@ -679,8 +666,7 @@ object ZarrMaintenance {
     val store = ZarrStore(path, pairs)
     val view = store.committedView()
     val metas = view.arrays
-    val maniParts = view.manifest.parts
-    val partDirs: Set[String] = maniParts.map(_._2).toSet
+    val partDirs: Set[String] = view.manifest.parts.map(_._2).toSet
     val capacity = ZarrDistWalk.gridCapacity(metas)
 
     // driver pass (two LIST levels per array): orphans among the files
@@ -741,21 +727,22 @@ object ZarrMaintenance {
       val (numChunks, ndim, grid, dims) =
         (geom.numChunks, geom.ndim, geom.gridShape.toSeq, geom.dimIdentity)
       val listing = store.sidecar()
-      phantoms += ZarrDistWalk.run(spark, listing.unsuppressed, inlineMax)(segs =>
-        Seq(ZarrDistWalk.vacuumSegmentsUnit(
-          path, pairs, segs, numChunks, ndim, grid, dims, colTypes))).sum
+      phantoms += ZarrDistWalk.run(spark, listing.unsuppressed.map { case (f, n) => (f, n, true) },
+        inlineMax)(segs => ZarrDistWalk.sweepSegmentsUnit(
+          path, pairs, segs, numChunks, ndim, grid, dims, colTypes)).count(!_._2)
       phantoms += listing.staged.count(st => store.deleteKey(st.key))
-      // per-inner-chunk docs: phantom when out of grid, unreadable,
-      // signed for a shape/grid the store no longer has, or ALL-STALE
-      // against the live objects' length/mtime/etag (every reader
-      // already rejects all of these — this reclaims the bytes and the
-      // per-scan HEAD-and-decline they'd otherwise cost forever). One
-      // doc exists per analyzed SHARD, so validation is a per-doc
-      // GET+HEAD the driver must not serialize at scale.
+      // per-inner-chunk docs: phantom unless a reader could still mask
+      // with them (ChunkStats.InnerDocs: in grid, readable, signed for
+      // this geometry, and some column usable under the live sharding
+      // spec and fresh against its live object's length/mtime/etag) —
+      // this reclaims the bytes and the per-scan HEAD-and-decline
+      // they'd otherwise cost forever. One doc exists per analyzed
+      // SHARD, so validation is a per-doc GET+HEAD the driver must not
+      // serialize at scale.
       val metaJsons = metas.map(m => m.name -> m.sourceJson)
-      val docParts = if (geom.ndim == 1) maniParts else Vector.empty
-      phantoms += ZarrDistWalk.run(spark, listing.innerOrds, inlineMax)(ords =>
-        Seq(ZarrDistWalk.vacuumInnerDocsUnit(path, pairs, ords, metaJsons, docParts))).sum
+      phantoms += ZarrDistWalk.run(spark, listing.innerOrds.map((_, true)), inlineMax)(ords =>
+        ZarrDistWalk.sweepInnerDocsUnit(path, pairs, ords, metaJsons, view.manifest, every = false))
+        .count(!_._2)
     }
 
     val schema = StructType(StructField("target", StringType, nullable = false) +:

@@ -138,7 +138,7 @@ final case class ZarrStore(root: String, hadoopConfPairs: Seq[(String, String)] 
     * new shape with a stale manifest resolves fresh ordinals to
     * canonical keys that do not exist (silent fill values). Per-array
     * documents are read only when the store has no consolidated root:
-    * a commit writes them first and the root last, so after a lost root
+    * an append writes them first and the root last, so after a lost root
     * write a per-array shape runs ahead of what readers see. A v3 root
     * is the authority whenever it exists — a leftover v2 `.zmetadata`
     * must never override it after a v2→v3 migration. An absent or
@@ -175,6 +175,19 @@ final case class ZarrStore(root: String, hadoopConfPairs: Seq[(String, String)] 
           fs.exists(new Path(st.getPath, ".zarray")))
       st.getPath.getName -> isArray
     })
+
+  /** Whether directory `name` under the root holds nothing but chunk
+    * objects — key-shaped paths and `c.part*` staging: the leftover of a
+    * fresh write that crashed before committing its arrays. A directory
+    * holding any other file is someone else's data. */
+  def holdsOnlyChunks(name: String): Boolean = {
+    def only(dir: Path, rel: String): Boolean = fs.listStatus(dir).forall { st =>
+      val r = if (rel.isEmpty) st.getPath.getName else s"$rel/${st.getPath.getName}"
+      r.startsWith("c.part") ||
+        (if (st.isDirectory) only(st.getPath, r) else ZarrDistWalk.keyIndices(r).isDefined)
+    }
+    only(new Path(rootPath, name), "")
+  }
 
   /** Delete every entry under the root but KEEP the root directory
     * entry itself — the failure-cleanup scope for a write into a
@@ -421,6 +434,78 @@ object ZarrStore {
     /** Every staged `c.part*` entry, parseable suffix or not. */
     lazy val staged: Seq[ChunkStats.StagedFile] =
       entries.collect { case s: ChunkStats.StagedFile => s }
+
+    /** THE retire — every path that rewrites or forgets described chunks
+      * runs it: a writer over the window it is about to write, and
+      * again on abort; the torn-commit heal past the healed grid; a full
+      * analyze over everything. Deletes every doc this listing shows
+      * describing a chunk ordinal in [lo, hi) — inner docs by ordinal,
+      * segments intersecting the window (a zero-length one, which
+      * claims no ordinal, with the window holding its first) — and the
+      * staged docs of write `writeId` ("" = none; a concurrent write's
+      * staging must survive). The walk is over the RAW listing:
+      * overlap-suppressed files are exactly a crashed attempt's
+      * leftovers whose ordinals are being reused, and skipping them
+      * would let them suppress the fresh segments. An UNSUPPRESSED
+      * grid-signed straddler keeps its out-of-window pieces as narrower
+      * segments, re-encoded from the parsed segment under its own
+      * signature, so coverage outside the window (zero-GET aggregates)
+      * survives; a suppressed one is ambiguous everywhere and goes
+      * whole, as does an unparseable or grid-less doc — which only
+      * declines coverage. */
+    def retire(
+        store: ZarrStore, lo: Long, hi: Long, writeId: String,
+        ztOf: String => Option[ZarrType]): Unit = {
+      innerOrds.foreach(o => if (o >= lo && o < hi) store.deleteKey(ChunkStats.innerKey(o)))
+      if (writeId.nonEmpty) staged.filter(_.ofWrite(writeId)).foreach(st => store.deleteKey(st.key))
+      val live = unsuppressed.toSet
+      raw.foreach { case (first, n) =>
+        if (first < hi && first + math.max(n, 1) > lo) {
+          val key = ChunkStats.segmentKey(first, n)
+          val straddler =
+            if (!live((first, n)) || (first >= lo && first + n <= hi)) None
+            else store.readText(key).flatMap(doc =>
+              try Some(ChunkStats.parse(first, n, doc, ztOf)) catch { case _: Exception => None })
+          store.deleteKey(key)
+          straddler.flatMap(seg => seg.grid.map(seg -> _)).foreach { case (seg, (grid, dims)) =>
+            def keep(from: Long, until: Long): Unit = if (until > from) {
+              val len = (until - from).toInt
+              store.writeText(ChunkStats.segmentKey(from, len),
+                ChunkStats.mergeSegments(from, len, Seq(seg), ztOf, grid.toSeq, dims.toSeq))
+            }
+            keep(first, lo)
+            keep(hi, first + n)
+          }
+        }
+      }
+    }
+
+    /** THE promote: copy each of write `writeId`'s staged docs to the
+      * final entry `target` maps it to (None drops it), then delete the
+      * staged copy. Inner-doc columns lacking the `mt` freshness token
+      * are stamped ([[ChunkStats.stampInner]]) from one HEAD of the
+      * column's final object, `keyOf(column, ordinal)`. Called only
+      * once every chunk the docs describe is durable at its final key; a
+      * crash mid-promotion leaves a mix of promoted and staged docs,
+      * which only declines coverage (staged `c.part*` names are
+      * invisible to readers and reclaimed by a re-run's retire or
+      * vacuum). */
+    def promote(
+        store: ZarrStore, writeId: String,
+        target: ChunkStats.StagedFile => Option[ChunkStats.Entry],
+        keyOf: (String, Long) => Option[String]): Unit =
+      staged.filter(_.ofWrite(writeId)).foreach { st =>
+        target(st).foreach { fin =>
+          store.readText(st.key).foreach { doc =>
+            store.writeText(fin.key, fin match {
+              case ChunkStats.InnerFile(ord) => ChunkStats.stampInner(doc,
+                name => keyOf(name, ord).flatMap(store.objectStat(name, _)))
+              case _ => doc
+            })
+          }
+        }
+        store.deleteKey(st.key)
+      }
   }
 
   object Sidecar {
@@ -477,8 +562,7 @@ object ZarrStore {
     * One definition so the operator's fragmentation visibility can
     * never desynchronize from what maintenance actually touches. */
   def liveSegments(raw: Seq[(Long, Int)], numChunks: Long): Seq[(Long, Int)] =
-    unsuppressedSegments(raw).filter { case (f, n) =>
-      f >= 0 && n > 0 && f + n <= numChunks }
+    unsuppressedSegments(raw).filter { case (f, n) => n > 0 && ChunkStats.inGrid(f, n, numChunks) }
 
   /** One object HEAD's freshness-relevant facts. `etag` is "" when the
     * FileSystem's status does not implement

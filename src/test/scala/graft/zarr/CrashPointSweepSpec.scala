@@ -85,7 +85,9 @@ object CrashFileSystem {
   *    heal re-consolidates it before refusing.
   *
   * One case drives the same aligned append through `ZarrCubeSink`,
-  * whose replay of a batch on the axis completes a torn root.
+  * whose replay of a batch on the axis completes a torn root. One
+  * sweeps the fresh cube write: each crash leaves no store or the new
+  * one, and a re-run, vacuum and the next append all succeed.
   *
   * Two tabular cases sweep the DSv2 append (aligned and staged): each
   * crash must leave the old rows, and a re-run of the same batch
@@ -268,6 +270,54 @@ class CrashPointSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
             s"$at: shard $s reads neither old nor new: $got")
         }
       })
+  }
+
+  test("fresh cube write: every crash point leaves no store or the new one; a re-run completes it") {
+    // the old state is no store at all: a crash before the root commits
+    // must leave nothing a reader resolves to arrays, and the re-run must
+    // take the crashed attempt's chunk uploads as its own; a crash after
+    // the root leaves the new store, whose re-run is a refused duplicate
+    val newRows = rowsOf(slab(0, 4))
+    def run(url: String): Unit = slab(0, 4).write.format("zarr").mode("append")
+      .option("dims", "t,x").option("chunk_shape", "1,2").option("shard_shape", "2,2").save(url)
+    def state(url: String): Either[String, Seq[(Long, Long, Double)]] =
+      try Right(scan(url)) catch { case e: Exception => Left(String.valueOf(e.getMessage)) }
+    val probe = Paths.get(base, "fresh-probe")
+    CrashFileSystem.arm(Long.MaxValue)
+    run(s"graftcrash://$probe")
+    val calls = CrashFileSystem.count
+    CrashFileSystem.disarm()
+    assert(scan(probe.toString) == newRows, "fresh: uninterrupted write")
+    assert(calls >= 5, s"fresh: only $calls mutations — the sweep would prove little")
+    (1L to calls).foreach { n =>
+      val dir = Paths.get(base, s"fresh-crash$n")
+      val url = s"graftcrash://$dir"
+      val at = s"fresh, crash at mutation $n of $calls"
+      CrashFileSystem.arm(n)
+      val crashed = try { run(url); false } catch { case _: Exception => true }
+      CrashFileSystem.disarm()
+      assert(crashed, s"$at: the write survived its injected crash")
+      state(url) match {
+        case Left(why) => assert(why.contains("No such store") || why.contains("No Zarr arrays"),
+          s"$at: the store fails to read for another reason: $why")
+        case Right(rows) =>
+          assert(rows == newRows, s"$at: store reads neither no store nor the new one: $rows")
+          assertAggsAgree(url, rows, at)
+      }
+      val rerun = try { run(url); None } catch { case e: Exception => Some(e) }
+      rerun.foreach { e =>
+        assert(state(url) == Right(newRows) && e.getMessage.contains("already holds arrays"),
+          s"$at: re-running the write failed: $e")
+      }
+      ZarrMaintenance.vacuum(spark, url).collect()
+      assert(scan(url) == newRows, s"$at: re-run + vacuum did not reach the new state")
+      assertAggsAgree(url, newRows, s"$at, after re-run")
+      assert(stagingLeftovers(dir).isEmpty,
+        s"$at: staging left after re-run + vacuum: ${stagingLeftovers(dir)}")
+      // the store takes the next append: its per-array documents are whole
+      slab(4, 5).write.format("zarr").mode("append").option("append_dim", "t").save(url)
+      assert(scan(url) == rowsOf(slab(0, 5)), s"$at: the next append reads wrong")
+    }
   }
 
   /** Tabular rows [from, until) in two equal partitions: (id, v = id/2). */

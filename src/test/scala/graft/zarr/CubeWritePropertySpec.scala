@@ -188,14 +188,10 @@ class CubeWritePropertySpec extends AnyFunSuite with BeforeAndAfterAll {
       // mixing coordinate and data predicates must agree with the
       // whole-object path exactly over this mixed doc validity
       if (sharded) {
-        val hc = spark.sparkContext.hadoopConfiguration
         val cut = (tuples.length * 0.6).toLong
-        def run(mode: String): Seq[String] = {
-          hc.set("graft.zarr.ranged.reads", mode)
-          try spark.read.format("zarr").load(path)
+        def run(mode: String): Seq[String] =
+          spark.read.format("zarr").option("ranged_reads", mode).load(path)
             .filter(s"v1 >= $cut").collect().map(_.toString).sorted.toSeq
-          finally hc.unset("graft.zarr.ranged.reads")
-        }
         val whole = run("never")
         assert(run("always") == whole,
           s"append case $caseNo: ranged != whole over mixed-validity inner docs")
@@ -291,14 +287,10 @@ class CubeWritePropertySpec extends AnyFunSuite with BeforeAndAfterAll {
       // promotion with the NEW bounds — a ranged data-predicate read
       // over this mixed-provenance doc set must equal the whole path
       if (sharded) {
-        val hc = spark.sparkContext.hadoopConfiguration
         val cut = 1000000L // exactly the reprocessed-region values
-        def run(mode: String): Seq[String] = {
-          hc.set("graft.zarr.ranged.reads", mode)
-          try spark.read.format("zarr").load(path)
+        def run(mode: String): Seq[String] =
+          spark.read.format("zarr").option("ranged_reads", mode).load(path)
             .filter(s"v1 >= $cut").collect().map(_.toString).sorted.toSeq
-          finally hc.unset("graft.zarr.ranged.reads")
-        }
         val whole = run("never")
         assert(whole.nonEmpty && run("always") == whole,
           s"region case $caseNo: ranged != whole over mixed-provenance inner docs")

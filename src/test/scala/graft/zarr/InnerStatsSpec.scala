@@ -33,12 +33,7 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     base = Files.createTempDirectory("zarr-innerstats").toString
   }
 
-  override def afterAll(): Unit = {
-    if (spark != null) {
-      spark.sparkContext.hadoopConfiguration.unset("graft.zarr.ranged.reads")
-      spark.stop()
-    }
-  }
+  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("inner-doc encode/parse roundtrip") {
     val json = ChunkStats.encodeInner(
@@ -93,22 +88,18 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val n = ZarrMaintenance.analyze(spark, url)
     assert(n == 1L)
     assert(new java.io.File(s"$dir/_stats/i0.json").exists(), "analyze wrote the inner doc")
-    val hc = spark.sparkContext.hadoopConfiguration
     // data >= 768 keeps exactly the last inner-lat band: 4 of 16 inner chunks
     def run(mode: String): (Seq[String], Int, Long, Long) = {
-      hc.set("graft.zarr.ranged.reads", mode)
-      try {
-        fsLog.clear()
-        val df = spark.read.format("zarr").load(url)
-          .filter("data >= 768.0").select("data")
-        val rows = df.collect().map(_.toString).sorted.toSeq
-        val scanned = df.queryExecution.executedPlan.collect {
-          case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            s.metrics("numOutputRows").value
-        }.head
-        (rows, fsLog.chunkGets("datapred"),
-          fsLog.chunkBytes("datapred"), scanned)
-      } finally hc.unset("graft.zarr.ranged.reads")
+      fsLog.clear()
+      val df = spark.read.format("zarr").option("ranged_reads", mode).load(url)
+        .filter("data >= 768.0").select("data")
+      val rows = df.collect().map(_.toString).sorted.toSeq
+      val scanned = df.queryExecution.executedPlan.collect {
+        case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          s.metrics("numOutputRows").value
+      }.head
+      (rows, fsLog.chunkGets("datapred"),
+        fsLog.chunkBytes("datapred"), scanned)
     }
     val (wholeRows, wholeGets, wholeBytes, wholeScanned) = run("never")
     val (rangedRows, rangedGets, rangedBytes, rangedScanned) = run("always")
@@ -135,15 +126,11 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     ZarrWriter.writeArray(st, "data", ZarrType.Float64, Seq(32, 32), Seq(32, 32),
       (0 until 1024).map(_ => 0.0), Some(Seq("lat", "lon")),
       ZarrWriter.CodecChain.bloscLz4.sharded(Seq(8, 8)))
-    val hc = spark.sparkContext.hadoopConfiguration
-    hc.set("graft.zarr.ranged.reads", "always")
-    try {
-      // stale bounds would keep only the band containing 0 and silently
-      // drop 768 matching rows; the length check must reject the doc
-      val rows = spark.read.format("zarr").load(url)
-        .filter("data <= 0.0").select("data").collect()
-      assert(rows.length == 1024, s"stale doc dropped rows: ${rows.length}")
-    } finally hc.unset("graft.zarr.ranged.reads")
+    // stale bounds would keep only the band containing 0 and silently
+    // drop 768 matching rows; the length check must reject the doc
+    val rows = spark.read.format("zarr").option("ranged_reads", "always").load(url)
+      .filter("data <= 0.0").select("data").collect()
+    assert(rows.length == 1024, s"stale doc dropped rows: ${rows.length}")
   }
 
   private def cubeSlab(dFrom: Int, dUntil: Int, vBase: Double = 0.0) = {
@@ -161,13 +148,9 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the write itself emitted one doc per shard (2 shards), no analyze
     assert(new java.io.File(s"$dir/_stats/i0.json").exists())
     assert(new java.io.File(s"$dir/_stats/i1.json").exists())
-    val hc = spark.sparkContext.hadoopConfiguration
-    def run(mode: String): Seq[String] = {
-      hc.set("graft.zarr.ranged.reads", mode)
-      try spark.read.format("zarr").load(dir)
+    def run(mode: String): Seq[String] =
+      spark.read.format("zarr").option("ranged_reads", mode).load(dir)
         .filter("value >= 600.0").collect().map(_.toString).sorted.toSeq
-      finally hc.unset("graft.zarr.ranged.reads")
-    }
     val whole = run("never")
     assert(whole.length == 2 * 8) // days 6,7
     assert(run("always") == whole)
@@ -196,13 +179,9 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
       vals.range(gi).forall { case (lo, _) =>
         lo.asInstanceOf[Double] >= 50000.0 }),
       "refreshed doc must describe the overwritten values")
-    val hc = spark.sparkContext.hadoopConfiguration
-    def run(mode: String): Seq[String] = {
-      hc.set("graft.zarr.ranged.reads", mode)
-      try spark.read.format("zarr").load(dir)
+    def run(mode: String): Seq[String] =
+      spark.read.format("zarr").option("ranged_reads", mode).load(dir)
         .filter("value >= 50000.0").collect().map(_.toString).sorted.toSeq
-      finally hc.unset("graft.zarr.ranged.reads")
-    }
     val whole = run("never")
     assert(whole.length == 32) // the 4 overwritten days x 8 sources
     assert(run("always") == whole)
@@ -219,13 +198,9 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     ZarrMaintenance.analyze(spark, dir)
     cubeSlab(8, 12).write.format("zarr").mode("append")
       .option("append_dim", "day").save(dir)
-    val hc = spark.sparkContext.hadoopConfiguration
-    def run(filter: String, mode: String): Seq[String] = {
-      hc.set("graft.zarr.ranged.reads", mode)
-      try spark.read.format("zarr").load(dir)
+    def run(filter: String, mode: String): Seq[String] =
+      spark.read.format("zarr").option("ranged_reads", mode).load(dir)
         .filter(filter).collect().map(_.toString).sorted.toSeq
-      finally hc.unset("graft.zarr.ranged.reads")
-    }
     val whole = run("value >= 800.0", "never")
     assert(whole.length == 4 * 8) // days 8..11
     assert(run("value >= 800.0", "always") == whole)
@@ -289,15 +264,11 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .exists(_.getName.startsWith("c.part")), "staged docs must be promoted away")
     // masking on the UNTOUCHED shard is LIVE: value <= 103 keeps 2 of 4
     // inner chunks of shard 0 → ranged read fetches index + half the data
-    val hc = spark.sparkContext.hadoopConfiguration
     def run(mode: String): (Seq[String], Long) = {
-      hc.set("graft.zarr.ranged.reads", mode)
-      try {
-        fsLog.clear()
-        val rows = spark.read.format("zarr").load(url)
-          .filter("value <= 103.0").collect().map(_.toString).sorted.toSeq
-        (rows, fsLog.chunkBytes("ragged"))
-      } finally hc.unset("graft.zarr.ranged.reads")
+      fsLog.clear()
+      val rows = spark.read.format("zarr").option("ranged_reads", mode).load(url)
+        .filter("value <= 103.0").collect().map(_.toString).sorted.toSeq
+      (rows, fsLog.chunkBytes("ragged"))
     }
     val (wholeRows, wholeBytes) = run("never")
     val (rangedRows, rangedBytes) = run("always")
@@ -343,18 +314,14 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.setLastModifiedTime(
       java.nio.file.Paths.get(s"$dir/data/c/0/0"),
       java.nio.file.attribute.FileTime.fromMillis(doc0.cols("data").mtime + 7777))
-    val hc = spark.sparkContext.hadoopConfiguration
-    hc.set("graft.zarr.ranged.reads", "always")
-    try {
-      // data >= 1000 now lives in the FIRST inner-row band; the stale
-      // doc places it in the LAST — trusting it fetches inner chunks
-      // whose new values all refute the residual → ZERO rows emitted.
-      // The mtime guard must reject the doc and fall back to the whole
-      // read (24 values: 1000..1023).
-      val rows = spark.read.format("zarr").load(url)
-        .filter("data >= 1000.0").select("data").collect()
-      assert(rows.length == 24, s"stale doc dropped rows: ${rows.length}")
-    } finally hc.unset("graft.zarr.ranged.reads")
+    // data >= 1000 now lives in the FIRST inner-row band; the stale
+    // doc places it in the LAST — trusting it fetches inner chunks
+    // whose new values all refute the residual → ZERO rows emitted.
+    // The mtime guard must reject the doc and fall back to the whole
+    // read (24 values: 1000..1023).
+    val rows = spark.read.format("zarr").option("ranged_reads", "always").load(url)
+      .filter("data >= 1000.0").select("data").collect()
+    assert(rows.length == 24, s"stale doc dropped rows: ${rows.length}")
   }
 
   test("ETAG guard: a same-length SAME-MTIME-GRANULE rewrite is caught on stores exposing etags") {
@@ -401,15 +368,11 @@ class InnerStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "test premise: length and mtime must alias the recorded tokens")
     assert(after.etag != doc0.cols("data").etag,
       "test premise: the content rewrite must move the etag")
-    val hc = spark.sparkContext.hadoopConfiguration
-    hc.set("graft.zarr.ranged.reads", "always")
-    try {
-      // identical adversary to the MTIME guard, with mtime aliased:
-      // only the etag can refute the stale doc — trusting it emits
-      // ZERO rows; the whole-read fallback emits 24 (values 1000..1023)
-      val rows = spark.read.format("zarr").load(url)
-        .filter("data >= 1000.0").select("data").collect()
-      assert(rows.length == 24, s"granule-aliased rewrite dropped rows: ${rows.length}")
-    } finally hc.unset("graft.zarr.ranged.reads")
+    // identical adversary to the MTIME guard, with mtime aliased:
+    // only the etag can refute the stale doc — trusting it emits
+    // ZERO rows; the whole-read fallback emits 24 (values 1000..1023)
+    val rows = spark.read.format("zarr").option("ranged_reads", "always").load(url)
+      .filter("data >= 1000.0").select("data").collect()
+    assert(rows.length == 24, s"granule-aliased rewrite dropped rows: ${rows.length}")
   }
 }

@@ -12,7 +12,7 @@ import scala.util.Random
   * sharded stores (2-D/3-D, ragged edges, random inner shapes, sparse
   * inner chunks, non-monotonic coordinates) and random coordinate
   * predicates (ranges, In, Or/Not combos, mixed with data predicates),
-  * a scan with `graft.zarr.ranged.reads=always` must return EXACTLY the
+  * a scan with `ranged_reads=always` must return EXACTLY the
   * rows of the whole-object scan — which itself must equal a driver-side
   * reference evaluation. The core soundness claim (mask-false regions
   * are provably refuted; kept-row emission loses nothing) rides on
@@ -33,12 +33,7 @@ class RangedReadPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     base = Files.createTempDirectory("zarr-ranged-prop").toString
   }
 
-  override def afterAll(): Unit = {
-    if (spark != null) {
-      spark.sparkContext.hadoopConfiguration.unset("graft.zarr.ranged.reads")
-      spark.stop()
-    }
-  }
+  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def divisorsOf(n: Int): Seq[Int] = (1 to n).filter(n % _ == 0)
 
@@ -105,13 +100,9 @@ class RangedReadPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
         (if (rnd.nextInt(4) == 0) Seq(s"NOT (${coordPred()})") else Nil)
       val pred = conjuncts.mkString(" AND ")
 
-      val hc = spark.sparkContext.hadoopConfiguration
-      def run(mode: String): Seq[String] = {
-        hc.set("graft.zarr.ranged.reads", mode)
-        try spark.read.format("zarr").load(dir).filter(pred)
+      def run(mode: String): Seq[String] =
+        spark.read.format("zarr").option("ranged_reads", mode).load(dir).filter(pred)
           .collect().map(_.toString).sorted.toSeq
-        finally hc.unset("graft.zarr.ranged.reads")
-      }
       val whole = run("never")
       val ranged = run("always")
       assert(ranged == whole,
@@ -210,16 +201,12 @@ class RangedReadPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       val pred = Seq.fill(1 + rnd.nextInt(2))(coordPred()).mkString(" AND ")
 
-      val hc = spark.sparkContext.hadoopConfiguration
-      def run(mode: String): Seq[String] = {
-        hc.set("graft.zarr.ranged.reads", mode)
-        try spark.read.format("zarr").load(dir).filter(pred)
+      def run(mode: String): Seq[String] =
+        spark.read.format("zarr").option("ranged_reads", mode).load(dir).filter(pred)
           .select((dims.map(org.apache.spark.sql.functions.col).toSeq :+
             org.apache.spark.sql.functions.hex(
               org.apache.spark.sql.functions.col("blob")).as("h")): _*)
           .collect().map(_.toString).sorted.toSeq
-        finally hc.unset("graft.zarr.ranged.reads")
-      }
       val whole = run("never")
       val ranged = run("always")
       assert(ranged == whole,
@@ -337,13 +324,9 @@ class RangedReadPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
       val pred = (Seq.fill(1 + rnd.nextInt(2))(coordPred()) ++
         (if (rnd.nextBoolean()) Seq(s"v >= ${rnd.nextInt(101)}") else Nil))
         .mkString(" AND ")
-      val hc = spark.sparkContext.hadoopConfiguration
-      def run(mode: String): Seq[String] = {
-        hc.set("graft.zarr.ranged.reads", mode)
-        try spark.read.format("zarr").load(dir).filter(pred)
+      def run(mode: String): Seq[String] =
+        spark.read.format("zarr").option("ranged_reads", mode).load(dir).filter(pred)
           .collect().map(_.toString).sorted.toSeq
-        finally hc.unset("graft.zarr.ranged.reads")
-      }
       val whole = run("never")
       val ranged = run("always")
       val ref = df.filter(pred).collect().map(_.toString).sorted.toSeq
@@ -437,13 +420,9 @@ class RangedReadPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
       val pred = s"data >= ${rnd.nextInt(101)}" +
         (if (rnd.nextBoolean())
           s" AND d0 >= ${coordVals(0)(rnd.nextInt(shape(0)))}" else "")
-      val hc = spark.sparkContext.hadoopConfiguration
-      def run(mode: String): Seq[String] = {
-        hc.set("graft.zarr.ranged.reads", mode)
-        try spark.read.format("zarr").load(url).filter(pred)
+      def run(mode: String): Seq[String] =
+        spark.read.format("zarr").option("ranged_reads", mode).load(url).filter(pred)
           .collect().map(_.toString).sorted.toSeq
-        finally hc.unset("graft.zarr.ranged.reads")
-      }
       val whole = run("never")
       val ranged = run("always")
       assert(ranged == whole,

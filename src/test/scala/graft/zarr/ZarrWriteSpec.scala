@@ -484,21 +484,18 @@ class ZarrWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("sharded write emits per-inner-chunk docs: data predicates mask with ZERO analyze") {
     val sp = spark; import sp.implicits._
-    val hc = spark.sparkContext.hadoopConfiguration
     // v <= 7 lives in ONE of four inner chunks of chunk 0 (outer
     // segments already confine the scan to chunk 0 in both modes);
     // numOutputRows pins that the inner-doc mask drove kept-row emission
     def run(path: String, mode: String): (Long, Seq[Long]) = {
-      hc.set("graft.zarr.ranged.reads", mode)
-      try {
-        val df = spark.read.format("zarr").load(path).filter("v <= 7").select("v")
-        val vals = df.collect().map(_.getLong(0)).sorted.toSeq
-        val n = df.queryExecution.executedPlan.collect {
-          case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            s.metrics("numOutputRows").value
-        }.head
-        (n, vals)
-      } finally hc.unset("graft.zarr.ranged.reads")
+      val df = spark.read.format("zarr").option("ranged_reads", mode).load(path)
+        .filter("v <= 7").select("v")
+      val vals = df.collect().map(_.getLong(0)).sorted.toSeq
+      val n = df.queryExecution.executedPlan.collect {
+        case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          s.metrics("numOutputRows").value
+      }.head
+      (n, vals)
     }
     def check(path: String, label: String): Unit = {
       (0 until 4).foreach(o => assert(
