@@ -27,22 +27,65 @@ import org.apache.spark.sql.functions._
   */
 object ZarrRoundtrip {
 
+  /** The class files of the store-writing packages (`graft.zarr`,
+    * `graft.sources`) on this classpath, (entry name, bytes), sorted by
+    * name: read from the directory or jar each package was loaded from. */
+  private[queries] def writerClasses: Seq[(String, Array[Byte])] = {
+    import scala.jdk.CollectionConverters._
+    Seq(classOf[graft.zarr.ZarrStore], classOf[graft.sources.ZarrDataSource]).flatMap { anchor =>
+      val pkg = anchor.getPackage.getName.replace('.', '/') + "/"
+      val src = Paths.get(anchor.getProtectionDomain.getCodeSource.getLocation.toURI)
+      def inPkg(name: String) =
+        name.startsWith(pkg) && name.endsWith(".class") && !name.drop(pkg.length).contains('/')
+      if (Files.isDirectory(src)) {
+        val files = Files.list(src.resolve(pkg))
+        try files.iterator().asScala.map(f => pkg + f.getFileName.toString).filter(inPkg)
+          .map(n => n -> Files.readAllBytes(src.resolve(n))).toList
+        finally files.close()
+      } else {
+        val jar = new java.util.jar.JarFile(src.toFile)
+        try jar.entries().asScala.filter(e => inPkg(e.getName))
+          .map(e => e.getName -> jar.getInputStream(e).readAllBytes()).toList
+        finally jar.close()
+      }
+    }.sortBy(_._1)
+  }
+
+  /** CRC-32 over the names and bytes of `classes`, in hex. */
+  private[queries] def fingerprint(classes: Seq[(String, Array[Byte])]): String = {
+    val crc = new java.util.zip.CRC32
+    classes.foreach { case (name, bytes) =>
+      crc.update(name.getBytes("UTF-8"))
+      crc.update(bytes)
+    }
+    java.lang.Long.toHexString(crc.getValue)
+  }
+
+  /** The fingerprint of the code that writes the memoized stores, once
+    * per JVM. Where the class files cannot be read, a fresh value: the
+    * stores are then rebuilt, never read from another build's. */
+  private[queries] lazy val writerFingerprint: String =
+    try fingerprint(writerClasses)
+    catch { case _: Exception => java.util.UUID.randomUUID().toString }
+
   /** Build-once memoization skeleton shared by every ensure* fixture
-    * builder below. Keyed on the source parquet's (path, size, mtime)
-    * plus `keyTag`, so regenerated testdata can never be served from a
-    * stale store. The root document (`zarr.json`) is the writer's
-    * commit point — a store dir without it is a crashed half-write and
-    * is cleared before rebuilding. The build runs under a unique
-    * sibling, then atomically renames into place: concurrent builders
-    * (e.g. a bench run racing a verify) each build privately and
-    * exactly one rename wins; losers discard their build and use the
-    * winner's store. */
-  private def ensureMemoizedStore(
-      dir: String, keyTag: String, root: String, name: String)(
+    * builder below. Keyed on the source parquet's (path, size, mtime),
+    * `keyTag` and the fingerprint `code` of the store-writing code, so
+    * neither regenerated testdata nor a changed writer can be served
+    * from a stale store. The root document (`zarr.json`) is the
+    * writer's commit point — a store dir without it is a crashed
+    * half-write and is cleared before rebuilding. The build runs under
+    * a unique sibling, then atomically renames into place: concurrent
+    * builders (e.g. a bench run racing a verify) each build privately
+    * and exactly one rename wins; losers discard their build and use
+    * the winner's store. */
+  private[queries] def ensureMemoizedStore(
+      dir: String, keyTag: String, root: String, name: String,
+      code: String = writerFingerprint)(
       build: String => Unit): String = {
     val src = new java.io.File(s"$dir/documents.parquet")
     val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$keyTag|$dir|${src.length}|${src.lastModified}".getBytes("UTF-8"))
+      .digest(s"$keyTag|$dir|${src.length}|${src.lastModified}|$code".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     val store = s"$root/$key/$name"
     if (!Files.exists(Paths.get(store, "zarr.json"))) {

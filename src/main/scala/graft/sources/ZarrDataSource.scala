@@ -77,17 +77,19 @@ class ZarrDataSource extends TableProvider with DataSourceRegister {
     ZarrStore(path, hadoopPairs ++ rangedPairs)
   }
 
-  /** The committed view [[inferSchema]] read, for the [[getTable]] of the
-    * same `load()`: Spark resolves a table through one provider instance,
-    * inferSchema then getTable, and both must see ONE root read. getTable
-    * takes it and clears it, so a view never outlives one load(). */
-  private var pendingView: Option[(String, ZarrStore.View)] = None
+  /** The store and committed view [[inferSchema]] built, for the
+    * [[getTable]] of the same `load()`: Spark resolves a table through
+    * one provider instance, inferSchema then getTable, and both must see
+    * ONE store and ONE root read. getTable takes them, when its path and
+    * `ranged_reads` option are inferSchema's, and clears them, so
+    * neither outlives one load(). */
+  private var pending: Option[(ZarrStore, Option[String], ZarrStore.View)] = None
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val store = storeFor(options)
     val view = store.committedView()
     val schema = ZarrDataSource.schemaOf(view.arrays)
-    pendingView = Some(store.root -> view)
+    pending = Some((store, Option(options.get("ranged_reads")), view))
     schema
   }
 
@@ -96,7 +98,12 @@ class ZarrDataSource extends TableProvider with DataSourceRegister {
       partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
     val options = new CaseInsensitiveStringMap(properties)
-    val store = storeFor(options)
+    val held = pending.collect { case (st, ranged, v)
+      if st.root == options.get("path") && ranged == Option(options.get("ranged_reads")) =>
+        (st, v)
+    }
+    pending = None
+    val store = held.fold(storeFor(options))(_._1)
     // `dims` marks an N-D CUBE write target and `append_dim` a cube
     // APPEND: either way the table declares the V1_BATCH_WRITE
     // capability so Spark routes the write through the V1Write
@@ -105,13 +112,11 @@ class ZarrDataSource extends TableProvider with DataSourceRegister {
     // options (every read, every tabular write) keep the pure-V2 path
     val cubeWrite = options.containsKey("dims") ||
       options.containsKey("append_dim") || options.containsKey("region_dim")
-    val pending = pendingView.collect { case (root, v) if root == store.root => v }
-    pendingView = None
     // a missing/empty store with a caller-supplied schema is a WRITE
     // target (df.write.format("zarr").save(path))
     val (metas, manifest) =
       try {
-        val view = pending.getOrElse(store.committedView())
+        val view = held.fold(store.committedView())(_._2)
         (view.arrays, view.manifest)
       } catch {
         case _: ZarrException if schema != null && schema.nonEmpty =>
@@ -778,12 +783,17 @@ class ZarrScan(
 }
 
 object ZarrScan {
-  /** Input partitions for `total` chunks: the `partitions` option, else
-    * twice the session's default parallelism, never more than `total`. */
+  /** Input partitions for `total` surviving chunks: the `partitions`
+    * option, else twice the session's default parallelism — but at most
+    * the default parallelism when fewer chunks than that survive, so a
+    * small plan runs as one wave of tasks and a partition holding two
+    * chunks fetches both together through its prefetch window — never
+    * more than `total`. */
   def partitionCount(options: CaseInsensitiveStringMap, total: Long): Long = {
-    val default =
-      try math.max(2 * SparkSession.active.sparkContext.defaultParallelism, 1)
-      catch { case _: Throwable => 32 }
+    val cores =
+      try math.max(SparkSession.active.sparkContext.defaultParallelism, 1)
+      catch { case _: Throwable => 16 }
+    val default = if (total < 2L * cores) cores else 2 * cores
     val requested = ZarrDataSource.opt(options, "partitions")(_.toInt).getOrElse(default)
     math.max(1L, math.min(total, requested.toLong))
   }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.util.concurrent.CompletableFuture
+
 import graft.zarr._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
@@ -22,6 +24,9 @@ import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
   *  3. otherwise fetch+decode the remaining columns (filter/projection
   *     column sharing: predicate columns are reused for output,
   *     `zarr_data_stream.rs:877-895`) and emit one ColumnarBatch.
+  * When every filter references coordinates only, steps 1–3 run inside
+  * the prefetch window ([[fetchChunk]]): the chunks of a partition are
+  * tested and fetched whole side by side, not one phase 3 after another.
   *
   * Coordinate (1-D) chunks are cached for the reader's lifetime: in a 2-D
   * grid the same `lat` chunk is needed by every chunk in its row — the
@@ -115,20 +120,63 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
   private val metaOf: Map[String, ZarrArrayMeta] =
     metas.map(m => m.name -> m).toMap
 
+  private val coordDimOf: Map[String, Int] =
+    roleOf.collect { case (n, CoordCol(_, d)) => n -> d }
+
   private val predicateNames: Seq[String] =
     filters.flatMap(ChunkFilter.references).distinct.filter(roleOf.contains)
   private val nonPredicateOutput: Seq[String] =
     f.outputNames.filterNot(predicateNames.contains)
-  /** Names to fetch in phase 1 (predicate) and phase 2 (rest). */
-  private val phase1 = if (filters.nonEmpty) predicateNames else f.outputNames
-  private val phase2 = if (filters.nonEmpty) nonPredicateOutput else Seq.empty
+  /** Whether every filter references coordinates only: the window then
+    * fetches every column of a chunk, testing it against its
+    * coordinates first ([[fetchChunk]]). */
+  private val coordOnly = filters.nonEmpty &&
+    filters.forall(ChunkFilter.references(_).forall(coordDimOf.contains))
+  /** Names the window fetches before a chunk is tested: the predicate
+    * columns, or every output without filters. Under coordinate-only
+    * filters the window goes on to fetch the rest ([[fetchChunk]]). */
+  private val phase1 = if (filters.isEmpty) f.outputNames else predicateNames
+  /** Names fetched on the CALLER thread once a chunk passed phase 1 (data
+    * predicates only). The caller blocks on these bytes anyway, and
+    * routing them through the window would queue each matching chunk's
+    * phase-2 GET behind the in-flight speculative phase-1 fetches
+    * (head-of-line blocking that serializes phase-2-dominated scans);
+    * inline, phase 2 proceeds while the window keeps prefetching. */
+  private val phase2 = if (filters.isEmpty || coordOnly) Nil else nonPredicateOutput
 
-  // coordinate chunks are tiny and shared across target chunks → cache.
-  // Concurrent: the prefetch IO threads also decode coords into it when
-  // computing inner-chunk masks for ranged shard reads (below).
-  private val coordCache = new java.util.concurrent.ConcurrentHashMap[String, ChunkColumn]()
+  /** Coordinate chunks — tiny and shared across target chunks — decoded,
+    * or being fetched by the one fetch that claimed them
+    * ([[coordColumn]]). Starts with the chunks the plan shipped. */
+  private val coordCache =
+    new java.util.concurrent.ConcurrentHashMap[String, CompletableFuture[ChunkColumn]]()
   f.sharedCoords.foreach { case (n, ci, bytes) =>
-    coordCache.put(s"$n/$ci", ChunkColumn.decode(metaOf(n), bytes))
+    coordCache.put(s"$n/$ci",
+      CompletableFuture.completedFuture(ChunkColumn.decode(metaOf(n), bytes)))
+  }
+
+  /** Coordinate `name`'s chunk for chunk `o` (grid index `idx`): GET and
+    * decoded here when no fetch has claimed it yet, else the claimer's,
+    * waited for — or, without `await`, None. In a 2-D grid every chunk
+    * of a row needs the same `lat` chunk, and every window slot may ask
+    * at once: claiming makes it one GET per reader. A claimer completes
+    * its claim before it returns, so it never waits while holding one,
+    * and no two fetches wait on each other. Callable from IO threads. */
+  private def coordColumn(
+      name: String, idx: Array[Int], o: Long, await: Boolean = true): Option[ChunkColumn] = {
+    val mine = new CompletableFuture[ChunkColumn]()
+    val held = coordCache.putIfAbsent(s"$name/${idx(coordDimOf(name))}", mine)
+    if (held == null) {
+      val k = f.manifest.chunkKeyOf(roleOf(name), idx, o)
+      try {
+        val c = ChunkColumn.decode(roleOf(name).meta,
+          present(o, name, k, f.store.readChunk(name, k)))
+        mine.complete(c)
+        Some(c)
+      } catch { case t: Throwable => mine.completeExceptionally(t); throw t }
+    } else if (!await) None
+    else
+      try Some(held.get())
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
   }
 
   // ---- ranged shard reads (inner-chunk masking) ----
@@ -147,8 +195,6 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
   // (Aggregate and limit pushdown both decline when filters are pushed, so
   // no consumer ever aggregates the emitted rows without the residual.)
   private val rangedReads = f.store.supportsRangedReads
-  private val coordDimOf: Map[String, Int] =
-    roleOf.collect { case (n, CoordCol(_, d)) => n -> d }
   /** Could ANY inner-chunk mask exist on this scan? True when some
     * supported filter's references are all range-sourceable: coordinates
     * always; a sharded data column only when the store carries
@@ -159,21 +205,6 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
       refs.nonEmpty && refs.forall(r => coordDimOf.contains(r) ||
         (f.innerStatsPresent && roleOf.get(r).exists(role =>
           role.isInstanceOf[DataCol] && role.meta.shardingSpec.isDefined)))
-    }
-  }
-
-  /** Coordinate chunk values for coordinate `name` of chunk `o` (grid
-    * index `idx`) — from the cache, else one (tiny) GET through the
-    * manifest key rule. Callable from IO threads. */
-  private def coordColumnFor(name: String, idx: Array[Int], o: Long): ChunkColumn = {
-    val key = s"$name/${idx(coordDimOf(name))}"
-    val cached = coordCache.get(key)
-    if (cached != null) cached
-    else {
-      val c = ChunkColumn.decode(roleOf(name).meta,
-        f.store.readChunk(name, f.manifest.chunkKeyOf(roleOf(name), idx, o)))
-      coordCache.putIfAbsent(key, c)
-      c
     }
   }
 
@@ -249,7 +280,7 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
       usable.flatMap(ChunkFilter.references).distinct
         .filter(coordDimOf.contains).map { n =>
           val dim = coordDimOf(n)
-          val col = coordColumnFor(n, idx, o)
+          val col = coordColumn(n, idx, o).get
           n -> Array.tabulate(grid(dim)) { gd =>
             val lo = gd * inner(dim)
             val hi = math.min((gd + 1).toLong * inner(dim), extent(dim).toLong).toInt
@@ -296,35 +327,51 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     else Some((mask, dataStats))
   }
 
-  /** One chunk's fetched raw bytes plus any inner-chunk keep-masks that
-    * drove ranged reads ((innerShape, row-major mask) per masked
-    * column). The masks flow to emission: rows of mask-false regions
-    * are provably refuted by the coordinate predicates, so the reader
-    * emits only the kept-region row subset instead of fill-valued rows
-    * the residual filter would discard. */
+  /** One chunk's fetched raw data-column bytes plus any inner-chunk
+    * keep-masks that drove ranged reads ((innerShape, row-major mask)
+    * per masked column). The masks flow to emission: rows of mask-false
+    * regions are provably refuted by the coordinate predicates, so the
+    * reader emits only the kept-region row subset instead of fill-valued
+    * rows the residual filter would discard. `refuted`: the fetch tested
+    * the chunk against its coordinates and no row can match, so nothing
+    * else was fetched. */
   private final case class Fetched(
       bytes: Map[String, Option[Array[Byte]]],
-      masks: Seq[(Array[Int], Array[Boolean])])
+      masks: Seq[(Array[Int], Array[Boolean])],
+      refuted: Boolean = false)
 
-  /** Fetch raw bytes for the resolved (name, key) pairs of chunk `o` —
-    * coordinates first (their decoded values feed the inner masks and the
-    * reader-lifetime cache), then data columns, ranged when a mask
-    * applies. Runs on either the IO threads or the caller thread. */
-  private def fetchBytes(o: Long, pairs: Seq[(String, String)]): Fetched = {
-    if (pairs.isEmpty) return Fetched(Map.empty, Nil)
-    lazy val idx = geometry.chunkIndex(o)
+  /** The window's fetch of chunk `o`: the [[phase1]] columns. Under
+    * coordinate-only filters, every column: it decodes the predicate
+    * coordinates first and tests the chunk against them, exactly as the
+    * caller would, and a refuted chunk fetches no other object, sharded
+    * or unsharded alike. */
+  private def fetchChunk(o: Long): Fetched =
+    if (!coordOnly) fetchBytes(o, phase1)
+    else {
+      val idx = geometry.chunkIndex(o)
+      val extent = geometry.chunkExtent(idx)
+      val coords = predicateNames.map { n =>
+        n -> (coordColumn(n, idx, o).get,
+          ChunkColumn.mapping(roleOf(n), geometry.targetChunk, extent))
+      }.toMap
+      if (ChunkFilter.anyRowMatches(filters, coords, extent.product))
+        fetchBytes(o, nonPredicateOutput)
+      else Fetched(Map.empty, Nil, refuted = true)
+    }
+
+  /** Fetch `names` of chunk `o` — coordinates first (claimed here when
+    * no other fetch has; the caller decodes them through [[coordColumn]]),
+    * then data columns, ranged when a mask applies. Runs on either the
+    * IO threads or the caller thread. */
+  private def fetchBytes(o: Long, names: Seq[String]): Fetched = {
+    if (names.isEmpty) return Fetched(Map.empty, Nil)
+    val idx = geometry.chunkIndex(o)
     lazy val extent = geometry.chunkExtent(idx)
     val out = Map.newBuilder[String, Option[Array[Byte]]]
     val masks = Seq.newBuilder[(Array[Int], Array[Boolean])]
-    val (coordPairs, rest) = pairs.partition { case (n, _) => coordDimOf.contains(n) }
-    coordPairs.foreach { case (n, k) =>
-      val bytes = present(o, n, k, f.store.readChunk(n, k))
-      if (maskingPossible)
-        coordCache.putIfAbsent(s"$n/${idx(coordDimOf(n))}",
-          ChunkColumn.decode(roleOf(n).meta, bytes))
-      out += (n -> bytes)
-    }
-    rest.foreach { case (n, k) =>
+    val (coordNames, rest) = names.partition(coordDimOf.contains)
+    coordNames.foreach(n => coordColumn(n, idx, o, await = false))
+    rest.map(n => n -> f.manifest.chunkKeyOf(roleOf(n), idx, o)).foreach { case (n, k) =>
       val ranged: Option[Option[Array[Byte]]] =
         if (!maskingPossible) None
         else roleOf(n) match {
@@ -455,72 +502,27 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     if (kept == nRows) null else java.util.Arrays.copyOf(keep, kept)
   }
 
-  /** Coordinate chunk keys whose fetch has been SUBMITTED but not yet
-    * decoded into [[coordCache]]. The prefetch window submits up to its
-    * depth in chunks before the first is decoded, and the cache is only
-    * written at decode time — without this set, every window slot
-    * re-fetches the same coordinate chunk (≈ depth−1 redundant GETs per
-    * coord chunk per grid row at object-store latency). Chunks are
-    * resolved at submission on this thread and decoded in submission
-    * (FIFO) order, so a coord filtered here is always in the cache by
-    * the time a later chunk needs it. Declared BEFORE [[prefetch]]. */
-  private val coordInFlight = new java.util.HashSet[String]()
   private var current: ColumnarBatch = null
 
-  /** Phase-1 fetches of this partition's chunks, skipped ranges never
-    * submitted, through the shared window ([[ChunkPrefetcher]]):
+  /** The window fetches ([[fetchChunk]]) of this partition's chunks,
+    * skipped ranges never submitted ([[ChunkPrefetcher]]):
     * depth 4 on 4 IO threads. The reference pipelines exactly one chunk
     * ahead on one task (`zarr_data_stream.rs:647-711`); a single IO
     * thread only overlaps IO with decode, which at object-store latency
     * leaves the task IO-SERIAL — matching the pool to the window
     * parallelizes the waits themselves (~depth× on latency-bound scans,
     * such as perfbench's `cube_select` at 5 ms per request). */
-  private val prefetch = new ChunkPrefetcher[(Long, Seq[(String, String)]), (Long, Fetched)](
-    part.runs.iterator.flatMap { case (a, b) => Iterator.range(a, b) }
-      .map(o => (o, resolveFetch(o, phase1))),
-    { case (o, keys) => (o, fetchBytes(o, keys)) })
+  private val prefetch = new ChunkPrefetcher[Long, (Long, Fetched)](
+    part.runs.iterator.flatMap { case (a, b) => Iterator.range(a, b) },
+    o => (o, fetchChunk(o)))
 
-  /** Resolve which (name, storage key) pairs chunk `o` actually needs —
-    * cached and already-in-flight coordinate chunks are not re-fetched. */
-  private def resolveFetch(o: Long, names: Seq[String]): Seq[(String, String)] = {
-    val idx = geometry.chunkIndex(o)
-    names.filter { n =>
-      roleOf(n) match {
-        case CoordCol(_, dim) =>
-          val key = s"$n/${idx(dim)}"
-          !coordCache.containsKey(key) && coordInFlight.add(key)
-        case _ => true
-      }
-    }.map(n => n -> f.manifest.chunkKeyOf(roleOf(n), idx, o))
-  }
-
-  /** Fetch raw bytes for `names` of chunk `o` on the CALLER thread.
-    * Phase-2 fetches use this: the caller blocks on the bytes anyway,
-    * and routing them through the prefetch pool would queue each
-    * matching chunk's phase-2 GET behind the window's in-flight
-    * speculative phase-1 prefetches (head-of-line blocking
-    * that serializes phase-2-dominated scans); inline, phase 2
-    * proceeds while the pool keeps prefetching phase 1 concurrently. */
-  private def fetchNow(o: Long, names: Seq[String]): Fetched =
-    fetchBytes(o, resolveFetch(o, names))
-
+  /** Column `name` of chunk `o`: a coordinate from [[coordColumn]], a
+    * data column decoded from `raw`. */
   private def decoded(
-      name: String, idx: Array[Int],
-      raw: Map[String, Option[Array[Byte]]]): ChunkColumn = {
-    val meta = metaOf(name)
-    roleOf(name) match {
-      case CoordCol(_, dim) =>
-        val key = s"$name/${idx(dim)}"
-        val cached = coordCache.get(key)
-        if (cached != null) cached
-        else {
-          val c = ChunkColumn.decode(meta, raw(name))
-          coordCache.put(key, c)
-          c
-        }
-      case DataCol(_) => ChunkColumn.decode(meta, raw(name))
-    }
-  }
+      name: String, idx: Array[Int], o: Long,
+      raw: Map[String, Option[Array[Byte]]]): ChunkColumn =
+    if (coordDimOf.contains(name)) coordColumn(name, idx, o).get
+    else ChunkColumn.decode(metaOf(name), raw(name))
 
   /** Decoded chunks awaiting emission: (per-column data, rows). Small
     * chunks are coalesced into one ColumnarBatch of up to
@@ -567,29 +569,25 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
       val extent = geometry.chunkExtent(idx)
       val nRows = extent.product
 
-      val phase1Cols: Map[String, (ChunkColumn, Array[Int])] =
-        phase1.map { n =>
-          val role = roleOf(n)
-          n -> (decoded(n, idx, raw1.bytes), ChunkColumn.mapping(role, geometry.targetChunk, extent))
+      def columns(names: Seq[String], raw: Map[String, Option[Array[Byte]]]) =
+        names.map { n =>
+          n -> (decoded(n, idx, o, raw),
+            ChunkColumn.mapping(roleOf(n), geometry.targetChunk, extent))
         }.toMap
 
-      val passes = filters.isEmpty ||
-        ChunkFilter.anyRowMatches(filters, phase1Cols, nRows)
+      // a coordinate-only fetch already tested the chunk (fetchChunk)
+      val predicateCols =
+        if (raw1.refuted) Map.empty[String, (ChunkColumn, Array[Int])]
+        else columns(predicateNames, raw1.bytes)
+      val passes = !raw1.refuted &&
+        (coordOnly || ChunkFilter.anyRowMatches(filters, predicateCols, nRows))
       if (passes) {
-        val (phase2Cols, masks2) =
-          if (phase2.isEmpty) (Map.empty[String, (ChunkColumn, Array[Int])], Nil)
-          else {
-            val raw2 = fetchNow(o, phase2)
-            (phase2.map { n =>
-              val role = roleOf(n)
-              n -> (decoded(n, idx, raw2.bytes), ChunkColumn.mapping(role, geometry.targetChunk, extent))
-            }.toMap, raw2.masks)
-          }
+        val raw2 = fetchBytes(o, phase2)
         // rows of mask-false inner regions are provably refuted — emit
         // only the kept subset (composed into each column's mapping)
         // instead of shard-sized runs of fill values
-        val kr = keptRows(raw1.masks ++ masks2, extent)
-        val allCols = phase1Cols ++ phase2Cols
+        val kr = keptRows(raw1.masks ++ raw2.masks, extent)
+        val allCols = predicateCols ++ columns(nonPredicateOutput, raw1.bytes ++ raw2.bytes)
         val (outCols, outRows) =
           if (kr == null) (allCols, nRows)
           else (allCols.map { case (n, (c, mapping)) =>

@@ -14,8 +14,10 @@ import java.util.concurrent.{Executors, Future => JFuture}
   * host, a polite object-store budget).
   *
   * `items` is advanced on the CALLER thread, one item per submission,
-  * so side effects of producing an item (the scan reader's coordinate
-  * in-flight bookkeeping) happen in submission order. Results are
+  * so side effects of producing an item happen in submission order.
+  * Every in-flight fetch has a thread of its own, so a fetch may wait
+  * on another in-flight fetch that never waits in turn (the scan
+  * reader's coordinate claims). Results are
   * consumed strictly in submission order regardless of completion
   * order. `fetch` must be thread-safe (ZarrStore is: the FileSystem
   * handle is shared and Hadoop clients are concurrent). Call `close()`

@@ -7,8 +7,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 /** A Zarr store root. Backed by the Hadoop FileSystem abstraction so the
   * same code path serves `file://`, `hdfs://` and — with hadoop-aws on the
   * classpath — `s3a://` (the reference's local/S3 split lives at
-  * `table/config.rs:120-136`; Hadoop FS collapses it). Instances are cheap value objects — the FileSystem handle is
-  * resolved lazily per JVM (executor-side safe; Hadoop caches FS clients).
+  * `table/config.rs:120-136`; Hadoop FS collapses it). Instances are
+  * cheap value objects, still built per task on executors: their
+  * Configuration is one per JVM for each `hadoopConfPairs`
+  * ([[ZarrStore.confFor]]), and the FileSystem handle is resolved lazily
+  * through Hadoop's per-JVM FS cache.
   *
   * `hadoopConfPairs` carries the driver's `spark.hadoop.*` overrides to
   * executors (credentials, endpoints) without relying on Spark internals.
@@ -16,11 +19,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 final case class ZarrStore(root: String, hadoopConfPairs: Seq[(String, String)] = Nil)
     extends Serializable {
 
-  @transient private lazy val conf: Configuration = {
-    val c = new Configuration()
-    hadoopConfPairs.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
+  @transient private[zarr] lazy val conf: Configuration = ZarrStore.confFor(hadoopConfPairs)
   @transient private[zarr] lazy val rootPath = new Path(root)
   @transient private[zarr] lazy val fs: FileSystem = {
     val f = rootPath.getFileSystem(conf)
@@ -33,8 +32,10 @@ final case class ZarrStore(root: String, hadoopConfPairs: Seq[(String, String)] 
     // these flags apply to other users of the same FileSystem in this
     // JVM. newInstance() would confine them but leaks one unclosed FS
     // (threads, buffers) per ZarrStore — which is constructed per TASK
-    // on executors. Object stores (S3A/ABFS) have no client-side .crc
-    // sidecars, so the flags are no-ops exactly where sharing is real.
+    // on executors (its Configuration is not: `conf` is the JVM's one
+    // for these pairs, so resolving the handle parses nothing). Object
+    // stores (S3A/ABFS) have no client-side .crc sidecars, so the flags
+    // are no-ops exactly where sharing is real.
     f.setVerifyChecksum(false)
     f.setWriteChecksum(false)
     f
@@ -392,6 +393,38 @@ final case class ZarrStore(root: String, hadoopConfPairs: Seq[(String, String)] 
 }
 
 object ZarrStore {
+
+  /** Distinct `hadoopConfPairs` sets whose Configuration a JVM keeps. */
+  private[zarr] val MaxConfs = 16
+
+  private val confs =
+    new java.util.LinkedHashMap[Seq[(String, String)], Configuration](MaxConfs, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Seq[(String, String)], Configuration]): Boolean =
+        size() > MaxConfs
+    }
+
+  /** THE Configuration of every store with these pairs in this JVM,
+    * least-recently-used beyond [[MaxConfs]] sets. `new Configuration()`
+    * parses Hadoop's default resources on its first `get` (5–6 ms), a
+    * cost a store built per plan and per task must not pay. The defaults
+    * are loaded before the object is shared, and it is read-only from
+    * then on: no caller may `set` on it. The pairs stay in memory as
+    * long as their entry, as Hadoop's FileSystem cache keeps them too. */
+  private[zarr] def confFor(pairs: Seq[(String, String)]): Configuration =
+    confs.synchronized {
+      var c = confs.get(pairs)
+      if (c == null) {
+        c = new Configuration()
+        pairs.foreach { case (k, v) => c.set(k, v) }
+        c.size() // parse the default resources now, not in a sharer's first get
+        confs.put(pairs, c)
+      }
+      c
+    }
+
+  /** Pair sets the Configuration memo holds now. */
+  private[zarr] def confCount: Int = confs.synchronized(confs.size())
 
   /** The `fs.*` settings of a Hadoop configuration — the credentials,
     * endpoints and scheme bindings a store needs wherever it is opened

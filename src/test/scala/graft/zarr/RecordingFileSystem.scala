@@ -11,9 +11,10 @@ import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, 
 import org.apache.hadoop.util.Progressable
 
 /** A local FileSystem that records what a read or a write asked of
-  * storage: every GET (`open`), LIST (`listStatus`, which
-  * `listStatusIterator` pages through), create and rename, with its
-  * path, plus the bytes read from each path. It adds no latency.
+  * storage: every GET (`open`), HEAD (`getFileStatus`, which `exists`
+  * calls), LIST (`listStatus`, which `listStatusIterator` pages
+  * through), create and rename, with its path, plus the bytes read from
+  * each path. It adds no latency.
   *
   * It takes its scheme from the URI it is initialized with: a spec
   * registers it as `fs.<scheme>.impl` for a scheme Hadoop does not know,
@@ -34,17 +35,33 @@ class RecordingFileSystem extends RawLocalFileSystem {
   override def getUri: URI = URI.create(s"$scheme:///")
   private def log = RecordingFileSystem.log(scheme)
 
-  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
-    val path = f.toUri.getPath
-    log.add(s"GET $path")
-    new FSDataInputStream(
-      new RecordingFileSystem.CountingStream(super.open(f, bufferSize), log, path))
+  // the status lookups Hadoop makes inside open, listStatus, create and
+  // rename belong to that one request, not to a HEAD of their own
+  private val inRequest = new ThreadLocal[java.lang.Boolean] {
+    override def initialValue(): java.lang.Boolean = false
+  }
+  private def request[T](entry: String)(body: => T): T = {
+    log.add(entry)
+    val outer = inRequest.get
+    inRequest.set(true)
+    try body finally inRequest.set(outer)
   }
 
-  override def listStatus(f: Path): Array[FileStatus] = {
-    log.add(s"LIST ${f.toUri.getPath}")
-    super.listStatus(f)
+  override def getFileStatus(f: Path): FileStatus = {
+    if (!inRequest.get) log.add(s"HEAD ${f.toUri.getPath}")
+    super.getFileStatus(f)
   }
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    val path = f.toUri.getPath
+    request(s"GET $path") {
+      new FSDataInputStream(
+        new RecordingFileSystem.CountingStream(super.open(f, bufferSize), log, path))
+    }
+  }
+
+  override def listStatus(f: Path): Array[FileStatus] =
+    request(s"LIST ${f.toUri.getPath}")(super.listStatus(f))
 
   override def create(
       f: Path,
@@ -53,14 +70,13 @@ class RecordingFileSystem extends RawLocalFileSystem {
       replication: Short,
       blockSize: Long,
       progress: Progressable): FSDataOutputStream = {
-    log.add(s"CREATE ${f.toUri.getPath}")
-    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    request(s"CREATE ${f.toUri.getPath}") {
+      super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    }
   }
 
-  override def rename(src: Path, dst: Path): Boolean = {
-    log.add(s"RENAME ${src.toUri.getPath}")
-    super.rename(src, dst)
-  }
+  override def rename(src: Path, dst: Path): Boolean =
+    request(s"RENAME ${src.toUri.getPath}")(super.rename(src, dst))
 }
 
 object RecordingFileSystem {
@@ -80,8 +96,8 @@ object RecordingFileSystem {
       bytesByPath.clear()
     }
 
-    /** Every request in order: `GET <path>`, `LIST <path>`,
-      * `CREATE <path>` or `RENAME <source path>`. */
+    /** Every request in order: `GET <path>`, `HEAD <path>`,
+      * `LIST <path>`, `CREATE <path>` or `RENAME <source path>`. */
     def requests: List[String] = entries.toArray.map(_.toString).toList
 
     private def paths(verb: String): Array[String] =
