@@ -95,7 +95,7 @@ object ZarrCubeWrite {
       maxAxisLen: Int = 1 << 22,
       rowsPerTask: Long = 1L << 22,
       shardShapeOpt: Option[Seq[Int]] = None): Unit = {
-    val (store, hadoopPairs) = openStore(df, path, maxAxisLen)
+    val store = openStore(df, path, maxAxisLen)
 
     // ---- schema validation, all driver-side and before any IO ----
     if (dims.length > 8)
@@ -229,7 +229,7 @@ object ZarrCubeWrite {
         ZarrBatchWrite.defaultFillJson(zt), Some(dims), dataChain,
         timeMeta = timeMetaOf(f.name)))
     }
-    commitSlab(df, store, hadoopPairs, "cube write", dims, axes.map(_.toIndexedSeq),
+    commitSlab(df, store, "cube write", dims, axes.map(_.toIndexedSeq),
       coordMetas ++ dataMetas, slabLo0 = 0L, slabHi0 = shape.head, committed0 = 0L,
       stats, maxAxisLen, rowsPerTask, ownRoot = truncate || inventory.isEmpty)
   }
@@ -281,7 +281,7 @@ object ZarrCubeWrite {
       stats: Boolean,
       maxAxisLen: Int = 1 << 22,
       rowsPerTask: Long = 1L << 22): Unit = {
-    val (store, hadoopPairs) = openStore(df, path, maxAxisLen)
+    val store = openStore(df, path, maxAxisLen)
     val t = resolveCubeTarget(store, path, dimsOpt, "append_dim")
     val dims = t.dims
     requireFirstDim(dims, appendDim, "append_dim",
@@ -311,7 +311,7 @@ object ZarrCubeWrite {
     val grown = t.metas.map(m =>
       if (dims.tail.contains(m.name)) m
       else ZarrMeta.parse(m.name, ZarrMeta.withShape0(m.sourceJson, newL0)))
-    commitSlab(df, store, hadoopPairs, "append_dim",
+    commitSlab(df, store, "append_dim",
       dims, (existingAxes.head ++ newAxis0) +: existingAxes.tail, grown,
       slabLo0 = l0, slabHi0 = newL0, committed0 = l0, stats, maxAxisLen, rowsPerTask)
   }
@@ -350,7 +350,7 @@ object ZarrCubeWrite {
       stats: Boolean,
       maxAxisLen: Int = 1 << 22,
       rowsPerTask: Long = 1L << 22): Unit = {
-    val (store, hadoopPairs) = openStore(df, path, maxAxisLen)
+    val store = openStore(df, path, maxAxisLen)
     val t = resolveCubeTarget(store, path, dimsOpt, "region_dim")
     val dims = t.dims
     requireFirstDim(dims, regionDim, "region_dim",
@@ -383,7 +383,7 @@ object ZarrCubeWrite {
           s"(chunk extent $c0); a partial boundary chunk would need " +
           "read-modify-write of rows outside the region — align the region " +
           "or rewrite the store")
-    commitSlab(df, store, hadoopPairs, "region_dim", dims, existingAxes, t.metas,
+    commitSlab(df, store, "region_dim", dims, existingAxes, t.metas,
       slabLo0 = start, slabHi0 = end, committed0 = axis0.length,
       stats, maxAxisLen, rowsPerTask)
   }
@@ -433,7 +433,6 @@ object ZarrCubeWrite {
   private def commitSlab(
       df: DataFrame,
       store: ZarrStore,
-      hadoopPairs: Seq[(String, String)],
       opName: String,
       dims: Seq[String],
       axes: Seq[IndexedSeq[Any]],
@@ -524,7 +523,7 @@ object ZarrCubeWrite {
 
       // ---- 4. write every window chunk, and the changed coordinate chunks ----
       writeSlab(kept.map(_.unionByName(df)).getOrElse(df),
-        store, hadoopPairs, dims, axes, coordMetas.map(_.dataType), dataMetas,
+        store, dims, axes, coordMetas.map(_.dataType), dataMetas,
         joinLo0 = winLo0, joinHi0 = slabHi0, stats = stats, rowsPerTask = rowsPerTask,
         expectRows = Math.multiplyExact(slabHi0 - winLo0, trailingCells),
         expectChunks = ordHi - ordLo, stageBelowOrd = committedHi, stageDir = stageDir,
@@ -584,14 +583,12 @@ object ZarrCubeWrite {
   }
   // scalastyle:on method.length
 
-  /** The store a cube write targets, with the session's `fs.*` conf. */
-  private def openStore(
-      df: DataFrame, path: String, maxAxisLen: Int): (ZarrStore, Seq[(String, String)]) = {
+  /** The store a cube write targets ([[ZarrStore.forSession]]). */
+  private def openStore(df: DataFrame, path: String, maxAxisLen: Int): ZarrStore = {
     if (maxAxisLen > (1 << 30))
       throw new ZarrException(
         s"max_axis_len $maxAxisLen exceeds 2^30 (grid-index arithmetic bound)")
-    val pairs = ZarrStore.fsPairs(df.sparkSession.sparkContext.hadoopConfiguration)
-    (ZarrStore(path, pairs), pairs)
+    ZarrStore.forSession(df.sparkSession, path)
   }
 
   /** append_dim / region_dim must name the store's first dim. */
@@ -980,7 +977,6 @@ object ZarrCubeWrite {
   private def writeSlab(
       df: DataFrame,
       store: ZarrStore,
-      hadoopPairs: Seq[(String, String)],
       dims: Seq[String],
       axes: Seq[IndexedSeq[Any]],
       dimZts: Seq[ZarrType],
@@ -1059,13 +1055,12 @@ object ZarrCubeWrite {
     val dataNames = dataMetas.map(_.name).toArray
     val dataJsonArr = dataMetas.map(_.sourceJson).toArray
     val axesB = spark.sparkContext.broadcast(axes)
-    val root = store.root
 
     import spark.implicits._
     val written = shuffled.mapPartitions { it =>
       if (!it.hasNext) Iterator.empty
       else Iterator.single(ZarrCubeWrite.assemblePartition(
-        it, root, hadoopPairs, dataNames, dataJsonArr, dimsArr, dimZtArr,
+        it, store, dataNames, dataJsonArr, dimsArr, dimZtArr,
         axesB.value, shapeArr, chunkArr, gridArr, stats,
         stageBelowOrd, stageDir, stageStatsWriteId))
     }.collect()
@@ -1083,8 +1078,7 @@ object ZarrCubeWrite {
     * segments per contiguous ordinal run. Returns (rows, chunks). */
   private def assemblePartition(
       it: Iterator[Row],
-      root: String,
-      hadoopPairs: Seq[(String, String)],
+      store: ZarrStore,
       dataNames: Array[String],
       dataMetaJsons: Array[String],
       dims: Array[String],
@@ -1097,7 +1091,6 @@ object ZarrCubeWrite {
       stageBelowOrd: Long,
       stageDir: String,
       stageStatsWriteId: String): (Long, Long) = {
-    val store = ZarrStore(root, hadoopPairs)
     val ndim = grid.length
     val ncols = dataNames.length
     val metas = dataNames.zip(dataMetaJsons).map { case (n, j) => ZarrMeta.parse(n, j) }

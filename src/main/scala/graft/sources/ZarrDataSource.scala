@@ -2,8 +2,6 @@ package graft.sources
 
 import java.util.OptionalLong
 
-import scala.jdk.CollectionConverters._
-
 import graft.zarr._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -49,17 +47,6 @@ class ZarrDataSource extends TableProvider with DataSourceRegister {
   private def storeFor(options: CaseInsensitiveStringMap): ZarrStore = {
     val path = Option(options.get("path")).getOrElse(
       throw new ZarrException("zarr source requires a path"))
-    // carry fs.* credentials/endpoints (e.g. s3a) and graft.zarr.* reader
-    // toggles (e.g. graft.zarr.ranged.reads) from the driver conf to
-    // executor-side FileSystem resolution. sessionState.newHadoopConf
-    // (not sparkContext.hadoopConfiguration) so per-session overrides —
-    // runtime-set spark.hadoop.* credentials — reach executors too,
-    // the same one-source discipline the maintenance walks use.
-    val hadoopPairs = SparkSession.active.sessionState.newHadoopConf()
-      .iterator().asScala
-      .map(e => e.getKey -> e.getValue)
-      .filter(p => p._1.startsWith("fs.") || p._1.startsWith("graft.zarr."))
-      .toSeq
     // per-SCAN override of the ranged-read policy: appended LAST so it
     // wins over any session-level `graft.zarr.ranged.reads` hadoop conf
     // (ZarrStore applies pairs in order). A scan-scoped option lets
@@ -74,7 +61,7 @@ class ZarrDataSource extends TableProvider with DataSourceRegister {
       }
       "graft.zarr.ranged.reads" -> v
     }.toSeq
-    ZarrStore(path, hadoopPairs ++ rangedPairs)
+    ZarrStore.forSession(SparkSession.active, path, rangedPairs)
   }
 
   /** The store and committed view [[inferSchema]] built, for the

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util.concurrent.CompletableFuture
 
+import scala.collection.mutable.ArrayBuffer
+
 import graft.zarr._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
@@ -14,19 +16,18 @@ import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
   * ranges. The planner prunes, tasks never GET segments: every ordinal
   * here survived the `_stats/` sidecar on the driver ([[ZarrPlanner]]).
   *
-  * Pipeline per chunk (mirrors `zarr_data_stream.rs:829-916`):
-  *  1. raw bytes of the *predicate* columns arrive (prefetched while the
-  *     previous chunk was being consumed — the reference's IO/compute
-  *     pipelining, `zarr_data_stream.rs:647-711`);
-  *  2. decode them, evaluate the pushed filters with any-row semantics —
-  *     no match → the whole chunk is skipped without reading the
-  *     remaining columns;
-  *  3. otherwise fetch+decode the remaining columns (filter/projection
-  *     column sharing: predicate columns are reused for output,
-  *     `zarr_data_stream.rs:877-895`) and emit one ColumnarBatch.
-  * When every filter references coordinates only, steps 1–3 run inside
-  * the prefetch window ([[fetchChunk]]): the chunks of a partition are
-  * tested and fetched whole side by side, not one phase 3 after another.
+  * One fetch path per chunk (mirrors `zarr_data_stream.rs:829-916`),
+  * run inside the prefetch window ([[fetchChunk]]) while earlier chunks
+  * are consumed — the reference's IO/compute pipelining,
+  * `zarr_data_stream.rs:647-711`:
+  *  1. fetch and decode the *predicate* columns, evaluate the pushed
+  *     filters with any-row semantics — no match → nothing else of the
+  *     chunk is fetched;
+  *  2. otherwise fetch the remaining output columns in the same window
+  *     slot (filter/projection column sharing: predicate columns are
+  *     reused for output, `zarr_data_stream.rs:877-895`).
+  * The task thread decodes the rest and emits batches. A scan without
+  * filters has no predicate columns and fetches every output at once.
   *
   * Coordinate (1-D) chunks are cached for the reader's lifetime: in a 2-D
   * grid the same `lat` chunk is needed by every chunk in its row — the
@@ -127,22 +128,6 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     filters.flatMap(ChunkFilter.references).distinct.filter(roleOf.contains)
   private val nonPredicateOutput: Seq[String] =
     f.outputNames.filterNot(predicateNames.contains)
-  /** Whether every filter references coordinates only: the window then
-    * fetches every column of a chunk, testing it against its
-    * coordinates first ([[fetchChunk]]). */
-  private val coordOnly = filters.nonEmpty &&
-    filters.forall(ChunkFilter.references(_).forall(coordDimOf.contains))
-  /** Names the window fetches before a chunk is tested: the predicate
-    * columns, or every output without filters. Under coordinate-only
-    * filters the window goes on to fetch the rest ([[fetchChunk]]). */
-  private val phase1 = if (filters.isEmpty) f.outputNames else predicateNames
-  /** Names fetched on the CALLER thread once a chunk passed phase 1 (data
-    * predicates only). The caller blocks on these bytes anyway, and
-    * routing them through the window would queue each matching chunk's
-    * phase-2 GET behind the in-flight speculative phase-1 fetches
-    * (head-of-line blocking that serializes phase-2-dominated scans);
-    * inline, phase 2 proceeds while the window keeps prefetching. */
-  private val phase2 = if (filters.isEmpty || coordOnly) Nil else nonPredicateOutput
 
   /** Coordinate chunks — tiny and shared across target chunks — decoded,
     * or being fetched by the one fetch that claimed them
@@ -327,48 +312,42 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     else Some((mask, dataStats))
   }
 
-  /** One chunk's fetched raw data-column bytes plus any inner-chunk
-    * keep-masks that drove ranged reads ((innerShape, row-major mask)
-    * per masked column). The masks flow to emission: rows of mask-false
-    * regions are provably refuted by the coordinate predicates, so the
-    * reader emits only the kept-region row subset instead of fill-valued
-    * rows the residual filter would discard. `refuted`: the fetch tested
-    * the chunk against its coordinates and no row can match, so nothing
-    * else was fetched. */
-  private final case class Fetched(
-      bytes: Map[String, Option[Array[Byte]]],
-      masks: Seq[(Array[Int], Array[Boolean])],
-      refuted: Boolean = false)
+  /** One chunk that passed its test: the decoded predicate columns, the
+    * raw bytes of the other data columns, and any inner-chunk keep-masks
+    * that drove ranged reads ((innerShape, row-major mask) per masked
+    * column). The masks flow to emission: rows of mask-false regions are
+    * provably refuted by the coordinate predicates, so the reader emits
+    * only the kept-region row subset instead of fill-valued rows the
+    * residual filter would discard. */
+  private final class Fetched(
+      val predicates: Map[String, (ChunkColumn, Array[Int])],
+      val bytes: Map[String, Option[Array[Byte]]],
+      val masks: Seq[(Array[Int], Array[Boolean])])
 
-  /** The window's fetch of chunk `o`: the [[phase1]] columns. Under
-    * coordinate-only filters, every column: it decodes the predicate
-    * coordinates first and tests the chunk against them, exactly as the
-    * caller would, and a refuted chunk fetches no other object, sharded
-    * or unsharded alike. */
-  private def fetchChunk(o: Long): Fetched =
-    if (!coordOnly) fetchBytes(o, phase1)
-    else {
-      val idx = geometry.chunkIndex(o)
-      val extent = geometry.chunkExtent(idx)
-      val coords = predicateNames.map { n =>
-        n -> (coordColumn(n, idx, o).get,
-          ChunkColumn.mapping(roleOf(n), geometry.targetChunk, extent))
-      }.toMap
-      if (ChunkFilter.anyRowMatches(filters, coords, extent.product))
-        fetchBytes(o, nonPredicateOutput)
-      else Fetched(Map.empty, Nil, refuted = true)
-    }
-
-  /** Fetch `names` of chunk `o` — coordinates first (claimed here when
-    * no other fetch has; the caller decodes them through [[coordColumn]]),
-    * then data columns, ranged when a mask applies. Runs on either the
-    * IO threads or the caller thread. */
-  private def fetchBytes(o: Long, names: Seq[String]): Fetched = {
-    if (names.isEmpty) return Fetched(Map.empty, Nil)
+  /** The window's fetch of chunk `o`: its predicate columns, fetched,
+    * decoded and tested; None when no row can match, and then no other
+    * object of the chunk is fetched, sharded or unsharded alike. A
+    * passing chunk fetches the rest of its output columns here too. */
+  private def fetchChunk(o: Long): Option[Fetched] = {
     val idx = geometry.chunkIndex(o)
-    lazy val extent = geometry.chunkExtent(idx)
+    val extent = geometry.chunkExtent(idx)
+    val masks = ArrayBuffer.empty[(Array[Int], Array[Boolean])]
+    val tested = columns(predicateNames, idx, o, extent,
+      fetchBytes(o, idx, extent, predicateNames, masks))
+    if (!ChunkFilter.anyRowMatches(filters, tested, extent.product)) None
+    else Some(new Fetched(tested,
+      fetchBytes(o, idx, extent, nonPredicateOutput, masks), masks.toSeq))
+  }
+
+  /** Fetch `names` of chunk `o` (grid index `idx`) — coordinates first
+    * (claimed here when no other fetch has; they are decoded through
+    * [[coordColumn]]), then data columns, ranged when a mask applies;
+    * the masks that drove ranged reads go to `masks`. */
+  private def fetchBytes(
+      o: Long, idx: Array[Int], extent: Array[Int], names: Seq[String],
+      masks: ArrayBuffer[(Array[Int], Array[Boolean])]):
+      Map[String, Option[Array[Byte]]] = {
     val out = Map.newBuilder[String, Option[Array[Byte]]]
-    val masks = Seq.newBuilder[(Array[Int], Array[Boolean])]
     val (coordNames, rest) = names.partition(coordDimOf.contains)
     coordNames.foreach(n => coordColumn(n, idx, o, await = false))
     rest.map(n => n -> f.manifest.chunkKeyOf(roleOf(n), idx, o)).foreach { case (n, k) =>
@@ -431,7 +410,7 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
         }
       out += (n -> ranged.getOrElse(present(o, n, k, f.store.readChunk(n, k))))
     }
-    Fetched(out.result(), masks.result())
+    out.result()
   }
 
   /** `bytes` read for key `k` of column `n`'s chunk `o`. An absent object
@@ -512,17 +491,21 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     * leaves the task IO-SERIAL — matching the pool to the window
     * parallelizes the waits themselves (~depth× on latency-bound scans,
     * such as perfbench's `cube_select` at 5 ms per request). */
-  private val prefetch = new ChunkPrefetcher[Long, (Long, Fetched)](
+  private val prefetch = new ChunkPrefetcher[Long, (Long, Option[Fetched])](
     part.runs.iterator.flatMap { case (a, b) => Iterator.range(a, b) },
     o => (o, fetchChunk(o)))
 
-  /** Column `name` of chunk `o`: a coordinate from [[coordColumn]], a
-    * data column decoded from `raw`. */
-  private def decoded(
-      name: String, idx: Array[Int], o: Long,
-      raw: Map[String, Option[Array[Byte]]]): ChunkColumn =
-    if (coordDimOf.contains(name)) coordColumn(name, idx, o).get
-    else ChunkColumn.decode(metaOf(name), raw(name))
+  /** Columns `names` of chunk `o`, each with its row mapping: a
+    * coordinate from [[coordColumn]], a data column decoded from `raw`. */
+  private def columns(
+      names: Seq[String], idx: Array[Int], o: Long, extent: Array[Int],
+      raw: Map[String, Option[Array[Byte]]]): Map[String, (ChunkColumn, Array[Int])] =
+    names.map { n =>
+      val c =
+        if (coordDimOf.contains(n)) coordColumn(n, idx, o).get
+        else ChunkColumn.decode(metaOf(n), raw(n))
+      n -> (c, ChunkColumn.mapping(roleOf(n), geometry.targetChunk, extent))
+    }.toMap
 
   /** Decoded chunks awaiting emission: (per-column data, rows). Small
     * chunks are coalesced into one ColumnarBatch of up to
@@ -532,7 +515,7 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     * more often than needed. */
   private val targetBatchRows = 4096
   private val pending =
-    scala.collection.mutable.ArrayBuffer.empty[(Map[String, (ChunkColumn, Array[Int])], Int)]
+    ArrayBuffer.empty[(Map[String, (ChunkColumn, Array[Int])], Int)]
   private var pendingRows = 0
 
   private def emitPending(): ColumnarBatch = {
@@ -564,45 +547,32 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     while (prefetch.hasNext) {
       // the window refills as this chunk is handed over, so fetches
       // continue while it is decoded, filtered and emitted
-      val (o, raw1) = prefetch.next()
-      val idx = geometry.chunkIndex(o)
-      val extent = geometry.chunkExtent(idx)
-      val nRows = extent.product
-
-      def columns(names: Seq[String], raw: Map[String, Option[Array[Byte]]]) =
-        names.map { n =>
-          n -> (decoded(n, idx, o, raw),
-            ChunkColumn.mapping(roleOf(n), geometry.targetChunk, extent))
-        }.toMap
-
-      // a coordinate-only fetch already tested the chunk (fetchChunk)
-      val predicateCols =
-        if (raw1.refuted) Map.empty[String, (ChunkColumn, Array[Int])]
-        else columns(predicateNames, raw1.bytes)
-      val passes = !raw1.refuted &&
-        (coordOnly || ChunkFilter.anyRowMatches(filters, predicateCols, nRows))
-      if (passes) {
-        val raw2 = fetchBytes(o, phase2)
-        // rows of mask-false inner regions are provably refuted — emit
-        // only the kept subset (composed into each column's mapping)
-        // instead of shard-sized runs of fill values
-        val kr = keptRows(raw1.masks ++ raw2.masks, extent)
-        val allCols = predicateCols ++ columns(nonPredicateOutput, raw1.bytes ++ raw2.bytes)
-        val (outCols, outRows) =
-          if (kr == null) (allCols, nRows)
-          else (allCols.map { case (n, (c, mapping)) =>
-            n -> (c, if (mapping == null) kr else kr.map(r => mapping(r)))
-          }, kr.length)
-        if (outRows > 0) {
-          pending += ((outCols, outRows))
-          pendingRows += outRows
-          emitted += outRows
-          if (pendingRows >= targetBatchRows ||
-              (f.limit >= 0 && emitted >= f.limit)) {
-            current = emitPending()
-            return true
+      prefetch.next() match {
+        case (o, Some(fetched)) =>
+          val idx = geometry.chunkIndex(o)
+          val extent = geometry.chunkExtent(idx)
+          // rows of mask-false inner regions are provably refuted — emit
+          // only the kept subset (composed into each column's mapping)
+          // instead of shard-sized runs of fill values
+          val kr = keptRows(fetched.masks, extent)
+          val allCols = fetched.predicates ++
+            columns(nonPredicateOutput, idx, o, extent, fetched.bytes)
+          val (outCols, outRows) =
+            if (kr == null) (allCols, extent.product)
+            else (allCols.map { case (n, (c, mapping)) =>
+              n -> (c, if (mapping == null) kr else kr.map(r => mapping(r)))
+            }, kr.length)
+          if (outRows > 0) {
+            pending += ((outCols, outRows))
+            pendingRows += outRows
+            emitted += outRows
+            if (pendingRows >= targetBatchRows ||
+                (f.limit >= 0 && emitted >= f.limit)) {
+              current = emitPending()
+              return true
+            }
           }
-        }
+        case _ =>
       }
       // chunk skipped or batch not yet full: continue
     }

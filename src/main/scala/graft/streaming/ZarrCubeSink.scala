@@ -102,7 +102,7 @@ object ZarrCubeSink {
           "is nothing to compact, and a silent no-op cadence would read as " +
           "bounded fragmentation that never happens")
     val spark = batch.sparkSession
-    val store = ZarrStore(path, ZarrStore.fsPairs(spark.sparkContext.hadoopConfiguration))
+    val store = ZarrStore.forSession(spark, path)
 
     // post-commit cadence body, shared by the normal exit and the
     // empty-trigger early return below: keyed on batch id alone so the

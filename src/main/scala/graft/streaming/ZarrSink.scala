@@ -47,14 +47,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object ZarrSink {
 
+  /** The FileSystem of the tail and marker files, from the session's
+    * Hadoop conf, as [[graft.zarr.ZarrStore.forSession]] opens the store. */
   private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** ZarrStore with the session's fs.* conf (credentials, custom
-    * schemes) — same propagation as ZarrDataSource.storeFor. */
-  private def store(spark: SparkSession, path: String): graft.zarr.ZarrStore =
-    graft.zarr.ZarrStore(path,
-      graft.zarr.ZarrStore.fsPairs(spark.sparkContext.hadoopConfiguration))
+    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** Adopt an orphaned tail tmp dir only when its parquet job COMPLETED
     * (_SUCCESS present): a crash mid-job leaves a tmp with only
@@ -155,7 +151,7 @@ object ZarrSink {
     * parse aborts the stream (treating it as empty would re-append the
     * whole replay). */
   private def storeRows(spark: SparkSession, path: String): Long = {
-    val metas = store(spark, path).committedView().metas
+    val metas = graft.zarr.ZarrStore.forSession(spark, path).committedView().metas
     // the sink appends v3 chunk keys and rewrites shape metadata — a v2
     // destination must abort, not be half-upgraded in place
     metas.find(_.formatVersion == 2).foreach { m =>

@@ -60,9 +60,7 @@ object ZarrInfo {
       spark: SparkSession, path: String, countStored: Boolean,
       inlineMax: Long): DataFrame = {
     import scala.jdk.CollectionConverters._
-    // sessionState.newHadoopConf() carries per-session overrides (e.g.
-    // credentials) that sparkContext.hadoopConfiguration lacks
-    val store = ZarrStore(path, ZarrStore.fsPairs(spark.sessionState.newHadoopConf()))
+    val store = ZarrStore.forSession(spark, path)
     val metas = store.committedView().arrays
     // sidecar coverage is a STORE-level fact (segments describe grid
     // ordinals shared by every array of the grid); repeated per row —
@@ -127,7 +125,7 @@ object ZarrInfo {
     * compaction, never a private copy. */
   def describeStats(spark: SparkSession, path: String): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val store = ZarrStore(path, ZarrStore.fsPairs(spark.sessionState.newHadoopConf()))
+    val store = ZarrStore.forSession(spark, path)
     val metas = store.committedView().arrays
     // a typo'd path / empty store fails inside geometry resolution with
     // a bare requirement message — the operator-facing dashboard call

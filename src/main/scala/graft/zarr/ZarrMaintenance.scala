@@ -72,14 +72,13 @@ object ZarrMaintenance {
     // semantics, so a re-run (orchestrator retry, ambiguous failure)
     // against an existing dst would silently append a SECOND full copy
     // of every row — compaction must be write-fresh-then-swap
-    val pairs = ZarrStore.fsPairs(spark.sessionState.newHadoopConf())
-    val dstStore = ZarrStore(dstPath, pairs)
+    val dstStore = ZarrStore.forSession(spark, dstPath)
     if (dstStore.rootInventory().exists(_.exists(_._2)))
       throw new ZarrException(
         s"compact destination $dstPath already holds arrays; compaction " +
           "writes a FRESH store — delete the destination (a prior/partial " +
           "run) and re-run")
-    val srcStore = ZarrStore(srcPath, pairs)
+    val srcStore = ZarrStore.forSession(spark, srcPath)
     val srcMetas = srcStore.committedView().arrays
     val geom = ScanGeometry.resolve(srcMetas)
     // one recursive driver listing per array, whatever the size: the
@@ -266,8 +265,8 @@ object ZarrMaintenance {
     if (refresh.nonEmpty && !incremental)
       throw new ZarrException(
         "analyze: refresh ranges require incremental mode (a full analyze already refreshes everything)")
-    val hadoopPairs = ZarrStore.fsPairs(spark.sparkContext.hadoopConfiguration)
-    val store = ZarrStore(path, hadoopPairs)
+    val store = ZarrStore.forSession(spark, path)
+    val hadoopPairs = store.hadoopConfPairs
     // the committed view: after a root write lost behind the per-array
     // documents, their shapes run past the root's grid and the manifest,
     // and bounds recorded there (fill values at canonical keys) would
@@ -565,8 +564,8 @@ object ZarrMaintenance {
     * that pins both schedulers equal. */
   private[graft] def compactStatsImpl(
       spark: SparkSession, path: String, inlineMax: Long): (Long, Long) = {
-    val pairs = ZarrStore.fsPairs(spark.sessionState.newHadoopConf())
-    val store = ZarrStore(path, pairs)
+    val store = ZarrStore.forSession(spark, path)
+    val pairs = store.hadoopConfPairs
     val metas = store.committedView().arrays
     val geom =
       try ScanGeometry.resolve(metas)
@@ -662,8 +661,8 @@ object ZarrMaintenance {
   private[graft] def vacuumImpl(
       spark: SparkSession, path: String, inlineMax: Long): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val pairs = ZarrStore.fsPairs(spark.sessionState.newHadoopConf())
-    val store = ZarrStore(path, pairs)
+    val store = ZarrStore.forSession(spark, path)
+    val pairs = store.hadoopConfPairs
     val view = store.committedView()
     val metas = view.arrays
     val partDirs: Set[String] = view.manifest.parts.map(_._2).toSet

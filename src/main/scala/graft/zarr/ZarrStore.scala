@@ -3,6 +3,7 @@ package graft.zarr
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 
 /** A Zarr store root. Backed by the Hadoop FileSystem abstraction so the
   * same code path serves `file://`, `hdfs://` and — with hadoop-aws on the
@@ -238,29 +239,6 @@ final case class ZarrStore(root: String, hadoopConfPairs: Seq[(String, String)] 
     * nChunks), sorted, overlaps suppressed ([[ZarrStore.Sidecar.unsuppressed]]). */
   def listStatsSegments(): Seq[(Long, Int)] = sidecar().unsuppressed
 
-  /** Metadata-only move of a chunk object. On true filesystems
-    * (local/HDFS) this is cheap; on S3A it is COPY+DELETE — which is why
-    * the DSv2 write path no longer renames chunks at all (manifest
-    * commit, [[ChunkManifest]]) and this remains only for fixtures and
-    * non-hot-path maintenance. Overwrites an existing destination so
-    * crash retries re-landing the SAME deterministic bytes cannot wedge. */
-  def rename(fromKey: String, toKey: String): Unit = {
-    val to = new Path(rootPath, toKey)
-    fs.mkdirs(to.getParent)
-    if (fs.exists(to)) fs.delete(to, false)
-    if (!fs.rename(new Path(rootPath, fromKey), to))
-      throw new ZarrException(s"rename failed: $fromKey -> $toKey")
-  }
-
-  /** Move a staged object over a COMMITTED key without a window in which
-    * the destination is absent or torn. Prefers FileContext rename with
-    * OVERWRITE (an atomic swap on POSIX and HDFS); falls back to
-    * [[rename]]'s delete-then-rename where FileContext is unsupported —
-    * there a crash between the two steps leaves the destination absent,
-    * but the staged source survives, so a retry of the same operation
-    * heals it. On single-object-PUT stores (S3) the replace is a
-    * single-object copy: a reader observes the old or the new object,
-    * never a partial one. */
   // one FileContext per store instance: building it constructs an
   // AbstractFileSystem delegate (on object stores a full client), far
   // too heavy to pay once per swapped chunk in a replaceKey loop
@@ -270,6 +248,15 @@ final case class ZarrStore(root: String, hadoopConfPairs: Seq[(String, String)] 
       fs.makeQualified(rootPath).toUri, conf))
     catch { case _: org.apache.hadoop.fs.UnsupportedFileSystemException => None }
 
+  /** Move a staged object over a COMMITTED key without a window in which
+    * the destination is absent. Prefers FileContext rename with
+    * OVERWRITE (an atomic swap on POSIX and HDFS). Where FileContext is
+    * unsupported it copies the staged bytes over the destination and
+    * only then deletes the source: a crash mid-copy leaves at worst a
+    * torn destination that fails to decode, and the surviving source
+    * heals it on retry. On single-object-PUT stores (S3) the copy is one
+    * PUT: a reader observes the old or the new object, never a partial
+    * one. */
   def replaceKey(fromKey: String, toKey: String): Unit = {
     val from = new Path(rootPath, fromKey)
     val to = new Path(rootPath, toKey)
@@ -279,16 +266,9 @@ final case class ZarrStore(root: String, hadoopConfPairs: Seq[(String, String)] 
         fc.rename(fs.makeQualified(from), fs.makeQualified(to),
           org.apache.hadoop.fs.Options.Rename.OVERWRITE)
       case None =>
-        // no FileContext binding: copy the staged bytes OVER the committed
-        // destination (create-with-overwrite is the store's atomic-PUT
-        // primitive on object stores) and only then delete the staged
-        // source. The previous delete-then-rename fallback had a window
-        // where the committed key was absent (concurrent readers saw fill
-        // values — silently wrong data) and a crash inside it lost the
-        // committed object; a crash mid-copy now leaves at worst a torn
-        // destination that decodes LOUDLY (codec/crc error) while the
-        // surviving staged source heals it on retry. Streamed copy —
-        // shards can be hundreds of MB.
+        // create-with-overwrite is the atomic PUT of object stores; a
+        // delete first would let concurrent readers see fill values.
+        // Streamed copy: shards can be hundreds of MB.
         val in = fs.open(from)
         try {
           val out = fs.create(to, true)
@@ -426,13 +406,20 @@ object ZarrStore {
   /** Pair sets the Configuration memo holds now. */
   private[zarr] def confCount: Int = confs.synchronized(confs.size())
 
-  /** The `fs.*` settings of a Hadoop configuration — the credentials,
-    * endpoints and scheme bindings a store needs wherever it is opened
-    * (executors rebuild their FileSystem from these pairs). */
-  def fsPairs(conf: Configuration): Seq[(String, String)] = {
+  /** The store at `path` as the Spark session sees it: with the `fs.*`
+    * settings (credentials, endpoints, scheme bindings) and the
+    * `graft.zarr.*` reader settings of `sessionState.newHadoopConf()`,
+    * which, unlike `sparkContext.hadoopConfiguration`, holds keys set at
+    * runtime with `spark.conf.set`. Executors rebuild their FileSystem
+    * from these pairs. `extra` pairs come last and so win. */
+  def forSession(
+      spark: SparkSession, path: String, extra: Seq[(String, String)] = Nil): ZarrStore = {
     import scala.jdk.CollectionConverters._
-    conf.iterator().asScala.map(e => e.getKey -> e.getValue)
-      .filter(_._1.startsWith("fs.")).toSeq
+    val pairs = spark.sessionState.newHadoopConf().iterator().asScala
+      .map(e => e.getKey -> e.getValue)
+      .filter(p => p._1.startsWith("fs.") || p._1.startsWith("graft.zarr."))
+      .toSeq
+    ZarrStore(path, pairs ++ extra)
   }
 
   /** A store's committed state ([[ZarrStore.committedView]]): array

@@ -8,7 +8,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end zarr write + read over a non-`file:` scheme (VERDICT r2
-  * "what's missing" #2): exercises `ZarrDataSource.storeFor`'s fs.* conf
+  * "what's missing" #2): exercises `ZarrStore.forSession`'s fs.* conf
   * propagation and `ZarrStore`'s lazy executor-side FileSystem
   * resolution against a scheme only the propagated conf can resolve. */
 class FauxFileSystemSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -91,5 +91,40 @@ class FauxFileSystemSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(err.getMessage.toLowerCase.contains("no filesystem for scheme"),
       err.getMessage)
+  }
+
+  test("a scheme set only with spark.conf.set serves cube writes, analyze and both sinks") {
+    val sp = spark; import sp.implicits._
+    spark.conf.set("fs.graftsess.impl", classOf[RecordingFileSystem].getName)
+    // without it Hadoop's FileSystem cache would hand every store the
+    // instance the connector's first resolution made, whatever its conf
+    spark.conf.set("fs.graftsess.impl.disable.cache", "true")
+    val sessLog = RecordingFileSystem.log("graftsess")
+    sessLog.clear()
+    try {
+      val cube = s"graftsess://$base/sess-cube"
+      def slab(days: Range) =
+        (for (d <- days; s <- 0 until 4) yield (d.toLong, s.toLong, d * 10.0 + s))
+          .toDF("day", "sensor", "v")
+      slab(0 until 4).write.format("zarr").mode("overwrite")
+        .option("dims", "day,sensor").option("chunk_shape", "2,4").save(cube)
+      slab(4 until 6).write.format("zarr").mode("append").option("append_dim", "day").save(cube)
+      ZarrMaintenance.analyze(spark, cube)
+      graft.streaming.ZarrCubeSink.appendBatch(slab(6 until 8), 0L, cube, Seq("day", "sensor"))
+      val back = spark.read.format("zarr").load(cube).where("v >= 70").collect()
+      assert(back.map(_.getAs[Double]("v")).sorted.toSeq ==
+        (for (d <- 7 until 8; s <- 0 until 4) yield d * 10.0 + s))
+      assert(spark.read.format("zarr").load(cube).count() == 32)
+
+      val flat = s"graftsess://$base/sess-flat"
+      graft.streaming.ZarrSink.appendBatch((0L until 11L).toDF("id"), 0L, flat, chunkSize = 8)
+      graft.streaming.ZarrSink.flush(spark, flat, chunkSize = 8)
+      val ids = spark.read.format("zarr").load(flat).collect().map(_.getAs[Long]("id")).sorted
+      assert(ids.toSeq == (0L until 11L))
+      assert(sessLog.creates > 0, "writes must go through RecordingFileSystem.create")
+    } finally {
+      spark.conf.unset("fs.graftsess.impl")
+      spark.conf.unset("fs.graftsess.impl.disable.cache")
+    }
   }
 }

@@ -13,8 +13,9 @@ import org.apache.hadoop.util.Progressable
 /** A local FileSystem that records what a read or a write asked of
   * storage: every GET (`open`), HEAD (`getFileStatus`, which `exists`
   * calls), LIST (`listStatus`, which `listStatusIterator` pages
-  * through), create and rename, with its path, plus the bytes read from
-  * each path. It adds no latency.
+  * through), create and rename, with its path and the name of the
+  * thread that made it, plus the bytes read from each path. It adds no
+  * latency.
   *
   * It takes its scheme from the URI it is initialized with: a spec
   * registers it as `fs.<scheme>.impl` for a scheme Hadoop does not know,
@@ -83,11 +84,12 @@ object RecordingFileSystem {
 
   /** One scheme's requests since its last [[clear]]. */
   final class Log {
-    private val entries: java.util.List[String] =
-      Collections.synchronizedList(new java.util.ArrayList[String]())
+    private val entries: java.util.List[(String, String)] =
+      Collections.synchronizedList(new java.util.ArrayList[(String, String)]())
     private val bytesByPath = new ConcurrentHashMap[String, AtomicLong]()
 
-    private[RecordingFileSystem] def add(entry: String): Unit = entries.add(entry)
+    private[RecordingFileSystem] def add(entry: String): Unit =
+      entries.add((entry, Thread.currentThread().getName))
     private[RecordingFileSystem] def addBytes(path: String, n: Int): Unit =
       bytesByPath.computeIfAbsent(path, _ => new AtomicLong()).addAndGet(n.toLong)
 
@@ -98,7 +100,11 @@ object RecordingFileSystem {
 
     /** Every request in order: `GET <path>`, `HEAD <path>`,
       * `LIST <path>`, `CREATE <path>` or `RENAME <source path>`. */
-    def requests: List[String] = entries.toArray.map(_.toString).toList
+    def requests: List[String] = threadedRequests.map(_._1)
+
+    /** [[requests]], each with the name of the thread that made it. */
+    def threadedRequests: List[(String, String)] =
+      entries.toArray(Array.empty[(String, String)]).toList
 
     private def paths(verb: String): Array[String] =
       requests.iterator.filter(_.startsWith(s"$verb ")).map(_.drop(verb.length + 1)).toArray
