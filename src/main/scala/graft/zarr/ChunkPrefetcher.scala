@@ -61,8 +61,9 @@ final class ChunkPrefetcher[A, B](
 object ChunkPrefetcher {
   /** `fetch` of every item through one window of `depth` threads, in
     * item order: the driver's form of the window, for the few objects a
-    * plan reads (stats segments, shared coordinate chunks). One item
-    * runs on the caller thread. */
+    * plan reads (stats segments, shared coordinate chunks). A single
+    * item runs on the caller thread; with more, every item runs on the
+    * window's threads while the caller waits. */
   def fetchAll[A, B](items: Seq[A], depth: Int = 8)(fetch: A => B): Seq[B] =
     if (items.length <= 1) items.map(fetch)
     else {

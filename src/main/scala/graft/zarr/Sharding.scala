@@ -23,7 +23,7 @@ import com.fasterxml.jackson.databind.JsonNode
   * `0xFFFF_FFFF_FFFF_FFFF` when the inner chunk is absent → fill value).
   * The index itself is encoded with `index_codecs` (typically `bytes` +
   * `crc32c`, fixed size) and lives at the start or end of the shard per
-  * `index_location`.
+  * `index_location` (this engine's writers put it at the start).
   *
   * Integration: the outer chunk IS the shard — geometry, partitioning,
   * chunk-skip filters and the prefetch pipeline all operate on shards
@@ -93,12 +93,14 @@ object Sharding {
 
   private def indexOrder(spec: Spec): ByteOrder = Codecs.endianness(spec.indexCodecs)
 
+  /** The one error for a shard shorter than its index, at either location. */
+  private def tooSmall(size: String) =
+    new ZarrException(s"shard object too small for its index: $size")
+
   /** Decode the shard index → flat array of 2*nInner longs. */
   private def decodeIndex(spec: Spec, shard: Array[Byte], nInner: Int): Array[Long] = {
     val encSize = indexEncodedSize(spec, nInner)
-    if (shard.length < encSize)
-      throw new ZarrException(
-        s"shard object too small for its index: ${shard.length} < $encSize bytes")
+    if (shard.length < encSize) throw tooSmall(s"${shard.length} < $encSize bytes")
     val slice =
       if (spec.indexAtEnd) java.util.Arrays.copyOfRange(shard, shard.length - encSize, shard.length)
       else java.util.Arrays.copyOfRange(shard, 0, encSize)
@@ -169,11 +171,13 @@ object Sharding {
     * This is the object-store read shape for selective sharded scans: a
     * shard can be hundreds of MB, and a scan whose (coordinate) predicate
     * matches a fraction of its inner chunks should pay bytes proportional
-    * to that fraction, not the object size. Costs one metadata probe
-    * (object length, when the index is at the end) + one ranged GET for
+    * to that fraction, not the object size. Costs one ranged GET for
     * the index + one ranged GET per coalesced needed range (ranges with
     * gaps below [[coalesceGapBytes]] merge: re-reading a small gap is
-    * cheaper than another round-trip). Callers gate on
+    * cheaper than another round-trip). A shard whose index sits at the
+    * end (stores written before writers put it first, and other
+    * writers' default) first pays one metadata probe for the object
+    * length, unless the caller already knows it. Callers gate on
     * [[ZarrStore.supportsRangedReads]] — on local filesystems one
     * sequential whole read wins.
     *
@@ -204,12 +208,13 @@ object Sharding {
       else {
         val len = knownLen.orElse(store.objectLength(arrayName, key))
           .getOrElse(return None)
-        if (len < encSize)
-          throw new ZarrException(
-            s"shard object too small for its index: $len < $encSize bytes")
+        if (len < encSize) throw tooSmall(s"$len < $encSize bytes")
         len - encSize
       }
-    val idxBytes = store.readRange(arrayName, key, idxOff, encSize).getOrElse(return None)
+    // an index at offset 0 meets a short object only at the read's end
+    val idxBytes =
+      try store.readRange(arrayName, key, idxOff, encSize).getOrElse(return None)
+      catch { case _: java.io.EOFException => throw tooSmall(s"fewer than $encSize bytes") }
     if (expectIndexSum >= 0) {
       val crc = new java.util.zip.CRC32()
       crc.update(idxBytes, 0, idxBytes.length)

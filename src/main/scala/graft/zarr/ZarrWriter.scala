@@ -59,14 +59,17 @@ object ZarrWriter {
       (if (chain.json.isEmpty) Nil else Seq(chain.json)))
       .mkString(",")
     // sharded: the full chain nests inside sharding_indexed, which is
-    // then the array's only top-level codec
+    // then the array's only top-level codec. The index goes FIRST, at
+    // offset 0, so a ranged read finds it without learning the object's
+    // length; stores written with the index at the end keep that layout,
+    // because appends and overwrites rewrite their recorded document
     val codecs = chain.innerChunk match {
       case Some(inner) =>
         s"""{"name":"sharding_indexed","configuration":{""" +
           s""""chunk_shape":[${inner.mkString(",")}],""" +
           s""""codecs":[$flatChain],""" +
           s""""index_codecs":[{"name":"bytes","configuration":{"endian":"little"}},{"name":"crc32c"}],""" +
-          s""""index_location":"end"}}"""
+          s""""index_location":"start"}}"""
       case None => flatChain
     }
     // dimension names are USER column names — JSON-escape them, or a

@@ -138,7 +138,8 @@ class CommittedViewSpec extends AnyFunSuite with BeforeAndAfterAll {
     val spec = m.shardingSpec.get
     val n = Sharding.innerCount(m.chunkShape, spec)
     val shard = store.readChunk(m.name, key).get
-    val index = java.nio.ByteBuffer.wrap(shard, shard.length - 4 - 16 * n, 16 * n)
+    val at = if (spec.indexAtEnd) shard.length - 4 - 16 * n else 0
+    val index = java.nio.ByteBuffer.wrap(shard, at, 16 * n)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     ((0 until n).count(_ => { val off = index.getLong(); index.getLong(); off != -1L }), n)
   }

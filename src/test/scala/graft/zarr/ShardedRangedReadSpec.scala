@@ -2,7 +2,7 @@ package graft.zarr
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -110,26 +110,58 @@ class ShardedRangedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("readRanged honors index_location start") {
-    val dir = s"$base/idxstart"
-    val st = ZarrStore(dir)
+  /** A store whose requests `fsLog` records, holding the metadata of a
+    * 16x16 array in one shard of 4x4 inner chunks with its index at
+    * `loc` ("start" or "end"), and that shard's bytes, not yet stored. */
+  private def layoutStore(dir: String, loc: String): (ZarrStore, ZarrArrayMeta, Array[Byte]) = {
+    val st = ZarrStore(s"graftlat://$dir",
+      Seq("fs.graftlat.impl" -> classOf[RecordingFileSystem].getName))
     st.writeStoreRootMeta()
     val metaJson = ZarrWriter.metaJson(ZarrType.Float64, Seq(16, 16), Seq(16, 16),
       "-1.0", None, ZarrWriter.CodecChain.bloscLz4.sharded(Seq(4, 4)))
-      .replace("\"index_location\":\"end\"", "\"index_location\":\"start\"")
+      .replaceAll("\"index_location\":\"\\w+\"", s""""index_location":"$loc"""")
     st.writeMeta("v", metaJson)
     val meta = ZarrMeta.parse("v", metaJson)
-    val spec = meta.shardingSpec.get
-    assert(!spec.indexAtEnd)
-    val shard = Sharding.encode(ZarrType.Float64, Seq(16, 16), spec,
-      (0 until 256).map(_.toDouble))
-    st.writeChunk("v", meta.chunkKey(Array(0, 0)), shard)
-    val mask = Array.tabulate(16)(_ < 8)
-    val got = valuesOf(st,
-      Sharding.readRanged(st, "v", meta.chunkKey(Array(0, 0)), spec, meta.chunkShape, mask).get)
-    (0 until 256).foreach { i =>
-      val gi = (i / 16 / 4) * 4 + (i % 16) / 4
-      assert(got(i) == (if (gi < 8) i.toDouble else -1.0), s"elem $i")
+    assert(meta.shardingSpec.get.indexAtEnd == (loc == "end"))
+    (st, meta, Sharding.encode(ZarrType.Float64, Seq(16, 16), meta.shardingSpec.get,
+      (0 until 256).map(_.toDouble)))
+  }
+
+  test("readRanged honors index_location start") {
+    // an index at the end is found from the object's length, one HEAD;
+    // an index at offset 0 needs none
+    Seq("start" -> 0, "end" -> 1).foreach { case (loc, heads) =>
+      val dir = s"$base/idx$loc"
+      val (st, meta, shard) = layoutStore(dir, loc)
+      val key = meta.chunkKey(Array(0, 0))
+      st.writeChunk("v", key, shard)
+      val mask = Array.tabulate(16)(_ < 8)
+      fsLog.clear()
+      val got = valuesOf(st,
+        Sharding.readRanged(st, "v", key, meta.shardingSpec.get, meta.chunkShape, mask).get)
+      assert(fsLog.requests.filter(_.startsWith("HEAD ")) == List.fill(heads)(s"HEAD $dir/v/$key"),
+        s"index_location $loc: ${fsLog.requests}")
+      (0 until 256).foreach { i =>
+        val gi = (i / 16 / 4) * 4 + (i % 16) / 4
+        assert(got(i) == (if (gi < 8) i.toDouble else -1.0), s"index_location $loc, elem $i")
+      }
+    }
+  }
+
+  test("a shard cut short of its index fails by name at either index location") {
+    Seq("start", "end").foreach { loc =>
+      val (st, meta, shard) = layoutStore(s"$base/short$loc", loc)
+      val key = meta.chunkKey(Array(0, 0))
+      // 100 bytes: short of the 16 x 16-byte index plus its crc32c
+      st.writeChunk("v", key, shard.take(100))
+      val ranged = intercept[ZarrException] {
+        Sharding.readRanged(st, "v", key, meta.shardingSpec.get, meta.chunkShape,
+          Array.fill(16)(true))
+      }
+      assert(ranged.getMessage.startsWith("shard object too small for its index: "),
+        s"index_location $loc: ${ranged.getMessage}")
+      val whole = intercept[ZarrException](ChunkColumn.decode(meta, st.readChunk("v", key)))
+      assert(whole.getMessage == "shard object too small for its index: 100 < 260 bytes")
     }
   }
 
@@ -273,6 +305,46 @@ class ShardedRangedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     // schema order is sorted array names: data, lat, lon
     assert(rows.map(r => r.getDouble(0)).sorted.toSeq ==
       (16 until 20).flatMap(r => (0 until 4).map(c => (r * 16 + c).toDouble)))
+  }
+
+  test("a store written with its shard indexes at the end keeps that layout through an append") {
+    val p = s"$base/end-append"
+    // three whole shards: a tabular append needs a whole last chunk
+    spark.range(0, 96, 1, 1).selectExpr("id", "id * 2 AS w")
+      .write.format("zarr").mode("overwrite")
+      .option("chunk_size", "32").option("inner_chunk_size", "8").save(p)
+    // convert to the end layout: every shard re-encoded under the end
+    // spec, and index_location rewritten in the array and root documents
+    val st = ZarrStore(p)
+    val view = st.committedView()
+    def toEnd(json: String) = json.replace(""""index_location":"start"""", """"index_location":"end"""")
+    view.metas.foreach { m =>
+      val endMeta = ZarrMeta.parse(m.name, toEnd(m.sourceJson))
+      (0 until 3).foreach { o =>
+        val key = view.manifest.chunkKeyOf(m, Array(o), o.toLong)
+        val col = ChunkColumn.decode(m, st.readChunk(m.name, key))
+        st.writeChunk(m.name, key, ChunkColumn.encode(endMeta, (0 until 32).map(col.get)))
+      }
+      st.writeMeta(m.name, endMeta.sourceJson)
+    }
+    st.writeText("zarr.json", toEnd(st.readText("zarr.json").get))
+    assert(ZarrStore(p).committedView().metas.forall(_.shardingSpec.get.indexAtEnd))
+
+    // two more shards, the last an edge shard of 22 rows
+    spark.range(96, 150, 1, 1).selectExpr("id", "id * 2 AS w")
+      .write.format("zarr").mode("append").save(p)
+    val after = ZarrStore(p)
+    assert(after.committedView().metas.map(m => m.name -> m.shardingSpec.get.indexAtEnd) ==
+      Seq("id" -> true, "w" -> true))
+    assert(Seq("id", "w").forall(n => after.readMeta(n).shardingSpec.get.indexAtEnd))
+    def rows(df: DataFrame) = df.select("id", "w").collect()
+      .map(x => (x.getLong(0), x.getLong(1))).toSeq.sorted
+    Seq("never", "always").foreach { rr =>
+      val df = spark.read.format("zarr").option("ranged_reads", rr).load(p)
+      assert(rows(df) == (0L until 150L).map(i => (i, i * 2)), s"ranged_reads=$rr")
+      assert(rows(df.filter("w >= 190 AND w < 220")) == (95L until 110L).map(i => (i, i * 2)),
+        s"filtered, ranged_reads=$rr")
+    }
   }
 
   test("per-scan ranged_reads option drives the policy and beats the session conf (r20)") {
